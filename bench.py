@@ -32,7 +32,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from e_commerce_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402
-from e_commerce_data_pipeline_spark.session import get_spark  # noqa: E402
+from e_commerce_data_pipeline_spark.session import (  # noqa: E402
+    default_parallelism,
+    get_spark,
+)
 
 # Structured-Streaming drain queries (registered bench=False): timed
 # separately below so stateful-streaming cost appears in every round's
@@ -58,6 +61,21 @@ def _prior_record(full_path: str, sf: float) -> dict:
     if prev.get("sf") != sf:
         return {}
     return prev
+
+
+def _record_path(full_path: str, sf: float, cpus: int, prior: dict) -> str:
+    """Where this run's full record goes. Off-scale runs (sf != 0.1)
+    and runs on a core count other than the committed record's go to a
+    sidecar, so a smoke run or a run on another host can never clobber
+    the committed cross-round record (an sf0.001 smoke once overwrote
+    it, and later an 8-core run replaced a 32-core record). ``prior``
+    is the committed record at this sf (``_prior_record``); one without
+    ``cpus`` predates the field and any run may replace it."""
+    if sf != 0.1:
+        return full_path.replace("BENCH_FULL.json", f"BENCH_FULL_sf{sf}.json")
+    if prior.get("cpus", cpus) != cpus:
+        return full_path.replace("BENCH_FULL.json", f"BENCH_FULL_c{cpus}.json")
+    return full_path
 
 
 # Ambient calibration anchor (round-7 verdict task): two pinned
@@ -191,6 +209,7 @@ def _anchor_ratio(cur: dict, prior: dict) -> float | None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    cpus = default_parallelism()
     spark = get_spark("pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
     # JMH-style warm-up: run every query once at the smallest SF so JVM
@@ -348,18 +367,13 @@ def main() -> None:
             "ratio_vs_prior_start": ratio,
         },
         "sf": sf,
+        "cpus": cpus,
     }
     print(json.dumps(record))
     # The driver keeps only the tail of the stdout line, which truncates
     # 130+ per-query rows to ~59; persist the complete record (pretty,
     # committed each round) so cross-round perf comparison sees every row.
-    # Off-scale local runs (sf != 0.1) go to a sidecar file so a smoke
-    # run can never clobber the committed cross-round record (round-13:
-    # an sf0.001 smoke overwrote the r12 record mid-session).
-    if sf != 0.1:
-        full_path = full_path.replace(
-            "BENCH_FULL.json", f"BENCH_FULL_sf{sf}.json"
-        )
+    full_path = _record_path(full_path, sf, cpus, prior_rec)
     try:
         with open(full_path, "w") as f:
             json.dump(record, f, indent=1, sort_keys=True)

@@ -60,20 +60,46 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_existing(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # TIMESTAMP(NANOS) read as long; truncate ns -> µs with
-            # integer division (double division would lose precision at
-            # 1.7e18).
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # TIMESTAMP(MICROS, isAdjustedToUTC=false): the naive local
-            # value IS what DuckDB exposes; with the session pinned to
-            # UTC the cast re-labels the same instant as TIMESTAMP so
-            # unix_micros() returns the raw stored micros.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = _canonical_events_ts(df)
     _TABLE_CACHE[key] = df
     return df
+
+
+def _canonical_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize the events ``ts`` column to TIMESTAMP, whichever
+    parquet encoding the file carries (batch and streaming frames
+    alike; the session must already be configured)."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # TIMESTAMP(NANOS) read as long; truncate ns -> µs with
+        # integer division (double division would lose precision at
+        # 1.7e18).
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # TIMESTAMP(MICROS, isAdjustedToUTC=false): the naive local
+        # value IS what DuckDB exposes; with the session pinned to
+        # UTC the cast re-labels the same instant as TIMESTAMP so
+        # unix_micros() returns the raw stored micros.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def open_events_stream(spark: SparkSession, path: str) -> DataFrame:
+    """A bounded readStream over an events parquet table with the same
+    canonical ``ts`` as ``load_table``.
+
+    ``path`` may be a single parquet file or a directory of part-files
+    (the events table has been delivered in both layouts). The
+    file stream source lists directories, so a single file streams its
+    parent filtered down to that file name; a directory streams
+    directly — the same filter on a directory name matches no leaf
+    part-file and the stream would silently drain empty."""
+    configure_existing(spark)  # nanosAsLong before schema inference
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if not os.path.isdir(path):
+        path, fname = os.path.split(os.path.abspath(path))
+        reader = reader.option("pathGlobFilter", fname)
+    return _canonical_events_ts(reader.parquet(path))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -18,8 +18,8 @@ which Spark also executes exactly.
 
 Reference semantics reproduced here (SURVEY.md §2.2): line-total money
 arithmetic P8 (`/root/reference/data/schemas/events.py:142-144`), order
-reconciliation P9 (`:167-177`), quality-score clamp P13
-(`/root/reference/data/quality/expectations.py:94,134,159`).
+reconciliation P9 (`:167-177`). The P13 quality-score clamp lives in
+``operators.validation``.
 """
 
 from __future__ import annotations
@@ -59,32 +59,6 @@ def line_revenue() -> Column:
 def line_charge() -> Column:
     """P8 extended: revenue * (1 + l_tax)."""
     return line_revenue() * (F.lit(1.0) + F.col("l_tax"))
-
-
-def quality_score(violations: Column, penalty: float) -> Column:
-    """P13: max(0, 1 - penalty * |violations|), exact to 2dp.
-
-    Computed in integer hundredths so the clamp is bit-stable across
-    engines (penalty is a 2-dp constant in the reference: .2/.25/.3).
-    """
-    pen_cents = int(round(penalty * 100))
-    score_cents = F.greatest(
-        F.lit(0), F.lit(100) - F.lit(pen_cents) * F.size(violations)
-    )
-    return score_cents.cast("double") / F.lit(100.0)
-
-
-def violations_array(*checks: tuple[Column, str]) -> Column:
-    """P12: collect violation codes for failed checks into an array.
-
-    Each check is (ok_condition, code); code is appended when the
-    condition is false. Null conditions count as failures.
-    """
-    items = [
-        F.when(~F.coalesce(cond, F.lit(False)), F.lit(code))
-        for cond, code in checks
-    ]
-    return F.array_compact(F.array(*items))
 
 
 def epoch_us(col: Column | str) -> Column:

@@ -77,64 +77,17 @@ def session_event_sequences(
     )
 
 
-def drain_streaming_session_stats(
-    spark,
-    events_path: str,
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
-    """Run ``streaming_session_stats`` over a bounded parquet source
-    (availableNow trigger) and return the drained result as a batch
-    DataFrame — the harness that lets the driver diff the *streaming*
-    session operator against a batch SQL oracle.
+def drain_streaming_session_stats(spark, events_path: str) -> DataFrame:
+    """Run ``streaming_session_stats`` over a bounded stream of the
+    events table and return the drained result, so the *streaming*
+    session operator is diffed against a batch SQL oracle (q56). The
+    production path is append-mode past the watermark into a parquet
+    sink (W1/W6, streaming/stream_processor.py)."""
+    from ..catalog import open_events_stream
+    from ..streaming.stream_processor import _drain_to_memory
 
-    The memory sink collects the final sessions to the driver, which is
-    fine for a bounded drain at test scale; the production path is
-    append-mode past the watermark into a parquet sink
-    (W1/W6, streaming/stream_processor.py).
-    """
-    from ..catalog import load_table  # noqa: F401  (conf side effects)
-    from ..session import configure_existing
-
-    configure_existing(spark)  # nanosAsLong before schema inference
-    batch = spark.read.parquet(events_path)
-    # the file streaming source needs a directory: stream the parent dir
-    # filtered down to this one file
-    parent, fname = events_path.rsplit("/", 1)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", fname)
-        .parquet(parent)
-    )
-    if dict(batch.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long ns -> µs (mirrors catalog.load_table)
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    sess = streaming_session_stats(
-        stream, user_col="user_id", ts_col="ts", gap=gap, watermark=watermark
-    )
-    global _DRAIN_SEQ
-    _DRAIN_SEQ += 1
-    name = f"session_drain_{_DRAIN_SEQ}"
-    from ..streaming.stream_processor import state_sized_shuffle
-
-    with state_sized_shuffle(spark, shuffle_partitions):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        # proceeding would read a partially-populated memory sink and
-        # surface as a confusing data mismatch instead of a timeout
-        q.stop()
-        raise TimeoutError("streaming session drain did not finish in 300s")
-    return spark.table(name)
-
-
-_DRAIN_SEQ = 0
+    sess = streaming_session_stats(open_events_stream(spark, events_path))
+    return _drain_to_memory(sess, "session", "complete", 8)
 
 
 def streaming_session_stats(

@@ -14,6 +14,9 @@ push into a streaming micro-batch (streaming/stream_processor.py).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -51,6 +54,12 @@ def event_checks(now: str) -> list[tuple[Column, str]]:
     ]
 
 
+def violation_count(checks: list[tuple[Column, str]]) -> Column:
+    """P12: the number of failed (violation_condition, code) checks per
+    row, as a left-folded int sum of 0/1 flags."""
+    return reduce(operator.add, [F.when(cond, 1).otherwise(0) for cond, _ in checks])
+
+
 def event_quality_checks(df: DataFrame, now: str) -> DataFrame:
     """Per-event violation string, count, and quality score.
 
@@ -61,10 +70,7 @@ def event_quality_checks(df: DataFrame, now: str) -> DataFrame:
     """
     checks = event_checks(now)
     codes = [F.when(cond, F.lit(code)) for cond, code in checks]
-    n_viol = None
-    for cond, _ in checks:
-        c = F.when(cond, 1).otherwise(0)
-        n_viol = c if n_viol is None else n_viol + c
+    n_viol = violation_count(checks)
     return df.select(
         "event_id",
         F.concat_ws(",", *codes).alias("violations"),
@@ -95,10 +101,7 @@ CDC_OPS = ("INSERT", "UPDATE", "DELETE")
 
 def _apply(df: DataFrame, checks: list[tuple[Column, str]], penalty_cents: int) -> DataFrame:
     codes = [F.when(cond, F.lit(code)) for cond, code in checks]
-    n_viol = None
-    for cond, _ in checks:
-        c = F.when(cond, 1).otherwise(0)
-        n_viol = c if n_viol is None else n_viol + c
+    n_viol = violation_count(checks)
     return (
         df.withColumn("violations", F.array_compact(F.array(*codes)))
         .withColumn("n_violations", n_viol.cast("int"))

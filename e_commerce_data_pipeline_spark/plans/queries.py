@@ -2073,16 +2073,11 @@ def q51_error_after_purchase(spark, sf_dir):
     "Composite: validation operators rolled into a daily quality trend",
 )
 def q52_daily_quality_trend(spark, sf_dir):
-    from ..operators.validation import event_checks
+    from ..operators.validation import event_checks, violation_count
 
     e = _t(spark, sf_dir, "events")
-    checks = event_checks(NOW)
-    nv = None
-    for cond, _ in checks:
-        c = F.when(cond, 1).otherwise(0)
-        nv = c if nv is None else nv + c
     return (
-        e.withColumn("nv", nv)
+        e.withColumn("nv", violation_count(event_checks(NOW)))
         .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import open_events_stream
+from .stream_processor import _drain_to_memory
+
 
 def attribution_stream_join(
     clicks: DataFrame,
@@ -65,84 +68,16 @@ def attribution_stream_join(
     )
 
 
-_DRAIN_SEQ = 0
-
-
-def drain_attribution_from_events(
-    spark,
-    events_path: str,
-    watermark: str = "30 minutes",
-    max_gap: str = "10 minutes",
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
+def drain_attribution_from_events(spark, events_path: str) -> DataFrame:
     """Run the stream-stream attribution join over the events table's
     click and purchase streams (two independent bounded file sources
-    over the same parquet) and drain with availableNow — the harness
-    that lets the driver diff the *streaming* join against a batch SQL
-    oracle (same pattern as the q56 session drain)."""
-    from ..session import configure_existing
-
-    configure_existing(spark)  # nanosAsLong before schema inference
-    batch = spark.read.parquet(events_path)
-    parent, fname = events_path.rsplit("/", 1)
-
-    def source() -> DataFrame:
-        s = (
-            spark.readStream.schema(batch.schema)
-            .option("pathGlobFilter", fname)
-            .parquet(parent)
-        )
-        if dict(batch.dtypes).get("ts") == "bigint":
-            # TIMESTAMP(NANOS) read as long ns -> µs (mirrors catalog)
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return s
-
-    clicks = source().filter(F.col("event_type") == "click")
-    purchases = source().filter(F.col("event_type") == "purchase")
-    out = attribution_stream_join(
-        clicks, purchases, watermark=watermark, max_gap=max_gap
+    over the same parquet) and drain it, so the *streaming* join is
+    diffed against a batch SQL oracle (q66)."""
+    clicks = open_events_stream(spark, events_path).filter(
+        F.col("event_type") == "click"
     )
-    global _DRAIN_SEQ
-    _DRAIN_SEQ += 1
-    name = f"attribution_drain_{_DRAIN_SEQ}"
-    from .stream_processor import state_sized_shuffle
-
-    with state_sized_shuffle(spark, shuffle_partitions):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("attribution stream drain did not finish in 300s")
-    return spark.table(name)
-
-
-def drain_attribution_join(
-    spark,
-    clicks_path: str,
-    purchases_path: str,
-    schema,
-    checkpoint: str,
-    **join_kwargs,
-) -> DataFrame:
-    """Run the attribution join over bounded parquet stream sources,
-    drain with availableNow into a memory sink, return the result."""
-    clicks = spark.readStream.schema(schema).parquet(clicks_path)
-    purchases = spark.readStream.schema(schema).parquet(purchases_path)
-    out = attribution_stream_join(clicks, purchases, **join_kwargs)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attribution_join_drain")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    purchases = open_events_stream(spark, events_path).filter(
+        F.col("event_type") == "purchase"
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("attribution join drain did not finish in 120s")
-    return spark.table("attribution_join_drain")
+    out = attribution_stream_join(clicks, purchases)
+    return _drain_to_memory(out, "attribution", "append", 8)

@@ -24,20 +24,21 @@ and kept, matching the reference's flag-don't-drop semantics.
 
 from __future__ import annotations
 
+import itertools
+from contextlib import contextmanager, nullcontext
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import open_events_stream
 from ..schemas.events import TOPIC_SCHEMA_MAP
 from ..sources.bronze import PARTITION_COLS, with_time_partitions
 
 DEFAULT_TRIGGER = "30 seconds"
 
 
-from contextlib import contextmanager  # noqa: E402
-
-
 @contextmanager
-def state_sized_shuffle(spark: SparkSession, n: int | None):
+def state_sized_shuffle(spark: SparkSession, n: int):
     """Scope ``spark.sql.shuffle.partitions`` around a streaming query
     START (the query captures the conf at start; restoring after does
     not affect it).
@@ -48,11 +49,8 @@ def state_sized_shuffle(spark: SparkSession, n: int | None):
     CPU count (right for the batch suite) made the bounded drains pay
     32 stores' startup for 46 rows of state: q66's drain measured
     8.1 s at 32 partitions vs 2.8 s at 8 (PERF.md round-5). Stateful
-    jobs size this to expected STATE volume — pass None to keep the
-    session's setting (what a 100 TB deployment would tune upward)."""
-    if n is None:
-        yield
-        return
+    jobs size this to expected STATE volume (what a 100 TB deployment
+    would tune upward)."""
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -283,76 +281,55 @@ def windowed_event_counts(
     )
 
 
-_WDRAIN_SEQ = 0
+_DRAIN_SEQ = itertools.count(1)
+_DRAIN_TIMEOUT_S = 300
 
 
-def _stream_parquet_path(spark: SparkSession, schema, path: str):
-    """readStream a parquet table that may be a single file OR a
-    directory of part-files (the driver data-gen has emitted both
-    layouts across rounds). For a directory, stream it directly — a
-    ``pathGlobFilter`` equal to the directory name matches no leaf
-    part-files and the stream silently drains empty. For a single
-    file, filter the parent listing down to that file."""
-    import os
-
-    if os.path.isdir(path):
-        return spark.readStream.schema(schema).parquet(path)
-    parent, fname = path.rsplit("/", 1)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(parent)
-    )
-
-
-def drain_windowed_event_counts(
-    spark: SparkSession,
-    events_path: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    shuffle_partitions: int | None = 8,
+def _drain_to_memory(
+    out: DataFrame, label: str, mode: str, state_partitions: int | None = None
 ) -> DataFrame:
-    """Run ``windowed_event_counts`` over a bounded parquet stream of
-    the events table, drain with availableNow into a memory sink, and
-    return the completed result (mirrors the session-stats drain)."""
-    from ..session import configure_existing
+    """Drain a bounded stream with availableNow into a memory sink and
+    return the completed result as a batch DataFrame — the harness that
+    lets the oracle diff a *streaming* operator against batch SQL.
 
-    configure_existing(spark)  # nanosAsLong before schema inference
-    batch = spark.read.parquet(events_path)
-    stream = _stream_parquet_path(spark, batch.schema, events_path)
-    if dict(batch.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long ns -> µs (mirrors catalog.load_table)
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    out = windowed_event_counts(stream, window=window, watermark=watermark)
-    global _WDRAIN_SEQ
-    _WDRAIN_SEQ += 1
-    name = f"windowed_counts_drain_{_WDRAIN_SEQ}"
-    with state_sized_shuffle(spark, shuffle_partitions):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
+    ``state_partitions`` sizes the shuffle of a stateful drain (see
+    ``state_sized_shuffle``); stateless drains keep the session's. The
+    memory sink collects to the driver, which is fine for a bounded
+    drain at test scale; production paths write file sinks."""
+    spark = out.sparkSession
+    name = f"{label}_drain_{next(_DRAIN_SEQ)}"
+    writer = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    with (
+        nullcontext()
+        if state_partitions is None
+        else state_sized_shuffle(spark, state_partitions)
+    ):
+        q = writer.start()
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        # proceeding would read a partially-populated memory sink and
+        # surface as a confusing data mismatch instead of a timeout
         q.stop()
-        raise TimeoutError("windowed-counts drain did not finish in 300s")
+        raise TimeoutError(f"{label} drain did not finish in {_DRAIN_TIMEOUT_S}s")
     return spark.table(name)
 
 
-def drain_streaming_dedup(
-    spark: SparkSession,
-    events_path: str,
-    watermark: str = "2 hours",
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
+def drain_windowed_event_counts(spark: SparkSession, events_path: str) -> DataFrame:
+    """``windowed_event_counts`` over a bounded stream of the events
+    table, drained in complete mode."""
+    out = windowed_event_counts(open_events_stream(spark, events_path))
+    return _drain_to_memory(out, "windowed_counts", "complete", 8)
+
+
+def drain_streaming_dedup(spark: SparkSession, events_path: str) -> DataFrame:
     """Run the Silver-layer streaming dedup
-    (``operators.dedup.streaming_dedup``) over a bounded parquet
-    stream of the events table, deduplicating on a composite
-    (user_id, event_type, hour) key, and drain with availableNow.
+    (``operators.dedup.streaming_dedup``) over a bounded stream of the
+    events table, deduplicating on a composite (user_id, event_type,
+    hour) key.
 
     dropDuplicates keeps the FIRST arrival per key — which physical
     row survives is arrival-order-dependent, so the deterministic
@@ -363,52 +340,26 @@ def drain_streaming_dedup(
     """
     from ..operators.dedup import streaming_dedup
 
-    from ..session import configure_existing
-
-    configure_existing(spark)  # nanosAsLong before schema inference
-    batch = spark.read.parquet(events_path)
-    stream = _stream_parquet_path(spark, batch.schema, events_path)
-    if dict(batch.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    keyed = stream.withColumn("hour_ts", F.date_trunc("hour", "ts"))
+    keyed = open_events_stream(spark, events_path).withColumn(
+        "hour_ts", F.date_trunc("hour", "ts")
+    )
     deduped = streaming_dedup(
         keyed,
         id_cols=("user_id", "event_type"),
         ts_col="hour_ts",
-        watermark=watermark,
+        watermark="2 hours",
     )
     out = deduped.select(
         "user_id", "event_type", F.unix_micros("hour_ts").alias("hour_us")
     )
-    global _WDRAIN_SEQ
-    _WDRAIN_SEQ += 1
-    name = f"stream_dedup_drain_{_WDRAIN_SEQ}"
-    with state_sized_shuffle(spark, shuffle_partitions):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming-dedup drain did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(out, "stream_dedup", "append", 8)
 
 
-def drain_static_enriched_events(
-    spark: SparkSession,
-    events_path: str,
-    high_cents: int = 500_000,
-    mid_cents: int = 100_000,
-) -> DataFrame:
+def drain_static_enriched_events(spark: SparkSession, events_path: str) -> DataFrame:
     """Stream-STATIC join (the stateless enrichment shape of W-family
     streaming): every event in a bounded parquet stream is joined to a
     broadcast per-user value-tier profile computed batch-side from the
-    same table, then drained with availableNow.
+    same table.
 
     Stream-static joins keep NO state (each micro-batch probes the
     static side), so the drain runs in append mode with no watermark —
@@ -420,12 +371,10 @@ def drain_static_enriched_events(
     Returns one row per event: ``(event_id, user_id, event_type,
     tier)``.
     """
-    from ..session import configure_existing
-
-    configure_existing(spark)
-    batch = spark.read.parquet(events_path)
+    stream = open_events_stream(spark, events_path)
     profile = (
-        batch.groupBy("user_id")
+        spark.read.parquet(events_path)
+        .groupBy("user_id")
         .agg(
             F.sum(F.round(F.col("value") * 100).cast("long")).alias(
                 "total_cents"
@@ -433,79 +382,39 @@ def drain_static_enriched_events(
         )
         .select(
             "user_id",
-            F.when(F.col("total_cents") >= high_cents, "high")
-            .when(F.col("total_cents") >= mid_cents, "mid")
+            F.when(F.col("total_cents") >= 500_000, "high")
+            .when(F.col("total_cents") >= 100_000, "mid")
             .otherwise("low")
             .alias("tier"),
         )
     )
-    stream = _stream_parquet_path(spark, batch.schema, events_path)
     enriched = stream.join(F.broadcast(profile), "user_id").select(
         "event_id", "user_id", "event_type", "tier"
     )
-    global _WDRAIN_SEQ
-    _WDRAIN_SEQ += 1
-    name = f"stream_static_drain_{_WDRAIN_SEQ}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream-static drain did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(enriched, "stream_static", "append")
 
 
-_HLL_DRAIN_SEQ = 0
-
-
-def drain_streaming_hll(
-    spark: SparkSession,
-    events_path: str,
-    p: int = 5,
-    salt: str = "hll-s",
-    shuffle_partitions: int | None = 4,
-) -> DataFrame:
+def drain_streaming_hll(spark: SparkSession, events_path: str) -> DataFrame:
     """Streaming distinct-count sketch: maintain the portable HLL
     register table AS STREAMING STATE — the (register, max rho)
     groupBy is a plain streaming aggregation whose state is bounded
     at 2**p rows FOREVER, which is precisely why sketches are the
     streaming answer to COUNT DISTINCT (exact streaming distinct
     needs per-key state that grows without bound; dropDuplicates
-    needs a watermark and forgets). Drains the bounded events stream
-    with availableNow into a memory sink and returns the completed
-    register table; because every register transition is a MAX over
+    needs a watermark and forgets). Returns the completed register
+    table; because every register transition is a MAX over
     deterministic per-row hashes, the drained table is byte-identical
     to the batch ``hll_registers`` build — and to the q171 oracle's
-    SQL rebuild."""
+    SQL rebuild (p=5, salt "hll-s")."""
     from ..operators.frequency import hll_register_exprs
-    from ..session import configure_existing
 
-    configure_existing(spark)  # nanosAsLong before schema inference
-    batch = spark.read.parquet(events_path)
-    stream = _stream_parquet_path(spark, batch.schema, events_path)
-    h, rho = hll_register_exprs("user_id", p, salt)
+    p = 5
+    h, rho = hll_register_exprs("user_id", p, "hll-s")
     regs = (
-        stream.filter(F.col("user_id").isNotNull())
+        open_events_stream(spark, events_path)
+        .filter(F.col("user_id").isNotNull())
         .select((h % (1 << p)).cast("int").alias("register"), rho.alias("rho"))
         .groupBy("register")
         .agg(F.max("rho").cast("int").alias("m_j"))
     )
-    global _HLL_DRAIN_SEQ
-    _HLL_DRAIN_SEQ += 1
-    name = f"hll_drain_{_HLL_DRAIN_SEQ}"
-    with state_sized_shuffle(spark, shuffle_partitions):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming HLL drain did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(regs, "hll", "complete", 4)

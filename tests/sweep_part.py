@@ -3,6 +3,7 @@
 Usage: python tests/sweep_part.py START END — runs queries()[START:END]
 (by registry order) at sf0.01 against the DuckDB oracle exactly the way
 the external driver does (bare conf, not the package's get_spark()).
+The session is local[$SPARK_GRAFT_CPUS], else the host's core count.
 Part of the .claude/skills/verify recipe; slicing keeps each part
 inside a 10-minute shell timeout on a contended host.
 """
@@ -14,11 +15,14 @@ sys.path.insert(0, "/root/repo/tests")
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from e_commerce_data_pipeline_spark.session import default_parallelism  # noqa: E402
+
 
 def main(start: int, end: int) -> int:
+    cpus = default_parallelism()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

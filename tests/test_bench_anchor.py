@@ -9,7 +9,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import _anchor_ratio, _prior_record  # noqa: E402
+from bench import _anchor_ratio, _prior_record, _record_path  # noqa: E402
 
 
 def test_anchor_ratio_geometric_mean():
@@ -73,3 +73,26 @@ def test_prior_record_sf_gate(tmp_path):
     assert _prior_record(str(tmp_path / "missing.json"), 0.1) == {}
     p.write_text("not json")
     assert _prior_record(str(p), 0.1) == {}
+
+
+def test_record_path_keeps_other_core_counts_off_the_committed_record():
+    full = "/bench/BENCH_FULL.json"
+    committed = {"sf": 0.1, "cpus": 32}
+    assert _record_path(full, 0.1, 32, committed) == full
+    assert _record_path(full, 0.1, 4, committed) == "/bench/BENCH_FULL_c4.json"
+    # the off-scale rule still wins, whatever the core count
+    assert _record_path(full, 0.01, 32, committed) == "/bench/BENCH_FULL_sf0.01.json"
+    assert _record_path(full, 0.001, 4, committed) == "/bench/BENCH_FULL_sf0.001.json"
+    # no committed record at this sf, or one that predates `cpus`
+    assert _record_path(full, 0.1, 4, {}) == full
+    assert _record_path(full, 0.1, 4, {"sf": 0.1}) == full
+
+
+def test_record_path_reads_cpus_through_prior_record(tmp_path):
+    """End to end over the committed file: a 4-core run at sf0.1 next to
+    a 32-core record goes to the sidecar."""
+    full = tmp_path / "BENCH_FULL.json"
+    full.write_text('{"sf": 0.1, "cpus": 32}')
+    prior = _prior_record(str(full), 0.1)
+    assert _record_path(str(full), 0.1, 4, prior) == str(tmp_path / "BENCH_FULL_c4.json")
+    assert _record_path(str(full), 0.1, 32, prior) == str(full)

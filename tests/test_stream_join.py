@@ -13,10 +13,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from e_commerce_data_pipeline_spark.streaming.stream_join import (
-    attribution_stream_join,
-    drain_attribution_join,
-)
+from e_commerce_data_pipeline_spark.streaming.stream_join import attribution_stream_join
+from e_commerce_data_pipeline_spark.streaming.stream_processor import _drain_to_memory
 
 SCHEMA = StructType(
     [
@@ -52,10 +50,13 @@ def test_stream_join_matches_batch_join(spark, tmp_path):
     c.write.parquet(cpath)
     p.write.parquet(ppath)
 
-    got = drain_attribution_join(
-        spark, cpath, ppath, SCHEMA, str(tmp_path / "ckpt"),
-        watermark="30 minutes", max_gap="10 minutes",
-    ).collect()
+    out = attribution_stream_join(
+        spark.readStream.schema(SCHEMA).parquet(cpath),
+        spark.readStream.schema(SCHEMA).parquet(ppath),
+        watermark="30 minutes",
+        max_gap="10 minutes",
+    )
+    got = _drain_to_memory(out, "attribution_join", "append").collect()
 
     # batch reference: the same predicate as a plain join
     expected = (

@@ -5,12 +5,23 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
-from e_commerce_data_pipeline_spark.operators.sessionize import streaming_session_stats
+from e_commerce_data_pipeline_spark.operators.sessionize import (
+    drain_streaming_session_stats,
+    streaming_session_stats,
+)
 from e_commerce_data_pipeline_spark.schemas.events import CLICK_SCHEMA
+from e_commerce_data_pipeline_spark.streaming.stream_join import (
+    drain_attribution_from_events,
+)
 from e_commerce_data_pipeline_spark.streaming.stream_processor import (
     bronze_ingest_query,
+    drain_static_enriched_events,
+    drain_streaming_dedup,
+    drain_streaming_hll,
+    drain_windowed_event_counts,
     parse_topic_stream,
     read_event_stream,
 )
@@ -207,34 +218,71 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     assert sorted(collected) == ["evt-1", "evt-2", "evt-3"]
 
 
-def test_static_enrich_drain_handles_directory_parquet(spark, tmp_path):
-    """The driver data-gen has emitted events.parquet as both a single
-    file and a parquet directory across rounds; the drain must read the
-    directory layout (a pathGlobFilter on the directory name matches no
-    leaf part-files and would drain empty)."""
-    from e_commerce_data_pipeline_spark.streaming.stream_processor import (
-        drain_static_enriched_events,
+def _layout_events(spark):
+    """Small events frame that gives every drain non-empty output:
+    per user a click, a purchase 5 min later (attribution), a repeated
+    view in the same hour (dedup), and a view after a 40-min gap (a
+    second session)."""
+    import datetime
+
+    base = datetime.datetime(2024, 1, 1, 10)
+    rows = []
+    for u in range(6):
+        t = base + datetime.timedelta(minutes=7 * u)
+        for k, (dt, etype, value) in enumerate(
+            [
+                (0, "click", 0.0),
+                (5, "purchase", 500.0 * (u + 1) ** 2),
+                (6, "view", 0.0),
+                (8, "view", 0.0),
+                (48, "view", 0.0),
+            ]
+        ):
+            rows.append(
+                (10 * u + k, t + datetime.timedelta(minutes=dt), u, etype, value, "{}")
+            )
+    return spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
     )
 
-    events = spark.createDataFrame(
-        [
-            (1, 100, "purchase", 6000.0),
-            (2, 100, "click", 0.0),
-            (3, 200, "purchase", 1500.0),
-            (4, 300, "click", 10.0),
-        ],
-        "event_id long, user_id long, event_type string, value double",
-    )
-    path = str(tmp_path / "events.parquet")
-    events.repartition(2).write.parquet(path)  # directory of part-files
 
-    rows = {
-        r["event_id"]: r["tier"]
-        for r in drain_static_enriched_events(
-            spark, path, high_cents=500_000, mid_cents=100_000
-        ).collect()
-    }
-    assert rows == {1: "high", 2: "high", 3: "mid", 4: "low"}
+@pytest.mark.parametrize(
+    "drain",
+    [
+        pytest.param(drain_streaming_session_stats, id="session"),
+        pytest.param(drain_attribution_from_events, id="attribution"),
+        pytest.param(drain_windowed_event_counts, id="windowed_counts"),
+        pytest.param(drain_streaming_dedup, id="dedup"),
+        pytest.param(drain_static_enriched_events, id="static_enrich"),
+        pytest.param(drain_streaming_hll, id="hll"),
+    ],
+)
+def test_drain_handles_directory_parquet(spark, tmp_path, drain):
+    """events.parquet has been delivered both as a single file and as a
+    parquet directory; every drain must drain the same rows from either
+    layout (a pathGlobFilter on the directory
+    name matches no leaf part-files and would drain empty)."""
+    import glob
+    import shutil
+
+    events = _layout_events(spark)
+    staging = str(tmp_path / "staging")
+    events.coalesce(1).write.parquet(staging)
+    (part,) = glob.glob(f"{staging}/part-*.parquet")
+    (tmp_path / "single").mkdir()
+    single = str(tmp_path / "single" / "events.parquet")
+    shutil.move(part, single)
+    directory = str(tmp_path / "dir" / "events.parquet")
+    events.repartition(2).write.parquet(directory)
+
+    def drained(path):
+        return sorted(tuple(r) for r in drain(spark, path).collect())
+
+    from_file = drained(single)
+    assert from_file
+    assert drained(directory) == from_file
 
 
 def test_streaming_hll_registers_equal_batch_build(spark, tmp_path):
@@ -247,9 +295,6 @@ def test_streaming_hll_registers_equal_batch_build(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from e_commerce_data_pipeline_spark.operators.frequency import hll_registers
-    from e_commerce_data_pipeline_spark.streaming.stream_processor import (
-        drain_streaming_hll,
-    )
 
     base = datetime.datetime(2024, 1, 1)
     rows = [
@@ -266,7 +311,7 @@ def test_streaming_hll_registers_equal_batch_build(spark, tmp_path):
 
     streamed = {
         r.register: r.m_j
-        for r in drain_streaming_hll(spark, path, p=5, salt="hll-s").collect()
+        for r in drain_streaming_hll(spark, path).collect()
     }
     batch = {
         r.register: r.m_j
@@ -275,3 +320,61 @@ def test_streaming_hll_registers_equal_batch_build(spark, tmp_path):
         ).collect()
     }
     assert streamed == batch and len(streamed) > 0
+
+
+@pytest.mark.parametrize(
+    "ts_type", ["ns", "us", "us_utc"], ids=["nanos", "micros_ntz", "micros_utc"]
+)
+def test_events_stream_ts_matches_load_table(spark, tmp_path, ts_type):
+    """The events stream opener and catalog.load_table canonicalize
+    every parquet timestamp encoding of ``ts`` to the same TIMESTAMP."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from e_commerce_data_pipeline_spark.catalog import (
+        load_table,
+        open_events_stream,
+    )
+    from e_commerce_data_pipeline_spark.streaming.stream_processor import (
+        _drain_to_memory,
+    )
+
+    unit = ts_type[:2]
+    tz = "UTC" if ts_type == "us_utc" else None
+    base = datetime.datetime(2024, 1, 1, 10, 0, 0, 123456)
+    stamps = [base + datetime.timedelta(seconds=37 * i) for i in range(5)]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(5), pa.int64()),
+                "ts": pa.array(stamps, pa.timestamp(unit, tz=tz)),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+
+    def us(df):
+        return sorted(
+            tuple(r) for r in df.select("event_id", F.unix_micros("ts")).collect()
+        )
+
+    stream = open_events_stream(spark, str(tmp_path / "events.parquet"))
+    streamed = us(_drain_to_memory(stream, "events_ts", "append"))
+    batch = us(load_table(spark, str(tmp_path), "events"))
+    epoch, one_us = datetime.datetime(1970, 1, 1), datetime.timedelta(microseconds=1)
+    expected = [(i, (s - epoch) // one_us) for i, s in enumerate(stamps)]
+    assert streamed == batch == expected
+
+
+def test_drain_timeout_stops_query_and_raises(spark, tmp_path, monkeypatch):
+    """A drain that outlives its timeout must stop its query and raise,
+    not hand back a partially-populated memory sink."""
+    from e_commerce_data_pipeline_spark.streaming import stream_processor
+
+    _layout_events(spark).write.parquet(str(tmp_path / "events.parquet"))
+    monkeypatch.setattr(stream_processor, "_DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="session drain did not finish"):
+        drain_streaming_session_stats(spark, str(tmp_path / "events.parquet"))
+    assert not [q for q in spark.streams.active if "session_drain" in (q.name or "")]
