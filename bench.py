@@ -51,8 +51,8 @@ STREAMING_DRAINS = (
 
 
 def _prior_record(full_path: str, sf: float) -> dict:
-    """The previous committed BENCH_FULL.json (empty when absent or
-    recorded at a different scale factor)."""
+    """The bench record at ``full_path`` (empty when absent or recorded
+    at a different scale factor)."""
     try:
         with open(full_path) as f:
             prev = json.load(f)
@@ -76,6 +76,18 @@ def _record_path(full_path: str, sf: float, cpus: int, prior: dict) -> str:
     if prior.get("cpus", cpus) != cpus:
         return full_path.replace("BENCH_FULL.json", f"BENCH_FULL_c{cpus}.json")
     return full_path
+
+
+def _run_record(full_path: str, sf: float, cpus: int) -> tuple[str, dict]:
+    """``(path, prior)`` for this run: the file ``_record_path`` writes
+    it to (the committed record, or its off-scale / other-core-count
+    sidecar) and the record already there. The anchor ratio and the
+    retry trigger compare against ``prior`` only, so a run is never
+    judged against a record from another core count; a prior without
+    ``cpus`` predates the field and is taken as comparable."""
+    path = _record_path(full_path, sf, cpus, _prior_record(full_path, sf))
+    prior = _prior_record(path, sf)
+    return path, prior if prior.get("cpus", cpus) == cpus else {}
 
 
 # Ambient calibration anchor (round-7 verdict task): two pinned
@@ -229,10 +241,10 @@ def main() -> None:
     # measured queries don't fight 49 queries' worth of stale storage
     spark.catalog.clearCache()
 
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+    here = os.path.dirname(os.path.abspath(__file__))
+    record_path, prior_rec = _run_record(
+        os.path.join(here, "BENCH_FULL.json"), sf, cpus
     )
-    prior_rec = _prior_record(full_path, sf)
     # settle the host BEFORE the recorded start anchor and the first
     # timed rows (see _stabilize_host — kills the session-start spike
     # that manufactured q01/q03/q08 "movers" in rounds 11-12)
@@ -373,13 +385,12 @@ def main() -> None:
     # The driver keeps only the tail of the stdout line, which truncates
     # 130+ per-query rows to ~59; persist the complete record (pretty,
     # committed each round) so cross-round perf comparison sees every row.
-    full_path = _record_path(full_path, sf, cpus, prior_rec)
     try:
-        with open(full_path, "w") as f:
+        with open(record_path, "w") as f:
             json.dump(record, f, indent=1, sort_keys=True)
             f.write("\n")
     except OSError as e:
-        print(f"# could not write BENCH_FULL.json: {e}", file=sys.stderr)
+        print(f"# could not write {record_path}: {e}", file=sys.stderr)
     spark.stop()
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import dot, unit_vec
+from .util import series_udf
 from .util import spread as _spread
 
 
@@ -48,7 +49,6 @@ def _assign_udf(centroids):
     matmul agrees to ~1e-15, where only genuine ties could flip, and
     ``np.argmax`` breaks those first-max like the portable path."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     np = _np()
     cn = centroids / _np().linalg.norm(centroids, axis=1, keepdims=True)
@@ -60,8 +60,7 @@ def _assign_udf(centroids):
         xn = x / np.linalg.norm(x, axis=1, keepdims=True)
         return pd.Series(np.argmax(xn @ cn.T, axis=1).astype("int32"))
 
-    _assign.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    return pandas_udf(_assign, "int")
+    return series_udf(_assign, "int")
 
 
 def auto_nlist(n: int) -> int:
@@ -271,7 +270,6 @@ def probe_ivf_index(
 
 def _probe_udf(centroids, nprobe: int):
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     np = _np()
     cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
@@ -287,8 +285,7 @@ def _probe_udf(centroids, nprobe: int):
         order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype("int32")
         return pd.Series(list(order))
 
-    _probe.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    return pandas_udf(_probe, "array<int>")
+    return series_udf(_probe, "array<int>")
 
 
 def ivf_topk(

@@ -21,6 +21,9 @@ kernels stream batch-by-batch (never materialize the iterator) so peak
 executor memory is one batch regardless of partition size — the
 property that matters at 100 TB. Pixels live only inside the kernel;
 what crosses back to the JVM is encoded bytes or scalar features.
+Every one-row-per-item kernel runs through ``_map_media`` (one batch
+loop, one null-row rule); synthetic corpora are built by
+``_media_table``.
 """
 
 from __future__ import annotations
@@ -30,10 +33,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -50,15 +51,40 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-IMAGE_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("channels", IntegerType(), True),
-        StructField("format", StringType(), True),
-    ]
-)
+
+def _map_media(df: DataFrame, ddl: str, fn) -> DataFrame:
+    """The per-item kernel runner: one output row per input row.
+
+    The last column of ``df`` is the payload; the columns before it
+    are keys copied through unchanged, and ``ddl`` lists the keys then
+    the kernel's outputs. ``fn(payload)`` runs only on a non-null
+    payload and returns the tuple of output values, or None for an
+    all-null row — an undecodable item becomes a null row, never a
+    task failure (corrupt files must not kill a 100 TB scan)."""
+    names = _ddl_names(ddl)
+    blank = (None,) * (len(names) - len(df.columns) + 1)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:  # one Arrow batch at a time — bounded memory
+            out = []
+            for *keys, payload in zip(*(pdf[c] for c in pdf.columns)):
+                vals = None if payload is None else fn(payload)
+                out.append((*keys, *(blank if vals is None else vals)))
+            yield pd.DataFrame(out, columns=names)
+
+    return df.mapInPandas(kernel, ddl)
+
+
+def _ddl_names(ddl: str) -> list[str]:
+    """The column names of a flat ``"name type, ..."`` DDL string."""
+    return [col.split()[0] for col in ddl.split(",")]
+
+
+def _px_sums(p) -> tuple:
+    """``(n_px, sum_r, sum_g, sum_b)`` of an int64 (h, w, c>=3) raster."""
+    sums = (int(p[..., c].sum()) for c in range(3))
+    return (int(p.shape[0] * p.shape[1]), *sums)
+
 
 # Synthetic header-only layout kept for plumbing tests:
 # b"FAKEIMG" + w(2) + h(2) + c(1). Carries no pixels.
@@ -5636,6 +5662,17 @@ def _decode_any(content) -> tuple:
 # ---------------------------------------------------------------------------
 
 
+def _media_table(spark, media_type: str, items) -> DataFrame:
+    """A synthetic MEDIA_SCHEMA frame from ``(media_id, content, ext)``
+    items: ``source_uri`` is ``mem://media/{media_id}.{ext}`` and
+    ``content_length`` the payload's byte count."""
+    rows = [
+        (i, media_type, content, len(content), f"mem://media/{i}.{ext}")
+        for i, content, ext in items
+    ]
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+
+
 def make_fake_image_bytes(width: int, height: int, channels: int = 3) -> bytes:
     return _MAGIC + width.to_bytes(2, "big") + height.to_bytes(2, "big") + bytes([channels])
 
@@ -5763,9 +5800,21 @@ def synthetic_media_table(spark, n: int = 100, real: bool = False) -> DataFrame:
                 )
         else:
             content = make_fake_image_bytes(64 + (i % 8) * 32, 64 + (i % 5) * 48)
-        rows.append((i, "image", content, None, f"mem://media/{i}.img"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "img"))
+    return _media_table(spark, "image", rows)
+
+
+def _tile_raster(value, ny: int, nx: int, th: int, tw: int):
+    """uint8 raster of ``ny x nx`` constant ``th x tw`` tiles, tile
+    (by, bx) holding ``value(by, bx)`` — the block-constant layout
+    whose JPEG round trip is exact (DC-only blocks)."""
+    import numpy as np
+
+    tiles = np.array(
+        [[value(by, bx) for bx in range(nx)] for by in range(ny)],
+        dtype=np.uint8,
+    )
+    return np.kron(tiles, np.ones((th, tw), dtype=np.uint8))
 
 
 def jpeg_tile_value(i: int, by: int, bx: int) -> int:
@@ -5791,14 +5840,11 @@ def synthetic_ima_table(spark, n: int = 30) -> DataFrame:
         rows.append(
             (
                 i,
-                "audio",
                 encode_wav_ima(codes, ((i * 97) % 2000) - 1000, i % 89),
-                None,
-                f"mem://media/{i}.ima.wav",
+                "ima.wav",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "audio", rows)
 
 
 def synthetic_ms_adpcm_table(spark, n: int = 24) -> DataFrame:
@@ -5824,7 +5870,6 @@ def synthetic_ms_adpcm_table(spark, n: int = 24) -> DataFrame:
         rows.append(
             (
                 100 + i,
-                "audio",
                 encode_wav_ms_adpcm(
                     codes,
                     i % 7,
@@ -5832,12 +5877,10 @@ def synthetic_ms_adpcm_table(spark, n: int = 24) -> DataFrame:
                     ((i * 53) % 800) - 400,
                     ((i * 31) % 600) - 300,
                 ),
-                None,
-                f"mem://media/{100 + i}.ms.wav",
+                "ms.wav",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "audio", rows)
 
 
 def synthetic_ima4_table(spark, n: int = 20) -> DataFrame:
@@ -5864,12 +5907,8 @@ def synthetic_ima4_table(spark, n: int = 20) -> DataFrame:
             codes, ((i * 113) % 2000) - 1000, (i * 7) % 89
         )
         content = _aifc_container(b"ima4", 1, ns, 16, 16000, ssnd)
-        rows.append(
-            (200 + i, "audio", content, None,
-             f"mem://media/{200 + i}.ima4.aifc")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((200 + i, content, "ima4.aifc"))
+    return _media_table(spark, "audio", rows)
 
 
 def synthetic_png_palette_table(spark, n: int = 45) -> DataFrame:
@@ -5881,11 +5920,8 @@ def synthetic_png_palette_table(spark, n: int = 45) -> DataFrame:
     for i in range(n):
         w, h = 18 + (i % 7) * 4, 14 + (i % 5) * 4
         px = make_test_pixels(w, h, seed=i * 2 + 3)
-        rows.append(
-            (i, "image", encode_png_palette(px), None, f"mem://media/{i}.p.png")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_png_palette(px), "p.png"))
+    return _media_table(spark, "image", rows)
 
 
 def make_test_pixels16(width: int, height: int, seed: int = 0):
@@ -5933,11 +5969,8 @@ def synthetic_png16_table(spark, n: int = 36) -> DataFrame:
         else:
             a = ((v.astype(np.int64) + 23456) % 65536).astype(np.uint16)
             content = encode_png16_rgba(np.concatenate([px, a[..., None]], axis=-1))
-        rows.append(
-            (i, "image", content, None, f"mem://media/{i}.16.png")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "16.png"))
+    return _media_table(spark, "image", rows)
 
 
 def image16_exact_stats(df: DataFrame) -> DataFrame:
@@ -5951,46 +5984,30 @@ def image16_exact_stats(df: DataFrame) -> DataFrame:
     decoder returned the right channel count."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    px = decode_png(bytes(content))
-                except (ValueError, NotImplementedError, struct.error):
-                    out.append((media_id,) + (None,) * 9)
-                    continue
-                p = px.astype(np.int64)
-                sum_a = n_transp = None
-                if p.shape[-1] == 4:
-                    sum_a = int(p[..., 3].sum())
-                    n_transp = int((p[..., 3] == 0).sum())
-                out.append(
-                    (
-                        media_id,
-                        int(p.shape[0] * p.shape[1]),
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                        int(p[..., 0].max()),
-                        int(p[..., 1].max()),
-                        int(p[..., 2].max()),
-                        sum_a,
-                        n_transp,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_px", "sum_r", "sum_g", "sum_b",
-                    "max_r", "max_g", "max_b", "sum_a", "n_transp",
-                ],
-            )
+    def stats(content):
+        try:
+            px = decode_png(bytes(content))
+        except (ValueError, NotImplementedError, struct.error):
+            return None
+        p = px.astype(np.int64)
+        sum_a = n_transp = None
+        if p.shape[-1] == 4:
+            sum_a = int(p[..., 3].sum())
+            n_transp = int((p[..., 3] == 0).sum())
+        return (
+            *_px_sums(p),
+            int(p[..., 0].max()),
+            int(p[..., 1].max()),
+            int(p[..., 2].max()),
+            sum_a,
+            n_transp,
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_px long, sum_r long, sum_g long, sum_b long, "
         "max_r long, max_g long, max_b long, sum_a long, n_transp long",
+        stats,
     )
 
 
@@ -6031,11 +6048,8 @@ def synthetic_png_adam7_table(spark, n: int = 42) -> DataFrame:
                 content = encode_png_palette_subbyte(
                     px, depth=2, interlace=True
                 )
-        rows.append(
-            (i, "image", content, None, f"mem://media/{i}.a7.png")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "a7.png"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_gif_table(spark, n: int = 50) -> DataFrame:
@@ -6047,9 +6061,8 @@ def synthetic_gif_table(spark, n: int = 50) -> DataFrame:
     for i in range(n):
         w, h = 20 + (i % 5) * 4, 12 + (i % 6) * 4
         px = make_test_pixels(w, h, seed=i * 3 + 1)
-        rows.append((i, "image", encode_gif(px), None, f"mem://media/{i}.gif"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_gif(px), "gif"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_gif_variants_table(spark, n: int = 48) -> DataFrame:
@@ -6066,9 +6079,8 @@ def synthetic_gif_variants_table(spark, n: int = 48) -> DataFrame:
         content = encode_gif(
             px, interlace=i % 4 in (1, 3), local_table=i % 4 in (2, 3)
         )
-        rows.append((i, "image", content, None, f"mem://media/{i}.v.gif"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "v.gif"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_png_trns_table(spark, n: int = 44) -> DataFrame:
@@ -6092,9 +6104,8 @@ def synthetic_png_trns_table(spark, n: int = 44) -> DataFrame:
             content = encode_png(
                 px, trns_key=(s, (s + 85) % 256, (s + 170) % 256)
             )
-        rows.append((i, "image", content, None, f"mem://media/{i}.t.png"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "t.png"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_png_gray_family_table(spark, n: int = 42) -> DataFrame:
@@ -6132,9 +6143,8 @@ def synthetic_png_gray_family_table(spark, n: int = 42) -> DataFrame:
             content = encode_png_rgba(
                 np.concatenate([px, alpha[..., None]], axis=-1)
             )
-        rows.append((i, "image", content, None, f"mem://media/{i}.g.png"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "g.png"))
+    return _media_table(spark, "image", rows)
 
 
 def image_alpha_stats(df: DataFrame) -> DataFrame:
@@ -6145,44 +6155,27 @@ def image_alpha_stats(df: DataFrame) -> DataFrame:
     leave the kernel; six scalars per image cross back."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, _fmt = _decode_any(content)
-                if px is None:
-                    out.append((media_id,) + (None,) * 6)
-                    continue
-                p = px.astype(np.int64)
-                n_px = int(p.shape[0] * p.shape[1])
-                alpha = (
-                    p[..., 3]
-                    if p.shape[-1] == 4
-                    else np.full(p.shape[:2], 255, dtype=np.int64)
-                )
-                out.append(
-                    (
-                        media_id,
-                        n_px,
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                        int(alpha.sum()),
-                        int((alpha == 0).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_px", "sum_r", "sum_g", "sum_b",
-                    "sum_a", "n_transp",
-                ],
-            )
+    def stats(content):
+        px, _fmt = _decode_any(content)
+        if px is None:
+            return None
+        p = px.astype(np.int64)
+        alpha = (
+            p[..., 3]
+            if p.shape[-1] == 4
+            else np.full(p.shape[:2], 255, dtype=np.int64)
+        )
+        return (
+            *_px_sums(p),
+            int(alpha.sum()),
+            int((alpha == 0).sum()),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_px long, sum_r long, sum_g long, sum_b long, "
         "sum_a long, n_transp long",
+        stats,
     )
 
 
@@ -6194,48 +6187,29 @@ def image_color_stats(df: DataFrame) -> DataFrame:
     two families of stats fail independently."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, _fmt = _decode_any(content)
-                if px is None:
-                    out.append((media_id,) + (None,) * 6)
-                    continue
-                p = px[..., :3].astype(np.int64)
-                packed = (
-                    p[..., 0] * 65536 + p[..., 1] * 256 + p[..., 2]
-                ).reshape(-1)
-                # row-position-sensitive checksum: sum of row_index *
-                # row red-sum, so a row permutation (interlace bug)
-                # breaks it even though plain sums survive
-                rpos = (
-                    np.arange(p.shape[0], dtype=np.int64)
-                    * p[..., 0].sum(axis=1)
-                ).sum()
-                out.append(
-                    (
-                        media_id,
-                        int(p.shape[0] * p.shape[1]),
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                        int(np.unique(packed).size),
-                        int(rpos),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_px", "sum_r", "sum_g", "sum_b",
-                    "n_colors", "row_weighted_r",
-                ],
-            )
+    def stats(content):
+        px, _fmt = _decode_any(content)
+        if px is None:
+            return None
+        p = px[..., :3].astype(np.int64)
+        packed = (p[..., 0] * 65536 + p[..., 1] * 256 + p[..., 2]).reshape(-1)
+        # row-position-sensitive checksum: sum of row_index * row
+        # red-sum, so a row permutation (interlace bug) breaks it even
+        # though plain sums survive
+        rpos = (
+            np.arange(p.shape[0], dtype=np.int64) * p[..., 0].sum(axis=1)
+        ).sum()
+        return (
+            *_px_sums(p),
+            int(np.unique(packed).size),
+            int(rpos),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_px long, sum_r long, sum_g long, sum_b long, "
         "n_colors long, row_weighted_r long",
+        stats,
     )
 
 
@@ -6267,19 +6241,12 @@ def synthetic_crossformat_dup_table(spark, n_groups: int = 20) -> DataFrame:
         w, h = 24 + (j % 5) * 4, 16 + (j % 4) * 4
         px = make_quadratic_pixels(w, h, seed=j * 17 + 3)
         for m, enc in enumerate((encode_bmp, encode_png, encode_gif)):
-            rows.append(
-                (j * 4 + m, "image", enc(px), None,
-                 f"mem://media/{j * 4 + m}.dup")
-            )
+            rows.append((j * 4 + m, enc(px), "dup"))
         solo = make_quadratic_pixels(
             20 + (j % 6) * 4, 14 + (j % 5) * 4, seed=j * 31 + 1000
         )
-        rows.append(
-            (j * 4 + 3, "image", encode_png(solo), None,
-             f"mem://media/{j * 4 + 3}.solo")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((j * 4 + 3, encode_png(solo), "solo"))
+    return _media_table(spark, "image", rows)
 
 
 def image_dhash(df: DataFrame, cols: int = 9, rows_: int = 5) -> DataFrame:
@@ -6294,31 +6261,24 @@ def image_dhash(df: DataFrame, cols: int = 9, rows_: int = 5) -> DataFrame:
     dedup signal exact byte hashing cannot see."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, _fmt = _decode_any(content)
-                if px is None:
-                    out.append((media_id, None))
-                    continue
-                p = px[..., :3].astype(np.int64)
-                h, w = p.shape[:2]
-                luma = (
-                    p[..., 0] * 299 + p[..., 1] * 587 + p[..., 2] * 114
-                ) // 1000
-                xs = (np.arange(cols, dtype=np.int64) * w) // cols
-                ys = (np.arange(rows_, dtype=np.int64) * h) // rows_
-                grid = luma[np.ix_(ys, xs)]
-                bits = (grid[:, 1:] > grid[:, :-1]).astype(np.int64)
-                k = np.arange(rows_ * (cols - 1), dtype=np.int64).reshape(
-                    rows_, cols - 1
-                )
-                out.append((media_id, int((bits << k).sum())))
-            yield pd.DataFrame(out, columns=["media_id", "dhash"])
+    def dhash(content):
+        px, _fmt = _decode_any(content)
+        if px is None:
+            return None
+        p = px[..., :3].astype(np.int64)
+        h, w = p.shape[:2]
+        luma = (p[..., 0] * 299 + p[..., 1] * 587 + p[..., 2] * 114) // 1000
+        xs = (np.arange(cols, dtype=np.int64) * w) // cols
+        ys = (np.arange(rows_, dtype=np.int64) * h) // rows_
+        grid = luma[np.ix_(ys, xs)]
+        bits = (grid[:, 1:] > grid[:, :-1]).astype(np.int64)
+        k = np.arange(rows_ * (cols - 1), dtype=np.int64).reshape(
+            rows_, cols - 1
+        )
+        return (int((bits << k).sum()),)
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel, "media_id long, dhash long"
+    return _map_media(
+        df.select("media_id", "content"), "media_id long, dhash long", dhash
     )
 
 
@@ -6355,22 +6315,15 @@ def synthetic_jpeg420_table(spark, n: int = 40) -> DataFrame:
     for i in range(n):
         sub, tw, th = _JPG_FAMILY[i % 4]
         nx, ny = 2 + (i % 3), 2 + (i % 2)
-        tiles = np.array(
-            [
-                [jpeg420_tile_value(i, by, bx) for bx in range(nx)]
-                for by in range(ny)
-            ],
-            dtype=np.uint8,
+        img = _tile_raster(
+            lambda by, bx: jpeg420_tile_value(i, by, bx), ny, nx, th, tw
         )
-        img = np.kron(tiles, np.ones((th, tw), dtype=np.uint8))
         rgb = np.stack([img, img, img], axis=-1)
         q = 85 + (i % 3) * 5
         rows.append(
-            (i, "image", encode_jpeg(rgb, quality=q, subsampling=sub),
-             None, f"mem://media/{i}.{sub}.jpg")
+            (i, encode_jpeg(rgb, quality=q, subsampling=sub), f"{sub}.jpg")
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_jpeg_table(spark, n: int = 60) -> DataFrame:
@@ -6405,24 +6358,16 @@ def synthetic_jpeg_table(spark, n: int = 60) -> DataFrame:
         w, h = 24 + (i % 4) * 8, 16 + (i % 3) * 8
         import numpy as np
 
-        tiles = np.array(
-            [
-                [jpeg_tile_value(i, by, bx) for bx in range(w // 8)]
-                for by in range(h // 8)
-            ],
-            dtype=np.uint8,
+        img = _tile_raster(
+            lambda by, bx: jpeg_tile_value(i, by, bx), h // 8, w // 8, 8, 8
         )
-        img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
         rgb = np.stack([img, img, img], axis=-1)
         q = 85 + (i % 3) * 5  # 85 / 90 / 95 — all keep DC step < 8
         content = encode_jpeg(rgb, quality=q, extended=(i % 5 == 4))
         if i % 7 == 3:
             content = encode_bmp_embedded(content, w, h, png=False)
-        rows.append(
-            (i, "image", content, None, f"mem://media/{i}.jpg")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "jpg"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_ppm16_table(spark, n: int = 36) -> DataFrame:
@@ -6441,11 +6386,8 @@ def synthetic_ppm16_table(spark, n: int = 36) -> DataFrame:
         px = np.stack(
             [base, (base + 21845) % 65536, (base + 43690) % 65536], axis=-1
         ).astype(np.uint16)
-        rows.append(
-            (i, "image", encode_ppm16(px), None, f"mem://media/{i}.ppm")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_ppm16(px), "ppm"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff16_table(spark, n: int = 30) -> DataFrame:
@@ -6475,7 +6417,6 @@ def synthetic_tiff16_table(spark, n: int = 30) -> DataFrame:
         rows.append(
             (
                 i,
-                "image",
                 encode_tiff(
                     px,
                     compression=comps[i % 4],
@@ -6485,12 +6426,10 @@ def synthetic_tiff16_table(spark, n: int = 30) -> DataFrame:
                     tile=(16, 16) if i % 5 in (2, 3) else None,
                     planar=(i % 5 in (3, 4)),
                 ),
-                None,
-                f"mem://media/{i}.tif",
+                "tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_subbyte_table(spark, n: int = 24) -> DataFrame:
@@ -6515,7 +6454,6 @@ def synthetic_tiff_subbyte_table(spark, n: int = 24) -> DataFrame:
         rows.append(
             (
                 i,
-                "image",
                 encode_tiff(
                     plane,
                     compression=comps[i % 4],
@@ -6525,12 +6463,10 @@ def synthetic_tiff_subbyte_table(spark, n: int = 24) -> DataFrame:
                     rows_per_strip=4,
                     tile=(16, 16) if i % 5 == 2 else None,
                 ),
-                None,
-                f"mem://media/{i}.sb.tif",
+                "sb.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_cmyk_table(spark, n: int = 26) -> DataFrame:
@@ -6618,14 +6554,11 @@ def synthetic_tiff_cmyk_table(spark, n: int = 26) -> DataFrame:
         rows.append(
             (
                 200 + i,
-                "image",
                 content,
-                None,
-                f"mem://media/{200 + i}.cmyk.tif",
+                "cmyk.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_pcx_table(spark, n: int = 12) -> DataFrame:
@@ -6682,11 +6615,8 @@ def synthetic_pcx_table(spark, n: int = 12) -> DataFrame:
             idx = ((x * 3 + y + i) % (1 << d)).astype(np.uint8)
             content = encode_pcx(idx, bpp4=(d == 4), bpp2=(d == 2),
                                  palette16=pal16)
-        rows.append(
-            (i, "image", content, None, f"mem://media/{i}.pcx")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "pcx"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_ico_table(spark, n: int = 12) -> DataFrame:
@@ -6722,12 +6652,8 @@ def synthetic_ico_table(spark, n: int = 12) -> DataFrame:
                 [r2, r2, r2, np.full((4, 5), 255, np.int64)], axis=-1
             ).astype(np.uint8)
             entries.append((small, "png"))
-        rows.append(
-            (i, "image", encode_ico(entries), None,
-             f"mem://media/{i}.ico")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_ico(entries), "ico"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_pnm_table(spark, n: int = 20) -> DataFrame:
@@ -6770,11 +6696,8 @@ def synthetic_pnm_table(spark, n: int = 20) -> DataFrame:
         else:
             g = (x * 257 + y * 509 + i * 1021) % 65536
             content = encode_pnm(g, "P5", maxval=65535)
-        rows.append(
-            (i, "image", content, None, f"mem://media/{i}.pnm")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "pnm"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_float_table(spark, n: int = 12) -> DataFrame:
@@ -6812,7 +6735,6 @@ def synthetic_tiff_float_table(spark, n: int = 12) -> DataFrame:
         rows.append(
             (
                 800 + i,
-                "image",
                 encode_tiff_float(
                     arr,
                     compression=comps[i % 4],
@@ -6823,12 +6745,10 @@ def synthetic_tiff_float_table(spark, n: int = 12) -> DataFrame:
                     tile=(16, 16) if i % 4 in (1, 3) else None,
                     planar=(i % 4 >= 2),
                 ),
-                None,
-                f"mem://media/{800 + i}.f.tif",
+                "f.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tga_table(spark, n: int = 20) -> DataFrame:
@@ -6899,12 +6819,8 @@ def synthetic_tga_table(spark, n: int = 20) -> DataFrame:
             ).astype(np.uint8)
             content = encode_tga(px, rle=rle, top_down=td, bpp16=True,
                                  depth15=bool(i % 2))
-        rows.append(
-            (700 + i, "image", content, None,
-             f"mem://media/{700 + i}.tga")
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((700 + i, content, "tga"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_pal16_table(spark, n: int = 6) -> DataFrame:
@@ -6934,7 +6850,6 @@ def synthetic_tiff_pal16_table(spark, n: int = 6) -> DataFrame:
         rows.append(
             (
                 400 + i,
-                "image",
                 encode_tiff(
                     idx,
                     compression=comps[i % 4],
@@ -6942,12 +6857,10 @@ def synthetic_tiff_pal16_table(spark, n: int = 6) -> DataFrame:
                     palette=pal,
                     rows_per_strip=4,
                 ),
-                None,
-                f"mem://media/{400 + i}.pal16.tif",
+                "pal16.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_cmyk_subbyte_table(spark, n: int = 6) -> DataFrame:
@@ -6978,7 +6891,6 @@ def synthetic_tiff_cmyk_subbyte_table(spark, n: int = 6) -> DataFrame:
         rows.append(
             (
                 250 + i,
-                "image",
                 encode_tiff(
                     cmyk,
                     compression=comps[i % 4],
@@ -6986,12 +6898,10 @@ def synthetic_tiff_cmyk_subbyte_table(spark, n: int = 6) -> DataFrame:
                     big_endian=bool(i % 2),
                     rows_per_strip=4,
                 ),
-                None,
-                f"mem://media/{250 + i}.sbcmyk.tif",
+                "sbcmyk.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_jpeg_table(spark, n: int = 30) -> DataFrame:
@@ -7053,14 +6963,10 @@ def synthetic_tiff_jpeg_table(spark, n: int = 30) -> DataFrame:
     rows = []
     for i in range(n):
         w, h = 24 + (i % 3) * 8, 16 + (i % 2) * 16
-        tiles = np.array(
-            [
-                [(i * 41 + by * 9 + bx * 17) % 256 for bx in range(w // 8)]
-                for by in range(h // 8)
-            ],
-            dtype=np.uint8,
+        img = _tile_raster(
+            lambda by, bx: (i * 41 + by * 9 + bx * 17) % 256,
+            h // 8, w // 8, 8, 8,
         )
-        img = np.kron(tiles, np.ones((8, 8), np.uint8))
         arm = i % 15
         old = arm in (4, 7)
         per_strip = arm in (11, 12)
@@ -7121,22 +7027,19 @@ def synthetic_tiff_jpeg_table(spark, n: int = 30) -> DataFrame:
             rows.append(
                 (
                     600 + i,
-                    "image",
                     encode_tiff_ojpeg_lossless(
                         src,
                         predictor=1 + (i % 7),
                         rows_per_strip=5,
                         big_endian=bool(i % 2),
                     ),
-                    None,
-                    f"mem://media/{600 + i}.jpg.tif",
+                    "jpg.tif",
                 )
             )
             continue
         rows.append(
             (
                 600 + i,
-                "image",
                 encode_tiff_jpeg(
                     src,
                     quality=85 + (i % 3) * 5,
@@ -7153,12 +7056,10 @@ def synthetic_tiff_jpeg_table(spark, n: int = 30) -> DataFrame:
                     restart_interval=2 if arm == 12 else 0,
                     arith=arm == 14,
                 ),
-                None,
-                f"mem://media/{600 + i}.jpg.tif",
+                "jpg.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_ycbcr_table(spark, n: int = 32) -> DataFrame:
@@ -7214,7 +7115,6 @@ def synthetic_tiff_ycbcr_table(spark, n: int = 32) -> DataFrame:
         rows.append(
             (
                 500 + i,
-                "image",
                 encode_tiff_ycbcr(
                     yp, cb, cr, (sh, sv),
                     compression=comps[i % 4],
@@ -7225,12 +7125,10 @@ def synthetic_tiff_ycbcr_table(spark, n: int = 32) -> DataFrame:
                     tile=tile,
                     luma=[1, 4, 1, 2, 1, 4] if i >= 24 else None,
                 ),
-                None,
-                f"mem://media/{500 + i}.ycc.tif",
+                "ycc.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_fax_table(spark, n: int = 24) -> DataFrame:
@@ -7275,7 +7173,6 @@ def synthetic_tiff_fax_table(spark, n: int = 24) -> DataFrame:
         rows.append(
             (
                 300 + i,
-                "image",
                 encode_tiff(
                     plane.astype(np.uint8),
                     compression=comps[i % 4],
@@ -7288,12 +7185,10 @@ def synthetic_tiff_fax_table(spark, n: int = 24) -> DataFrame:
                         comps[i % 4] in ("g3_2d", "g4") and i % 6 >= 3
                     ),
                 ),
-                None,
-                f"mem://media/{300 + i}.fax.tif",
+                "fax.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_jpeg_rst_table(spark, n: int = 36) -> DataFrame:
@@ -7330,22 +7225,13 @@ def synthetic_jpeg_rst_table(spark, n: int = 36) -> DataFrame:
     rows = []
     for i in range(n):
         w, h = 24 + (i % 4) * 8, 16 + (i % 3) * 8
-        tiles = np.array(
-            [
-                [jpeg_tile_value(i, by, bx) for bx in range(w // 8)]
-                for by in range(h // 8)
-            ],
-            dtype=np.uint8,
+        img = _tile_raster(
+            lambda by, bx: jpeg_tile_value(i, by, bx), h // 8, w // 8, 8, 8
         )
-        img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
         rgb = np.stack([img, img, img], axis=-1)
         q = 85 + (i % 3) * 5  # DC quant step stays < 8
         if i % 6 == 5:
-            img12 = (
-                np.kron(
-                    tiles.astype(np.int64), np.ones((8, 8), np.int64)
-                ) * 16 + i
-            ) % 4096
+            img12 = (img.astype(np.int64) * 16 + i) % 4096
             raster12 = img12.astype(np.uint16)
             if i % 12 == 11:  # 4:4:4 gray-in-RGB color sub-rotation
                 raster12 = np.stack([raster12] * 3, axis=-1)
@@ -7390,14 +7276,11 @@ def synthetic_jpeg_rst_table(spark, n: int = 36) -> DataFrame:
         rows.append(
             (
                 i,
-                "image",
                 content,
-                None,
-                f"mem://media/{i}.jpg",
+                "jpg",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_jpeg_ll_table(spark, n: int = 21) -> DataFrame:
@@ -7436,7 +7319,6 @@ def synthetic_jpeg_ll_table(spark, n: int = 21) -> DataFrame:
         rows.append(
             (
                 900 + i,
-                "image",
                 encode_jpeg_lossless(
                     arr,
                     predictor=1 + i % 7,
@@ -7444,12 +7326,10 @@ def synthetic_jpeg_ll_table(spark, n: int = 21) -> DataFrame:
                     restart_rows=3 if i % 4 == 1 else 0,
                     precision=p,
                 ),
-                None,
-                f"mem://media/{900 + i}.ljpg",
+                "ljpg",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_jpeg_prog_table(spark, n: int = 36) -> DataFrame:
@@ -7496,23 +7376,15 @@ def synthetic_jpeg_prog_table(spark, n: int = 36) -> DataFrame:
     rows = []
     for i in range(n):
         w, h = 24 + (i % 3) * 8, 16 + (i % 4) * 8
-        tiles = np.array(
-            [
-                [(i * 37 + by * 11 + bx * 5) % 256 for bx in range(w // 8)]
-                for by in range(h // 8)
-            ],
-            dtype=np.uint8,
+        img = _tile_raster(
+            lambda by, bx: (i * 37 + by * 11 + bx * 5) % 256,
+            h // 8, w // 8, 8, 8,
         )
-        img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
         rgb = np.stack([img, img, img], axis=-1)
         q = 85 + (i % 3) * 5
         ri = (1 + i % 5) if i % 3 == 2 else 0
         if i % 6 == 5 or i % 12 == 8:
-            img12 = (
-                np.kron(
-                    tiles.astype(np.int64), np.ones((8, 8), np.int64)
-                ) * 16 + i
-            ) % 4096
+            img12 = (img.astype(np.int64) * 16 + i) % 4096
             rgb12 = np.stack([img12.astype(np.uint16)] * 3, axis=-1)
             enc12 = (
                 encode_jpeg_arith_progressive if i % 6 == 5
@@ -7533,14 +7405,11 @@ def synthetic_jpeg_prog_table(spark, n: int = 36) -> DataFrame:
         rows.append(
             (
                 i,
-                "image",
                 content,
-                None,
-                f"mem://media/{i}.jpg",
+                "jpg",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_png_table(spark, n: int = 80) -> DataFrame:
@@ -7553,9 +7422,8 @@ def synthetic_png_table(spark, n: int = 80) -> DataFrame:
     for i in range(n):
         w, h = 16 + (i % 6) * 4, 16 + (i % 4) * 4
         px = make_test_pixels(w, h, seed=i)
-        rows.append((i, "image", encode_png(px), None, f"mem://media/{i}.png"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_png(px), "png"))
+    return _media_table(spark, "image", rows)
 
 
 
@@ -11958,21 +11826,15 @@ def synthetic_jpeg_hier_table(spark, n: int = 12) -> DataFrame:
         if exp_row:
             img = np.full((h, w), (i * 41) % 256, np.uint8)
         else:
-            tiles = np.array(
-                [
-                    [(i * 41 + by * 9 + bx * 17) % 256
-                     for bx in range(w // 32)]
-                    for by in range(h // 32)
-                ],
-                dtype=np.uint8,
+            img = _tile_raster(
+                lambda by, bx: (i * 41 + by * 9 + bx * 17) % 256,
+                h // 32, w // 32, 32, 32,
             )
-            img = np.kron(tiles, np.ones((32, 32), dtype=np.uint8))
         color = (i % 4 == 2) or (exp_row and i >= 8)
         src = np.stack([img] * 3, axis=-1) if color else img
         rows.append(
             (
                 1000 + i,
-                "image",
                 encode_jpeg_hierarchical(
                     src,
                     quality=25 + (i % 3) * 10,
@@ -11981,12 +11843,10 @@ def synthetic_jpeg_hier_table(spark, n: int = 12) -> DataFrame:
                     expansion=exp_row,
                     arith=bool(i % 2),
                 ),
-                None,
-                f"mem://media/{1000 + i}.hjpg",
+                "hjpg",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def _jpg_first_sof(b: bytes) -> int:
@@ -12552,29 +12412,22 @@ def decode_image_meta(df: DataFrame, fake: bool = False) -> DataFrame:
     FAKEIMG layout. Undecodable payloads yield null columns, never
     task failures (corrupt files must not kill a 100 TB scan)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:  # one Arrow batch at a time — bounded memory
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, fmt = _decode_any(content)
-                if px is not None:
-                    h, w, c = px.shape
-                    out.append((media_id, w, h, c, fmt))
-                elif (
-                    fake
-                    and content is not None
-                    and bytes(content[:7]) == _MAGIC
-                ):
-                    w = int.from_bytes(bytes(content[7:9]), "big")
-                    h = int.from_bytes(bytes(content[9:11]), "big")
-                    out.append((media_id, w, h, int(content[11]), "fakeimg"))
-                else:
-                    out.append((media_id, None, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "channels", "format"]
-            )
+    def meta(content):
+        px, fmt = _decode_any(content)
+        if px is not None:
+            h, w, c = px.shape
+            return w, h, c, fmt
+        if fake and bytes(content[:7]) == _MAGIC:
+            w = int.from_bytes(bytes(content[7:9]), "big")
+            h = int.from_bytes(bytes(content[9:11]), "big")
+            return w, h, int(content[11]), "fakeimg"
+        return None
 
-    return df.select("media_id", "content").mapInPandas(kernel, IMAGE_META_SCHEMA)
+    return _map_media(
+        df.select("media_id", "content"),
+        "media_id long, width int, height int, channels int, format string",
+        meta,
+    )
 
 
 def resize_images(
@@ -12588,28 +12441,19 @@ def resize_images(
 
     tw, th = target
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, _ = _decode_any(content)
-                if px is not None:
-                    h, w, _c = px.shape
-                    iy = (np.arange(th) * h) // th
-                    ix = (np.arange(tw) * w) // tw
-                    out.append((media_id, encode_bmp(px[iy][:, ix])))
-                elif (
-                    fake
-                    and content is not None
-                    and bytes(content[:7]) == _MAGIC
-                ):
-                    out.append((media_id, make_fake_image_bytes(tw, th)))
-                else:
-                    out.append((media_id, None))
-            yield pd.DataFrame(out, columns=["media_id", "content"])
+    def resize(content):
+        px, _ = _decode_any(content)
+        if px is not None:
+            h, w, _c = px.shape
+            iy = (np.arange(th) * h) // th
+            ix = (np.arange(tw) * w) // tw
+            return (encode_bmp(px[iy][:, ix]),)
+        if fake and bytes(content[:7]) == _MAGIC:
+            return (make_fake_image_bytes(tw, th),)
+        return None
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel, "media_id long, content binary"
+    return _map_media(
+        df.select("media_id", "content"), "media_id long, content binary", resize
     )
 
 
@@ -12620,44 +12464,26 @@ def image_features(df: DataFrame) -> DataFrame:
     pixels never leave the kernel."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, fmt = _decode_any(content)
-                if px is None:
-                    out.append((media_id, None, None, None, None, None, None))
-                    continue
-                f = px.astype(np.float64)
-                lum = f @ np.array([0.2126, 0.7152, 0.0722])
-                out.append(
-                    (
-                        media_id,
-                        fmt,
-                        float(f[..., 0].mean()),
-                        float(f[..., 1].mean()),
-                        float(f[..., 2].mean()),
-                        float(lum.mean()),
-                        float(lum.std()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id",
-                    "format",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "luma_mean",
-                    "luma_std",
-                ],
-            )
+    def features(content):
+        px, fmt = _decode_any(content)
+        if px is None:
+            return None
+        f = px.astype(np.float64)
+        lum = f @ np.array([0.2126, 0.7152, 0.0722])
+        return (
+            fmt,
+            float(f[..., 0].mean()),
+            float(f[..., 1].mean()),
+            float(f[..., 2].mean()),
+            float(lum.mean()),
+            float(lum.std()),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, format string, mean_r double, mean_g double, "
         "mean_b double, luma_mean double, luma_std double",
+        features,
     )
 
 
@@ -13412,9 +13238,8 @@ def synthetic_ima_stereo_table(spark, n: int = 24) -> DataFrame:
             (((i * 53) % 1800) - 900, (i * 3) % 89),
             (((i * 29) % 1600) - 800, (i * 5 + 7) % 89),
         )
-        rows.append((i, "audio", content, None, f"mem://media/{i}.st.wav"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "st.wav"))
+    return _media_table(spark, "audio", rows)
 
 
 def audio_stereo_stats(df: DataFrame) -> DataFrame:
@@ -13424,57 +13249,32 @@ def audio_stereo_stats(df: DataFrame) -> DataFrame:
     per-channel sums survive), and joint peak magnitude."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, _rate = decode_wav(bytes(content))
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    struct.error,
-                    IndexError,
-                ):
-                    out.append((media_id,) + (None,) * 7)
-                    continue
-                if samples.shape[1] != 2:
-                    out.append((media_id,) + (None,) * 7)
-                    continue
-                sl = _exact_int_samples(samples[:, 0])
-                sr = _exact_int_samples(samples[:, 1])
-                if sl is None or sr is None:
-                    out.append((media_id,) + (None,) * 7)
-                    continue
-                out.append(
-                    (
-                        media_id,
-                        int(sl.size),
-                        int(sl.sum()),
-                        int(sr.sum()),
-                        _exact_dot(sl, sl),
-                        _exact_dot(sr, sr),
-                        _exact_dot(sl, sr),
-                        int(
-                            max(
-                                np.abs(sl).max(initial=0),
-                                np.abs(sr).max(initial=0),
-                            )
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_frames", "sum_left", "sum_right",
-                    "sumsq_left", "sumsq_right", "cross_sum", "peak",
-                ],
-            )
+    def stats(content):
+        try:
+            samples, _rate = decode_wav(bytes(content))
+        except (ValueError, NotImplementedError, struct.error, IndexError):
+            return None
+        if samples.shape[1] != 2:
+            return None
+        sl = _exact_int_samples(samples[:, 0])
+        sr = _exact_int_samples(samples[:, 1])
+        if sl is None or sr is None:
+            return None
+        return (
+            int(sl.size),
+            int(sl.sum()),
+            int(sr.sum()),
+            _exact_dot(sl, sl),
+            _exact_dot(sr, sr),
+            _exact_dot(sl, sr),
+            int(max(np.abs(sl).max(initial=0), np.abs(sr).max(initial=0))),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_frames long, sum_left long, sum_right long, "
         "sumsq_left long, sumsq_right long, cross_sum long, peak long",
+        stats,
     )
 
 
@@ -13512,16 +13312,15 @@ def synthetic_g711_table(spark, n: int = 40) -> DataFrame:
         law = "ulaw" if i % 2 == 0 else "alaw"
         if i % 4 in (2, 3):
             content = encode_au(codes, 1 if law == "ulaw" else 27, 8000)
-            path = f"mem://media/{i}.{law}.au"
+            ext = f"{law}.au"
         elif i % 8 in (4, 5):
             content = encode_aiff(codes, 8000, ctype=law.encode())
-            path = f"mem://media/{i}.{law}.aifc"
+            ext = f"{law}.aifc"
         else:
             content = encode_wav_g711(codes, law)
-            path = f"mem://media/{i}.{law}.wav"
-        rows.append((i, "audio", content, None, path))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+            ext = f"{law}.wav"
+        rows.append((i, content, ext))
+    return _media_table(spark, "audio", rows)
 
 
 _AIFF_FMT_CODE = 0xA1FF  # sentinel fmt_code for AIFF/AIFC containers
@@ -14937,41 +14736,25 @@ def audio_exact_stats(df: DataFrame) -> DataFrame:
     micro-quantization discipline. Undecodable bytes yield nulls."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, _rate = decode_wav(bytes(content))
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    struct.error,
-                    IndexError,
-                ):
-                    out.append((media_id, None, None, None, None))
-                    continue
-                s = _exact_int_samples(samples[:, 0])
-                if s is None:
-                    out.append((media_id, None, None, None, None))
-                    continue
-                out.append(
-                    (
-                        media_id,
-                        int(s.size),
-                        int(s.sum()),
-                        _exact_dot(s, s),
-                        int(np.abs(s).max()) if s.size else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n_samples", "sum_lin", "sum_sq", "peak"],
-            )
+    def stats(content):
+        try:
+            samples, _rate = decode_wav(bytes(content))
+        except (ValueError, NotImplementedError, struct.error, IndexError):
+            return None
+        s = _exact_int_samples(samples[:, 0])
+        if s is None:
+            return None
+        return (
+            int(s.size),
+            int(s.sum()),
+            _exact_dot(s, s),
+            int(np.abs(s).max()) if s.size else 0,
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_samples long, sum_lin long, sum_sq long, peak long",
+        stats,
     )
 
 
@@ -14984,60 +14767,32 @@ def audio_features(df: DataFrame) -> DataFrame:
     regardless of container width."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate, fmt_code, bits = _decode_wav_full(
-                        bytes(content)
-                    )
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    TypeError,
-                    struct.error,
-                ):
-                    out.append(
-                        (media_id, None, None, None, None, None, None, None)
-                    )
-                    continue
-                if np.issubdtype(samples.dtype, np.floating):
-                    f = samples.astype(np.float64)
-                elif samples.dtype == np.int32:  # raw 24/32-bit values
-                    f = samples.astype(np.float64) / float(1 << (bits - 1))
-                else:
-                    f = samples.astype(np.float64) / 32768.0
-                out.append(
-                    (
-                        media_id,
-                        int(samples.shape[1]),
-                        int(rate),
-                        int(fmt_code),
-                        int(bits),
-                        float(samples.shape[0] / rate),
-                        float(np.sqrt((f**2).mean())),
-                        float(np.abs(f).max(initial=0.0)),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id",
-                    "channels",
-                    "sample_rate",
-                    "fmt_code",
-                    "bits",
-                    "duration_sec",
-                    "rms",
-                    "peak",
-                ],
-            )
+    def features(content):
+        try:
+            samples, rate, fmt_code, bits = _decode_wav_full(bytes(content))
+        except (ValueError, NotImplementedError, TypeError, struct.error):
+            return None
+        if np.issubdtype(samples.dtype, np.floating):
+            f = samples.astype(np.float64)
+        elif samples.dtype == np.int32:  # raw 24/32-bit values
+            f = samples.astype(np.float64) / float(1 << (bits - 1))
+        else:
+            f = samples.astype(np.float64) / 32768.0
+        return (
+            int(samples.shape[1]),
+            int(rate),
+            int(fmt_code),
+            int(bits),
+            float(samples.shape[0] / rate),
+            float(np.sqrt((f**2).mean())),
+            float(np.abs(f).max(initial=0.0)),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, channels int, sample_rate int, fmt_code int, "
         "bits int, duration_sec double, rms double, peak double",
+        features,
     )
 
 
@@ -15048,41 +14803,31 @@ def resample_audio(df: DataFrame, target_rate: int) -> DataFrame:
     version)."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate, _fmt, bits = _decode_wav_full(
-                        bytes(content)
-                    )
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    TypeError,
-                    struct.error,
-                ):
-                    out.append((media_id, None))
-                    continue
-                n_out = int(samples.shape[0] * target_rate / rate)
-                idx = (np.arange(n_out) * rate) // target_rate
-                picked = samples[idx]
-                # non-int16 sources re-quantize to the int16 scale for
-                # the 16-bit output container: raw 24/32-bit drop their
-                # low bits-16 bits (arithmetic shift = floor — the
-                # shift must follow the SOURCE width, or 32-bit samples
-                # wrap in the int16 cast), float32 rounds and clips —
-                # all deterministic and engine-mirrorable
-                if np.issubdtype(picked.dtype, np.floating):
-                    q = np.rint(np.nan_to_num(picked, nan=0.0) * 32768.0)
-                    picked = np.clip(q, -32768, 32767).astype(np.int16)
-                elif picked.dtype == np.int32:
-                    picked = (picked >> (bits - 16)).astype(np.int16)
-                out.append((media_id, encode_wav(picked, target_rate)))
-            yield pd.DataFrame(out, columns=["media_id", "content"])
+    def resample(content):
+        try:
+            samples, rate, _fmt, bits = _decode_wav_full(bytes(content))
+        except (ValueError, NotImplementedError, TypeError, struct.error):
+            return None
+        n_out = int(samples.shape[0] * target_rate / rate)
+        idx = (np.arange(n_out) * rate) // target_rate
+        picked = samples[idx]
+        # non-int16 sources re-quantize to the int16 scale for the
+        # 16-bit output container: raw 24/32-bit drop their low bits-16
+        # bits (arithmetic shift = floor — the shift must follow the
+        # SOURCE width, or 32-bit samples wrap in the int16 cast),
+        # float32 rounds and clips — all deterministic and
+        # engine-mirrorable
+        if np.issubdtype(picked.dtype, np.floating):
+            q = np.rint(np.nan_to_num(picked, nan=0.0) * 32768.0)
+            picked = np.clip(q, -32768, 32767).astype(np.int16)
+        elif picked.dtype == np.int32:
+            picked = (picked >> (bits - 16)).astype(np.int16)
+        return (encode_wav(picked, target_rate),)
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel, "media_id long, content binary"
+    return _map_media(
+        df.select("media_id", "content"),
+        "media_id long, content binary",
+        resample,
     )
 
 
@@ -15135,11 +14880,10 @@ def sample_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
                 except (ValueError, struct.error, IndexError):
                     continue
                 rows.extend(got)
-            yield pd.DataFrame(rows, columns=["media_id", "frame_no", "frame"])
+            yield pd.DataFrame(rows, columns=_ddl_names(ddl))
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel, "media_id long, frame_no int, frame binary"
-    )
+    ddl = "media_id long, frame_no int, frame binary"
+    return df.select("media_id", "content").mapInPandas(kernel, ddl)
 
 
 def synthetic_audio_table(spark, n: int = 50) -> DataFrame:
@@ -15244,9 +14988,8 @@ def synthetic_audio_table(spark, n: int = 50) -> DataFrame:
             ext = "aifc"
         elif k == 4 and i % 16 == 12:
             ext = "au"
-        rows.append((i, "audio", content, None, f"mem://media/{i}.{ext}"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, ext))
+    return _media_table(spark, "audio", rows)
 
 
 def image_exact_stats(df: DataFrame) -> DataFrame:
@@ -15263,39 +15006,23 @@ def image_exact_stats(df: DataFrame) -> DataFrame:
     ~1.4e6 pixels per image (gate larger frames upstream)."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, fmt = _decode_any(content)
-                if px is None:
-                    out.append((media_id, None, None, None, None, None, None))
-                    continue
-                p = px.astype(np.int64)
-                lq = p @ np.array([2126, 7152, 722], dtype=np.int64)
-                out.append(
-                    (
-                        media_id,
-                        int(p.shape[0] * p.shape[1]),
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                        int(lq.sum()),
-                        int((lq * lq).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_px", "sum_r", "sum_g", "sum_b",
-                    "sum_lq", "sum_lq2",
-                ],
-            )
+    def stats(content):
+        px, _fmt = _decode_any(content)
+        if px is None:
+            return None
+        p = px.astype(np.int64)
+        lq = p @ np.array([2126, 7152, 722], dtype=np.int64)
+        return (
+            *_px_sums(p),
+            int(lq.sum()),
+            int((lq * lq).sum()),
+        )
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, n_px long, sum_r long, sum_g long, sum_b long, "
         "sum_lq long, sum_lq2 long",
+        stats,
     )
 
 
@@ -15320,9 +15047,8 @@ def synthetic_gif_partial_table(spark, n: int = 40) -> DataFrame:
             offset=(ox, oy),
             background=((i * 5) % 256, (i * 11) % 256, (i * 17) % 256),
         )
-        rows.append((i, "image", content, None, f"mem://media/{i}.gif"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, content, "gif"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_gif_animation_table(spark, n: int = 40) -> DataFrame:
@@ -15360,14 +15086,11 @@ def synthetic_gif_animation_table(spark, n: int = 40) -> DataFrame:
         rows.append(
             (
                 100 + i,
-                "image",
                 encode_gif_animation(frames, (sw, sh), bg),
-                None,
-                f"mem://media/{100 + i}.anim.gif",
+                "anim.gif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_tiff_multipage_table(spark, n: int = 12) -> DataFrame:
@@ -15398,19 +15121,16 @@ def synthetic_tiff_multipage_table(spark, n: int = 12) -> DataFrame:
         rows.append(
             (
                 200 + i,
-                "image",
                 encode_tiff_multipage(
                     pages,
                     compression=comps[i % 4],
                     big_endian=bool(i % 2),
                     rows_per_strip=4 if i % 3 == 0 else 0,
                 ),
-                None,
-                f"mem://media/{200 + i}.multi.tif",
+                "multi.tif",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def synthetic_apng_table(spark, n: int = 12) -> DataFrame:
@@ -15455,14 +15175,11 @@ def synthetic_apng_table(spark, n: int = 12) -> DataFrame:
         rows.append(
             (
                 300 + i,
-                "image",
                 encode_apng(frames, (sw, sh)),
-                None,
-                f"mem://media/{300 + i}.apng",
+                "apng",
             )
         )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+    return _media_table(spark, "image", rows)
 
 
 def gif_frame_stats(df: DataFrame) -> DataFrame:
@@ -15506,27 +15223,18 @@ def gif_frame_stats(df: DataFrame) -> DataFrame:
                         (
                             media_id,
                             k,
-                            int(hh * ww),
-                            int(p[..., 0].sum()),
-                            int(p[..., 1].sum()),
-                            int(p[..., 2].sum()),
+                            *_px_sums(p),
                             int((wgt * p[..., 0]).sum()),
                             int(p.max()),
                         )
                     )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_id", "n_px", "sum_r", "sum_g",
-                    "sum_b", "wsum_r", "aux",
-                ],
-            )
+            yield pd.DataFrame(out, columns=_ddl_names(ddl))
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    ddl = (
         "media_id long, frame_id long, n_px long, sum_r long, "
-        "sum_g long, sum_b long, wsum_r long, aux long",
+        "sum_g long, sum_b long, wsum_r long, aux long"
     )
+    return df.select("media_id", "content").mapInPandas(kernel, ddl)
 
 
 def codec_census_stats(df: DataFrame) -> DataFrame:
@@ -15546,58 +15254,34 @@ def codec_census_stats(df: DataFrame) -> DataFrame:
     corpora)."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                px, fmt = _decode_any(content)
-                if px is None:
-                    out.append(
-                        (media_id, None, None, None, None, None, None)
-                    )
-                    continue
-                p = px.astype(np.int64)
-                if fmt == "jpeg":
-                    prog, n_scans, n_rst = jpeg_marker_summary(
-                        bytes(content)
-                    )
-                    if _jpg_has_dhp(bytes(content)):
-                        # hierarchical pyramid: aux pins frames AND
-                        # restart structure (round 12)
-                        fmt, aux = "jpeg_hier", n_scans * 1000 + n_rst
-                    elif prog:
-                        fmt, aux = "jpeg_prog", n_scans * 1000 + n_rst
-                    elif _jpg_first_sof(bytes(content)) == 0xC3:
-                        fmt, aux = "jpeg_ll", n_rst  # lossless class
-                    else:
-                        aux = n_rst
-                else:
-                    aux = int(p[..., :3].max())
-                if fmt in ("ppm", "tiff") and px.dtype == np.uint16:
-                    fmt += "16"
-                out.append(
-                    (
-                        media_id,
-                        fmt,
-                        int(p.shape[0] * p.shape[1]),
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                        int(aux),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "fmt", "n_px", "sum_r", "sum_g", "sum_b",
-                    "aux",
-                ],
-            )
+    def census(content):
+        px, fmt = _decode_any(content)
+        if px is None:
+            return None
+        p = px.astype(np.int64)
+        if fmt == "jpeg":
+            prog, n_scans, n_rst = jpeg_marker_summary(bytes(content))
+            if _jpg_has_dhp(bytes(content)):
+                # hierarchical pyramid: aux pins frames AND restart
+                # structure (round 12)
+                fmt, aux = "jpeg_hier", n_scans * 1000 + n_rst
+            elif prog:
+                fmt, aux = "jpeg_prog", n_scans * 1000 + n_rst
+            elif _jpg_first_sof(bytes(content)) == 0xC3:
+                fmt, aux = "jpeg_ll", n_rst  # lossless class
+            else:
+                aux = n_rst
+        else:
+            aux = int(p[..., :3].max())
+        if fmt in ("ppm", "tiff") and px.dtype == np.uint16:
+            fmt += "16"
+        return (fmt, *_px_sums(p), int(aux))
 
-    return df.select("media_id", "content").mapInPandas(
-        kernel,
+    return _map_media(
+        df.select("media_id", "content"),
         "media_id long, fmt string, n_px long, sum_r long, sum_g long, "
         "sum_b long, aux long",
+        census,
     )
 
 
@@ -15614,10 +15298,8 @@ def synthetic_video_table(spark, n: int = 20) -> DataFrame:
             encode_ppm(make_test_pixels(w, h, seed=i * 100 + f))
             for f in range(6 + (i % 5))
         ]
-        rows.append((i, "video", encode_video(frames), None,
-                     f"mem://media/{i}.vidf"))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return df.withColumn("content_length", F.length("content").cast("long"))
+        rows.append((i, encode_video(frames), "vidf"))
+    return _media_table(spark, "video", rows)
 
 
 def frame_exact_stats(frames_df: DataFrame) -> DataFrame:
@@ -15628,36 +15310,15 @@ def frame_exact_stats(frames_df: DataFrame) -> DataFrame:
     output int64 (n_px, sum_r, sum_g, sum_b) per frame."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, frame_no, frame in zip(
-                pdf["media_id"], pdf["frame_no"], pdf["frame"]
-            ):
-                px, _fmt = _decode_any(frame)
-                if px is None:
-                    out.append((media_id, frame_no, None, None, None, None))
-                    continue
-                p = px.astype(np.int64)
-                out.append(
-                    (
-                        media_id,
-                        frame_no,
-                        int(p.shape[0] * p.shape[1]),
-                        int(p[..., 0].sum()),
-                        int(p[..., 1].sum()),
-                        int(p[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_no", "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def stats(frame):
+        px, _fmt = _decode_any(frame)
+        if px is None:
+            return None
+        return _px_sums(px.astype(np.int64))
 
-    return frames_df.mapInPandas(
-        kernel,
+    return _map_media(
+        frames_df.select("media_id", "frame_no", "frame"),
         "media_id long, frame_no int, n_px long, sum_r long, sum_g long, "
         "sum_b long",
+        stats,
     )

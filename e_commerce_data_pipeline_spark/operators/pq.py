@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import series_udf
 from .util import spread as _spread
 
 MICRO = 1_000_000
@@ -124,7 +125,6 @@ def pq_codes(
     first-min tiebreak (matches the oracle's (dist ASC, code ASC)
     window)."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     np = _np()
     books = np.asarray(books_micro, dtype=np.int64)
@@ -141,8 +141,7 @@ def pq_codes(
             out[:, s] = d.argmin(axis=1)
         return pd.Series(list(out))
 
-    _encode.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    enc = pandas_udf(_encode, "array<int>")
+    enc = series_udf(_encode, "array<int>")
     return _spread(emb).select(F.col(id_col), enc(F.col(vec_col)).alias("codes"))
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import series_udf
 from .util import spread as _spread
 
 
@@ -254,7 +255,6 @@ def hyperplane_signature(vec_col: str, dim: int, n_planes: int, seed: int = 42):
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
@@ -269,10 +269,7 @@ def hyperplane_signature(vec_col: str, dim: int, n_planes: int, seed: int = 42):
         bits = (x @ planes.T) >= 0.0
         return pd.Series(["".join("1" if b else "0" for b in row) for row in bits])
 
-    # explicit annotations (not module-level strings): `from __future__
-    # import annotations` breaks pandas_udf type-hint inference
-    _sig.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    return pandas_udf(_sig, "string")(vec_col)
+    return series_udf(_sig, "string")(vec_col)
 
 
 def pairwise_dot_udf():
@@ -284,7 +281,6 @@ def pairwise_dot_udf():
     rounded sims (6dp) are unaffected."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     def _dot(a, b):
         if len(a) == 0:
@@ -293,8 +289,7 @@ def pairwise_dot_udf():
         y = np.stack(b.to_numpy()).astype(np.float64)
         return pd.Series((x * y).sum(axis=1))
 
-    _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(_dot, "double")
+    return series_udf(_dot, "double")
 
 
 def lsh_topk(

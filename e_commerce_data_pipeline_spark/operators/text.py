@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import series_udf
+
 # Stopwords usable as cheap English signals; kept tiny so the heuristic
 # is explainable and SQL-portable.
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
@@ -445,9 +447,6 @@ def compression_ratio_udf(level: int = 6):
     """
     import zlib
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     def _ratio(s):
         def one(t):
             if t is None:
@@ -459,8 +458,7 @@ def compression_ratio_udf(level: int = 6):
 
         return s.map(one)
 
-    _ratio.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_ratio, "double")
+    return series_udf(_ratio, "double")
 
 
 def compression_signals(
@@ -754,7 +752,6 @@ def char_ngrams_arrow(n: int = 3):
     uses. Semantics identical: Python slicing and Spark substr both
     count code points."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     def _grams(s):
         return pd.Series(
@@ -766,8 +763,7 @@ def char_ngrams_arrow(n: int = 3):
             ]
         )
 
-    _grams.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_grams, "array<string>")
+    return series_udf(_grams, "array<string>")
 
 
 def langid_ngram_classify(
@@ -1004,14 +1000,10 @@ def html_unescape_udf():
     deterministic for a given CPython version's entity table."""
     import html as _html
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     def _unescape(s):
         return s.map(lambda t: None if t is None else _html.unescape(t))
 
-    _unescape.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_unescape, "string")
+    return series_udf(_unescape, "string")
 
 
 def html_tag_stats(col: Column | str) -> Column:
@@ -1154,9 +1146,6 @@ def idna_host_udf(uts46: bool = False):
     extra merging is the safe dedup direction. Gated by import-try:
     requesting ``uts46=True`` without the package raises
     ImportError at plan-build time, never inside an executor."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     if uts46:
         try:
             import idna as _idna
@@ -1190,8 +1179,7 @@ def idna_host_udf(uts46: bool = False):
         out[mask] = out[mask].map(_fold_one)
         return out
 
-    _fold.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_fold, "string")
+    return series_udf(_fold, "string")
 
 
 def canonicalize_url(
@@ -1343,9 +1331,6 @@ def unicode_normalize_udf(form: str = "NFC"):
     NFC(NFKC(x)) == NFKC(x), both pytest-pinned."""
     import unicodedata
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
 
@@ -1354,5 +1339,4 @@ def unicode_normalize_udf(form: str = "NFC"):
             lambda t: None if t is None else unicodedata.normalize(form, t)
         )
 
-    _norm.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_norm, "string")
+    return series_udf(_norm, "string")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import inspect
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -19,6 +20,21 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def series_udf(fn, return_type):
+    """``pandas_udf(fn, return_type)`` as a scalar Series -> Series UDF.
+
+    pandas_udf picks the UDF kind from ``fn``'s type hints, and under
+    ``from __future__ import annotations`` those are strings it cannot
+    resolve; so every parameter and the return are annotated
+    ``pd.Series`` here, read off ``fn``'s signature."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    hints = dict.fromkeys(inspect.signature(fn).parameters, pd.Series)
+    fn.__annotations__ = {**hints, "return": pd.Series}
+    return pandas_udf(fn, return_type)
 
 
 @dataclass(frozen=True)

@@ -295,7 +295,9 @@ def _drain_to_memory(
     ``state_partitions`` sizes the shuffle of a stateful drain (see
     ``state_sized_shuffle``); stateless drains keep the session's. The
     memory sink collects to the driver, which is fine for a bounded
-    drain at test scale; production paths write file sinks."""
+    drain at test scale; production paths write file sinks. The sink's
+    temp view is dropped once the result is bound, so the session
+    catalog holds no reference to the drained rows after the call."""
     spark = out.sparkSession
     name = f"{label}_drain_{next(_DRAIN_SEQ)}"
     writer = (
@@ -315,7 +317,9 @@ def _drain_to_memory(
         # surface as a confusing data mismatch instead of a timeout
         q.stop()
         raise TimeoutError(f"{label} drain did not finish in {_DRAIN_TIMEOUT_S}s")
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def drain_windowed_event_counts(spark: SparkSession, events_path: str) -> DataFrame:

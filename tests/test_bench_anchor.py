@@ -9,7 +9,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import _anchor_ratio, _prior_record, _record_path  # noqa: E402
+from bench import (  # noqa: E402
+    _anchor_ratio,
+    _prior_record,
+    _record_path,
+    _run_record,
+)
 
 
 def test_anchor_ratio_geometric_mean():
@@ -96,3 +101,28 @@ def test_record_path_reads_cpus_through_prior_record(tmp_path):
     prior = _prior_record(str(full), 0.1)
     assert _record_path(str(full), 0.1, 4, prior) == str(tmp_path / "BENCH_FULL_c4.json")
     assert _record_path(str(full), 0.1, 32, prior) == str(full)
+
+
+def test_run_record_compares_only_against_the_same_core_count(tmp_path):
+    """The prior record is the file this run would write: a 4-core run
+    next to a 32-core committed record reads (and writes) the c4
+    sidecar, never the 32-core numbers."""
+    full = tmp_path / "BENCH_FULL.json"
+    side = tmp_path / "BENCH_FULL_c4.json"
+    full.write_text('{"sf": 0.1, "cpus": 32, "queries": {"q": 32.0}}')
+    assert _run_record(str(full), 0.1, 4) == (str(side), {})
+    side.write_text('{"sf": 0.1, "cpus": 4, "queries": {"q": 4.0}}')
+    path, prior = _run_record(str(full), 0.1, 4)
+    assert path == str(side) and prior["queries"] == {"q": 4.0}
+    path, prior = _run_record(str(full), 0.1, 32)
+    assert path == str(full) and prior["queries"] == {"q": 32.0}
+    # a committed record without `cpus` is claimed and compared by any run
+    full.write_text('{"sf": 0.1, "queries": {"q": 8.0}}')
+    assert _run_record(str(full), 0.1, 4) == (
+        str(full), {"sf": 0.1, "queries": {"q": 8.0}}
+    )
+    # an off-scale sidecar from another core count is no prior either
+    small = tmp_path / "BENCH_FULL_sf0.01.json"
+    small.write_text('{"sf": 0.01, "cpus": 8, "queries": {"q": 1.0}}')
+    assert _run_record(str(full), 0.01, 4) == (str(small), {})
+    assert _run_record(str(full), 0.01, 8)[1]["queries"] == {"q": 1.0}

@@ -72,6 +72,53 @@ def test_corrupt_content_yields_nulls_not_errors(spark):
     assert all(r["width"] is None and r["format"] is None for r in rows)
 
 
+# every one-row-per-item kernel; the two extra-argument kernels get
+# fixed arguments, and frame_exact_stats reads the frame layout
+_PER_ITEM_KERNELS = {
+    "image16_exact_stats": None,
+    "image_alpha_stats": None,
+    "image_color_stats": None,
+    "image_dhash": None,
+    "decode_image_meta": None,
+    "resize_images": lambda fn, df: fn(df, (8, 8)),
+    "image_features": None,
+    "audio_stereo_stats": None,
+    "audio_exact_stats": None,
+    "audio_features": None,
+    "resample_audio": lambda fn, df: fn(df, 8000),
+    "image_exact_stats": None,
+    "codec_census_stats": None,
+    "frame_exact_stats": lambda fn, df: fn(
+        df.select("media_id", F.lit(0).alias("frame_no"),
+                  F.col("content").alias("frame"))
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_PER_ITEM_KERNELS))
+def test_null_and_garbage_payloads_yield_one_null_row_each(spark, name):
+    """A garbage payload and a null payload (MEDIA_SCHEMA allows null
+    content) each come back as one row keyed by media_id with every
+    output column null — never as a task failure."""
+    from e_commerce_data_pipeline_spark.operators import multimodal
+
+    df = spark.createDataFrame(
+        [
+            (1, "image", bytearray(b"garbage bytes"), 13, None),
+            (2, "image", None, None, None),
+        ],
+        multimodal.MEDIA_SCHEMA,
+    )
+    fn = getattr(multimodal, name)
+    call = _PER_ITEM_KERNELS[name] or (lambda f, d: f(d))
+    out = call(fn, df)
+    keys = {"media_id", "frame_no"}
+    rows = out.collect()
+    assert sorted(r["media_id"] for r in rows) == [1, 2]
+    for r in rows:
+        assert all(r[c] is None for c in out.columns if c not in keys), r
+
+
 def test_resize_real_pixels(spark):
     df = synthetic_media_table(spark, 10, real=True)
     resized = resize_images(df, (8, 8))

@@ -248,17 +248,17 @@ def _layout_events(spark):
     )
 
 
-@pytest.mark.parametrize(
-    "drain",
-    [
-        pytest.param(drain_streaming_session_stats, id="session"),
-        pytest.param(drain_attribution_from_events, id="attribution"),
-        pytest.param(drain_windowed_event_counts, id="windowed_counts"),
-        pytest.param(drain_streaming_dedup, id="dedup"),
-        pytest.param(drain_static_enriched_events, id="static_enrich"),
-        pytest.param(drain_streaming_hll, id="hll"),
-    ],
-)
+_DRAINS = [
+    pytest.param(drain_streaming_session_stats, id="session"),
+    pytest.param(drain_attribution_from_events, id="attribution"),
+    pytest.param(drain_windowed_event_counts, id="windowed_counts"),
+    pytest.param(drain_streaming_dedup, id="dedup"),
+    pytest.param(drain_static_enriched_events, id="static_enrich"),
+    pytest.param(drain_streaming_hll, id="hll"),
+]
+
+
+@pytest.mark.parametrize("drain", _DRAINS)
 def test_drain_handles_directory_parquet(spark, tmp_path, drain):
     """events.parquet has been delivered both as a single file and as a
     parquet directory; every drain must drain the same rows from either
@@ -283,6 +283,22 @@ def test_drain_handles_directory_parquet(spark, tmp_path, drain):
     from_file = drained(single)
     assert from_file
     assert drained(directory) == from_file
+
+
+@pytest.mark.parametrize("drain", _DRAINS)
+def test_drain_leaves_no_memory_sink_view(spark, tmp_path, drain):
+    """A drain drops its memory-sink view once the result is bound: no
+    ``*_drain_*`` view outlives the call (each would pin its whole
+    result on the driver for the rest of the session), and the frame
+    it returned still collects and filters to the same rows."""
+    path = str(tmp_path / "events.parquet")
+    _layout_events(spark).write.parquet(path)
+    out = drain(spark, path)
+    assert not [t.name for t in spark.catalog.listTables() if "_drain_" in t.name]
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows
+    assert sorted(tuple(r) for r in out.filter(F.lit(True)).collect()) == rows
+    assert sorted(tuple(r) for r in drain(spark, path).collect()) == rows
 
 
 def test_streaming_hll_registers_equal_batch_build(spark, tmp_path):
