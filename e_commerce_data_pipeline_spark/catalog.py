@@ -100,15 +100,3 @@ def open_events_stream(spark: SparkSession, path: str) -> DataFrame:
         path, fname = os.path.split(os.path.abspath(path))
         reader = reader.option("pathGlobFilter", fname)
     return _canonical_events_ts(reader.parquet(path))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for spark.sql entry points)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

@@ -67,7 +67,7 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c)
 
 
-def decimal_sum(col: Column | str, alias: str, precision: int = 28, scale: int = 6) -> Column:
+def decimal_sum(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Production-hardening alternative to ``fixed_sum``: exact
     DecimalType accumulation. Unlike int64 fixed-point (overflow past
     ~9e12 dollars at scale 1e6), decimal sums widen automatically.
@@ -79,4 +79,4 @@ def decimal_sum(col: Column | str, alias: str, precision: int = 28, scale: int =
     decimal arithmetic is ~2-3x slower than long arithmetic and the
     result column is DecimalType (cast downstream as needed)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({precision},{scale})")).alias(alias)
+    return F.sum(c.cast(f"decimal(28,{scale})")).alias(alias)

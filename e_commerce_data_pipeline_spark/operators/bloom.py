@@ -38,16 +38,15 @@ class BloomFilter:
     words: tuple[int, ...]  # m_bits/64 packed little-endian words
     m_bits: int
     k: int
-    salt: str
 
     @property
     def n_set_bits(self) -> int:
         return sum(bin(w & ((1 << 64) - 1)).count("1") for w in self.words)
 
 
-def _positions(key: Column, m_bits: int, k: int, salt: str) -> list[Column]:
+def _positions(key: Column, m_bits: int, k: int) -> list[Column]:
     return [
-        F.pmod(F.xxhash64(F.lit(f"{salt}:{i}"), key), F.lit(m_bits))
+        F.pmod(F.xxhash64(F.lit(f"bloom:{i}"), key), F.lit(m_bits))
         for i in range(k)
     ]
 
@@ -57,7 +56,6 @@ def build_bloom(
     key_col: str,
     m_bits: int = 1 << 16,
     k: int = 4,
-    salt: str = "bloom",
 ) -> BloomFilter:
     """Fold the build side's distinct keys into an m-bit Bloom bitset.
 
@@ -67,7 +65,7 @@ def build_bloom(
     """
     assert m_bits % 64 == 0
     pos = (
-        df.select(F.explode(F.array(*_positions(F.col(key_col), m_bits, k, salt))).alias("pos"))
+        df.select(F.explode(F.array(*_positions(F.col(key_col), m_bits, k))).alias("pos"))
         .distinct()
     )
     word_rows = (
@@ -80,14 +78,14 @@ def build_bloom(
     words = [0] * (m_bits // 64)
     for r in word_rows:
         words[r["w"]] = r["bits"]
-    return BloomFilter(tuple(words), m_bits, k, salt)
+    return BloomFilter(tuple(words), m_bits, k)
 
 
 def might_contain(bloom: BloomFilter, key: Column) -> Column:
     """Membership-test predicate, pure JVM expressions (codegen-able)."""
     arr = F.lit(list(bloom.words))
     cond = None
-    for pos in _positions(key, bloom.m_bits, bloom.k, bloom.salt):
+    for pos in _positions(key, bloom.m_bits, bloom.k):
         word = F.element_at(arr, F.shiftright(pos, 6).cast("int") + F.lit(1))
         mask = F.call_function(
             "shiftleft", F.lit(1).cast("long"), F.pmod(pos, F.lit(64)).cast("int")
@@ -102,9 +100,6 @@ def bloom_semi_join(
     fact_key: str,
     build: DataFrame,
     build_key: str,
-    m_bits: int = 1 << 16,
-    k: int = 4,
-    salt: str = "bloom",
 ) -> DataFrame:
     """Exact LEFT SEMI join with a Bloom pre-filter on the fact scan.
 
@@ -114,7 +109,7 @@ def bloom_semi_join(
     predicate, so Catalyst pushes it into the fact side's batch scan
     stage and the pruned rows never enter the exchange.
     """
-    bloom = build_bloom(build, build_key, m_bits=m_bits, k=k, salt=salt)
+    bloom = build_bloom(build, build_key)
     pruned = fact.filter(might_contain(bloom, F.col(fact_key)))
     return pruned.join(
         build.select(F.col(build_key).alias(fact_key)).distinct(),

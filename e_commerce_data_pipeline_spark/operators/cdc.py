@@ -65,7 +65,6 @@ def apply_cdc(
 def stock_asof_join(
     orders: DataFrame,
     changelog: DataFrame,
-    order_ts: str = "timestamp",
     key_col: str = "product_id",
 ) -> DataFrame:
     """J7 as-of join: stock level at each order's event time.
@@ -84,7 +83,7 @@ def stock_asof_join(
     )
     order_rows = orders.select(
         F.explode(F.expr("items.product_id")).alias(key_col),
-        F.col(order_ts).alias("ts"),
+        F.col("timestamp").alias("ts"),
         F.lit(0).alias("is_cdc"),
         F.lit(None).cast("int").alias("stock_quantity"),
         F.col("event_id").alias("order_event_id"),

@@ -76,7 +76,6 @@ def embedding_contamination(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Eval-set leakage detection in EMBEDDING space: flag corpus
     vectors whose max cosine against any eval vector reaches
@@ -132,14 +131,12 @@ def embedding_contamination(
             # half-away, so rounding must NOT happen here
             yield out[out["sim"] >= threshold - 1e-7]
 
+    from .util import ROUND_DP
     from .util import spread as _spread
 
     flagged = _spread(corpus_emb.select(id_col, vec_col)).mapInPandas(
         score, out_schema
     )
-    sim_col = F.col("sim")
-    if round_dp is not None:
-        sim_col = F.round(sim_col, round_dp)
-    return flagged.withColumn("sim", sim_col).filter(
+    return flagged.withColumn("sim", F.round("sim", ROUND_DP)).filter(
         F.col("sim") >= threshold
     )

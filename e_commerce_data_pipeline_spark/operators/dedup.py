@@ -26,9 +26,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import fingerprint_exact, tokens
-
-
+from .util import ROUND_DP
 from .util import spread as _spread
+
+# SimHash signature width and its pigeonhole chunk count: q29's DuckDB
+# oracle (plans.queries._simhash_oracle_sql) restates the same shape.
+SIMHASH_BITS = 64
+SIMHASH_BLOCKS = 4
+# MinHash LSH shape of the two-stage near-dup pipelines: 8 hashes in
+# 4 bands of 2 rows.
+_LSH_HASHES = 8
+_LSH_BANDS = 4
 
 
 def exact_dedup(
@@ -46,15 +54,6 @@ def exact_dedup(
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def keep_canonical(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Drop exact duplicates, keeping the min-id row per fingerprint."""
-    ranked = df.withColumn("__fp", fingerprint_exact(key_col)).withColumn(
-        "__rn",
-        F.row_number().over(Window.partitionBy("__fp").orderBy(id_col)),
-    )
-    return ranked.filter(F.col("__rn") == 1).drop("__fp", "__rn")
 
 
 def shingles_of(tokens_col, n: int = 3):
@@ -107,7 +106,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_shingle_df: int | None = None,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """All doc pairs with token-n-gram Jaccard >= threshold.
 
@@ -115,14 +113,12 @@ def ngram_jaccard_pairs(
     intersection counts come from the join, union sizes from per-doc
     shingle counts. ``max_shingle_df`` drops shingles appearing in more
     than that many docs before pairing (document-frequency cut).
-    ``hash_shingles`` joins on xxhash64(shingle) longs instead of the
-    shingle strings — ~2x less shuffle width, identical counts modulo a
+    The join keys on xxhash64(shingle) longs instead of the shingle
+    strings — ~2x less shuffle width, identical counts modulo a
     ~2^-64-per-pair collision chance.
     """
     sh = doc_shingles(df, id_col, text_col, n)
-    if hash_shingles:
-        sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    sh = sh.cache()
+    sh = sh.select("id", F.xxhash64("shingle").alias("shingle")).cache()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     if max_shingle_df is not None:
         # Document-frequency cut as a window count over the join key:
@@ -199,9 +195,8 @@ def minhash_signature(
     text_col: str = "text",
     num_hashes: int = 8,
     use_portable_hash: bool = False,
-    shingle_n: int | None = 3,
 ) -> DataFrame:
-    """(id, sig: array) MinHash signatures.
+    """(id, sig: array) MinHash signatures over token 3-gram shingles.
 
     Distributed formulation: tokenize+shingle ONCE, explode to
     (id, unit) rows, compute the ``num_hashes`` cheap hashes per row,
@@ -219,7 +214,7 @@ def minhash_signature(
         _spread(df)
         .select(F.col(id_col).alias("id"), tokens(text_col).alias("__toks"))
         .select(
-            "id", F.explode(_minhash_units("__toks", shingle_n)).alias("unit")
+            "id", F.explode(_minhash_units("__toks", 3)).alias("unit")
         )
     )
     return _signature_from_units(units_rows, num_hashes, use_portable_hash)
@@ -232,7 +227,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 8,
     bands: int = 4,
     use_portable_hash: bool = False,
-    shingle_n: int | None = 3,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band bucket.
 
@@ -241,9 +235,7 @@ def minhash_lsh_candidates(
     (a_id, b_id) with a_id < b_id.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    sigs = minhash_signature(
-        df, id_col, text_col, num_hashes, use_portable_hash, shingle_n
-    )
+    sigs = minhash_signature(df, id_col, text_col, num_hashes, use_portable_hash)
     return _lsh_candidates_from_sigs(sigs, num_hashes, bands)
 
 
@@ -294,13 +286,12 @@ def simhash_table(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
 ) -> DataFrame:
-    """(id, sh) SimHash bit strings ('1010...', length ``bits``).
+    """(id, sh) SimHash bit strings ('1010...', length SIMHASH_BITS).
 
     Distributed formulation (same shape as minhash_signature): explode
     distinct tokens, one xxhash64 per token, per-bit +-1 contributions
-    as ``bits`` int columns, groupBy(id).sum -> sign bits. Partial
+    as SIMHASH_BITS int columns, groupBy(id).sum -> sign bits. Partial
     aggregation keeps the shuffle at one row per id; everything stays
     in whole-stage codegen (bit positions are literal shift amounts).
     """
@@ -311,15 +302,15 @@ def simhash_table(
     h = F.xxhash64("tok")
     contrib = [
         (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     summed = toks.select("id", *contrib).groupBy("id").agg(
-        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(bits)]
+        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(SIMHASH_BITS)]
     )
     bit_str = F.concat(
         *[
             F.when(F.col(f"s{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(bits)
+            for i in range(SIMHASH_BITS)
         ]
     )
     return summed.select("id", bit_str.alias("sh"))
@@ -330,7 +321,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    bits: int = 64,
     n_blocks: int = 4,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
@@ -341,9 +331,9 @@ def simhash_pairs(
     bucket — never a cross join. Hamming distance is computed by
     XOR + popcount over each chunk parsed base-2.
     """
-    chunk = bits // n_blocks
+    chunk = SIMHASH_BITS // n_blocks
     # cache: both self-join sides reuse the computed simhashes
-    sh = simhash_table(df, id_col, text_col, bits).cache()
+    sh = simhash_table(df, id_col, text_col).cache()
     blocks = sh.select(
         "id",
         "sh",
@@ -385,11 +375,9 @@ def simhash_chunks_portable(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    n_blocks: int = 4,
 ) -> DataFrame:
-    """(id, c0..c{n_blocks-1}) SimHash chunk values from a portable
-    md5-derived bit family.
+    """(id, c0..c3) SimHash chunk values from a portable md5-derived
+    bit family.
 
     Hex nibble k of md5(token) supplies bits 4k..4k+3, so any engine
     with md5 reproduces the signature exactly (the DuckDB oracle for
@@ -399,8 +387,7 @@ def simhash_chunks_portable(
     Chunks are kept as integers (bit j of chunk q = signature bit
     16q+j), so blocking and Hamming distance are pure int ops.
     """
-    chunk = bits // n_blocks
-    assert chunk <= 62, "chunk must fit a long"
+    chunk = SIMHASH_BITS // SIMHASH_BLOCKS
     toks = _spread(df).select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(tokens(text_col))).alias("tok"),
@@ -412,20 +399,20 @@ def simhash_chunks_portable(
     # calls + codegen shifts, ~same bits as 16 conv+substring+cast.
     blocks = [
         F.conv(F.substring(m, 8 * b + 1, 8), 16, 10).cast("long")
-        for b in range((bits + 31) // 32)
+        for b in range(SIMHASH_BITS // 32)
     ]
     contrib = [
         (
             F.shiftright(blocks[i // 32], 4 * (7 - (i // 4) % 8) + i % 4)
             .bitwiseAND(F.lit(1)) * 2 - 1
         ).alias(f"b{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     summed = toks.select("id", *contrib).groupBy("id").agg(
-        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(bits)]
+        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(SIMHASH_BITS)]
     )
     chunk_cols = []
-    for q in range(n_blocks):
+    for q in range(SIMHASH_BLOCKS):
         val = None
         for j in range(chunk):
             bit = F.when(F.col(f"s{q * chunk + j}") > 0, 1 << j).otherwise(0)
@@ -439,17 +426,15 @@ def simhash_pairs_portable(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    bits: int = 64,
-    n_blocks: int = 4,
 ) -> DataFrame:
     """``simhash_pairs`` on the portable md5 family (oracle-diffable).
 
-    Same pigeonhole blocking (a pair within distance < n_blocks shares
-    an exact chunk) and filter-before-distinct shape; Hamming distance
-    is XOR+popcount over the chunk ints.
+    Same pigeonhole blocking (a pair within distance < SIMHASH_BLOCKS
+    shares an exact chunk) and filter-before-distinct shape; Hamming
+    distance is XOR+popcount over the chunk ints.
     """
-    ch = simhash_chunks_portable(df, id_col, text_col, bits, n_blocks).cache()
-    chunk_names = [f"c{q}" for q in range(n_blocks)]
+    ch = simhash_chunks_portable(df, id_col, text_col).cache()
+    chunk_names = [f"c{q}" for q in range(SIMHASH_BLOCKS)]
     blocks = ch.select(
         "id",
         *chunk_names,
@@ -457,7 +442,7 @@ def simhash_pairs_portable(
             F.array(
                 *[
                     F.struct(F.lit(q).alias("q"), F.col(f"c{q}").alias("val"))
-                    for q in range(n_blocks)
+                    for q in range(SIMHASH_BLOCKS)
                 ]
             )
         ).alias("bk"),
@@ -471,7 +456,7 @@ def simhash_pairs_portable(
         "q", "val",
     )
     hamming = None
-    for q in range(n_blocks):
+    for q in range(SIMHASH_BLOCKS):
         h = F.bit_count(F.col(f"a_c{q}").bitwiseXOR(F.col(f"b_c{q}")))
         hamming = h if hamming is None else hamming + h
     return (
@@ -541,7 +526,6 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Near-duplicate pairs in embedding space (north-star U6
     "embedding-cosine near-dup"): multi-table hyperplane LSH blocks
@@ -629,9 +613,7 @@ def embedding_near_dup(
     nv = base.select("id", "nv")
     # Arrow batch dot: the verify stage scores |candidates| pairs —
     # dense math, so the vectorized UDF beats the interpreted HOF fold
-    sim = pairwise_dot_udf()(F.col("a_nv"), F.col("b_nv"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
+    sim = F.round(pairwise_dot_udf()(F.col("a_nv"), F.col("b_nv")), ROUND_DP)
     return (
         cand.join(
             nv.select(F.col("id").alias("a_id"), F.col("nv").alias("a_nv")), "a_id"
@@ -668,9 +650,6 @@ def near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     use_portable_hash: bool = False,
 ) -> DataFrame:
     """The production two-stage near-dup pipeline: MinHash+LSH generates
@@ -680,19 +659,19 @@ def near_dup_pairs(
     join runs on |candidates| pairs instead of all pairs sharing any
     shingle — the standard shape for petabyte-scale dedup. LSH is
     probabilistic: pairs the banding misses (P ~ (1-j^r)^b) are not
-    returned; tune num_hashes/bands for the target threshold.
+    returned; the _LSH_HASHES/_LSH_BANDS shape sets that curve.
 
     The exploded (id, shingle) frame is computed ONCE and cached; both
     the MinHash signatures and the verify-stage intersections derive
     from it, saving a full tokenize+shingle+explode pass.
     """
-    sh = doc_shingles(df, id_col, text_col, shingle_n).cache()
+    sh = doc_shingles(df, id_col, text_col).cache()
     sigs = _signature_from_units(
         sh.select("id", F.col("shingle").alias("unit")),
-        num_hashes,
+        _LSH_HASHES,
         use_portable_hash,
     )
-    cands = _lsh_candidates_from_sigs(sigs, num_hashes, bands)
+    cands = _lsh_candidates_from_sigs(sigs, _LSH_HASHES, _LSH_BANDS)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("id").alias("a_id"), "shingle")
     b = sh.select(F.col("id").alias("b_id"), "shingle")
@@ -786,9 +765,6 @@ def incremental_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.1,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
     use_portable_hash: bool = False,
 ) -> DataFrame:
     """Incremental ingestion dedup: flag NEW documents that near-
@@ -808,20 +784,20 @@ def incremental_near_dups(
     collisions) — the whole corpus is never re-paired against itself.
     The verify join touches only candidate ids' shingle rows.
     """
-    sh_c = doc_shingles(corpus, id_col, text_col, shingle_n).cache()
-    sh_b = doc_shingles(batch, id_col, text_col, shingle_n).cache()
+    sh_c = doc_shingles(corpus, id_col, text_col).cache()
+    sh_b = doc_shingles(batch, id_col, text_col).cache()
     sig_c = _signature_from_units(
         sh_c.select("id", F.col("shingle").alias("unit")),
-        num_hashes,
+        _LSH_HASHES,
         use_portable_hash,
     )
     sig_b = _signature_from_units(
         sh_b.select("id", F.col("shingle").alias("unit")),
-        num_hashes,
+        _LSH_HASHES,
         use_portable_hash,
     )
-    bc = _band_rows(sig_c, num_hashes, bands)
-    bb = _band_rows(sig_b, num_hashes, bands)
+    bc = _band_rows(sig_c, _LSH_HASHES, _LSH_BANDS)
+    bb = _band_rows(sig_b, _LSH_HASHES, _LSH_BANDS)
     cands = (
         bb.select(F.col("id").alias("new_id"), "band", "key")
         .join(bc.select(F.col("id").alias("corpus_id"), "band", "key"),
@@ -984,14 +960,13 @@ def semdedup(
     tau: float = 0.9,
     id_col: str = "neighbor_id",
     vec_col: str = "c_vec",
-    round_dp: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication of an embedding corpus via cluster-local cosine
     pruning. Complements the LSH near-dup path (``embedding_near_dup``)
     with the k-means flavor a pretraining pipeline runs at corpus
     scale: points are bucketed by nearest centroid, ranked within each
-    cluster by similarity to that centroid (rounded to ``round_dp``
+    cluster by similarity to that centroid (rounded to ``ROUND_DP``
     so the rank — an output column — can't flip on cross-engine float
     noise; vec-id tiebreak), and a
     point is dropped when any HIGHER-ranked cluster-mate is closer
@@ -1007,7 +982,7 @@ def semdedup(
     list size), pairing is the same sum(list^2) bucket-bounded
     self-join every candidate generator here uses — never corpus^2 —
     and hot lists split under AQE skew handling. Comparisons use
-    ``round(sim, round_dp)`` so the keep/drop frontier is identical
+    ``round(sim, ROUND_DP)`` so the keep/drop frontier is identical
     across engines (same discipline as embedding_near_dup).
 
     Returns one row per vector: (vec_id, cluster, rk, max_prior_sim,
@@ -1031,7 +1006,7 @@ def semdedup(
     ranked = (
         base.join(F.broadcast(cents_df), "cluster")
         .withColumn(
-            "cent_sim", F.round(pairwise_dot_udf()(F.col("nv"), F.col("cent")), round_dp)
+            "cent_sim", F.round(pairwise_dot_udf()(F.col("nv"), F.col("cent")), ROUND_DP)
         )
         .withColumn(
             "rk",
@@ -1056,7 +1031,7 @@ def semdedup(
         a.join(b, "cluster")
         .filter(F.col("rk") > F.col("b_rk"))
         .withColumn(
-            "sim", F.round(pairwise_dot_udf()(F.col("a_nv"), F.col("b_nv")), round_dp)
+            "sim", F.round(pairwise_dot_udf()(F.col("a_nv"), F.col("b_nv")), ROUND_DP)
         )
         .groupBy("vec_id")
         .agg(F.max("sim").alias("max_prior_sim"))
@@ -1183,14 +1158,13 @@ def prefix_sorted_docs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_units: bool = True,
 ) -> DataFrame:
-    """(id, arr, n_sh) with each doc's distinct shingles sorted by
-    (global df asc, unit asc) — the canonical order the prefix filter
-    requires. Shared by prefix_filter_jaccard_pairs and tests."""
+    """(id, arr, n_sh) with each doc's distinct xxhash64(shingle)s
+    sorted by (global df asc, unit asc) — the canonical order the
+    prefix filter requires. Shared by prefix_filter_jaccard_pairs and
+    tests."""
     sh = doc_shingles(df, id_col, text_col, n)
-    if hash_units:
-        sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
+    sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
     # document frequency as a window count over the shingle shuffle
     # (round 17, the ngram_jaccard_pairs house pattern): the old
     # groupBy(shingle) + join-back formulation ran the tokenize +
@@ -1222,7 +1196,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold_pct: int = 20,
-    hash_units: bool = True,
 ) -> DataFrame:
     """All doc pairs with token-n-gram Jaccard >= threshold_pct/100,
     found via PPJoin-style PREFIX FILTERING (Xiao et al., WWW 2008):
@@ -1248,7 +1221,7 @@ def prefix_filter_jaccard_pairs(
 
     Returns (a_id, b_id, n_inter, n_a, n_b, jaccard).
     """
-    docs = prefix_sorted_docs(df, id_col, text_col, n, hash_units).cache()
+    docs = prefix_sorted_docs(df, id_col, text_col, n).cache()
     cand = _prefix_candidates(docs, threshold_pct)
     fa = docs.select(
         F.col("id").alias("a_id"),

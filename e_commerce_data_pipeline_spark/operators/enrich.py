@@ -47,9 +47,7 @@ def bot_score(df: DataFrame, events_per_session_threshold: int = 100) -> DataFra
     return out.withColumn("is_bot", is_bot)
 
 
-def user_segments(
-    orders: DataFrame, hv_threshold: int = 500, loyal_orders: int = 5
-) -> DataFrame:
+def user_segments(orders: DataFrame, hv_threshold: int = 500) -> DataFrame:
     """U2: per-user segment from order activity (when-ladder, no UDF).
 
     Pass ``total_amount`` as exact integer cents (functions.to_fixed)
@@ -63,7 +61,7 @@ def user_segments(
     return per_user.withColumn(
         "user_segment",
         F.when(F.col("lifetime_value") >= hv_threshold, "high_value")
-        .when(F.col("n_orders") >= loyal_orders, "loyal")
+        .when(F.col("n_orders") >= 5, "loyal")
         .when(F.col("n_orders") == 1, "new")
         .otherwise("regular"),
     )

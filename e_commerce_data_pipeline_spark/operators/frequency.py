@@ -97,10 +97,10 @@ def heavy_hitters(items: DataFrame, col: str, k: int = 200) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _cm_bucket(col: str, r: int, width: int, salt: str):
+def _cm_bucket(col: str, r: int, width: int):
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{salt}:{r}:"), F.col(col).cast("string"))),
+            F.md5(F.concat(F.lit(f"cm:{r}:"), F.col(col).cast("string"))),
             1,
             8,
         ),
@@ -115,7 +115,6 @@ def count_min_counters(
     col: str,
     depth: int = 4,
     width: int = 256,
-    salt: str = "cm",
 ) -> DataFrame:
     """Build the d x w counter table: one map-side explode of d
     (row, bucket) cells per item, then a partial-agg groupBy — the
@@ -128,7 +127,7 @@ def count_min_counters(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _cm_bucket(col, r, width, salt).alias("bucket"),
+                        _cm_bucket(col, r, width).alias("bucket"),
                     )
                     for r in range(depth)
                 ]
@@ -148,7 +147,6 @@ def count_min_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    salt: str = "cm",
 ) -> DataFrame:
     """Point-query the sketch for each key: est = min over the d rows
     of that key's counter. The counter table is d*w rows — a genuinely
@@ -164,7 +162,7 @@ def count_min_estimate(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _cm_bucket(key_col, r, width, salt).alias("bucket"),
+                        _cm_bucket(key_col, r, width).alias("bucket"),
                     )
                     for r in range(depth)
                 ]

@@ -36,23 +36,19 @@ def fuzzy_name_pairs(
     df: DataFrame,
     name_col: str,
     max_distance: int = 2,
-    block: Column | None = None,
 ) -> DataFrame:
     """(name_a, name_b, distance) over the DISTINCT values of
     ``name_col``: pairs share a block key and sit within
     ``max_distance`` edits (name_a < name_b lexicographically).
 
-    ``block`` overrides the blocking expression, evaluated against the
-    distinct values exposed as column ``name`` (default ``last_token``
-    of the name). Blocking trades recall for tractability exactly like
-    LSH banding: a pair differing in the block key itself is never
-    compared.
+    The block key is the name's ``last_token``. Blocking trades recall
+    for tractability exactly like LSH banding: a pair differing in the
+    block key itself is never compared.
     """
-    blk = block if block is not None else last_token("name")
     names = (
         df.select(F.col(name_col).alias("name"))
         .distinct()
-        .select("name", blk.alias("__blk"))
+        .select("name", last_token("name").alias("__blk"))
     )
     a = names.select(F.col("name").alias("name_a"), "__blk")
     b = names.select(F.col("name").alias("name_b"), "__blk")
@@ -123,7 +119,6 @@ def fs_linkage_pairs(
     field_cols: list[str],
     m: float = 0.9,
     k: int | None = 50,
-    weight_scale: int = 1_000_000,
     min_score_micro: int | None = None,
     block_col2: str | None = None,
 ) -> DataFrame:
@@ -138,7 +133,7 @@ def fs_linkage_pairs(
     u (chance agreement) is ESTIMATED FROM THE DATA as the exact
     integer rational sum(c_v*(c_v-1)) / (N*(N-1)) per field — one
     tiny groupBy per field, two int64s to carry; m is the standard
-    fixed prior. Weights quantize ONCE to ``weight_scale``-units
+    fixed prior. Weights quantize ONCE to micro-units
     (the repo ln discipline), so pair scores are exact integer sums.
     Degenerate fields clamp: all-unique (u -> 1/den) and constant
     (1-u -> 1/den) stay finite, mirrored identically in SQL. int64
@@ -211,8 +206,8 @@ def fs_linkage_pairs(
         den = F.col(f"n_{f}") * (F.col(f"n_{f}") - 1)
         num = F.greatest(F.col(f"num_{f}"), F.lit(1))
         dis = F.greatest(den - num, F.lit(1))
-        wa = F.round(F.log(F.lit(m) * den / num) * weight_scale).cast("long")
-        wd = F.round(F.log(F.lit(1.0 - m) * den / dis) * weight_scale).cast(
+        wa = F.round(F.log(F.lit(m) * den / num) * 1_000_000).cast("long")
+        wd = F.round(F.log(F.lit(1.0 - m) * den / dis) * 1_000_000).cast(
             "long"
         )
         af, bf = F.col(f"a_{f}"), F.col(f"b_{f}")

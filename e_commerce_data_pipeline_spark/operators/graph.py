@@ -32,12 +32,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RANK_SCALE = 10**12
+# Damping factor in percent: 85 % of a vertex's rank flows along its
+# out-edges, the rest teleports uniformly.
+DAMPING_PCT = 85
 
 
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
-    damping_pct: int = 85,
     src: str = "src",
     dst: str = "dst",
     checkpoint: bool = True,
@@ -52,8 +54,8 @@ def pagerank(
     Exact update rule (all integer, '//' = floor division)::
 
         r0(v)     = RANK_SCALE // N
-        share_k(u)= (damping_pct * r_k(u)) // (100 * deg(u))
-        r_{k+1}(v)= (100-damping_pct)*RANK_SCALE // (100*N)
+        share_k(u)= (DAMPING_PCT * r_k(u)) // (100 * deg(u))
+        r_{k+1}(v)= (100-DAMPING_PCT)*RANK_SCALE // (100*N)
                     + sum_{u->v} share_k(u)
     """
     from pyspark.sql import Window
@@ -91,7 +93,7 @@ def pagerank(
         return e.select(
             F.col("src").alias("id"), F.lit(0).cast("long").alias("rank_q")
         )
-    teleport = (100 - damping_pct) * RANK_SCALE // (100 * n)
+    teleport = (100 - DAMPING_PCT) * RANK_SCALE // (100 * n)
     ranks = e.select(F.col("src").alias("id")).distinct().select(
         "id", F.lit(RANK_SCALE // n).cast("long").alias("rank_q")
     )
@@ -101,7 +103,7 @@ def pagerank(
             .select(
                 "dst",
                 F.expr(
-                    f"({damping_pct} * rank_q) div (100 * deg)"
+                    f"({DAMPING_PCT} * rank_q) div (100 * deg)"
                 ).alias("share"),
             )
             .groupBy("dst")
@@ -114,27 +116,6 @@ def pagerank(
         if checkpoint:
             ranks = ranks.localCheckpoint()
     return ranks
-
-
-def pagerank_reference(edge_list, iters: int = 3, damping_pct: int = 85):
-    """Driver-side integer reference implementation (tests only):
-    identical arithmetic to :func:`pagerank`, plain Python dicts."""
-    edges = sorted({(u, v) for u, v in edge_list if u != v})
-    deg: dict = {}
-    for u, _ in edges:
-        deg[u] = deg.get(u, 0) + 1
-    n = len(deg)
-    if n == 0:
-        return {}
-    teleport = (100 - damping_pct) * RANK_SCALE // (100 * n)
-    r = {u: RANK_SCALE // n for u in deg}
-    for _ in range(iters):
-        share = {u: (damping_pct * r[u]) // (100 * deg[u]) for u in r}
-        nxt: dict = {}
-        for u, v in edges:
-            nxt[v] = nxt.get(v, 0) + share[u]
-        r = {v: m + teleport for v, m in nxt.items()}
-    return r
 
 
 def triangle_counts(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import dot, unit_vec
+from .util import ROUND_DP
 from .util import series_udf
 from .util import spread as _spread
 
@@ -145,7 +146,6 @@ def ivf_topk_portable(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """``ivf_topk`` with the assignment/probe computed as native double
     expressions instead of the numpy pandas UDF — a pure-SQL-shaped
@@ -190,13 +190,10 @@ def ivf_topk_portable(
         .select("query_id", "q_vec", "cluster")
     )
 
-    sim = dot(F.col("q_vec"), F.col("c_vec"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
     scored = (
         q.join(idx, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", F.round(dot(F.col("q_vec"), F.col("c_vec")), ROUND_DP))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -234,7 +231,6 @@ def probe_ivf_index(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Top-k against a partitioned on-disk index, pruned to the probed
     lists.
@@ -263,7 +259,6 @@ def probe_ivf_index(
         nprobe=nprobe,
         id_col=id_col,
         vec_col=vec_col,
-        round_dp=round_dp,
         index=idx,
     )
 
@@ -296,7 +291,6 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
     index: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact cosine over the nprobe probed lists."""
@@ -306,13 +300,10 @@ def ivf_topk(
         unit_vec(F.col(vec_col)).alias("q_vec"),
         F.explode(_probe_udf(centroids, nprobe)(F.col(vec_col))).alias("cluster"),
     )
-    sim = dot(F.col("q_vec"), F.col("c_vec"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
     scored = (
         q.join(idx, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", F.round(dot(F.col("q_vec"), F.col("c_vec")), ROUND_DP))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (

@@ -1080,7 +1080,7 @@ def _png_palette_index(arr, max_colors: int):
 
 
 def encode_png_palette(
-    arr, filters=None, interlace: bool = False, trns_fn=None
+    arr, interlace: bool = False, trns_fn=None
 ) -> bytes:
     """(h, w, 3) uint8 RGB with <= 256 distinct colors -> indexed
     PNG (color type 3): sorted-distinct-color PLTE + a filtered
@@ -1102,9 +1102,9 @@ def encode_png_palette(
         else b""
     )
     if interlace:
-        raw = _adam7_filtered(idx[:, :, None], 1, filters)
+        raw = _adam7_filtered(idx[:, :, None], 1)
     else:
-        raw = _png_filter_scanlines(idx, w, 1, filters)
+        raw = _png_filter_scanlines(idx, w, 1)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 1 if interlace else 0)
     return (
         _PNG_SIG
@@ -1116,7 +1116,7 @@ def encode_png_palette(
     )
 
 
-def _encode_png16_any(a, color_type: int, filters, trns: bytes) -> bytes:
+def _encode_png16_any(a, color_type: int, trns: bytes) -> bytes:
     """(h, w, C) uint16 samples -> 16-bit PNG of ``color_type``. PNG
     filters act on BYTES with the pixel offset at 2*C bytes, so the
     u16 plane is serialized big-endian first and filtered there."""
@@ -1129,7 +1129,7 @@ def _encode_png16_any(a, color_type: int, filters, trns: bytes) -> bytes:
         .view(np.uint8)
         .reshape(h, w * 2 * c)
     )
-    raw = _png_filter_scanlines(by, w, 2 * c, filters)
+    raw = _png_filter_scanlines(by, w, 2 * c)
     ihdr = struct.pack(">IIBBBBB", w, h, 16, color_type, 0, 0, 0)
     return (
         _PNG_SIG
@@ -1140,7 +1140,7 @@ def _encode_png16_any(a, color_type: int, filters, trns: bytes) -> bytes:
     )
 
 
-def encode_png16(arr16, filters=None, trns_key=None) -> bytes:
+def encode_png16(arr16, trns_key=None) -> bytes:
     """(h, w, 3) uint16 RGB -> 16-bit truecolor PNG. ``trns_key``
     names one (r, g, b) 16-bit triple fully transparent (spec 11.3.2:
     three big-endian u16 samples)."""
@@ -1149,20 +1149,20 @@ def encode_png16(arr16, filters=None, trns_key=None) -> bytes:
     a = np.asarray(arr16, dtype=np.uint16)
     assert a.shape[-1] == 3, "16-bit PNG encoder expects RGB"
     trns = struct.pack(">HHH", *trns_key) if trns_key is not None else b""
-    return _encode_png16_any(a, 2, filters, trns)
+    return _encode_png16_any(a, 2, trns)
 
 
-def encode_png16_gray(arr2d, filters=None, trns_key=None) -> bytes:
+def encode_png16_gray(arr2d, trns_key=None) -> bytes:
     """(h, w) uint16 samples -> 16-bit grayscale PNG (color type 0);
     ``trns_key`` names one 16-bit sample fully transparent."""
     import numpy as np
 
     a = np.asarray(arr2d, dtype=np.uint16)[..., None]
     trns = struct.pack(">H", trns_key) if trns_key is not None else b""
-    return _encode_png16_any(a, 0, filters, trns)
+    return _encode_png16_any(a, 0, trns)
 
 
-def encode_png16_graya(gray2d, alpha2d, filters=None) -> bytes:
+def encode_png16_graya(gray2d, alpha2d) -> bytes:
     """(h, w) uint16 samples + alpha -> 16-bit gray+alpha PNG (color
     type 4)."""
     import numpy as np
@@ -1171,17 +1171,17 @@ def encode_png16_graya(gray2d, alpha2d, filters=None) -> bytes:
         [np.asarray(gray2d, np.uint16), np.asarray(alpha2d, np.uint16)],
         axis=-1,
     )
-    return _encode_png16_any(a, 4, filters, b"")
+    return _encode_png16_any(a, 4, b"")
 
 
-def encode_png16_rgba(arr, filters=None) -> bytes:
+def encode_png16_rgba(arr) -> bytes:
     """(h, w, 4) uint16 RGBA -> 16-bit truecolor+alpha PNG (color
     type 6)."""
     import numpy as np
 
     a = np.asarray(arr, dtype=np.uint16)
     assert a.shape[-1] == 4, "16-bit RGBA encoder expects 4 channels"
-    return _encode_png16_any(a, 6, filters, b"")
+    return _encode_png16_any(a, 6, b"")
 
 
 def _pack_sample_rows(sub, depth: int):
@@ -1251,7 +1251,7 @@ def encode_png_gray(
     )
 
 
-def encode_png_graya(gray2d, alpha2d, filters=None) -> bytes:
+def encode_png_graya(gray2d, alpha2d) -> bytes:
     """(h, w) gray + (h, w) alpha -> PNG color type 4 (8-bit)."""
     import numpy as np
     import zlib
@@ -1261,7 +1261,7 @@ def encode_png_graya(gray2d, alpha2d, filters=None) -> bytes:
     h, w = g.shape
     assert a.shape == (h, w), "alpha plane must match gray plane"
     inter = np.stack([g, a], axis=-1).reshape(h, w * 2)
-    raw = _png_filter_scanlines(inter, w, 2, filters)
+    raw = _png_filter_scanlines(inter, w, 2)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 4, 0, 0, 0)
     return (
         _PNG_SIG
@@ -1271,7 +1271,7 @@ def encode_png_graya(gray2d, alpha2d, filters=None) -> bytes:
     )
 
 
-def encode_png_rgba(arr, filters=None) -> bytes:
+def encode_png_rgba(arr) -> bytes:
     """(h, w, 4) uint8 RGBA -> PNG color type 6 (8-bit)."""
     import numpy as np
     import zlib
@@ -1279,7 +1279,7 @@ def encode_png_rgba(arr, filters=None) -> bytes:
     a = np.asarray(arr, dtype=np.uint8)
     h, w, c = a.shape
     assert c == 4, "RGBA PNG encoder expects 4 channels"
-    raw = _png_filter_scanlines(a.reshape(h, -1), w, 4, filters)
+    raw = _png_filter_scanlines(a.reshape(h, -1), w, 4)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
     return (
         _PNG_SIG
@@ -1290,7 +1290,7 @@ def encode_png_rgba(arr, filters=None) -> bytes:
 
 
 def encode_png_palette_subbyte(
-    arr, depth: int, filters=None, interlace: bool = False
+    arr, depth: int, interlace: bool = False
 ) -> bytes:
     """(h, w, 3) uint8 RGB with <= 2^depth distinct colors -> indexed
     PNG at depth 1/2/4: the PLTE layout of ``encode_png_palette`` with
@@ -1302,10 +1302,10 @@ def encode_png_palette_subbyte(
     idx, plte = _png_palette_index(arr, 1 << depth)
     h, w = idx.shape
     if interlace:
-        raw = _adam7_filtered_samples(idx, depth, filters)
+        raw = _adam7_filtered_samples(idx, depth)
     else:
         rows = _pack_sample_rows(idx, depth)
-        raw = _png_filter_scanlines(rows, rows.shape[1], 1, filters)
+        raw = _png_filter_scanlines(rows, rows.shape[1], 1)
     ihdr = struct.pack(
         ">IIBBBBB", w, h, depth, 3, 0, 0, 1 if interlace else 0
     )
@@ -1372,7 +1372,7 @@ def encode_apng(frames, screen) -> bytes:
     return bytes(out)
 
 
-def decode_apng_frames(b: bytes, max_frames: int = 256):
+def decode_apng_frames(b: bytes):
     """APNG -> list of (h, w, 4) uint8 RENDERED canvases, one per
     frame: each frame's zlib stream decodes through the standard PNG
     machinery (a synthesized single-frame PNG reusing the file's
@@ -1447,7 +1447,7 @@ def decode_apng_frames(b: bytes, max_frames: int = 256):
         raise ValueError("APNG without fcTL frames")
     if len(frames_meta) != actl[0]:
         raise ValueError("APNG frame count disagrees with acTL")
-    if len(frames_meta) > max_frames:
+    if len(frames_meta) > 256:
         raise ValueError("APNG frame count implausible")
     sw, sh, depth, color, comp_m, filt_m, interlace = struct.unpack(
         ">IIBBBBB", ihdr
@@ -4294,7 +4294,7 @@ def encode_tiff_ycbcr(
     return bytes(header + out_body) + _tiff_ifd(e, tags, ifd_off)
 
 
-def decode_tiff_pages(b: bytes, max_pages: int = 64):
+def decode_tiff_pages(b: bytes):
     """Multi-page TIFF -> list of (h, w, 3) arrays, one per IFD in
     the chain (scanned-document corpora ship pages this way;
     ``decode_tiff`` alone reads page 1, the convention single-image
@@ -4317,7 +4317,7 @@ def decode_tiff_pages(b: bytes, max_pages: int = 64):
         if ifd_off in seen:
             raise ValueError("TIFF IFD chain loops")
         seen.add(ifd_off)
-        if len(pages) >= max_pages:
+        if len(pages) >= 64:
             raise ValueError("TIFF page count implausible")
         if ifd_off + 2 > len(b):
             raise ValueError("TIFF IFD offset out of range")
@@ -5504,8 +5504,7 @@ def decode_tga(b: bytes):
 _AU_FMT_CODE = 0x736E  # '.snd' sentinel fmt_code
 
 
-def encode_au(samples_or_codes, encoding: int, sample_rate: int = 8000,
-              channels: int = 1) -> bytes:
+def encode_au(samples_or_codes, encoding: int, sample_rate: int = 8000) -> bytes:
     """Sun/NeXT .au container: encoding 1 = mu-law code bytes,
     27 = A-law code bytes, 2/3/4 = signed 8/16/24-bit big-endian
     PCM, 6/7 = big-endian IEEE float32/float64 (round 10). Input is
@@ -5530,8 +5529,7 @@ def encode_au(samples_or_codes, encoding: int, sample_rate: int = 8000,
     else:
         raise ValueError(f"encode_au: unsupported encoding {encoding}")
     return struct.pack(
-        ">4sIIIII", b".snd", 24, len(data), encoding, sample_rate,
-        channels,
+        ">4sIIIII", b".snd", 24, len(data), encoding, sample_rate, 1
     ) + data
 
 
@@ -5673,8 +5671,8 @@ def _media_table(spark, media_type: str, items) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def make_fake_image_bytes(width: int, height: int, channels: int = 3) -> bytes:
-    return _MAGIC + width.to_bytes(2, "big") + height.to_bytes(2, "big") + bytes([channels])
+def make_fake_image_bytes(width: int, height: int) -> bytes:
+    return _MAGIC + width.to_bytes(2, "big") + height.to_bytes(2, "big") + bytes([3])
 
 
 def make_test_pixels(width: int, height: int, seed: int = 0):
@@ -6249,14 +6247,14 @@ def synthetic_crossformat_dup_table(spark, n_groups: int = 20) -> DataFrame:
     return _media_table(spark, "image", rows)
 
 
-def image_dhash(df: DataFrame, cols: int = 9, rows_: int = 5) -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """Perceptual difference hash (dHash): decode -> integer luma
     ((299r + 587g + 114b) // 1000) -> nearest-neighbor resample to a
-    ``cols x rows_`` grid (the (c*w)//cols index map q143 verifies) ->
-    one bit per horizontal neighbor comparison -> (cols-1)*rows_-bit
-    integer. All integer arithmetic, so an independent engine
-    regenerates the hash bit-for-bit from the pixel closed form; the
-    40-bit default stays far inside int64. Identical rasters hash
+    9 x 5 grid (the (c*w)//9 index map q143 verifies) -> one bit per
+    horizontal neighbor comparison -> 40-bit integer. All integer
+    arithmetic, so an independent engine regenerates the hash
+    bit-for-bit from the pixel closed form; 40 bits stay far inside
+    int64. Identical rasters hash
     identically regardless of container format — the cross-format
     dedup signal exact byte hashing cannot see."""
     import numpy as np
@@ -6268,13 +6266,11 @@ def image_dhash(df: DataFrame, cols: int = 9, rows_: int = 5) -> DataFrame:
         p = px[..., :3].astype(np.int64)
         h, w = p.shape[:2]
         luma = (p[..., 0] * 299 + p[..., 1] * 587 + p[..., 2] * 114) // 1000
-        xs = (np.arange(cols, dtype=np.int64) * w) // cols
-        ys = (np.arange(rows_, dtype=np.int64) * h) // rows_
+        xs = (np.arange(9, dtype=np.int64) * w) // 9
+        ys = (np.arange(5, dtype=np.int64) * h) // 5
         grid = luma[np.ix_(ys, xs)]
         bits = (grid[:, 1:] > grid[:, :-1]).astype(np.int64)
-        k = np.arange(rows_ * (cols - 1), dtype=np.int64).reshape(
-            rows_, cols - 1
-        )
+        k = np.arange(5 * 8, dtype=np.int64).reshape(5, 8)
         return (int((bits << k).sum()),)
 
     return _map_media(
@@ -7424,8 +7420,6 @@ def synthetic_png_table(spark, n: int = 80) -> DataFrame:
         px = make_test_pixels(w, h, seed=i)
         rows.append((i, encode_png(px), "png"))
     return _media_table(spark, "image", rows)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -12430,13 +12424,9 @@ def decode_image_meta(df: DataFrame, fake: bool = False) -> DataFrame:
     )
 
 
-def resize_images(
-    df: DataFrame, target: tuple[int, int], fake: bool = False
-) -> DataFrame:
+def resize_images(df: DataFrame, target: tuple[int, int]) -> DataFrame:
     """Nearest-neighbor resize to (width, height), re-encoded as BMP —
-    real numpy index-sampling for BMP/PPM payloads. ``fake=True``
-    passes FAKEIMG payloads through as header rewrites (no pixels to
-    resample)."""
+    real numpy index-sampling for BMP/PPM payloads."""
     import numpy as np
 
     tw, th = target
@@ -12448,8 +12438,6 @@ def resize_images(
             iy = (np.arange(th) * h) // th
             ix = (np.arange(tw) * w) // tw
             return (encode_bmp(px[iy][:, ix]),)
-        if fake and bytes(content[:7]) == _MAGIC:
-            return (make_fake_image_bytes(tw, th),)
         return None
 
     return _map_media(
@@ -13039,21 +13027,6 @@ def ms_adpcm_step(s1: int, s2: int, delta: int, c1: int, c2: int,
     return samp, nd
 
 
-def ms_adpcm_decode(nibbles, pred_idx: int, delta0: int, s1: int,
-                    s2: int, coefs=None):
-    """Decode a mono MS ADPCM nibble sequence. Returns the int16
-    sample list [s2, s1, d_1, ..., d_n] (the two block-header
-    samples in playback order, then one sample per code)."""
-    c1, c2 = (coefs or _MS_COEFS)[pred_idx]
-    a, prev, d = int(s1), int(s2), int(delta0)
-    out = [prev, a]
-    for nib in nibbles:
-        samp, d = ms_adpcm_step(a, prev, d, c1, c2, int(nib))
-        a, prev = samp, a
-        out.append(samp)
-    return out
-
-
 def _ms_fmt_chunk(ch: int, sample_rate: int, block_align: int,
                   samples_per_block: int) -> bytes:
     ext = struct.pack("<HH", samples_per_block, len(_MS_COEFS))
@@ -13098,9 +13071,8 @@ def encode_wav_ms_adpcm(nibbles, pred_idx: int, delta0: int, s1: int,
 
 
 def encode_wav_ms_adpcm_stereo(nib_l, nib_r, init_l: tuple,
-                               init_r: tuple,
-                               sample_rate: int = 8000) -> bytes:
-    """Stereo single-block MS ADPCM WAV (Microsoft layout): header
+                               init_r: tuple) -> bytes:
+    """Stereo single-block 8 kHz MS ADPCM WAV (Microsoft layout): header
     fields interleave per channel — predictor indices, then initial
     deltas, then sample1s, then sample2s — and each data byte packs
     (left nibble high, right nibble low). ``init_*`` =
@@ -13118,7 +13090,7 @@ def encode_wav_ms_adpcm_stereo(nib_l, nib_r, init_l: tuple,
         + struct.pack("<hh", init_l[3], init_r[3])
     )
     data = heads + packed
-    fmt = _ms_fmt_chunk(2, sample_rate, len(data), nl.size + 2)
+    fmt = _ms_fmt_chunk(2, 8000, len(data), nl.size + 2)
     hdr = (
         b"RIFF"
         + struct.pack("<I", 4 + len(fmt) + 8 + len(data))
@@ -13161,24 +13133,17 @@ def encode_wav_ima_stereo(
     nib_r,
     init_l: tuple,
     init_r: tuple,
-    sample_rate: int = 8000,
 ) -> bytes:
     """Stereo single-block IMA ADPCM WAV: two 4-byte channel headers
     (predictor int16, step index, reserved — left then right) followed
     by 4-byte nibble groups alternating channels starting left.
     Nibble streams must be equal length and a multiple of 8 (one
     group = 8 samples)."""
-    import numpy as np
-
-    return encode_wav_ima_multi(
-        [nib_l, nib_r], [init_l, init_r], sample_rate=sample_rate
-    )
+    return encode_wav_ima_multi([nib_l, nib_r], [init_l, init_r])
 
 
-def encode_wav_ima_multi(
-    nib_streams, inits, sample_rate: int = 8000
-) -> bytes:
-    """N-channel single-block IMA ADPCM WAV (Microsoft layout, any
+def encode_wav_ima_multi(nib_streams, inits) -> bytes:
+    """N-channel single-block 8 kHz IMA ADPCM WAV (Microsoft layout, any
     channel count): one 4-byte header per channel (predictor int16,
     step index, reserved), then 4-byte nibble groups cycling channel
     0..N-1. Streams must be equal length and a multiple of 8 (one
@@ -13210,7 +13175,7 @@ def encode_wav_ima_multi(
         + b"WAVEfmt "
         + struct.pack(
             "<IHHIIHH",
-            16, 0x11, ch, sample_rate, sample_rate, block_align, 4,
+            16, 0x11, ch, 8000, 8000, block_align, 4,
         )
         + b"data"
         + struct.pack("<I", len(data))
@@ -14158,12 +14123,11 @@ def _flac_decode_subframe(rd: _FlacBitReader, n: int, bps: int):
 
 
 def encode_flac(samples, sample_rate: int = 16000, bps: int = 16,
-                blocksize: int = 256, mode_rotation: bool = True,
-                ogg: bool = False,
+                blocksize: int = 256, ogg: bool = False,
                 ogg_serial: int = 0x464C4143) -> bytes:
     """Mono (n,) or stereo (n, 2) int array -> FLAC bytes.
 
-    ``mode_rotation`` cycles the stereo decorrelation (independent /
+    Frames cycle the stereo decorrelation (independent /
     left-side / right-side / mid-side) and subframe strategy
     (auto fixed-order / VERBATIM / order-2 LPC) across frames so a
     multi-frame corpus exercises the full decoder surface. ``ogg``
@@ -14212,11 +14176,7 @@ def encode_flac(samples, sample_rate: int = 16000, bps: int = 16,
             bs_code, bs_extra = 6, nb - 1
         else:
             bs_code, bs_extra = 7, nb - 1
-        mode = frame_no % 4 if (nch == 2 and mode_rotation) else 0
-        if nch == 1:
-            ch_assign = 0
-        else:
-            ch_assign = (1, 8, 9, 10)[mode]
+        ch_assign = 0 if nch == 1 else (1, 8, 9, 10)[frame_no % 4]
         wr = _FlacBitWriter()
         wr.put(14, 0b11111111111110)
         wr.put(1, 0)
@@ -14234,8 +14194,7 @@ def encode_flac(samples, sample_rate: int = 16000, bps: int = 16,
             header += struct.pack(">H", bs_extra)
         header.append(_flac_crc8(bytes(header)))
         body = _FlacBitWriter()
-        force = (None, "verbatim", "lpc")[frame_no % 3] if mode_rotation \
-            else None
+        force = (None, "verbatim", "lpc")[frame_no % 3]
         if nch == 1:
             _flac_encode_subframe(body, block[:, 0], bps, force)
         else:

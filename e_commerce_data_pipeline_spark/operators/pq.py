@@ -42,6 +42,11 @@ from .util import series_udf
 from .util import spread as _spread
 
 MICRO = 1_000_000
+# Codebook shape: 16 subspaces of 4 dims (64-dim vectors), 16
+# centroids each.
+_M, _KSUB, _DSUB = 16, 16, 4
+# Bound on the training sample collected to the driver.
+_SAMPLE_CAP = 4096
 
 
 def _np():
@@ -66,47 +71,39 @@ def quantize_micro(vec):
 
 def train_pq_codebooks_micro(
     emb: DataFrame,
-    m: int = 16,
-    ksub: int = 16,
-    dim: int = 64,
-    n_iters: int = 8,
-    sample_mod: int = 1,
-    sample_cap: int = 4096,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Per-subspace Lloyd iterations on a deterministic sample ->
-    (m, ksub, dsub) int64 micro codebooks.
+    """Per-subspace Lloyd iterations (8, seeded) on a deterministic
+    sample -> (_M, _KSUB, _DSUB) int64 micro codebooks.
 
-    The sample is ``vec_id % sample_mod == 0`` ordered by id, capped
-    at ``sample_cap`` — deterministic for a given corpus, bounded for
-    any corpus. All distances run on micro ints (exact); centroid
-    means re-quantize to micro ints each iteration so the final
-    codebook is integer by construction, not by a final cast."""
+    The sample is the first ``_SAMPLE_CAP`` non-null ids in id order —
+    deterministic for a given corpus, bounded for any corpus. All
+    distances run on micro ints (exact); centroid means re-quantize to
+    micro ints each iteration so the final codebook is integer by
+    construction, not by a final cast."""
     np = _np()
-    dsub = dim // m
     rows = (
-        emb.filter((F.col(id_col) % sample_mod) == 0)
+        emb.filter(F.col(id_col).isNotNull())
         .orderBy(id_col)
-        .limit(sample_cap)
+        .limit(_SAMPLE_CAP)
         .select(vec_col)
         .collect()
     )
     x = np.stack([quantize_micro(r[0]) for r in rows])  # (n, dim) int64
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, ksub, dsub), dtype=np.int64)
-    for s in range(m):
-        xs = x[:, s * dsub : (s + 1) * dsub]
-        # k-means++-free seeded init: ksub distinct sample rows
-        init = rng.choice(xs.shape[0], size=min(ksub, xs.shape[0]), replace=False)
+    rng = np.random.default_rng(11)
+    books = np.empty((_M, _KSUB, _DSUB), dtype=np.int64)
+    for s in range(_M):
+        xs = x[:, s * _DSUB : (s + 1) * _DSUB]
+        # k-means++-free seeded init: _KSUB distinct sample rows
+        init = rng.choice(xs.shape[0], size=min(_KSUB, xs.shape[0]), replace=False)
         c = xs[np.sort(init)].copy()
-        if c.shape[0] < ksub:  # degenerate tiny corpus: pad by repetition
-            c = np.resize(c, (ksub, dsub))
-        for _ in range(n_iters):
+        if c.shape[0] < _KSUB:  # degenerate tiny corpus: pad by repetition
+            c = np.resize(c, (_KSUB, _DSUB))
+        for _ in range(8):
             d = ((xs[:, None, :] - c[None, :, :]) ** 2).sum(axis=-1)
             assign = d.argmin(axis=1)  # first-min tiebreak
-            for k in range(ksub):
+            for k in range(_KSUB):
                 mask = assign == k
                 if mask.any():
                     c[k] = np.rint(xs[mask].mean(axis=0)).astype(np.int64)

@@ -40,13 +40,13 @@ def expect_unique(col: str) -> Expectation:
     return Expectation(f"unique_{col}", {f"n_dup_{col}": m}, F.col(f"n_dup_{col}") == 0)
 
 
-def _sample_of(cond, col: str, alias: str, n: int = 5):
+def _sample_of(cond, col: str, alias: str):
     """A3/A4 reporting detail: first-N violating values, deterministic
     (sorted distinct set sliced to N — the reference reports the first
     5 seen, expectations.py:368-382, which is scan-order dependent;
     sorted is the order-stable equivalent)."""
     return F.slice(
-        F.sort_array(F.collect_set(F.when(cond, F.col(col)))), 1, n
+        F.sort_array(F.collect_set(F.when(cond, F.col(col)))), 1, 5
     ).alias(alias)
 
 

@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _auto_buckets(span: int, cap: int = 4096) -> int:
+# Widest histogram _auto_buckets picks: it bounds the driver's
+# counters per open quantile per round.
+_MAX_BUCKETS = 4096
+
+
+def _auto_buckets(span: int) -> int:
     """Histogram width for a value interval of ``span``: the smallest
     power of two that converges in as few scans as the measured cap.
 
@@ -60,9 +65,9 @@ def _auto_buckets(span: int, cap: int = 4096) -> int:
             r += 1
         return r
 
-    target = rounds(cap)
+    target = rounds(_MAX_BUCKETS)
     b = 2
-    while b < cap and rounds(b) > target:
+    while b < _MAX_BUCKETS and rounds(b) > target:
         b *= 2
     return b
 
@@ -72,7 +77,6 @@ def exact_quantiles(
     col: str,
     percents: list[int],
     buckets: int | None = None,
-    max_rounds: int = 70,
 ) -> DataFrame:
     """Exact integer quantiles of ``df[col]`` (nulls ignored) for each
     integer percent in ``percents``. Returns a tiny DataFrame
@@ -103,7 +107,7 @@ def exact_quantiles(
         state = {
             p: [max(1, -(-p * n // 100)), glo, ghi] for p in percents
         }  # ceil(p*n/100), clamped >= 1
-        for _ in range(max_rounds):
+        for _ in range(70):  # 2 buckets close a 64-bit range in 64 rounds
             open_ps = [p for p, (k, lo, hi) in state.items() if lo < hi]
             if not open_ps:
                 break

@@ -44,20 +44,20 @@ from pyspark.sql import functions as F
 NULL_MARK = "__NULL__"
 
 
-def _sig(key: Column, cols: list[Column], salt: str) -> Column:
+def _sig(key: Column, cols: list[Column]) -> Column:
     """60-bit md5-prefix signature of the canonical row rendering."""
     rendered = F.concat_ws(
         "|",
-        F.lit(salt),
+        F.lit("recon"),
         key.cast("string"),
         *[F.coalesce(c.cast("string"), F.lit(NULL_MARK)) for c in cols],
     )
     return F.conv(F.substring(F.md5(rendered), 1, 15), 16, 10).cast("long")
 
 
-def _bucket(key: Column, n_buckets: int, salt: str) -> Column:
+def _bucket(key: Column, n_buckets: int) -> Column:
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{salt}b:"), key.cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat(F.lit("reconb:"), key.cast("string"))), 1, 8),
         16,
         10,
     ).cast("long")
@@ -69,15 +69,14 @@ def bucket_checksums(
     key_col: str,
     sig_cols: list[Column],
     n_buckets: int = 64,
-    salt: str = "recon",
 ) -> DataFrame:
     """One (bucket, n_rows, checksum) row per non-empty bucket: the
     fixed-size summary a replica ships instead of its data."""
     key = F.col(key_col)
     return (
         df.select(
-            _bucket(key, n_buckets, salt).alias("bucket"),
-            _sig(key, sig_cols, salt).alias("sig"),
+            _bucket(key, n_buckets).alias("bucket"),
+            _sig(key, sig_cols).alias("sig"),
         )
         .groupBy("bucket")
         .agg(
@@ -94,7 +93,6 @@ def anti_entropy_diff(
     sig_cols_a: list[Column],
     sig_cols_b: list[Column],
     n_buckets: int = 64,
-    salt: str = "recon",
 ) -> DataFrame:
     """Row-level differences between snapshots ``a`` and ``b``,
     localized through the bucket-checksum phase: returns one row per
@@ -104,8 +102,8 @@ def anti_entropy_diff(
     broadcast dirty-bucket semi-join before the row join, and inside a
     dirty bucket equal rows null out in the full-outer compare."""
     key = F.col(key_col)
-    ca = bucket_checksums(a, key_col, sig_cols_a, n_buckets, salt)
-    cb = bucket_checksums(b, key_col, sig_cols_b, n_buckets, salt)
+    ca = bucket_checksums(a, key_col, sig_cols_a, n_buckets)
+    cb = bucket_checksums(b, key_col, sig_cols_b, n_buckets)
     dirty = (
         ca.withColumnRenamed("n_rows", "na").withColumnRenamed("checksum", "xa")
         .join(
@@ -124,8 +122,8 @@ def anti_entropy_diff(
     ra = (
         a.select(
             key.alias("ka"),
-            _bucket(key, n_buckets, salt).alias("bucket"),
-            _sig(key, sig_cols_a, salt).alias("sa"),
+            _bucket(key, n_buckets).alias("bucket"),
+            _sig(key, sig_cols_a).alias("sa"),
         )
         .join(F.broadcast(dirty), "bucket")
         .drop("bucket")
@@ -133,8 +131,8 @@ def anti_entropy_diff(
     rb = (
         b.select(
             key.alias("kb"),
-            _bucket(key, n_buckets, salt).alias("bucket"),
-            _sig(key, sig_cols_b, salt).alias("sb"),
+            _bucket(key, n_buckets).alias("bucket"),
+            _sig(key, sig_cols_b).alias("sb"),
         )
         .join(F.broadcast(dirty), "bucket")
         .drop("bucket")

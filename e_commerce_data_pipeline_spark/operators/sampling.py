@@ -23,6 +23,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _HASH_DENOM = float(1 << 32)
+# pack_sequences hashes ids with this salt for both its packing order
+# and its group assignment.
+_PACK_SALT = "pack"
 
 
 def hash_uniform(key: Column, salt: str = "") -> Column:
@@ -37,29 +40,20 @@ def hash_uniform(key: Column, salt: str = "") -> Column:
 def hash_split(
     df: DataFrame,
     key_col: str,
-    weights: dict[str, float] | None = None,
-    salt: str = "split",
     split_col: str = "split",
 ) -> DataFrame:
-    """Assign each row to a named split by hashed key.
-
-    ``weights`` maps split name -> proportion (need not sum to 1; they
-    are normalized). The row's uniform draw walks the cumulative
-    ranges in the given dict order. One hash per row, no shuffle —
-    the split column is computed inside the scan stage.
+    """Assign each row to train / val / test (0.8 / 0.1 / 0.1) by hashed
+    key: the row's uniform draw walks the cumulative ranges. One hash
+    per row, no shuffle — the split column is computed inside the scan
+    stage.
     """
-    weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
-    total = sum(weights.values())
-    u = hash_uniform(F.col(key_col), salt)
-    expr = None
-    acc = 0.0
-    names = list(weights)
-    for name in names[:-1]:
-        acc += weights[name] / total
-        cond = u < F.lit(acc)
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    expr = F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
-    return df.withColumn(split_col, expr)
+    u = hash_uniform(F.col(key_col), "split")
+    return df.withColumn(
+        split_col,
+        F.when(u < F.lit(0.8), "train")
+        .when(u < F.lit(0.9), "val")
+        .otherwise("test"),
+    )
 
 
 def stratified_sample(
@@ -67,7 +61,6 @@ def stratified_sample(
     group_col: str,
     n_per_group: int,
     key_col: str,
-    salt: str = "sample",
 ) -> DataFrame:
     """Exactly min(n, |group|) rows per group, chosen by hash order.
 
@@ -79,7 +72,7 @@ def stratified_sample(
     ``hash_uniform < frac``, but exact counts need the rank).
     """
     w = Window.partitionBy(group_col).orderBy(
-        hash_uniform(F.col(key_col), salt), F.col(key_col)
+        hash_uniform(F.col(key_col), "sample"), F.col(key_col)
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -93,7 +86,6 @@ def source_mix(
     source_col: str,
     weights: dict[str, float],
     key_col: str,
-    salt: str = "mix",
 ) -> DataFrame:
     """Down-sample to a target source composition (the "70% web / 20%
     code / 10% books" data-mixing op).
@@ -125,7 +117,7 @@ def source_mix(
         *[F.lit(x) for kv in quotas.items() for x in kv]
     )
     w = Window.partitionBy(source_col).orderBy(
-        hash_uniform(F.col(key_col), salt), F.col(key_col)
+        hash_uniform(F.col(key_col), "mix"), F.col(key_col)
     )
     return (
         df.withColumn("__quota", quota_map[F.col(source_col)])
@@ -142,7 +134,6 @@ def pack_sequences(
     token_col: str = "n_tokens",
     budget: int = 2048,
     n_groups: int = 256,
-    salt: str = "pack",
 ) -> DataFrame:
     """Assign documents to fixed-token-budget training rows (sequence
     packing) — deterministically and in parallel.
@@ -186,8 +177,8 @@ def pack_sequences(
     keyed = df.select(
         F.col(id_col),
         F.col(token_col),
-        hash_uniform(F.col(id_col), salt).alias("__u"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(salt)), F.lit(n_groups))
+        hash_uniform(F.col(id_col), _PACK_SALT).alias("__u"),
+        F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(_PACK_SALT)), F.lit(n_groups))
         .cast("int")
         .alias("__grp"),
     )
@@ -195,7 +186,7 @@ def pack_sequences(
 
 
 def deterministic_shuffle(
-    df: DataFrame, key_col: str, salt: str = "shuffle"
+    df: DataFrame, key_col: str
 ) -> DataFrame:
     """Global hash-order sort — the training-data "shuffle" that's
     reproducible run-to-run and engine-to-engine.
@@ -206,7 +197,7 @@ def deterministic_shuffle(
     random permutation because md5 bits are independent of any data
     ordering.
     """
-    return df.orderBy(hash_uniform(F.col(key_col), salt), F.col(key_col))
+    return df.orderBy(hash_uniform(F.col(key_col), "shuffle"), F.col(key_col))
 
 
 def cluster_balanced_sample(
@@ -214,7 +205,6 @@ def cluster_balanced_sample(
     per_cluster: int,
     id_col: str = "vec_id",
     cluster_col: str = "cluster",
-    salt: str = "csample",
 ) -> DataFrame:
     """Semantic-diversity subsampling: keep a deterministic hash-ranked
     quota of rows from EVERY cluster of an embedding-space partition
@@ -224,7 +214,7 @@ def cluster_balanced_sample(
     the corpus' density skew).
 
     Returns ``(id_col, cluster_col, rk, cluster_size)`` for the kept
-    rows. Ranking is ``hash_uniform(salt:id)`` with the id as
+    rows. Ranking is ``hash_uniform("csample":id)`` with the id as
     tie-break — reproducible across runs, layouts, and engines.
 
     Scale shape: one hash-shuffle on the cluster key; the window sees
@@ -234,7 +224,7 @@ def cluster_balanced_sample(
     which is also what sampling quality wants.
     """
     w = Window.partitionBy(cluster_col).orderBy(
-        hash_uniform(F.col(id_col), salt).asc(), F.col(id_col).asc()
+        hash_uniform(F.col(id_col), "csample").asc(), F.col(id_col).asc()
     )
     wc = Window.partitionBy(cluster_col)
     return (
@@ -253,7 +243,6 @@ def dsir_importance(
     is_target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """DSIR-style importance weighting for data selection (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -270,7 +259,7 @@ def dsir_importance(
 
     Float discipline: both smoothed probabilities are ratios of exact
     integers, so each distinct token's log-ratio is quantized ONCE to
-    integer ``scale``-units; per-document weights are exact integer
+    integer micro-units; per-document weights are exact integer
     sums — order-independent across engines.
 
     Scale shape: ONE token explode feeds both distributions (the
@@ -312,7 +301,7 @@ def dsir_importance(
                 F.log((F.col("c_tgt") + 1) / (F.col("t_tgt") + F.col("v")))
                 - F.log((F.col("c_raw") + 1) / (F.col("t_raw") + F.col("v")))
             )
-            * scale
+            * 1_000_000
         )
         .cast("long")
         .alias("w_micro"),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions import epoch_us
 
-GAP_US_DEFAULT = 600_000_000  # 10 minutes
+GAP_US = 600_000_000  # 10 minutes
 
 
 def assign_sessions(
@@ -23,12 +23,11 @@ def assign_sessions(
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_us: int = GAP_US_DEFAULT,
 ) -> DataFrame:
     """Add ``session_no`` (1-based per user) via gap-and-island windows."""
     us = epoch_us(ts_col)
     w = Window.partitionBy(user_col).orderBy(us, id_col)
-    new_s = F.when(us - F.lag(us).over(w) <= gap_us, F.lit(0)).otherwise(F.lit(1))
+    new_s = F.when(us - F.lag(us).over(w) <= GAP_US, F.lit(0)).otherwise(F.lit(1))
     return df.withColumn(
         "session_no",
         F.sum(new_s)
@@ -42,10 +41,9 @@ def session_stats(
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_us: int = GAP_US_DEFAULT,
 ) -> DataFrame:
     """Per-session rollup: start, end, event count, duration seconds."""
-    s = assign_sessions(df, user_col, ts_col, id_col, gap_us)
+    s = assign_sessions(df, user_col, ts_col, id_col)
     us = epoch_us(ts_col)
     return s.groupBy(user_col, "session_no").agg(
         F.timestamp_micros(F.min(us)).alias("session_start"),
@@ -61,11 +59,10 @@ def session_event_sequences(
     ts_col: str = "ts",
     id_col: str = "event_id",
     type_col: str = "event_type",
-    gap_us: int = GAP_US_DEFAULT,
 ) -> DataFrame:
     """W3 analog: ordered event-type sequence per session (the batch view
     of the generator's cart-accumulation state machine)."""
-    s = assign_sessions(df, user_col, ts_col, id_col, gap_us)
+    s = assign_sessions(df, user_col, ts_col, id_col)
     return s.groupBy(user_col, "session_no").agg(
         F.array_sort(
             F.collect_list(F.struct(epoch_us(ts_col).alias("us"), F.col(type_col)))
@@ -94,14 +91,12 @@ def streaming_session_stats(
     stream_df: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
     """Structured Streaming session windows with watermarked state
     eviction (W1 + W6). Same 10-minute semantics as the batch path."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(user_col))
+        stream_df.withWatermark(ts_col, "30 minutes")
+        .groupBy(F.session_window(F.col(ts_col), "10 minutes"), F.col(user_col))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             user_col,

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import series_udf
+from .util import ROUND_DP, series_udf
 from .util import spread as _spread
 
 
@@ -62,7 +62,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (brute force).
 
@@ -77,9 +76,7 @@ def cosine_topk(
     c = _spread(emb).select(
         F.col(id_col).alias("neighbor_id"), unit_vec(F.col(vec_col)).alias("c_vec")
     )
-    sim = dot(F.col("q_vec"), F.col("c_vec"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
+    sim = F.round(dot(F.col("q_vec"), F.col("c_vec")), ROUND_DP)
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -100,7 +97,6 @@ def hard_negative_mining(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Contrastive-pair mining for embedding training: per query
     vector, the nearest SAME-label neighbor (the positive) and the
@@ -125,7 +121,7 @@ def hard_negative_mining(
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("q_vec"), F.col("c_vec")), round_dp))
+        .withColumn("sim", F.round(dot(F.col("q_vec"), F.col("c_vec")), ROUND_DP))
         .withColumn("is_pos", F.col("q_label") == F.col("n_label"))
     )
     w = Window.partitionBy("query_id", "is_pos").orderBy(
@@ -162,7 +158,6 @@ def cosine_pairs_blocked(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
     max_block_rows: int | None = 100_000,
 ) -> DataFrame:
     """All pairs within a blocking key with cosine >= threshold.
@@ -224,13 +219,10 @@ def cosine_pairs_blocked(
     b = normed.select(
         F.col("id").alias("b_id"), "block", F.col("v").alias("b_vec")
     )
-    sim = dot(F.col("a_vec"), F.col("b_vec"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
     return (
         a.join(b, "block")
         .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", F.round(dot(F.col("a_vec"), F.col("b_vec")), ROUND_DP))
         .filter(F.col("sim") >= threshold)
         .select("block", "a_id", "b_id", "sim")
     )
@@ -300,7 +292,6 @@ def lsh_topk(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing the query's
     hyperplane-sign bucket. Recall improves with fewer planes (bigger
@@ -313,13 +304,10 @@ def lsh_topk(
     )
     q = sig(queries, "query_id", "q_vec")
     c = sig(_spread(emb), "neighbor_id", "c_vec")
-    sim = dot(F.col("q_vec"), F.col("c_vec"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
     scored = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", F.round(dot(F.col("q_vec"), F.col("c_vec")), ROUND_DP))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -334,10 +322,9 @@ def centroid_norms(
     group_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Per-group centroid L2 norm (posexplode -> per-dimension mean ->
-    norm). Deterministic to round_dp; the per-dimension mean uses
+    norm). Deterministic to ROUND_DP; the per-dimension mean uses
     sum/count of doubles, which is stable well past 6dp here."""
     exploded = _spread(emb).select(
         F.col(group_col).alias("grp"), F.posexplode(_as_double(F.col(vec_col)))
@@ -348,7 +335,7 @@ def centroid_norms(
     return (
         dims.groupBy("grp")
         .agg(
-            F.round(F.sqrt(F.sum(F.col("mean_v") * F.col("mean_v"))), round_dp).alias(
+            F.round(F.sqrt(F.sum(F.col("mean_v") * F.col("mean_v"))), ROUND_DP).alias(
                 "centroid_norm"
             ),
             F.max("n").alias("n_vectors"),
@@ -363,7 +350,6 @@ def cosine_topk_matrix(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors, matrix-scored (the batch-kNN scale
     path for LARGE query sets).
@@ -394,9 +380,7 @@ def cosine_topk_matrix(
                 [np.asarray(v, dtype="float64") for v in pdf[vec_col].to_numpy()]
             )
             x = x / np.linalg.norm(x, axis=1, keepdims=True)
-            sims = q_mat @ x.T  # (n_queries, batch)
-            if round_dp is not None:
-                sims = np.round(sims, round_dp)
+            sims = np.round(q_mat @ x.T, ROUND_DP)  # (n_queries, batch)
             out = []
             for qi in range(len(q_ids)):
                 s = sims[qi]
@@ -709,21 +693,20 @@ def tfidf_cosine_pairs_prefix(
     )
 
 
-def quantize_unit_vec(a: Column, levels: int = 127) -> Column:
+def quantize_unit_vec(a: Column) -> Column:
     """Symmetric int8-style quantization of a unit vector:
-    ``round(u_i * levels)`` per dimension. On unit inputs every
-    component is in [-1, 1], so values fit [-levels, levels] — the
+    ``round(u_i * 127)`` per dimension. On unit inputs every
+    component is in [-1, 1], so values fit [-127, 127] — the
     scalar-quantization codebook of FAISS SQ8 / product-quantization
     coarse stages."""
     u = unit_vec(a)
-    return F.transform(u, lambda x: F.round(x * levels).cast("long"))
+    return F.transform(u, lambda x: F.round(x * 127).cast("long"))
 
 
 def quantized_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    levels: int = 127,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -733,7 +716,7 @@ def quantized_topk(
     100 TB the quantized corpus is what fits the page cache).
 
     Integer dots are EXACT: scoring is engine/partition-order
-    independent (products <= levels^2, sums <= dim * levels^2 — far
+    independent (products <= 127^2, sums <= dim * 127^2 — far
     inside int64), unlike float dots which need rounding tolerance.
     The only float step is the one-time normalization+quantization of
     each vector. Ranking ties break on neighbor id.
@@ -742,11 +725,11 @@ def quantized_topk(
     """
     corpus = _spread(emb).select(
         F.col(id_col).alias("neighbor_id"),
-        quantize_unit_vec(F.col(vec_col), levels).alias("c_q"),
+        quantize_unit_vec(F.col(vec_col)).alias("c_q"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        quantize_unit_vec(F.col(vec_col), levels).alias("q_q"),
+        quantize_unit_vec(F.col(vec_col)).alias("q_q"),
     )
     dot_q = F.aggregate(
         F.zip_with(F.col("q_q"), F.col("c_q"), lambda x, y: x * y),
@@ -772,16 +755,15 @@ def quantized_vectors(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """(id, vq): embeddings quantized to integer micro-units —
-    round(x * scale) per dimension, the exactness bridge for
+    round(x * 1e6) per dimension, the exactness bridge for
     cross-engine float-free moment computation."""
     return _spread(emb).select(
         F.col(id_col).alias("id"),
         F.transform(
             _as_double(F.col(vec_col)),
-            lambda x: F.round(x * scale).cast("long"),
+            lambda x: F.round(x * 1_000_000).cast("long"),
         ).alias("vq"),
     )
 
@@ -791,8 +773,6 @@ def pca_top_component(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1_000_000,
-    power_iters: int = 100,
 ):
     """First principal component of an embedding corpus, computed the
     distributed-exact way: raw moments accumulate as INTEGER sums over
@@ -806,14 +786,14 @@ def pca_top_component(
     the dim^2 co-moment stream with map-side partial aggregation —
     dim^2 rows reach the driver regardless of corpus size (the same
     bounded-driver-traffic contract as IVF's Lloyd loop and BPE's
-    argmax). int64 headroom: sum |vq_i*vq_j| < n * (|v|max*scale)^2 —
-    drop ``scale`` to 1e3 past ~1e8 rows of unit-normed vectors.
+    argmax). int64 headroom: sum |vq_i*vq_j| < n * (|v|max*1e6)^2,
+    which holds up to ~1e8 rows of unit-normed vectors.
 
     Returns the unit float pc1 as a list of ``dim`` floats.
     """
     import numpy as np
 
-    ex = quantized_vectors(emb, id_col, vec_col, scale).select(
+    ex = quantized_vectors(emb, id_col, vec_col).select(
         "id", F.posexplode("vq").alias("i", "a")
     )
     b = ex.select(F.col("id"), F.col("i").alias("j"), F.col("a").alias("b"))
@@ -838,7 +818,7 @@ def pca_top_component(
     # covariance from exact integer moments: C = S/n - (m/n)(m/n)^T
     C = S / n - np.outer(m / n, m / n)
     v = np.ones(dim)
-    for _ in range(power_iters):
+    for _ in range(100):
         v = C @ v
         v = v / np.linalg.norm(v)
     # deterministic sign: first component with |x| > tol positive
@@ -856,7 +836,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 20,
-    idf_scale: int = 1_000_000,
 ) -> DataFrame:
     """Top-k BM25 ranked retrieval for a fixed query-term set — the
     lexical retrieval scorer of every RAG / training-data curation
@@ -875,7 +854,7 @@ def bm25_topk(
     identical product/sum chain and the single divide+round lands on
     the same double. idf uses the positive BM25+ form
     ln(1 + (N - df + .5)/(df + .5)), quantized ONCE to
-    ``idf_scale``-units (the q98/q85 ln discipline); per-term scores
+    micro-units (the q98/q85 ln discipline); per-term scores
     round to integer micro-units so the per-doc SUM is exact.
 
     Scale shape: tokens are filtered to the |terms|-element query set
@@ -920,7 +899,7 @@ def bm25_topk(
                     + (F.col("n_docs") - F.col("df_t") + 0.5)
                     / (F.col("df_t") + 0.5)
                 )
-                * idf_scale
+                * 1_000_000
             ).cast("long"),
         )
         .withColumn(

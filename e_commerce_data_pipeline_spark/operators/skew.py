@@ -50,9 +50,8 @@ def salted_join(
     small: DataFrame,
     key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
+    """Inner equi-join with the big side salted and the small side replicated.
 
     Each big-side row gets one of ``n_salts`` buckets; every small-side
     row is exploded into all buckets, so the join key (key, salt)
@@ -63,7 +62,7 @@ def salted_join(
     replicated_small = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    joined = salted_big.join(replicated_small, [key, "__salt"], how)
+    joined = salted_big.join(replicated_small, [key, "__salt"])
     return joined.drop("__salt")
 
 

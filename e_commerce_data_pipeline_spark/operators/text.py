@@ -65,19 +65,19 @@ def distinct_token_ratio(col: Column | str) -> Column:
     )
 
 
-def stopword_hits(col: Column | str, stopwords=EN_STOPWORDS) -> Column:
+def stopword_hits(col: Column | str) -> Column:
     """How many distinct stopwords appear in the document (0..len(set))."""
     t = F.array_distinct(tokens(col))
-    hits = [F.array_contains(t, w).cast("int") for w in stopwords]
+    hits = [F.array_contains(t, w).cast("int") for w in EN_STOPWORDS]
     out = hits[0]
     for h in hits[1:]:
         out = out + h
     return out
 
 
-def guess_is_english(col: Column | str, min_hits: int = 2) -> Column:
-    """Heuristic language ID: >=min_hits distinct English stopwords."""
-    return stopword_hits(col) >= min_hits
+def guess_is_english(col: Column | str) -> Column:
+    """Heuristic language ID: >= 2 distinct English stopwords."""
+    return stopword_hits(col) >= 2
 
 
 def punct_ratio(col: Column | str) -> Column:
@@ -114,22 +114,6 @@ def fingerprint_bag(col: Column | str) -> Column:
     """Order-insensitive fingerprint: md5 over the sorted distinct
     token set — robust to token reshuffling (rolling-hash analog)."""
     return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(col))), " "))
-
-
-def profile_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column family to a document table."""
-    return (
-        df.withColumn("norm_text", norm_text(text_col))
-        .withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_tokens_bpe", token_count_bpe(text_col))
-        .withColumn("uniq_token_ratio", distinct_token_ratio(text_col))
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("en_stopword_hits", stopword_hits(text_col))
-        .withColumn("is_english_guess", guess_is_english(text_col))
-        .withColumn("quality_score", doc_quality_score(text_col))
-        .withColumn("fp_exact", fingerprint_exact(text_col))
-        .withColumn("fp_bag", fingerprint_bag(text_col))
-    )
 
 
 def chunk_documents(
@@ -186,7 +170,6 @@ def gopher_signals(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigram_n: int = 3,
 ) -> DataFrame:
     """Gopher/C4-style per-document quality signals for corpus
     filtering, all integer-valued so thresholds apply by integer
@@ -211,7 +194,7 @@ def gopher_signals(
     and stays linear.
     """
     t = F.col("__toks")
-    tg = shingles_of_tokens(t, trigram_n)
+    tg = shingles_of_tokens(t, 3)
     dt = F.array_distinct(t)
     stop_hits = None
     for w in EN_STOPWORDS:
@@ -275,21 +258,21 @@ REDACTION_PATTERNS = (
 )
 
 
-def redact_pii(col: Column | str, patterns=REDACTION_PATTERNS) -> Column:
+def redact_pii(col: Column | str) -> Column:
     """Training-data scrubbing: regex redaction of emails / phone
     numbers / SSNs / card numbers, applied in order. Pure regexp_replace
     chain — stays in codegen, linear in the scan."""
     c = F.col(col) if isinstance(col, str) else col
-    for pat, token in patterns:
+    for pat, token in REDACTION_PATTERNS:
         c = F.regexp_replace(c, pat, token)
     return c
 
 
-def redaction_count(col: Column | str, patterns=REDACTION_PATTERNS) -> Column:
+def redaction_count(col: Column | str) -> Column:
     """How many redactions would apply (for corpus audit rollups)."""
     c = F.col(col) if isinstance(col, str) else col
     total = F.lit(0)
-    for pat, _ in patterns:
+    for pat, _ in REDACTION_PATTERNS:
         total = total + F.size(F.regexp_extract_all(c, F.lit(pat), 0))
     return total
 
@@ -433,7 +416,7 @@ def bigram_lm_scores(
     )
 
 
-def compression_ratio_udf(level: int = 6):
+def compression_ratio_udf():
     """Arrow-batched pandas UDF: ``len(zlib(text)) / len(text)`` per
     document — the classic compression-ratio quality signal (used by
     C4/RefinedWeb-style filters: boilerplate and repeated spans
@@ -441,7 +424,7 @@ def compression_ratio_udf(level: int = 6):
 
     zlib is stdlib, so unlike the codec-gated multimodal kernels this
     runs for real everywhere. DEFLATE output is fully determined by
-    (input, level, strategy) for a fixed zlib build, but is NOT
+    (input, level 6, strategy) for a fixed zlib build, but is NOT
     portable across engines/builds — so this ships as a
     pytest-verified operator, not an oracle-gated query.
     """
@@ -454,7 +437,7 @@ def compression_ratio_udf(level: int = 6):
             raw = t.encode("utf-8")
             if not raw:
                 return 1.0
-            return len(zlib.compress(raw, level)) / len(raw)
+            return len(zlib.compress(raw, 6)) / len(raw)
 
         return s.map(one)
 
@@ -501,7 +484,6 @@ def train_bpe_merges(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    min_pair_count: int = 2,
 ):
     """Byte-pair-encoding merge training (Sennrich et al. 2016) — the
     tokenizer-construction step of an LLM data pipeline, distributed
@@ -553,7 +535,7 @@ def train_bpe_merges(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["c"] < min_pair_count:
+        if not top or top[0]["c"] < 2:
             break
         a, b, c = top[0]["a"], top[0]["b"], int(top[0]["c"])
         merges.append((a, b, c))
@@ -638,23 +620,6 @@ def bpe_encode_corpus(
     )
 
 
-def bpe_reference_encode(word: str, merges) -> list:
-    """Pure-Python greedy BPE encode (test reference): apply each
-    merge in order, left-to-right non-overlapping, over the symbol
-    list — the semantics ``bpe_encode_corpus`` mirrors with string
-    replaces and ``_apply_bpe_merge`` mirrors as an aggregate fold."""
-    syms = list(word)
-    for a, b in merges:
-        out: list = []
-        for sym in syms:
-            if out and out[-1] == a and sym == b:
-                out[-1] = a + b
-            else:
-                out.append(sym)
-        syms = out
-    return syms
-
-
 def boilerplate_ngrams(
     df: DataFrame,
     n: int = 4,
@@ -719,38 +684,14 @@ def boilerplate_ngrams(
     )
 
 
-def char_ngrams_of_norm(nt: Column, n: int = 3) -> Column:
-    """All character n-grams (with duplicates) of an ALREADY
-    MATERIALIZED normalized-text column; empty array when shorter
-    than n. Pass a plain column reference: expression arguments are
-    re-evaluated per gram inside the slicing lambda (no CSE inside
-    HOF lambdas), so handing this the raw ``norm_text(...)``
-    expression re-runs the regexp normalizer length(text) times per
-    row."""
-    return F.when(F.length(nt) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(nt) - (n - 1)),
-            lambda i: nt.substr(i, F.lit(n)),
-        )
-    )
-
-
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Char n-grams of the normalized text. Convenience form — inside
-    explode pipelines, materialize ``norm_text`` into a column first
-    and use ``char_ngrams_of_norm`` (see its docstring)."""
-    return char_ngrams_of_norm(norm_text(col), n)
-
-
 def char_ngrams_arrow(n: int = 3):
-    """Arrow pandas UDF form of ``char_ngrams_of_norm``: string ->
-    array<string> of all char n-grams (duplicates kept, [] when
-    shorter than n). The HOF-transform form runs one interpreted
-    substr call PER GRAM (~µs each — the q136 hot loop measured
-    2.75M calls); this batches whole Arrow record batches into a
-    Python slice loop, the same discipline dense vector math already
-    uses. Semantics identical: Python slicing and Spark substr both
-    count code points."""
+    """Arrow pandas UDF: normalized string -> array<string> of all
+    char n-grams (duplicates kept, [] when shorter than n). A
+    HOF-transform form runs one interpreted substr call PER GRAM
+    (~µs each — the q136 hot loop measured 2.75M calls); this batches
+    whole Arrow record batches into a Python slice loop, the same
+    discipline dense vector math already uses. Python slicing counts
+    code points, as Spark substr does."""
     import pandas as pd
 
     def _grams(s):
@@ -774,7 +715,6 @@ def langid_ngram_classify(
     n: int = 3,
     top_k: int = 20,
     train_frac: float = 0.5,
-    salt: str = "langid",
 ) -> DataFrame:
     """Char-n-gram language identification (the fastText/CLD heuristic
     family, north-star "language-ID (n-gram heuristic)"): TRAIN =
@@ -794,7 +734,7 @@ def langid_ngram_classify(
     """
     from ..operators.sampling import hash_uniform
 
-    is_train = hash_uniform(F.col(id_col), salt) < train_frac
+    is_train = hash_uniform(F.col(id_col), "langid") < train_frac
     # normalized text materializes BEFORE gram extraction; grams come
     # from the Arrow batch extractor, not the interpreted HOF lambda
     # (the one hot loop VERDICT r4 flagged — ~2x on the classify scan)
@@ -936,9 +876,7 @@ _AMP_RE = "&(amp|#38);"
 _HTML_TAG_RE = r"(?i)</?[a-z!][^>]*>"
 
 
-def html_to_text(
-    col: Column | str, collapse: bool = True, entities: str = "core"
-) -> Column:
+def html_to_text(col: Column | str, entities: str = "core") -> Column:
     """HTML -> text extraction — the step-0 of every raw-web LLM
     corpus (C4 / CCNet / RefinedWeb strip markup before any quality
     gate). With ``entities="core"`` (default) the whole chain is pure
@@ -963,7 +901,7 @@ def html_to_text(
            Arrow ``html_unescape_udf`` kernel (stdlib
            ``html.unescape``); breaks codegen for this projection
            only, the documented engine-external-kernel pattern
-      6. optionally collapse whitespace + trim (``collapse=True``)
+      6. collapse whitespace + trim
 
     Order matters everywhere: CDATA before the tag pass (the marker
     itself would half-match as a tag), script/style/comments before
@@ -984,9 +922,7 @@ def html_to_text(
         for ent, ch in HTML_ENTITIES:
             c = F.regexp_replace(c, ent, ch)
         c = F.regexp_replace(c, _AMP_RE, "&")
-    if collapse:
-        c = F.trim(F.regexp_replace(c, WS, " "))
-    return c
+    return F.trim(F.regexp_replace(c, WS, " "))
 
 
 def html_unescape_udf():

@@ -7,6 +7,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+# Decimal places every similarity (and centroid norm) is rounded to
+# before it is ranked or output: both engines agree at 6 dp (CLAUDE.md).
+ROUND_DP = 6
+
 
 def spread(df: DataFrame) -> DataFrame:
     """Repartition compute-heavy inputs to the session's parallelism.

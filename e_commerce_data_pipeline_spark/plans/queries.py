@@ -1117,16 +1117,21 @@ def q28_cosine_pairs_by_label(spark, sf_dir):
     )
 
 
-def _simhash_oracle_sql(bits: int = 64, n_blocks: int = 4, max_hamming: int = 3) -> str:
+_Q29_MAX_HAMMING = 3
+
+
+def _simhash_oracle_sql() -> str:
     """Generate the DuckDB mirror of simhash_pairs_portable: md5 hex
     nibble k of each token supplies signature bits 4k..4k+3."""
-    chunk = bits // n_blocks
+    from ..operators.dedup import SIMHASH_BITS, SIMHASH_BLOCKS
+
+    chunk = SIMHASH_BITS // SIMHASH_BLOCKS
     contrib = ",\n               ".join(
         f"((CAST(strpos('0123456789abcdef', substr(m, {i // 4 + 1}, 1)) - 1 AS INT)"
         f" >> {i % 4}) & 1) * 2 - 1 AS b{i}"
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     )
-    sums = ", ".join(f"SUM(b{i}) AS s{i}" for i in range(bits))
+    sums = ", ".join(f"SUM(b{i}) AS s{i}" for i in range(SIMHASH_BITS))
     chunks = ",\n               ".join(
         "CAST("
         + " + ".join(
@@ -1134,15 +1139,17 @@ def _simhash_oracle_sql(bits: int = 64, n_blocks: int = 4, max_hamming: int = 3)
             for j in range(chunk)
         )
         + f" AS BIGINT) AS c{q}"
-        for q in range(n_blocks)
+        for q in range(SIMHASH_BLOCKS)
     )
-    chunk_list = ", ".join(f"c{q}" for q in range(n_blocks))
+    chunk_list = ", ".join(f"c{q}" for q in range(SIMHASH_BLOCKS))
     val_case = (
         "CASE q.q "
-        + " ".join(f"WHEN {q} THEN c{q}" for q in range(n_blocks))
+        + " ".join(f"WHEN {q} THEN c{q}" for q in range(SIMHASH_BLOCKS))
         + " END"
     )
-    ham = " + ".join(f"bit_count(xor(a.c{q}, b.c{q}))" for q in range(n_blocks))
+    ham = " + ".join(
+        f"bit_count(xor(a.c{q}, b.c{q}))" for q in range(SIMHASH_BLOCKS)
+    )
     return f"""
     WITH toks AS (
         SELECT doc_id, unnest(list_distinct({_SQL_TOKS})) AS tok FROM documents
@@ -1153,13 +1160,13 @@ def _simhash_oracle_sql(bits: int = 64, n_blocks: int = 4, max_hamming: int = 3)
     ch AS (SELECT doc_id, {chunks} FROM s),
     blocks AS (
         SELECT doc_id, {chunk_list}, q.q AS q, {val_case} AS val
-        FROM ch, range({n_blocks}) q(q)
+        FROM ch, range({SIMHASH_BLOCKS}) q(q)
     )
     SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
            CAST({ham} AS INT) AS hamming
     FROM blocks a
     JOIN blocks b ON a.q = b.q AND a.val = b.val AND a.doc_id < b.doc_id
-    WHERE CAST({ham} AS INT) <= {max_hamming}
+    WHERE CAST({ham} AS INT) <= {_Q29_MAX_HAMMING}
     """
 
 
@@ -1173,7 +1180,9 @@ def _simhash_oracle_sql(bits: int = 64, n_blocks: int = 4, max_hamming: int = 3)
 def q29_simhash_pairs(spark, sf_dir):
     from ..operators.dedup import simhash_pairs_portable
 
-    return simhash_pairs_portable(_t(spark, sf_dir, "documents"), max_hamming=3)
+    return simhash_pairs_portable(
+        _t(spark, sf_dir, "documents"), max_hamming=_Q29_MAX_HAMMING
+    )
 
 
 @_register(

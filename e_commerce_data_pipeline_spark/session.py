@@ -73,62 +73,6 @@ def get_spark(app_name: str = "e-commerce-pipeline-spark") -> SparkSession:
     return spark
 
 
-def scale_conf(
-    total_executor_cores: int = 4000,
-    target_shuffle_partition_mb: int = 200,
-    shuffle_tb: float = 20.0,
-) -> dict[str, str]:
-    """The 100-TB cluster config map, as reproducible settings rather
-    than prose (PERF.md renders this table).
-
-    Not applied in local mode — local[32] keeps the small defaults
-    above. On a real cluster, pass these to spark-submit --conf or the
-    session builder. Sizing rules:
-
-    - shuffle.partitions: max(2-3x total cores, shuffle_bytes /
-      ~200 MB) so a partition fits executor memory with headroom; AQE
-      coalesces small ones but cannot split a too-coarse layout except
-      at skew points.
-    - maxPartitionBytes 256 MB: scan tasks big enough to amortize
-      startup against 100k+ input files.
-    - S3A: the magic committer makes task commits O(1) metadata ops
-      (no rename storm); bounded retry with backoff mirrors the
-      reference's adaptive retry (lake_writer.py:77-81).
-    """
-    by_size = int(shuffle_tb * 1024 * 1024 / target_shuffle_partition_mb)
-    n_shuffle = max(3 * total_executor_cores, by_size)
-    return {
-        # --- shuffle & memory sizing ---
-        "spark.sql.shuffle.partitions": str(n_shuffle),
-        "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(128 * 1024 * 1024),
-        # --- joins ---
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "5",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(
-            256 * 1024 * 1024
-        ),
-        # --- object-store writes (S3A committer; reference parity for
-        #     lake_writer's retry/adaptive config) ---
-        "spark.hadoop.fs.s3a.committer.name": "magic",
-        "spark.hadoop.fs.s3a.committer.magic.enabled": "true",
-        "spark.hadoop.fs.s3a.attempts.maximum": "10",
-        "spark.hadoop.fs.s3a.retry.limit": "7",
-        "spark.hadoop.fs.s3a.retry.interval": "500ms",
-        "spark.hadoop.fs.s3a.connection.maximum": "200",
-        "spark.hadoop.fs.s3a.fast.upload": "true",
-        "spark.sql.parquet.output.committer.class": (
-            "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter"
-        ),
-        "spark.sql.sources.commitProtocolClass": (
-            "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol"
-        ),
-        # --- elasticity ---
-        "spark.dynamicAllocation.enabled": "true",
-        "spark.dynamicAllocation.shuffleTracking.enabled": "true",
-    }
-
-
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the engine's dynamic SQL conf to an externally built session.
 

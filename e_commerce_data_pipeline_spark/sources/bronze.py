@@ -40,7 +40,6 @@ def write_bronze(
     path: str,
     ts_col: str = "timestamp",
     mode: str = "append",
-    compression: str = "gzip",
     one_file_per_partition: bool = False,
 ) -> None:
     """Write gzip JSONL partitioned by event-time year/month/day/hour.
@@ -55,7 +54,7 @@ def write_bronze(
         out = out.repartition(*[F.col(c) for c in PARTITION_COLS])
     (
         out.write.mode(mode)
-        .option("compression", compression)
+        .option("compression", "gzip")
         .partitionBy(*PARTITION_COLS)
         .json(path)
     )
@@ -116,12 +115,11 @@ def compact_partitions(
     path: str,
     schema: StructType,
     out_path: str,
-    target_files_per_partition: int = 1,
 ) -> None:
-    """Small-file compaction: read -> coalesce per partition -> rewrite."""
+    """Small-file compaction: read -> one file per partition -> rewrite."""
     df = spark.read.schema(_with_partition_fields(schema)).json(path)
     (
-        df.repartition(target_files_per_partition, *PARTITION_COLS)
+        df.repartition(1, *PARTITION_COLS)
         .write.mode("overwrite")
         .option("compression", "gzip")
         .partitionBy(*PARTITION_COLS)

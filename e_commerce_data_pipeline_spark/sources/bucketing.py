@@ -24,18 +24,20 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.format("parquet").saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, key: str
 ) -> DataFrame:
-    """Join two tables bucketed on ``key``; with matching bucket counts
-    Catalyst plans a sort-merge join with NO Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+    """Inner-join two tables bucketed on ``key``; with matching bucket
+    counts Catalyst plans a sort-merge join with NO Exchange on either
+    side."""
+    return spark.table(left_table).join(spark.table(right_table), key)

@@ -28,9 +28,9 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _CORRUPT = "_corrupt_record"
 
 
-def write_table(df: DataFrame, path: str, fmt: str, mode: str = "overwrite") -> None:
-    """Write a table in the named format (parquet|orc|csv|jsonl)."""
-    w = df.write.mode(mode)
+def write_table(df: DataFrame, path: str, fmt: str) -> None:
+    """Write (overwrite) a table in the named format (parquet|orc|csv|jsonl)."""
+    w = df.write.mode("overwrite")
     if fmt == "parquet":
         w.parquet(path)
     elif fmt == "orc":

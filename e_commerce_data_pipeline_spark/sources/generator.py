@@ -62,12 +62,9 @@ def _pick(seed_tag: str, values) -> F.Column:
 def generate_events(
     spark: SparkSession,
     n: int = 10_000,
-    start_ts: str = "2024-01-01 00:00:00",
-    events_per_second: float = 5.0,
-    n_sessions: int = 20,
-    n_users: int = 100,
 ) -> DataFrame:
-    """One unified event table with the reference's 70/20/10 mix.
+    """One unified event table with the reference's 70/20/10 mix: 5
+    events per second from 2024-01-01 00:00:00, 20 sessions, 100 users.
 
     Rows carry the envelope + type-specific columns (null where not
     applicable) — the flat union shape used by the bronze layer; split
@@ -75,8 +72,8 @@ def generate_events(
     """
     base = spark.range(n).withColumn(
         "timestamp",
-        F.lit(start_ts).cast("timestamp")
-        + F.make_dt_interval(secs=F.col("id") / F.lit(events_per_second)),
+        F.lit("2024-01-01 00:00:00").cast("timestamp")
+        + F.make_dt_interval(secs=F.col("id") / F.lit(5.0)),
     )
     roll = _r("mix")
     event_type = (
@@ -84,9 +81,9 @@ def generate_events(
         .when(roll < 0.9, "order")
         .otherwise("inventory_cdc")
     )
-    session_idx = F.pmod(F.xxhash64("id", F.lit("sess")), F.lit(n_sessions))
+    session_idx = F.pmod(F.xxhash64("id", F.lit("sess")), F.lit(20))
     user_roll = _r("anon")
-    user_idx = F.pmod(F.xxhash64("id", F.lit("user")), F.lit(n_users))
+    user_idx = F.pmod(F.xxhash64("id", F.lit("user")), F.lit(100))
     product_idx = F.pmod(F.xxhash64("id", F.lit("prod")), F.lit(len(PRODUCTS)))
     cdc_roll = _r("cdcop")
 

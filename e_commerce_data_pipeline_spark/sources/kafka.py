@@ -21,19 +21,16 @@ def kafka_reader(
     spark: SparkSession,
     bootstrap: str,
     topics: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
     streaming: bool = True,
 ):
+    """Kafka source from the earliest offsets; the caller may chain
+    more reader options (maxOffsetsPerTrigger, ...) onto the result."""
     reader = (spark.readStream if streaming else spark.read).format("kafka")
-    reader = (
+    return (
         reader.option("kafka.bootstrap.servers", bootstrap)
         .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "earliest")
     )
-    if max_offsets_per_trigger and streaming:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return reader
 
 
 def to_kafka_frame(
@@ -52,19 +49,17 @@ def kafka_writer(
     df: DataFrame,
     bootstrap: str,
     topic: str,
-    checkpoint_path: str | None = None,
     streaming: bool = True,
 ):
+    """Kafka sink writer; the caller chains checkpointLocation (and any
+    other option) onto a streaming writer before starting it."""
     payload = df if set(df.columns) == {"key", "value"} else to_kafka_frame(df)
     if streaming:
-        w = (
+        return (
             payload.writeStream.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap)
             .option("topic", topic)
         )
-        if checkpoint_path:
-            w = w.option("checkpointLocation", checkpoint_path)
-        return w
     return (
         payload.write.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap)

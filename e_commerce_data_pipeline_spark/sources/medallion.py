@@ -46,8 +46,8 @@ def bronze_to_silver(df: DataFrame, topic: str) -> DataFrame:
     return deduped.withColumn("event_date", F.to_date("timestamp"))
 
 
-def write_silver(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).partitionBy("event_date").parquet(path)
+def write_silver(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").partitionBy("event_date").parquet(path)
 
 
 def silver_quarantine_split(silver: DataFrame) -> tuple[DataFrame, DataFrame]:

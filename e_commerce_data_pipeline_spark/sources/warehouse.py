@@ -32,38 +32,33 @@ def gated_load(
     df: DataFrame,
     expectations: Sequence[Expectation],
     write_fn: Callable[[DataFrame], None],
-    threshold: float = 0.95,
 ) -> GateResult:
-    """Run the suite on ``df``; invoke ``write_fn`` only if it passes.
+    """Run the suite on ``df``; invoke ``write_fn`` only if it passes
+    (quality score >= 0.95).
 
     The suite costs one scan; the write is a second — at scale, cache
     ``df`` first if it is an expensive derivation rather than a table.
     """
-    score, row, passed = quality_gate(df, expectations, threshold)
+    score, row, passed = quality_gate(df, expectations, 0.95)
     if passed:
         write_fn(df)
     return GateResult(loaded=passed, score=score, report=row.asDict())
 
 
-def parquet_writer(path: str, partition_by: tuple[str, ...] = ()) -> Callable:
+def parquet_writer(path: str) -> Callable:
     def write(df: DataFrame) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        df.write.mode("overwrite").parquet(path)
 
     return write
 
 
-def jdbc_writer(
-    url: str, table: str, mode: str = "append", **options: str
-) -> Callable:
+def jdbc_writer(url: str, table: str, **options: str) -> Callable:
     """Warehouse JDBC writer factory (constructed, connects on call)."""
 
     def write(df: DataFrame) -> None:
         w = df.write.format("jdbc").option("url", url).option("dbtable", table)
         for k, v in options.items():
             w = w.option(k, v)
-        w.mode(mode).save()
+        w.mode("append").save()
 
     return write

@@ -119,11 +119,10 @@ def gold_revenue_stream_query(
     raw: DataFrame,
     gold_path: str,
     checkpoint_path: str,
-    trigger: str = "30 seconds",
     available_now: bool = False,
 ):
     """orders topic stream -> continuously maintained revenue gold."""
-    from .stream_processor import parse_topic_stream
+    from .stream_processor import DEFAULT_TRIGGER, parse_topic_stream
 
     parsed = parse_topic_stream(raw, "ecommerce.orders").filter(~F.col("_corrupt"))
 
@@ -137,5 +136,5 @@ def gold_revenue_stream_query(
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=trigger)
+        writer = writer.trigger(processingTime=DEFAULT_TRIGGER)
     return writer.start()

@@ -43,13 +43,11 @@ STATE_SCHEMA = StructType(
 
 
 class SessionTracker(StatefulProcessor):
-    """Accumulates per-user event count + fixed-point value sum."""
-
-    def __init__(self, ttl_ms: int = 10 * 60 * 1000):
-        self._ttl_ms = ttl_ms
+    """Accumulates per-user event count + fixed-point value sum; the
+    state expires after 10 minutes without input."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("session", STATE_SCHEMA, self._ttl_ms)
+        self._state = handle.getValueState("session", STATE_SCHEMA, 10 * 60 * 1000)
 
     def handleInputRows(self, key, rows, timerValues):
         n_events, value_cents, last_us = 0, 0, 0
@@ -90,9 +88,7 @@ def tws_available() -> bool:
         return False
 
 
-def track_sessions(
-    events: DataFrame, ttl_ms: int = 10 * 60 * 1000
-) -> DataFrame:
+def track_sessions(events: DataFrame) -> DataFrame:
     """events: streaming frame with user_id, ts, value columns.
 
     Raises NotImplementedError when the runtime lacks protobuf (the
@@ -111,7 +107,7 @@ def track_sessions(
             "streaming.stateful.streaming_cart_state instead"
         )
     return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionTracker(ttl_ms),
+        statefulProcessor=SessionTracker(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",

@@ -53,15 +53,8 @@ CART_STATE_SCHEMA = StructType(
 )
 
 
-def _make_cart_fn(timeout_ms: int):
-    def _cart_fn(key, pdfs, state):
-        return _cart_impl(key, pdfs, state, timeout_ms)
-
-    return _cart_fn
-
-
 def _cart_impl(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, timeout_ms: int
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     session_id = key[0]
     if state.hasTimedOut:
@@ -107,7 +100,7 @@ def _cart_impl(
     # event-time inactivity expiry: the session finalizes when the
     # WATERMARK (not the wall clock) passes last activity + timeout —
     # deterministic under replay and across restarts
-    state.setTimeoutTimestamp(last_us // 1000 + timeout_ms)
+    state.setTimeoutTimestamp(last_us // 1000 + 10 * 60 * 1000)
     yield pd.DataFrame(
         [
             {
@@ -122,12 +115,7 @@ def _cart_impl(
     )
 
 
-def streaming_cart_state(
-    events: DataFrame,
-    timeout_ms: int = 10 * 60 * 1000,
-    ts_col: str = "timestamp",
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
+def streaming_cart_state(events: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     """events: streaming frame with session_id, event_id, timestamp,
     event_kind, product_id. Emits the cart state per session per batch;
     emits a finalized row when the session's event-time timeout passes
@@ -138,10 +126,10 @@ def streaming_cart_state(
     drain terminates instead of idling on wall-clock timers.
     """
     return (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark(ts_col, "10 seconds")
         .groupBy("session_id")
         .applyInPandasWithState(
-            _make_cart_fn(timeout_ms),
+            _cart_impl,
             outputStructType=CART_OUTPUT_SCHEMA,
             stateStructType=CART_STATE_SCHEMA,
             outputMode="update",

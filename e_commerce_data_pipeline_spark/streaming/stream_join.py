@@ -35,9 +35,8 @@ def attribution_stream_join(
     value_col: str = "value",
     watermark: str = "30 minutes",
     max_gap: str = "10 minutes",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join purchase events to the clicks that preceded them within
+    """Inner-join purchase events to the clicks that preceded them within
     ``max_gap``, on watermarked event time.
 
     Returns (user_id, click_ts, purchase_ts, value, lag_sec). State
@@ -56,7 +55,7 @@ def attribution_stream_join(
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {max_gap}"))
     )
-    joined = c.join(p, cond, how)
+    joined = c.join(p, cond)
     return joined.select(
         "user_id",
         "click_ts",

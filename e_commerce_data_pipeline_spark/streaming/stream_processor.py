@@ -63,15 +63,14 @@ def state_sized_shuffle(spark: SparkSession, n: int):
 def read_event_stream(
     spark: SparkSession,
     source: str = "kafka",
-    kafka_bootstrap: str = "localhost:9092",
-    topics: str = "ecommerce.user_clicks,ecommerce.orders,ecommerce.inventory_changes",
     file_path: str | None = None,
     rate_rows_per_second: int = 100,
 ) -> DataFrame:
     """A raw stream of (topic, value) pairs.
 
-    - ``kafka``: the production source (S2); offsets managed by the
-      checkpoint, ``startingOffsets=earliest`` mirrors the reference's
+    - ``kafka``: the production source (S2): the three ecommerce topics
+      on localhost:9092; offsets managed by the checkpoint,
+      ``startingOffsets=earliest`` mirrors the reference's
       auto.offset.reset (consumer.py:131).
     - ``file``: replay Bronze JSONL as a stream (W7 reprocessing path).
     - ``rate``: deterministic in-memory source for tests.
@@ -79,8 +78,11 @@ def read_event_stream(
     if source == "kafka":
         return (
             spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", kafka_bootstrap)
-            .option("subscribe", topics)
+            .option("kafka.bootstrap.servers", "localhost:9092")
+            .option(
+                "subscribe",
+                "ecommerce.user_clicks,ecommerce.orders,ecommerce.inventory_changes",
+            )
             .option("startingOffsets", "earliest")
             .load()
             .select(
@@ -157,10 +159,10 @@ def bronze_ingest_query(
     out_path: str,
     checkpoint_path: str,
     trigger: str = DEFAULT_TRIGGER,
-    output_format: str = "json",
     available_now: bool = False,
 ):
-    """The bronze ingest: parse -> validate -> partition -> sink.
+    """The bronze ingest: parse -> validate -> partition -> gzip JSONL
+    sink.
 
     ``available_now=True`` drains everything currently available then
     stops — the testable micro-batch mode (also the backfill mode).
@@ -175,10 +177,10 @@ def bronze_ingest_query(
     )
     partitioned = with_time_partitions(validated, "timestamp")
     writer = (
-        partitioned.writeStream.format(output_format)
+        partitioned.writeStream.format("json")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
-        .option("compression", "gzip" if output_format == "json" else "snappy")
+        .option("compression", "gzip")
         .partitionBy(*PARTITION_COLS)
         .outputMode("append")
     )
@@ -196,7 +198,6 @@ def silver_stream_query(
     out_path: str,
     checkpoint_path: str,
     segments: DataFrame | None = None,
-    trigger: str = DEFAULT_TRIGGER,
     available_now: bool = False,
 ):
     """Streaming silver stage: parse -> validate -> enrich to the
@@ -247,24 +248,19 @@ def silver_stream_query(
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=trigger)
+        writer = writer.trigger(processingTime=DEFAULT_TRIGGER)
     return writer.start()
 
 
-def windowed_event_counts(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def windowed_event_counts(stream_df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Watermarked tumbling-window aggregation (W5 + W6 streaming
-    shape): per (window, event_type) event counts and fixed-point value
-    totals. State is bounded — windows older than the watermark close
-    and evict; at 100 TB/day the state store holds only
-    (windows in watermark horizon) x event_types rows."""
+    shape): per (1-hour window, event_type) event counts and fixed-point
+    value totals. State is bounded — windows older than the 2-hour
+    watermark close and evict; at 100 TB/day the state store holds
+    only (windows in watermark horizon) x event_types rows."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), "event_type")
+        stream_df.withWatermark(ts_col, "2 hours")
+        .groupBy(F.window(F.col(ts_col), "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias(

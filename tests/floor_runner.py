@@ -4,9 +4,16 @@ sf0.001 warm pass per query, System.gc before each timed query,
 clearCache between runs, all three anchor probes both halves.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# This checkout's package, for the driver and for the Python workers
+# the session starts (they inherit PYTHONPATH).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 import bench  # noqa: E402
 from e_commerce_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402

@@ -1,7 +1,7 @@
 """Capture `.explain("formatted")` output for registry queries.
 
 Usage:
-    PYTHONPATH=/root/repo python tests/plan_capture.py SUFFIX q65 q98 ...
+    python tests/plan_capture.py SUFFIX q65 q98 ...
 
 Writes plans/$SPARK_GRAFT_PLAN_DIR/<name>_<SUFFIX>.txt (default r17)
 for each query name (prefix match on the registry key, e.g. "q65"
@@ -16,7 +16,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# This checkout's package, for the driver and for the Python workers
+# the session starts (they inherit PYTHONPATH).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 from e_commerce_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402
 from e_commerce_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -27,9 +33,7 @@ def main() -> None:
     prefixes = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_DIR", "r17"),
+        ROOT, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r17")
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-capture")

@@ -24,12 +24,12 @@ construction):
   count — is unchanged, which is also the realistic shape: more rows,
   same domain).
 
-Usage: PYTHONPATH=/root/repo python tests/scale_probe.py synth
-       PYTHONPATH=/root/repo python tests/scale_probe.py run q65 q157
-       PYTHONPATH=/root/repo python tests/scale_probe.py run q59 q59p q129 q129p
-       PYTHONPATH=/root/repo python tests/scale_probe.py run q138 q93 q172 q172p
-       PYTHONPATH=/root/repo python tests/scale_probe.py run q162 q98 q98p q145 q58
-       PYTHONPATH=/root/repo python tests/scale_probe.py recall
+Usage: python tests/scale_probe.py synth
+       python tests/scale_probe.py run q65 q157
+       python tests/scale_probe.py run q59 q59p q129 q129p
+       python tests/scale_probe.py run q138 q93 q172 q172p
+       python tests/scale_probe.py run q162 q98 q98p q145 q58
+       python tests/scale_probe.py recall
 
 Each `run` times the query at sf0.1 and at the 10x dir in the SAME
 session (bench-identical _timed_min: warm pass at sf0.001, System.gc,
@@ -52,9 +52,16 @@ sections).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# This checkout's package, for the driver and for the Python workers
+# the session starts (they inherit PYTHONPATH).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 import bench  # noqa: E402
 from e_commerce_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402

@@ -8,10 +8,17 @@ Part of the .claude/skills/verify recipe; slicing keeps each part
 inside a 10-minute shell timeout on a contended host.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# This checkout's package, for the driver and for the Python workers
+# the session starts (they inherit PYTHONPATH).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 

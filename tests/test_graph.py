@@ -3,11 +3,28 @@ bit-identical to the driver-side reference (same arithmetic)."""
 
 from __future__ import annotations
 
-from e_commerce_data_pipeline_spark.operators.graph import (
-    RANK_SCALE,
-    pagerank,
-    pagerank_reference,
-)
+from e_commerce_data_pipeline_spark.operators.graph import RANK_SCALE, pagerank
+
+
+def pagerank_reference(edge_list, iters: int = 3, damping_pct: int = 85):
+    """Driver-side integer reference implementation (tests only):
+    identical arithmetic to :func:`pagerank`, plain Python dicts."""
+    edges = sorted({(u, v) for u, v in edge_list if u != v})
+    deg: dict = {}
+    for u, _ in edges:
+        deg[u] = deg.get(u, 0) + 1
+    n = len(deg)
+    if n == 0:
+        return {}
+    teleport = (100 - damping_pct) * RANK_SCALE // (100 * n)
+    r = {u: RANK_SCALE // n for u in deg}
+    for _ in range(iters):
+        share = {u: (damping_pct * r[u]) // (100 * deg[u]) for u in r}
+        nxt: dict = {}
+        for u, v in edges:
+            nxt[v] = nxt.get(v, 0) + share[u]
+        r = {v: m + teleport for v, m in nxt.items()}
+    return r
 
 
 def _run(spark, edge_list, iters=3):

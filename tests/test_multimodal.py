@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from e_commerce_data_pipeline_spark.operators.multimodal import (
+    _MS_COEFS,
     decode_bmp,
     decode_image_meta,
     decode_ppm,
@@ -17,6 +18,7 @@ from e_commerce_data_pipeline_spark.operators.multimodal import (
     encode_video,
     image_features,
     make_test_pixels,
+    ms_adpcm_step,
     require_codec,
     resize_images,
     sample_video_frames,
@@ -3003,6 +3005,21 @@ def test_tiff_ycbcr_organization_bitflip_sweep_round12():
                 pass
 
 
+def ms_adpcm_decode(nibbles, pred_idx: int, delta0: int, s1: int,
+                    s2: int, coefs=None):
+    """Decode a mono MS ADPCM nibble sequence. Returns the int16
+    sample list [s2, s1, d_1, ..., d_n] (the two block-header
+    samples in playback order, then one sample per code)."""
+    c1, c2 = (coefs or _MS_COEFS)[pred_idx]
+    a, prev, d = int(s1), int(s2), int(delta0)
+    out = [prev, a]
+    for nib in nibbles:
+        samp, d = ms_adpcm_step(a, prev, d, c1, c2, int(nib))
+        a, prev = samp, a
+        out.append(samp)
+    return out
+
+
 def test_ms_adpcm_decode_reference_and_stereo():
     """MS ADPCM (WAV format 2): mono decode matches the pure-Python
     state machine (truncating division, signed nibbles, floor-16
@@ -3016,8 +3033,6 @@ def test_ms_adpcm_decode_reference_and_stereo():
         decode_wav,
         encode_wav_ms_adpcm,
         encode_wav_ms_adpcm_stereo,
-        ms_adpcm_decode,
-        ms_adpcm_step,
     )
 
     # truncation semantics pinned: negative prediction truncates

@@ -1114,13 +1114,29 @@ def test_fs_linkage_offset_pass_gap_recall_hypothesis(spark):
     run()
 
 
+def bpe_reference_encode(word: str, merges) -> list:
+    """Pure-Python greedy BPE encode (test reference): apply each
+    merge in order, left-to-right non-overlapping, over the symbol
+    list — the semantics ``bpe_encode_corpus`` mirrors with string
+    replaces and ``_apply_bpe_merge`` mirrors as an aggregate fold."""
+    syms = list(word)
+    for a, b in merges:
+        out: list = []
+        for sym in syms:
+            if out and out[-1] == a and sym == b:
+                out[-1] = a + b
+            else:
+                out.append(sym)
+        syms = out
+    return syms
+
+
 def test_bpe_encode_corpus_matches_reference(spark):
     """The replace-chain encode (q179's operator) agrees with the
     pure-Python greedy fold — including the 'aaa' non-overlap case —
     and composes with train_bpe_merges output."""
     from e_commerce_data_pipeline_spark.operators.text import (
         bpe_encode_corpus,
-        bpe_reference_encode,
         train_bpe_merges,
     )
 
