@@ -469,9 +469,9 @@ def simhash_pairs_portable(
     )
 
 
-def auto_lsh_planes(n: int, target_bucket: int = 128) -> int:
+def auto_lsh_planes(n: int) -> int:
     """Plane count for a hyperplane-LSH table over ``n`` vectors:
-    the smallest p with n / 2^p <= target_bucket (floor 4 — fewer
+    the smallest p with n / 2^p <= 128 (floor 4 — fewer
     planes than that buys no useful blocking; cap 24 keeps the
     bucket key short). Fixed-width buckets hold n/2^p members, so
     per-bucket pair cost at a growing corpus is flat only when p
@@ -488,9 +488,9 @@ def auto_lsh_planes(n: int, target_bucket: int = 128) -> int:
     a target recall at the chosen plane count."""
     import math
 
-    if n <= target_bucket:
+    if n <= 128:
         return 4
-    return max(4, min(24, math.ceil(math.log2(n / target_bucket))))
+    return max(4, min(24, math.ceil(math.log2(n / 128))))
 
 
 def auto_lsh_tables(
@@ -525,7 +525,6 @@ def embedding_near_dup(
     n_tables: int | str = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Near-duplicate pairs in embedding space (north-star U6
     "embedding-cosine near-dup"): multi-table hyperplane LSH blocks
@@ -597,7 +596,7 @@ def embedding_near_dup(
         s = base.select(
             "id",
             F.lit(t).alias("tbl"),
-            hyperplane_signature("v", dim, n_planes, seed + t).alias("bucket"),
+            hyperplane_signature("v", dim, n_planes, 42 + t).alias("bucket"),
         )
         sig = s if sig is None else sig.union(s)
     # cache the (id, tbl, bucket) frame: the self-join below would

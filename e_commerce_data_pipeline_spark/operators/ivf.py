@@ -81,10 +81,9 @@ def train_centroids(
     n_centroids: int | str = 16,
     n_iters: int = 3,
     vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 42,
 ):
-    """Lloyd iterations; returns the (n_centroids, dim) numpy codebook.
+    """Lloyd iterations; returns the (n_centroids, 64) numpy codebook
+    for the corpus's 64-dim vectors.
 
     ``n_centroids="auto"`` (round 14) sizes the codebook ~sqrt(n)
     via ``auto_nlist`` — one count() before training. The integer
@@ -96,7 +95,8 @@ def train_centroids(
         if n_centroids != "auto":
             raise ValueError('n_centroids must be an int or "auto"')
         n_centroids = auto_nlist(corpus.count())
-    rng = np.random.default_rng(seed)
+    dim = 64
+    rng = np.random.default_rng(42)
     centroids = rng.standard_normal((n_centroids, dim))
     for _ in range(n_iters):
         assigned = corpus.withColumn("c", _assign_udf(centroids)(F.col("v")))

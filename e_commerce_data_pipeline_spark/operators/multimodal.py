@@ -28,6 +28,7 @@ loop, one null-row rule); synthetic corpora are built by
 
 from __future__ import annotations
 
+import functools
 import struct
 from collections.abc import Iterator
 
@@ -95,11 +96,14 @@ def require_codec(fmt: str) -> None:
     """The honest gate for format variants outside this module's
     pure-numpy codecs: not implemented here, and no codec library
     (Pillow / libjpeg / ffmpeg) is present in this container to
-    delegate to. The supported surface decodes natively: BMP, PPM
+    delegate to. Among the formats decoded natively: BMP, PPM
     (8/16-bit), PNG (complete — every legal depth/color/interlace
-    combination), JPEG (baseline 4:4:4/4:2:0/gray, restart intervals,
-    progressive), GIF (interlace, local tables, partial frames),
-    WAV PCM/G.711/IMA-ADPCM (any channel count)."""
+    combination), JPEG (baseline and 8/12-bit extended sequential
+    with any integral-ratio sampling and restart intervals,
+    progressive, lossless, arithmetic sequential and progressive,
+    hierarchical), GIF (interlace, local tables, partial frames),
+    TIFF, WAV PCM/G.711/IMA-ADPCM (any channel count). An illegal
+    header is corrupt data and raises ValueError, not this gate."""
     raise NotImplementedError(
         f"decoding {fmt} is outside the pure-numpy codec surface and "
         "no codec library is present in this environment to delegate "
@@ -4409,75 +4413,48 @@ def _jpeg_split_tables(b: bytes):
     abbreviated_stream): DQT/DHT segments go to the JPEGTables side,
     everything else (SOF/SOS/entropy/EOI) stays — the TIFF TechNote 2
     abbreviated-stream layout."""
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream")
-    pos = 2
     tables = bytearray()
     rest = bytearray()
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync in split")
-        marker = b[pos + 1]
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        seg = b[pos : pos + 2 + ln]
+    for marker, payload, scan in _jpg_segments(b):
+        seg = _jpg_seg(marker, payload)
         if marker in (0xDB, 0xC4):
             tables += seg
         else:
             rest += seg
-        pos += 2 + ln
-        if marker == 0xDA:
+        if scan is not None:
+            rest += b[scan.start :]  # entropy-coded data + EOI
             break
-    rest += b[pos:]  # entropy-coded data + EOI
     return (b"\xff\xd8" + bytes(tables) + b"\xff\xd9",
             b"\xff\xd8" + bytes(rest))
 
 
 def _jpeg_dissect(stream: bytes) -> dict:
-    """Split a sequential JPEG into the pieces the per-strip
-    old-style TIFF layout stores separately: quant-table payloads by
-    id (64 zigzag bytes, Pq=0 only), DC/AC Huffman payloads by id
-    (16 BITS counts + values), the SOF component list
-    (id, samp, tq), the SOS table selectors, the DRI interval, and
-    the raw entropy-coded bytes (SOS header end .. EOI)."""
+    """Split an ``encode_jpeg`` stream (one table per DQT/DHT
+    segment) into the pieces the per-strip old-style TIFF layout
+    stores separately: quant-table payloads by id (64 zigzag bytes,
+    Pq=0 only), DC/AC Huffman payloads by id (16 BITS counts +
+    values), the SOF component list (id, samp, tq), the SOS table
+    selectors, the DRI interval, and the raw entropy-coded bytes."""
     out = {"q": {}, "dc": {}, "ac": {}, "comps": [], "sos": [],
            "dri": 0, "entropy": b""}
-    pos = 2
-    assert stream[:2] == b"\xff\xd8"
-    while pos + 4 <= len(stream):
-        assert stream[pos] == 0xFF, "marker desync"
-        marker = stream[pos + 1]
-        (ln,) = struct.unpack_from(">H", stream, pos + 2)
-        payload = stream[pos + 4 : pos + 2 + ln]
+    for marker, payload, scan in _jpg_segments(stream):
         if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tid = payload[p] >> 4, payload[p] & 0x0F
-                assert pq == 0, "per-strip layout stores 8-bit tables"
-                out["q"][tid] = bytes(payload[p + 1 : p + 65])
-                p += 65
+            assert payload[0] >> 4 == 0, "per-strip layout stores 8-bit tables"
+            out["q"][payload[0]] = bytes(payload[1:])
         elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0x0F
-                nv = sum(payload[p + 1 : p + 17])
-                blob = bytes(payload[p + 1 : p + 17 + nv])
-                out["dc" if cls == 0 else "ac"][tid] = blob
-                p += 17 + nv
+            kind = "dc" if payload[0] >> 4 == 0 else "ac"
+            out[kind][payload[0] & 0x0F] = bytes(payload[1:])
         elif marker == 0xDD:
-            (out["dri"],) = struct.unpack_from(">H", payload, 0)
+            out["dri"] = _jpg_parse_dri(payload)
         elif marker == 0xC0:
-            nc = payload[5]
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                out["comps"].append((cid, samp, tq))
-        elif marker == 0xDA:
-            ns = payload[0]
-            for ci in range(ns):
-                out["sos"].append(payload[2 + 2 * ci])
-            assert stream[-2:] == b"\xff\xd9"
-            out["entropy"] = bytes(stream[pos + 2 + ln : -2])
+            out["comps"] = [
+                (cid, hi << 4 | vi, tq)
+                for cid, tq, hi, vi in _jpg_parse_sof(payload)[3]
+            ]
+        elif scan is not None:
+            out["sos"] = list(payload[2 : 2 + 2 * payload[0] : 2])
+            out["entropy"] = bytes(stream[scan])
             return out
-        pos += 2 + ln
     raise AssertionError("no SOS in stream")
 
 
@@ -7527,12 +7504,16 @@ def _jpg_quant_tables(quality: int):
     return out
 
 
+@functools.cache
 def _jpg_dct_mat():
+    """The orthonormal 8x8 DCT-II matrix, built once per process and
+    shared read-only by every encoder and decoder block."""
     import numpy as np
 
     k = np.arange(8)
     c = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) / 2.0
     c[0, :] = 1.0 / (2.0 * np.sqrt(2.0))
+    c.flags.writeable = False
     return c
 
 
@@ -7944,100 +7925,55 @@ def _decode_jpeg_lossless(b: bytes):
     ValueError."""
     import numpy as np
 
-    pos = 2
     huffs: dict[tuple, dict] = {}
     sof = None
     scan = None
     ri = 0
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xC4:
-            p2 = 0
-            while p2 < len(payload):
-                cls, tid = payload[p2] >> 4, payload[p2] & 0x0F
-                bits = list(payload[p2 + 1 : p2 + 17])
-                nv = sum(bits)
-                vals = list(payload[p2 + 17 : p2 + 17 + nv])
-                if len(bits) != 16 or len(vals) != nv:
-                    raise ValueError("JPEG DHT truncated")
-                huffs[(cls, tid)] = _jpg_decode_table(bits, vals)
-                p2 += 17 + nv
+            _jpg_parse_dht(payload, huffs)
         elif marker == 0xC3:
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            sof = _jpg_parse_sof(payload)
+            prec, nc = sof[0], len(sof[3])
             if not (2 <= prec <= 16):
                 raise ValueError("lossless JPEG precision out of range")
             if nc not in (1, 3):
                 require_codec(f"lossless JPEG with {nc} components")
-            if len(payload) < 6 + 3 * nc:
-                raise ValueError("JPEG SOF truncated")
-            for ci in range(nc):
-                if payload[7 + 3 * ci] != 0x11:
-                    require_codec("subsampled lossless JPEG")
-            sof = (prec, h, w, nc)
+            if any(c[2:] != (1, 1) for c in sof[3]):
+                require_codec("subsampled lossless JPEG")
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (ri,) = struct.unpack_from(">H", payload, 0)
+            ri = _jpg_parse_dri(payload)
         elif marker == 0xDA:
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
-            ns = payload[0]
-            sel = [
-                (payload[1 + 2 * ci], payload[2 + 2 * ci] >> 4)
-                for ci in range(ns)
-            ]
-            predictor = payload[1 + 2 * ns]
-            pt = payload[3 + 2 * ns] & 0x0F
-            scan = (sel, predictor, pt, pos + 2 + ln)
+            if sof is not None:
+                scan = (
+                    _jpg_parse_sos(payload, sof[3], True), b[data.start :]
+                )
             break
-        pos += 2 + ln
     if sof is None or scan is None:
         raise ValueError("JPEG missing SOF3/SOS")
-    prec, h, w, nc = sof
-    sel, predictor, pt, dstart = scan
+    prec, h, w, comps = sof
+    (sel, predictor, _, _, pt), data = scan
+    nc = len(comps)
     if len(sel) != nc:
         raise ValueError("JPEG scan/frame component mismatch")
     if not (1 <= predictor <= 7):
         raise ValueError("lossless predictor selector out of range")
     if pt >= prec:
         raise ValueError("lossless point transform out of range")
-    if not h or not w or h * w * nc > (1 << 26):
-        raise ValueError("JPEG dimensions implausible")
     default = 1 << (prec - pt - 1)
     mask = (1 << (prec - pt)) - 1
-    for _, t in sel:
-        if (0, t) not in huffs:
-            raise ValueError("lossless scan references a missing table")
-    tabs = [huffs[(0, t)] for _, t in sel]
-    rd = _JpgBitReader(b[dstart:])
+    tabs = [huffs.get((0, t)) for _, t, _ in sel]
+    if None in tabs:
+        raise ValueError("lossless scan references a missing table")
+    rd = _JpgBitReader(data)
     if ri and ri % w:
         raise ValueError("lossless restart interval not row-aligned")
     restart_rows = ri // w if ri else 0
     out = np.zeros((h, w, nc), np.int64)
     chunk0 = 0
-    nrst = 0
     for y in range(h):
         if restart_rows and y and y % restart_rows == 0:
-            m = rd.restart()
-            if m != nrst % 8:
-                raise ValueError("JPEG restart marker out of sequence")
-            nrst += 1
+            rd.restart(y // restart_rows - 1)
             chunk0 = y
         yy = y - chunk0
         for x in range(w):
@@ -8328,9 +8264,10 @@ class _JpgBitReader:
                 return sym
         raise ValueError("invalid JPEG Huffman code")
 
-    def restart(self) -> int:
-        """Discard pad bits, consume the next RSTm marker (skipping
-        stuffed 0xFF00 pairs per B.1.1.5), return m (0-7)."""
+    def restart(self, expected: int) -> None:
+        """Discard pad bits and consume the next RSTm marker (skipping
+        stuffed 0xFF00 pairs per B.1.1.5); m must be ``expected`` mod
+        8, the restart count so far."""
         self.acc = 0
         self.nbits = 0  # after any take(), at most 7 buffered bits
         while self.pos + 1 < len(self.d):
@@ -8343,7 +8280,11 @@ class _JpgBitReader:
         if not (0xD0 <= m <= 0xD7):
             raise ValueError(f"expected RSTm, found 0xFF{m:02X}")
         self.pos += 2
-        return m - 0xD0
+        if m - 0xD0 != expected % 8:
+            raise ValueError(
+                f"JPEG restart desync: RST{m - 0xD0}, "
+                f"expected RST{expected % 8}"
+            )
 
 
 def _jpg_extend(v: int, cat: int) -> int:
@@ -8426,6 +8367,386 @@ def _jpg_parse_dqt(payload: bytes, qts: dict) -> None:
         p += 1 + 64 * step
 
 
+def _jpg_segments(b: bytes):
+    """The one JPEG marker walk (T.81 B.1.1): yield ``(marker,
+    payload, scan)`` for each segment after SOI until EOI or the end
+    of the data. ``scan`` is None except after an SOS header, where
+    it is the slice of ``b`` holding the entropy-coded data, up to
+    the next marker that is not RSTm (``_jpg_scan_end``); the walk
+    resumes after it. Fill bytes
+    before a marker are skipped (B.1.1.2). A missing SOI, a byte that
+    should start a marker and does not, and a truncated marker or
+    segment raise ValueError."""
+    if b[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG")
+    pos = 2
+    while pos < len(b):
+        if b[pos] != 0xFF:
+            raise ValueError("JPEG marker desync")
+        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 1 >= len(b):
+            raise ValueError("truncated JPEG stream")
+        marker = b[pos + 1]
+        if marker == 0xD9:
+            return
+        if pos + 4 > len(b):
+            raise ValueError("truncated JPEG segment header")
+        (ln,) = struct.unpack_from(">H", b, pos + 2)
+        payload = b[pos + 4 : pos + 2 + ln]
+        if len(payload) != ln - 2:
+            raise ValueError("truncated JPEG segment")
+        pos += 2 + ln
+        scan = None
+        if marker == 0xDA:
+            scan = slice(pos, _jpg_scan_end(b, pos))
+            pos = scan.stop
+        yield marker, payload, scan
+
+
+def _jpg_parse_dht(payload: bytes, huffs: dict) -> None:
+    """Parse one DHT segment (B.2.4.2) into ``huffs[(class, id)]``
+    decode tables."""
+    p = 0
+    while p < len(payload):
+        cls, tid = payload[p] >> 4, payload[p] & 0x0F
+        bits = list(payload[p + 1 : p + 17])
+        nv = sum(bits)
+        vals = list(payload[p + 17 : p + 17 + nv])
+        if len(bits) != 16 or len(vals) != nv:
+            raise ValueError("JPEG DHT truncated")
+        huffs[(cls, tid)] = _jpg_decode_table(bits, vals)
+        p += 17 + nv
+
+
+def _jpg_parse_dri(payload: bytes) -> int:
+    """The restart interval of a DRI segment (B.2.4.4)."""
+    if len(payload) < 2:
+        raise ValueError("JPEG DRI truncated")
+    return struct.unpack_from(">H", payload, 0)[0]
+
+
+def _jpg_parse_sof(payload: bytes):
+    """Parse an SOFn or DHP frame header (B.2.2) -> (precision, h, w,
+    comps), ``comps`` one (id, quant table, hi, vi) per component.
+    A corrupt header raises ValueError: truncation, sampling factors
+    outside 1-4 (A.1.1), no components, a zero dimension, or more
+    than 2^26 samples (the planes allocate from these fields, so a
+    corrupt dimension must not materialize a multi-GB buffer). Legal
+    sampling factors whose max/factor ratio is fractional need true
+    resampling, not replication, and gate via ``require_codec``.
+    Each decoder gates its own precision and component count after
+    the call."""
+    if len(payload) < 6:
+        raise ValueError("JPEG SOF truncated")
+    prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+    if len(payload) < 6 + 3 * nc:
+        raise ValueError("JPEG SOF truncated")
+    comps = []
+    for ci in range(nc):
+        cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
+        hi, vi = samp >> 4, samp & 0x0F
+        if not (1 <= hi <= 4 and 1 <= vi <= 4):
+            raise ValueError(f"JPEG sampling factor out of range {hi}x{vi}")
+        comps.append((cid, tq, hi, vi))
+    if not (h and w and nc) or h * w * nc > (1 << 26):
+        raise ValueError("JPEG dimensions implausible")
+    hmax = max(c[2] for c in comps)
+    vmax = max(c[3] for c in comps)
+    for _, _, hi, vi in comps:
+        if hmax % hi or vmax % vi:
+            require_codec(
+                f"JPEG fractional sampling {hi}x{vi} of {hmax}x{vmax}"
+            )
+    return prec, h, w, comps
+
+
+def _jpg_parse_sos(payload: bytes, comps, lossless: bool = False):
+    """Parse an SOS header (B.2.3) against the frame's ``comps`` ->
+    (sel, Ss, Se, Ah, Al), ``sel`` one (frame component index, DC
+    table, AC table) per scan component. Truncation, a component the
+    frame lacks and a spectral band outside 0 <= Ss <= Se <= 63 raise
+    ValueError (a corrupt Se would run the band loops past the
+    block). A lossless scan carries the predictor in Ss and 0 in Se,
+    so it has no band to check."""
+    if not payload or len(payload) < 1 + 2 * payload[0] + 3:
+        raise ValueError("JPEG SOS truncated")
+    ns = payload[0]
+    ids = [c[0] for c in comps]
+    sel = []
+    for ci in range(ns):
+        cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
+        if cs not in ids:
+            raise ValueError("JPEG scan names unknown component")
+        sel.append((ids.index(cs), tt >> 4, tt & 0x0F))
+    ss, se, a = payload[1 + 2 * ns : 4 + 2 * ns]
+    if not lossless and not 0 <= ss <= se <= 63:
+        raise ValueError("JPEG SOS spectral band out of range")
+    return sel, ss, se, a >> 4, a & 0x0F
+
+
+def _jpg_restart_segments(scan: bytes, n_units: int, ri: int) -> list:
+    """Split an arithmetic-coded scan at its RSTm markers (data 0xFF
+    is always stuffed, so a bare 0xFF D0-D7 inside the scan IS a
+    restart marker), checking their sequence numbers and that restart
+    interval ``ri`` over ``n_units`` MCUs (or blocks) implies this
+    many segments."""
+    segs = []
+    p = seg_from = 0
+    while p + 1 < len(scan):
+        if scan[p] == 0xFF and 0xD0 <= scan[p + 1] <= 0xD7:
+            got, want = scan[p + 1] - 0xD0, len(segs) % 8
+            if got != want:
+                raise ValueError(
+                    f"JPEG restart desync: RST{got}, expected RST{want}"
+                )
+            segs.append(scan[seg_from:p])
+            p = seg_from = p + 2
+        else:
+            p += 1
+    segs.append(scan[seg_from:])
+    if ri:
+        if len(segs) != -(-n_units // ri):
+            raise ValueError("JPEG restart segment count mismatch")
+    elif len(segs) != 1:
+        raise ValueError("JPEG restart markers without DRI")
+    return segs
+
+
+def _jpg_idct_block(coefs, qt):
+    """Dequantize one block of 64 zigzag-order coefficients with the
+    8x8 table ``qt`` and return its inverse DCT (no level shift)."""
+    import numpy as np
+
+    blk = np.zeros(64, dtype=np.float64)
+    blk[_JPG_ZIGZAG] = coefs
+    dctm = _jpg_dct_mat()
+    return dctm.T @ (blk.reshape(8, 8) * qt) @ dctm
+
+
+def _jpg_upsample(planes, comps, h: int, w: int) -> list:
+    """Replicate each subsampled component plane up to the frame's
+    maximum sampling factors (nearest neighbour) and crop to (h, w)."""
+    import numpy as np
+
+    hmax = max(c[2] for c in comps)
+    vmax = max(c[3] for c in comps)
+    return [
+        np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)[
+            :h, :w
+        ]
+        for p, (_, _, hi, vi) in zip(planes, comps)
+    ]
+
+
+def _jpg_mcu_grid(h: int, w: int, comps):
+    """(mcux, mcuy, hmax, vmax): the MCU grid of an interleaved frame."""
+    hmax = max(c[2] for c in comps)
+    vmax = max(c[3] for c in comps)
+    return -(-w // (8 * hmax)), -(-h // (8 * vmax)), hmax, vmax
+
+
+def _jpg_seq_planes(h: int, w: int, comps, sel):
+    """(mcux, mcuy, zeroed component planes on the MCU-padded grid)
+    for a sequential scan, which must name every frame component in
+    frame order."""
+    import numpy as np
+
+    if [ci for ci, _, _ in sel] != list(range(len(comps))):
+        raise ValueError("JPEG scan/frame component mismatch")
+    mcux, mcuy, _, _ = _jpg_mcu_grid(h, w, comps)
+    planes = [
+        np.zeros((mcuy * vi * 8, mcux * hi * 8), dtype=np.float64)
+        for (_, _, hi, vi) in comps
+    ]
+    return mcux, mcuy, planes
+
+
+def _jpg_read_block(rd, dc_t, ac_t, pred: int):
+    """Read one sequential Huffman-coded block (F.2.2) -> its 64
+    zigzag-order coefficients, the DC difference added to ``pred``
+    (0 in hierarchical differential frames: zero DC prediction)."""
+    import numpy as np
+
+    coefs = np.zeros(64, dtype=np.int64)
+    cat = rd.huff(dc_t)
+    if cat > 15:
+        # T.81 bounds DC diff categories at 11 (8-bit precision);
+        # a corrupt table can map a code to any byte, and take(cat)
+        # on e.g. 200 builds an int that overflows the int64
+        # coefficient plane instead of raising ValueError
+        raise ValueError("bad JPEG DC category")
+    coefs[0] = pred + (_jpg_extend(rd.take(cat), cat) if cat else 0)
+    k = 1
+    while k < 64:
+        rs = rd.huff(ac_t)
+        if rs == 0x00:
+            break
+        if rs == 0xF0:
+            k += 16
+            continue
+        k += rs >> 4
+        cat = rs & 0x0F
+        if k > 63:
+            raise ValueError("JPEG AC run overflow")
+        coefs[k] = _jpg_extend(rd.take(cat), cat)
+        k += 1
+    return coefs
+
+
+def _jpg_huff_scan(scan, h, w, comps, sel, huffs, qts, ri, differential):
+    """Decode one interleaved sequential Huffman scan -> dequantized,
+    inverse-DCT'd component planes at (h, w), before the level shift.
+    DRI/RSTm restart intervals realign the reader, check the marker
+    sequence and reset the DC predictors."""
+    mcux, mcuy, planes = _jpg_seq_planes(h, w, comps, sel)
+    rd = _JpgBitReader(scan)
+    preds = [0] * len(comps)
+    mcu_n = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if ri and mcu_n and mcu_n % ri == 0:
+                rd.restart(mcu_n // ri - 1)
+                preds = [0] * len(comps)
+            mcu_n += 1
+            for ci, dt, at in sel:
+                _, tq, hi, vi = comps[ci]
+                dc_t, ac_t = huffs.get((0, dt)), huffs.get((1, at))
+                qt = qts.get(tq)
+                if dc_t is None or ac_t is None or qt is None:
+                    raise ValueError("JPEG missing table")
+                for v in range(vi):
+                    for hh in range(hi):
+                        coefs = _jpg_read_block(
+                            rd, dc_t, ac_t, 0 if differential else preds[ci]
+                        )
+                        preds[ci] = int(coefs[0])
+                        py, px = (my * vi + v) * 8, (mx * hi + hh) * 8
+                        planes[ci][py : py + 8, px : px + 8] = (
+                            _jpg_idct_block(coefs, qt)
+                        )
+    return _jpg_upsample(planes, comps, h, w)
+
+
+def _jpg_arith_scan(
+    scan, h, w, comps, sel, qts, ri, dc_cond, ac_cond, differential
+):
+    """Decode one interleaved sequential ARITHMETIC scan (the Annex F
+    models over the Annex D QM-coder) -> component planes at (h, w),
+    before the level shift. DAC conditioning defaults to L=0, U=1,
+    Kx=5 when the marker is absent (F.1.4.4.1.2/F.1.4.4.2). Each
+    restart segment starts a fresh coder with zeroed statistics and
+    reset DC contexts. Hierarchical differential frames (SOF13) code
+    each block's DC value directly (zero prediction, J.1)."""
+    import numpy as np
+
+    mcux, mcuy, planes = _jpg_seq_planes(h, w, comps, sel)
+    segs = iter(_jpg_restart_segments(scan, mcux * mcuy, ri))
+    nc = len(comps)
+    fixed = bytearray([113])
+    coefs = np.zeros(64, dtype=np.int64)
+    mcu_n = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if mcu_n % (ri or mcux * mcuy) == 0:
+                dec = _QmDecoder(next(segs))
+                dc_stats = {dt: bytearray(64) for _, dt, _ in sel}
+                ac_stats = {at: bytearray(256) for _, _, at in sel}
+                dc_ctx = [0] * nc
+                preds = [0] * nc
+            mcu_n += 1
+            for ci, dt, at in sel:
+                _, tq, hi, vi = comps[ci]
+                qt = qts.get(tq)
+                if qt is None:
+                    raise ValueError("JPEG missing table")
+                dc_st, ac_st = dc_stats[dt], ac_stats[at]
+                low, up = dc_cond.get(dt, (0, 1))
+                kx = ac_cond.get(at, 5)
+                for v in range(vi):
+                    for hh in range(hi):
+                        coefs[:] = 0
+                        dcv = _arith_dc_decode(dec, dc_st, dc_ctx, ci, low, up)
+                        if not differential:
+                            preds[ci] += dcv
+                            dcv = preds[ci]
+                        coefs[0] = dcv
+                        _arith_ac_decode(dec, ac_st, fixed, kx, coefs)
+                        py, px = (my * vi + v) * 8, (mx * hi + hh) * 8
+                        planes[ci][py : py + 8, px : px + 8] = (
+                            _jpg_idct_block(coefs, qt)
+                        )
+    return _jpg_upsample(planes, comps, h, w)
+
+
+def _jpg_prog_frame(h: int, w: int, comps):
+    """Coefficient storage of a progressive frame -> (mcux, mcuy,
+    rasters, coefs). Interleaved scans cover the MCU-padded grid
+    (mcuy*vi x mcux*hi blocks, T.81 A.2.4/G.1); non-interleaved scans
+    cover only each component's own ceil-dims block raster
+    ``rasters[ci] = (nbw, nbh)``; ``coefs[ci]`` holds the padded
+    grid's zigzag-order coefficients."""
+    import numpy as np
+
+    mcux, mcuy, hmax, vmax = _jpg_mcu_grid(h, w, comps)
+    rasters = [
+        (-(-w * hi // (8 * hmax)), -(-h * vi // (8 * vmax)))
+        for _, _, hi, vi in comps
+    ]
+    coefs = [
+        np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int64)
+        for _, _, hi, vi in comps
+    ]
+    return mcux, mcuy, rasters, coefs
+
+
+def _jpg_scan_blocks(sel, comps, rasters, mcux: int, mcuy: int):
+    """Block order of one progressive scan -> (iterator of (scan
+    component, frame component, by, bx), blocks per restart unit,
+    restart units): an interleaved scan walks MCUs with hi x vi
+    blocks per component (A.2.3); a single-component scan walks that
+    component's own block raster, one block per unit."""
+    if len(sel) > 1:
+        blocks = (
+            (si, ci, my * comps[ci][3] + v, mx * comps[ci][2] + hh)
+            for my in range(mcuy)
+            for mx in range(mcux)
+            for si, (ci, _, _) in enumerate(sel)
+            for v in range(comps[ci][3])
+            for hh in range(comps[ci][2])
+        )
+        per_unit = sum(comps[ci][2] * comps[ci][3] for ci, _, _ in sel)
+        return blocks, per_unit, mcux * mcuy
+    ci = sel[0][0]
+    nbw, nbh = rasters[ci]
+    blocks = ((0, ci, by, bx) for by in range(nbh) for bx in range(nbw))
+    return blocks, 1, nbw * nbh
+
+
+def _jpg_prog_planes(coefs, rasters, comps, qts, h, w, prec):
+    """Progressive output tail: dequantize and inverse-DCT each
+    component's own block raster, replicate to full resolution, level
+    shift and convert through ``_jpg_gray_ycbcr_tail``."""
+    import numpy as np
+
+    planes = []
+    for grid, (nbw, nbh), (_, tq, _, _) in zip(coefs, rasters, comps):
+        qt = qts.get(tq)
+        if qt is None:
+            raise ValueError("JPEG missing quant table")
+        plane = np.zeros((nbh * 8, nbw * 8), dtype=np.float64)
+        for by in range(nbh):
+            for bx in range(nbw):
+                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    _jpg_idct_block(grid[by, bx], qt)
+                )
+        planes.append(plane)
+    lvl = float(1 << (prec - 1))
+    return _jpg_gray_ycbcr_tail(
+        [p + lvl for p in _jpg_upsample(planes, comps, h, w)], prec
+    )
+
+
 def decode_jpeg(b: bytes, color_space: str = "auto"):
     """Sequential JPEG bytes -> (h, w, 3) RGB (or grayscale
     replicated to 3 channels) uint8. Supports SOF0 baseline AND SOF1
@@ -8434,10 +8755,11 @@ def decode_jpeg(b: bytes, color_space: str = "auto"):
     components, any T.81-legal sampling factors 1-4 whose max/factor
     ratio is integral (4:4:4, 4:2:0, 4:2:2, 4:4:0, 4:1:1, ...), and
     DRI/RSTm restart intervals (byte realignment + DC-predictor
-    reset, marker sequence checked). SOF9 arithmetic sequential
-    dispatches to the QM-coder path (round 12); progressive/lossless
-    arithmetic, hierarchical, and differential streams gate via
-    ``require_codec``; structural damage raises ValueError.
+    reset, marker sequence checked). SOF2 progressive, SOF3
+    lossless, SOF9/SOF10 arithmetic and DHP hierarchical streams
+    dispatch to their decoders; lossless arithmetic and standalone
+    differential frames gate via ``require_codec``; structural damage
+    raises ValueError.
 
     ``color_space``: 3-component scans default to YCbCr (the JFIF
     convention). ``"auto"`` additionally honors the libjpeg R/G/B
@@ -8455,51 +8777,23 @@ def decode_jpeg(b: bytes, color_space: str = "auto"):
     if color_space not in ("auto", "rgb", "ycbcr", "cmyk"):
         raise ValueError(f"unknown JPEG color space {color_space!r}")
 
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
     qts: dict[int, object] = {}
     huffs: dict[tuple, dict] = {}
     sof = None
     scan = None
     restart_interval = 0
     adobe = None
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1  # optional fill bytes before any marker (B.1.1.2)
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xDB:
             _jpg_parse_dqt(payload, qts)
         elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0x0F
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                if len(bits) != 16 or len(vals) != nv:
-                    raise ValueError("JPEG DHT truncated")
-                huffs[(cls, tid)] = _jpg_decode_table(bits, vals)
-                p += 17 + nv
+            _jpg_parse_dht(payload, huffs)
         elif marker in (0xC0, 0xC1):
             # SOF1 extended sequential decodes on the baseline path:
             # at 8-bit precision the entropy coding is identical, the
             # extension only widens precision/table allowances
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            sof = _jpg_parse_sof(payload)
+            prec, nc = sof[0], len(sof[3])
             if prec != 8 and not (
                 prec == 12 and marker == 0xC1 and nc in (1, 3)
             ):
@@ -8509,28 +8803,6 @@ def decode_jpeg(b: bytes, color_space: str = "auto"):
                 # YCbCr relations just center on 2^(P-1)); other
                 # precisions stay gated
                 require_codec(f"JPEG precision={prec}")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    # T.81 A.1.1 bounds factors to 1-4; outside that
-                    # is a corrupt header, not a missing codec
-                    raise ValueError(
-                        f"JPEG sampling factor out of range {hi}x{vi}"
-                    )
-                comps.append((cid, tq, hi, vi))
-            hmax = max(c[2] for c in comps)
-            vmax = max(c[3] for c in comps)
-            for _, _, hi, vi in comps:
-                if hmax % hi or vmax % vi:
-                    # legal but fractional-replication layouts (3-vs-2
-                    # mixes) need true resampling, not replication
-                    require_codec(
-                        f"JPEG fractional sampling {hi}x{vi} "
-                        f"of {hmax}x{vmax}"
-                    )
-            sof = (h, w, comps, prec)
         elif marker == 0xC2:
             return _decode_jpeg_progressive(b)
         elif marker == 0xC3:
@@ -8550,110 +8822,30 @@ def decode_jpeg(b: bytes, color_space: str = "auto"):
                         0xCB, 0xCD, 0xCE, 0xCF):
             require_codec(f"JPEG SOF marker 0xFF{marker:02X} (non-baseline)")
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
+            restart_interval = _jpg_parse_dri(payload)
         elif marker == 0xEE and payload[:5] == b"Adobe":
             if len(payload) < 12:
                 raise ValueError("JPEG APP14 Adobe marker truncated")
             adobe = payload[11]
         elif marker == 0xDA:
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
-            ns = payload[0]
-            sel = []
-            for ci in range(ns):
-                cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
-                sel.append((cs, tt >> 4, tt & 0x0F))
-            scan = (sel, pos + 2 + ln)
+            if sof is None:
+                break
+            # the reader runs on to the end of the data, reading an
+            # EOI inside its last byte as zero padding
+            scan = (_jpg_parse_sos(payload, sof[3])[0], b[data.start :])
             break
-        pos += 2 + ln
     if sof is None or scan is None:
         raise ValueError("JPEG missing SOF0/SOS")
-    h, w, comps, prec = sof
-    sel, data_start = scan
-    if len(sel) != len(comps):
-        raise ValueError("JPEG scan/frame component mismatch")
-    dctm = _jpg_dct_mat()
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    rd = _JpgBitReader(b[data_start:])
-    planes = [
-        np.zeros((mcuy * vi * 8, mcux * hi * 8), dtype=np.float64)
-        for (_, _, hi, vi) in comps
-    ]
-    preds = [0] * len(comps)
-    zz = _JPG_ZIGZAG
-
-    def read_block(dc_t, ac_t, qt, ci):
-        coefs = np.zeros(64, dtype=np.int64)
-        cat = rd.huff(dc_t)
-        if cat > 15:
-            # T.81 bounds DC diff categories at 11 (8-bit precision);
-            # a corrupt table can map a code to any byte, and
-            # take(cat) on e.g. 200 builds an int that overflows the
-            # int64 coefficient plane instead of raising ValueError
-            raise ValueError("bad JPEG DC category")
-        preds[ci] += _jpg_extend(rd.take(cat), cat) if cat else 0
-        coefs[0] = preds[ci]
-        k = 1
-        while k < 64:
-            rs = rd.huff(ac_t)
-            if rs == 0x00:
-                break
-            if rs == 0xF0:
-                k += 16
-                continue
-            k += rs >> 4
-            cat = rs & 0x0F
-            if k > 63:
-                raise ValueError("JPEG AC run overflow")
-            coefs[k] = _jpg_extend(rd.take(cat), cat)
-            k += 1
-        blk = np.zeros((8, 8), dtype=np.float64)
-        for i in range(64):
-            blk.reshape(-1)[zz[i]] = coefs[i]
-        blk *= qt
-        return dctm.T @ blk @ dctm
-
-    mcu_n = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
-                want = (mcu_n // restart_interval - 1) % 8
-                got = rd.restart()
-                if got != want:
-                    raise ValueError(
-                        f"JPEG restart desync: RST{got}, expected RST{want}"
-                    )
-                for i in range(len(preds)):
-                    preds[i] = 0
-            mcu_n += 1
-            for ci, ((cid, tq, hi, vi), (cs, dt, at)) in enumerate(
-                zip(comps, sel)
-            ):
-                dc_t, ac_t = huffs.get((0, dt)), huffs.get((1, at))
-                qt = qts.get(tq)
-                if dc_t is None or ac_t is None or qt is None:
-                    raise ValueError("JPEG missing table")
-                for v in range(vi):
-                    for hh in range(hi):
-                        py = (my * vi + v) * 8
-                        px = (mx * hi + hh) * 8
-                        planes[ci][py : py + 8, px : px + 8] = read_block(
-                            dc_t, ac_t, qt, ci
-                        )
-    # upsample subsampled planes by nearest replication, crop to (h, w)
-    up = []
-    for p, (_, _, hi, vi) in zip(planes, comps):
-        if hi < hmax or vi < vmax:
-            p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
-        up.append(p[:h, :w])
+    prec, h, w, comps = sof
+    sel, data = scan
     lvl = float(1 << (prec - 1))
     full = (1 << prec) - 1
-    planes = [p + lvl for p in up]
+    planes = [
+        p + lvl
+        for p in _jpg_huff_scan(
+            data, h, w, comps, sel, huffs, qts, restart_interval, False
+        )
+    ]
     if len(planes) == 1:
         g = np.clip(np.floor(planes[0] + 0.5), 0, full).astype(
             np.uint8 if prec == 8 else np.uint16
@@ -9260,319 +9452,128 @@ def _decode_jpeg_progressive(b: bytes):
     blocks per component, AC scans walk each component's OWN block
     raster (ceil dims, not the MCU-padded grid), chroma replicates
     back to full resolution like the sequential path."""
-    import numpy as np
-
-    pos = 2
     qts: dict[int, object] = {}
     huffs: dict[tuple, dict] = {}
-    sof = None
-    coefs = None
-    eobrun = 0
+    comps = None
     restart_interval = 0
-    while pos + 2 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1  # optional fill bytes before any marker (B.1.1.2)
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xDB:
             _jpg_parse_dqt(payload, qts)
         elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0x0F
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                if len(bits) != 16 or len(vals) != nv:
-                    raise ValueError("JPEG DHT truncated")
-                huffs[(cls, tid)] = _jpg_decode_table(bits, vals)
-                p += 17 + nv
+            _jpg_parse_dht(payload, huffs)
         elif marker == 0xC2:
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            prec, h, w, comps = _jpg_parse_sof(payload)
             if prec not in (8, 12):
                 require_codec(f"JPEG precision={prec}")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(
-                        f"JPEG sampling factor out of range {hi}x{vi}"
-                    )
-                comps.append((cid, tq, hi, vi))
-            hmax = max(c[2] for c in comps)
-            vmax = max(c[3] for c in comps)
-            for _, _, hi, vi in comps:
-                if hmax % hi or vmax % vi:
-                    require_codec(
-                        f"JPEG fractional sampling {hi}x{vi} "
-                        f"of {hmax}x{vmax}"
-                    )
-            # per-component geometry (T.81 A.2.4/G.1): interleaved
-            # scans cover the MCU-padded grid (mcuy*vi x mcux*hi
-            # blocks); NON-interleaved scans cover only the
-            # component's own ceil-dims block raster
-            mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-            if not h or not w or h * w * nc > (1 << 26):
-                # the coefficient grids allocate from these header
-                # fields — a corrupt dimension must not materialize
-                # a multi-GB buffer (the BMP RLE lesson; the
-                # lossless decoder carries the same guard)
-                raise ValueError("JPEG dimensions implausible")
-            geom = []
-            for _, _, hi, vi in comps:
-                cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)
-                geom.append(
-                    (mcux * hi, mcuy * vi, -(-cw // 8), -(-ch // 8),
-                     cw, ch)
-                )
-            coefs = [
-                np.zeros((g[1], g[0], 64), dtype=np.int64)
-                for g in geom
-            ]
-            sof = (h, w, comps, geom, hmax, vmax, mcux, mcuy, prec)
+            mcux, mcuy, rasters, coefs = _jpg_prog_frame(h, w, comps)
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
+            restart_interval = _jpg_parse_dri(payload)
         elif marker == 0xDA:
-            if sof is None:
+            if comps is None:
                 raise ValueError("JPEG scan before SOF2")
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
-            h, w, comps, geom, hmax, vmax, mcux, mcuy, prec = sof
-            ns = payload[0]
-            sel = []
-            for ci in range(ns):
-                cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
-                idx = next(
-                    (i for i, c in enumerate(comps) if c[0] == cs),
-                    None,
-                )
-                if idx is None:
-                    raise ValueError("JPEG scan names unknown component")
-                sel.append((idx, tt >> 4, tt & 0x0F))
-            Ss, Se, aa = payload[1 + 2 * ns : 4 + 2 * ns]
-            if not 0 <= Ss <= Se <= 63:
-                # T.81 bounds the spectral band inside the 64-coef
-                # block; a corrupt Se runs the band loops past the
-                # block (blk[64] IndexError) without this
-                raise ValueError("JPEG SOS spectral band out of range")
-            Ah, Al = aa >> 4, aa & 0x0F
-            data_start = pos + 2 + ln
-            end = _jpg_scan_end(b, data_start)
-            rd = _JpgBitReader(b[data_start:end])
-            eobrun = 0
+            sel, Ss, Se, Ah, Al = _jpg_parse_sos(payload, comps)
+            if Ss == 0 and Se != 0:
+                raise ValueError("SOF2 scan mixes DC and AC")
+            if Ss and len(sel) != 1:
+                raise ValueError("SOF2 AC scan must be one component")
+            tabs = [huffs.get((1, at) if Ss else (0, dt)) for _, dt, at in sel]
+            if (Ss or not Ah) and None in tabs:
+                raise ValueError("JPEG missing table")
+            blocks, per_unit, _ = _jpg_scan_blocks(
+                sel, comps, rasters, mcux, mcuy
+            )
+            rd = _JpgBitReader(b[data])
             ri = restart_interval
-            mcu_n = 0
-
-            def at_restart():
-                # segment boundary: realign, check the RSTm sequence
-                # number, reset all per-segment entropy state (the
-                # caller resets preds/eobrun — encoder flushed them)
-                want = (mcu_n // ri - 1) % 8
-                got = rd.restart()
-                if got != want:
-                    raise ValueError(
-                        f"JPEG restart desync: RST{got}, "
-                        f"expected RST{want}"
-                    )
-
-            if Ss == 0:
-                if Se != 0:
-                    raise ValueError("SOF2 scan mixes DC and AC")
-                preds = [0] * len(sel)
-                if len(sel) > 1:
-                    # interleaved DC scan: MCU walk, hi x vi blocks
-                    # per component (T.81 A.2.3)
-                    mcu_iter = (
-                        (si, ci,
-                         (my * comps[ci][3] + v_,
-                          mx * comps[ci][2] + h_))
-                        for my in range(mcuy)
-                        for mx in range(mcux)
-                        for si, (ci, _dt, _at) in enumerate(sel)
-                        for v_ in range(comps[ci][3])
-                        for h_ in range(comps[ci][2])
-                    )
-                    per_mcu = sum(
-                        comps[ci][2] * comps[ci][3]
-                        for ci, _, _ in sel
-                    )
-                else:
-                    ci0 = sel[0][0]
-                    nbw0, nbh0 = geom[ci0][2], geom[ci0][3]
-                    mcu_iter = (
-                        (0, ci0, (by, bx))
-                        for by in range(nbh0)
-                        for bx in range(nbw0)
-                    )
-                    per_mcu = 1
-                blk_i = 0
-                for si, ci, (gy, gx) in mcu_iter:
-                    if blk_i % per_mcu == 0:
-                        if ri and mcu_n and mcu_n % ri == 0:
-                            at_restart()
-                            preds = [0] * len(sel)
-                        mcu_n += 1
-                    blk_i += 1
-                    blk = coefs[ci][gy, gx]
-                    dt = sel[si][1]
+            preds = [0] * len(sel)
+            eobrun = unit_n = 0
+            p1, m1 = 1 << Al, -1 << Al
+            for i, (si, ci, by, bx) in enumerate(blocks):
+                if i % per_unit == 0:
+                    # segment boundary: realign, check the RSTm
+                    # sequence number, reset the per-segment entropy
+                    # state (the encoder flushed it)
+                    if ri and unit_n and unit_n % ri == 0:
+                        rd.restart(unit_n // ri - 1)
+                        preds = [0] * len(sel)
+                        eobrun = 0
+                    unit_n += 1
+                blk = coefs[ci][by, bx]
+                if Ss == 0:
                     if Ah == 0:
-                        dc_t = huffs.get((0, dt))
-                        if dc_t is None:
-                            raise ValueError("JPEG missing table")
-                        cat = rd.huff(dc_t)
+                        cat = rd.huff(tabs[si])
                         preds[si] += (
-                            _jpg_extend(rd.take(cat), cat)
-                            if cat
-                            else 0
+                            _jpg_extend(rd.take(cat), cat) if cat else 0
                         )
                         blk[0] = preds[si] << Al
                     else:
                         blk[0] |= rd.take(1) << Al
-            else:
-                if len(sel) != 1:
-                    raise ValueError("SOF2 AC scan must be one component")
-                ci, _dt, at = sel[0]
-                ac_t = huffs.get((1, at))
-                if ac_t is None:
-                    raise ValueError("JPEG missing table")
-                p1, m1 = 1 << Al, -1 << Al
-                nbw_c, nbh_c = geom[ci][2], geom[ci][3]
-                for by in range(nbh_c):
-                    for bx in range(nbw_c):
-                        if ri and mcu_n and mcu_n % ri == 0:
-                            at_restart()
-                            eobrun = 0
-                        mcu_n += 1
-                        blk = coefs[ci][by, bx]
-                        if Ah == 0:
-                            if eobrun > 0:
-                                eobrun -= 1
-                                continue
-                            k = Ss
-                            while k <= Se:
-                                rs = rd.huff(ac_t)
-                                r, s = rs >> 4, rs & 0x0F
-                                if s:
-                                    k += r
-                                    if k > Se:
-                                        raise ValueError(
-                                            "JPEG AC run overflow"
-                                        )
-                                    blk[k] = (
-                                        _jpg_extend(rd.take(s), s) << Al
-                                    )
-                                    k += 1
-                                else:
-                                    if r != 15:
-                                        eobrun = (1 << r) - 1
-                                        if r:
-                                            eobrun += rd.take(r)
-                                        break
-                                    k += 16
+                elif Ah == 0:
+                    if eobrun > 0:
+                        eobrun -= 1
+                        continue
+                    k = Ss
+                    while k <= Se:
+                        rs = rd.huff(tabs[0])
+                        r, s = rs >> 4, rs & 0x0F
+                        if s:
+                            k += r
+                            if k > Se:
+                                raise ValueError("JPEG AC run overflow")
+                            blk[k] = _jpg_extend(rd.take(s), s) << Al
+                            k += 1
                         else:
-                            k = Ss
-                            if eobrun == 0:
-                                while k <= Se:
-                                    rs = rd.huff(ac_t)
-                                    r, s = rs >> 4, rs & 0x0F
-                                    sval = 0
-                                    if s:
-                                        if s != 1:
-                                            raise ValueError(
-                                                "bad AC refine symbol"
-                                            )
-                                        sval = p1 if rd.take(1) else m1
-                                    elif r != 15:
-                                        eobrun = 1 << r
-                                        if r:
-                                            eobrun += rd.take(r)
-                                        break
-                                    while k <= Se:
-                                        v = int(blk[k])
-                                        if v != 0:
-                                            if rd.take(1) and (
-                                                v & p1
-                                            ) == 0:
-                                                blk[k] += (
-                                                    p1 if v >= 0 else m1
-                                                )
-                                        else:
-                                            r -= 1
-                                            if r < 0:
-                                                break
-                                        k += 1
-                                    if s:
-                                        if k > Se:
-                                            raise ValueError(
-                                                "JPEG AC refine "
-                                                "overflow"
-                                            )
-                                        blk[k] = sval
-                                    k += 1
-                            if eobrun > 0:
-                                while k <= Se:
-                                    v = int(blk[k])
-                                    if v != 0 and rd.take(1) and (
-                                        v & p1
-                                    ) == 0:
+                            if r != 15:
+                                eobrun = (1 << r) - 1
+                                if r:
+                                    eobrun += rd.take(r)
+                                break
+                            k += 16
+                else:
+                    k = Ss
+                    if eobrun == 0:
+                        while k <= Se:
+                            rs = rd.huff(tabs[0])
+                            r, s = rs >> 4, rs & 0x0F
+                            sval = 0
+                            if s:
+                                if s != 1:
+                                    raise ValueError("bad AC refine symbol")
+                                sval = p1 if rd.take(1) else m1
+                            elif r != 15:
+                                eobrun = 1 << r
+                                if r:
+                                    eobrun += rd.take(r)
+                                break
+                            while k <= Se:
+                                v = int(blk[k])
+                                if v != 0:
+                                    if rd.take(1) and (v & p1) == 0:
                                         blk[k] += p1 if v >= 0 else m1
-                                    k += 1
-                                eobrun -= 1
-            pos = end
-            continue
+                                else:
+                                    r -= 1
+                                    if r < 0:
+                                        break
+                                k += 1
+                            if s:
+                                if k > Se:
+                                    raise ValueError(
+                                        "JPEG AC refine overflow"
+                                    )
+                                blk[k] = sval
+                            k += 1
+                    if eobrun > 0:
+                        while k <= Se:
+                            v = int(blk[k])
+                            if v != 0 and rd.take(1) and (v & p1) == 0:
+                                blk[k] += p1 if v >= 0 else m1
+                            k += 1
+                        eobrun -= 1
         elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("mixed SOF markers in progressive JPEG")
-        pos += 2 + ln
-    if sof is None or coefs is None:
+    if comps is None:
         raise ValueError("JPEG missing SOF2/scan data")
-    h, w, comps, geom, hmax, vmax, mcux, mcuy, prec = sof
-    # precision-parameterized level shift (the clip/dtype half
-    # lives in the shared _jpg_gray_ycbcr_tail)
-    lvl = float(1 << (prec - 1))
-    dctm = _jpg_dct_mat()
-    zz = _JPG_ZIGZAG
-    planes = []
-    for ci, (_cid, tq, hi, vi) in enumerate(comps):
-        qt = qts.get(tq)
-        if qt is None:
-            raise ValueError("JPEG missing quant table")
-        gbw, gbh, nbw_c, nbh_c, cw, ch = geom[ci]
-        plane = np.zeros((nbh_c * 8, nbw_c * 8), dtype=np.float64)
-        for by in range(nbh_c):
-            for bx in range(nbw_c):
-                blk = np.zeros((8, 8), dtype=np.float64)
-                flat = blk.reshape(-1)
-                for i in range(64):
-                    flat[zz[i]] = coefs[ci][by, bx, i]
-                blk *= qt
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    dctm.T @ blk @ dctm
-                )
-        plane = plane[:ch, :cw]
-        if hi < hmax or vi < vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // vi, axis=0),
-                hmax // hi, axis=1,
-            )
-        planes.append(plane[:h, :w] + lvl)
-    return _jpg_gray_ycbcr_tail(planes, prec)
+    return _jpg_prog_planes(coefs, rasters, comps, qts, h, w, prec)
 
 
 def _decode_jpeg_arith_progressive(b: bytes):
@@ -9592,215 +9593,63 @@ def _decode_jpeg_arith_progressive(b: bytes):
     sequence check + fresh coder). 8-bit, 1/3 components (the
     YCbCr/grayscale class, like SOF2 — 4-component arithmetic
     progressive gates); structural damage raises ValueError."""
-    import numpy as np
-
-    pos = 2
     qts: dict[int, object] = {}
-    sof = None
-    coefs = None
+    comps = None
     restart_interval = 0
     dc_cond = {}
     ac_cond = {}
-    dc_stats: dict[int, bytearray] = {}
-    ac_stats: dict[int, bytearray] = {}
     fixed = bytearray([113])
-    while pos + 2 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xDB:
             _jpg_parse_dqt(payload, qts)
         elif marker == 0xCC:
             # DAC conditioning (same layout as the sequential path)
             _jpg_parse_dac(payload, dc_cond, ac_cond)
         elif marker == 0xCA:
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            prec, h, w, comps = _jpg_parse_sof(payload)
             if prec not in (8, 12):
                 require_codec(
                     f"arithmetic progressive JPEG precision={prec}"
                 )
-            if nc not in (1, 3):
+            if len(comps) not in (1, 3):
                 require_codec(
-                    f"{nc}-component arithmetic progressive JPEG"
+                    f"{len(comps)}-component arithmetic progressive JPEG"
                 )
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(
-                        f"JPEG sampling factor out of range {hi}x{vi}"
-                    )
-                comps.append((cid, tq, hi, vi))
-            hmax = max(c[2] for c in comps)
-            vmax = max(c[3] for c in comps)
-            for _, _, hi, vi in comps:
-                if hmax % hi or vmax % vi:
-                    require_codec(
-                        f"JPEG fractional sampling {hi}x{vi} "
-                        f"of {hmax}x{vmax}"
-                    )
-            mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-            if not h or not w or h * w * nc > (1 << 26):
-                raise ValueError("JPEG dimensions implausible")
-            geom = []
-            for _, _, hi, vi in comps:
-                cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)
-                geom.append(
-                    (mcux * hi, mcuy * vi, -(-cw // 8), -(-ch // 8),
-                     cw, ch)
-                )
-            coefs = [
-                np.zeros((g[1], g[0], 64), dtype=np.int64)
-                for g in geom
-            ]
-            sof = (h, w, comps, geom, hmax, vmax, mcux, mcuy, prec)
+            mcux, mcuy, rasters, coefs = _jpg_prog_frame(h, w, comps)
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
+            restart_interval = _jpg_parse_dri(payload)
         elif marker == 0xDA:
-            if sof is None:
+            if comps is None:
                 raise ValueError("JPEG scan before SOF10")
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
-            h, w, comps, geom, hmax, vmax, mcux, mcuy, prec = sof
-            ns = payload[0]
-            sel = []
-            for ci in range(ns):
-                cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
-                idx = next(
-                    (i for i, c in enumerate(comps) if c[0] == cs),
-                    None,
-                )
-                if idx is None:
-                    raise ValueError("JPEG scan names unknown component")
-                sel.append((idx, tt >> 4, tt & 0x0F))
-            Ss, Se, aa = payload[1 + 2 * ns : 4 + 2 * ns]
-            if not 0 <= Ss <= Se <= 63:
-                raise ValueError("JPEG SOS spectral band out of range")
-            Ah, Al = aa >> 4, aa & 0x0F
-            data_start = pos + 2 + ln
-            end = _jpg_scan_end(b, data_start)
-            # restart segment split (stuffed 0xFF00 means any bare
-            # 0xFF D0-D7 inside the scan IS a restart marker)
-            seg_bounds = []
-            p = data_start
-            seg_from = data_start
-            rst_seq = 0
-            while p + 1 < end:
-                if b[p] == 0xFF and 0xD0 <= b[p + 1] <= 0xD7:
-                    got = b[p + 1] - 0xD0
-                    if got != rst_seq % 8:
-                        raise ValueError(
-                            f"JPEG restart desync: RST{got}, "
-                            f"expected RST{rst_seq % 8}"
-                        )
-                    seg_bounds.append((seg_from, p))
-                    seg_from = p + 2
-                    rst_seq += 1
-                    p += 2
-                else:
-                    p += 1
-            seg_bounds.append((seg_from, end))
-            ri = restart_interval
-            if not ri and len(seg_bounds) != 1:
-                raise ValueError("JPEG restart markers without DRI")
-
-            dc_scan = Ss == 0
-            if dc_scan and Se != 0:
+            sel, Ss, Se, Ah, Al = _jpg_parse_sos(payload, comps)
+            if Ss == 0 and Se != 0:
                 raise ValueError("SOF10 scan mixes DC and AC")
-            if not dc_scan and len(sel) != 1:
+            if Ss and len(sel) != 1:
                 raise ValueError("SOF10 AC scan must be one component")
-
-            def scan_stats_reset():
-                # G.2 convention: DC stats zero only for DC-FIRST
-                # scans; AC stats zero for every AC scan; DC refine
-                # touches only the non-adaptive bin
-                if dc_scan and Ah == 0:
-                    for _si, (_ci, dt, _at) in enumerate(sel):
-                        dc_stats.setdefault(dt, bytearray(64))[:] = \
-                            bytes(64)
-                elif not dc_scan:
-                    at = sel[0][2]
-                    ac_stats.setdefault(at, bytearray(256))[:] = \
-                        bytes(256)
-
-            # unit count for the restart cadence: MCUs for DC scans,
-            # the component's own blocks for AC scans
-            if dc_scan:
-                if len(sel) > 1:
-                    unit_iter = (
-                        (si, ci,
-                         (my * comps[ci][3] + v_,
-                          mx * comps[ci][2] + h_))
-                        for my in range(mcuy)
-                        for mx in range(mcux)
-                        for si, (ci, _dt, _at) in enumerate(sel)
-                        for v_ in range(comps[ci][3])
-                        for h_ in range(comps[ci][2])
-                    )
-                    per_mcu = sum(
-                        comps[ci][2] * comps[ci][3]
-                        for ci, _, _ in sel
-                    )
-                else:
-                    ci0 = sel[0][0]
-                    nbw0, nbh0 = geom[ci0][2], geom[ci0][3]
-                    unit_iter = (
-                        (0, ci0, (by, bx))
-                        for by in range(nbh0)
-                        for bx in range(nbw0)
-                    )
-                    per_mcu = 1
-                total_units = mcuy * mcux if len(sel) > 1 else (
-                    geom[sel[0][0]][2] * geom[sel[0][0]][3]
-                )
-            else:
-                ci0 = sel[0][0]
-                nbw0, nbh0 = geom[ci0][2], geom[ci0][3]
-                total_units = nbw0 * nbh0
-            if ri:
-                want_segs = -(-total_units // ri)
-                if len(seg_bounds) != want_segs:
-                    raise ValueError(
-                        "JPEG restart segment count mismatch"
-                    )
-
-            seg_i = -1
-            dec = None
+            # restart cadence: MCUs for interleaved DC scans, the
+            # component's own blocks otherwise
+            blocks, per_unit, n_units = _jpg_scan_blocks(
+                sel, comps, rasters, mcux, mcuy
+            )
+            segs = iter(
+                _jpg_restart_segments(b[data], n_units, restart_interval)
+            )
+            kx = ac_cond.get(sel[0][2], 5)
             unit_n = 0
-            if dc_scan:
-                preds = [0] * len(sel)
-                dc_ctx = [0] * len(sel)
-                blk_i = 0
-                for si, ci, (gy, gx) in unit_iter:
-                    if blk_i % per_mcu == 0:
-                        if unit_n % (ri or total_units or 1) == 0 \
-                                and seg_i + 1 < len(seg_bounds):
-                            seg_i += 1
-                            s0, s1 = seg_bounds[seg_i]
-                            dec = _QmDecoder(b[s0:s1])
-                            scan_stats_reset()
-                            preds = [0] * len(sel)
-                            dc_ctx = [0] * len(sel)
-                        unit_n += 1
-                    blk_i += 1
-                    blk = coefs[ci][gy, gx]
+            for i, (si, ci, by, bx) in enumerate(blocks):
+                if i % per_unit == 0:
+                    if unit_n % (restart_interval or n_units) == 0:
+                        dec = _QmDecoder(next(segs))
+                        # statistics zero at every scan and restart
+                        # segment start (G.2); DC refinement uses only
+                        # the non-adaptive bin
+                        ac_st = bytearray(256)
+                        dc_stats = {dt: bytearray(64) for _, dt, _ in sel}
+                        preds = [0] * len(sel)
+                        dc_ctx = [0] * len(sel)
+                    unit_n += 1
+                blk = coefs[ci][by, bx]
+                if Ss == 0:
                     dt = sel[si][1]
                     if Ah == 0:
                         low, up = dc_cond.get(dt, (0, 1))
@@ -9810,70 +9659,22 @@ def _decode_jpeg_arith_progressive(b: bytes):
                         blk[0] = preds[si] << Al
                     else:
                         blk[0] |= dec.decode(fixed, 0) << Al
-            else:
-                ci, _dt, at = sel[0]
-                kx = ac_cond.get(at, 5)
-                for by in range(nbh0):
-                    for bx in range(nbw0):
-                        if unit_n % (ri or total_units or 1) == 0 \
-                                and seg_i + 1 < len(seg_bounds):
-                            seg_i += 1
-                            s0, s1 = seg_bounds[seg_i]
-                            dec = _QmDecoder(b[s0:s1])
-                            scan_stats_reset()
-                        unit_n += 1
-                        blk = coefs[ci][by, bx]
-                        if Ah == 0:
-                            _arith_ac_decode(
-                                dec, ac_stats[at], fixed, kx, blk,
-                                ss=Ss, se=Se, al=Al,
-                            )
-                        else:
-                            _arith_ac_refine_decode(
-                                dec, ac_stats[at], fixed, blk,
-                                Ss, Se, Al,
-                            )
-            pos = end
-            continue
+                elif Ah == 0:
+                    _arith_ac_decode(
+                        dec, ac_st, fixed, kx, blk, ss=Ss, se=Se, al=Al
+                    )
+                else:
+                    _arith_ac_refine_decode(
+                        dec, ac_st, fixed, blk, Ss, Se, Al
+                    )
         elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(
                 "mixed SOF markers in arithmetic progressive JPEG"
             )
-        pos += 2 + ln
-    if sof is None or coefs is None:
+    if comps is None:
         raise ValueError("JPEG missing SOF10/scan data")
-    h, w, comps, geom, hmax, vmax, mcux, mcuy, prec = sof
-    # precision-parameterized level shift (the clip/dtype half
-    # lives in the shared _jpg_gray_ycbcr_tail)
-    lvl = float(1 << (prec - 1))
-    dctm = _jpg_dct_mat()
-    zz = _JPG_ZIGZAG
-    planes = []
-    for ci, (_cid, tq, hi, vi) in enumerate(comps):
-        qt = qts.get(tq)
-        if qt is None:
-            raise ValueError("JPEG missing quant table")
-        gbw, gbh, nbw_c, nbh_c, cw, ch = geom[ci]
-        plane = np.zeros((nbh_c * 8, nbw_c * 8), dtype=np.float64)
-        for by in range(nbh_c):
-            for bx in range(nbw_c):
-                blk = np.zeros((8, 8), dtype=np.float64)
-                flat = blk.reshape(-1)
-                for i in range(64):
-                    flat[zz[i]] = coefs[ci][by, bx, i]
-                blk *= qt
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    dctm.T @ blk @ dctm
-                )
-        plane = plane[:ch, :cw]
-        if hi < hmax or vi < vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // vi, axis=0),
-                hmax // hi, axis=1,
-            )
-        planes.append(plane[:h, :w] + lvl)
-    return _jpg_gray_ycbcr_tail(planes, prec)
+    return _jpg_prog_planes(coefs, rasters, comps, qts, h, w, prec)
 
 
 # ---------------------------------------------------------------------------
@@ -9920,101 +9721,6 @@ def _jpg_expand_ref(ref, eh: int, ev: int, th: int, tw: int):
     return out[:th, :tw]
 
 
-def _jh_arith_scan(
-    b, data_start, end, comps, sel, planes, differential,
-    restart_interval, dc_cond, ac_cond, qts, dctm, zz, mcux, mcuy,
-):
-    """One ARITHMETIC hierarchical frame scan (round 13): the Annex
-    F sequential models over the QM-coder, 1x1-sampled components,
-    dequantized blocks written into ``planes``. Differential frames
-    (SOF13) code each block's DC VALUE directly (zero prediction —
-    the J.1 rule the Huffman SOF5 path applies), non-differential
-    SOF9 frames accumulate the usual DC prediction. Restart
-    segments split exactly like the standalone SOF9 decoder: fresh
-    coder + zeroed statistics + reset contexts, sequence numbers
-    checked."""
-    import numpy as np
-
-    total_mcus = mcux * mcuy
-    seg_bounds = []
-    p = data_start
-    seg_from = data_start
-    rst_seq = 0
-    while p + 1 < end:
-        if b[p] == 0xFF and 0xD0 <= b[p + 1] <= 0xD7:
-            got = b[p + 1] - 0xD0
-            if got != rst_seq % 8:
-                raise ValueError(
-                    f"JPEG restart desync: RST{got}, "
-                    f"expected RST{rst_seq % 8}"
-                )
-            seg_bounds.append((seg_from, p))
-            seg_from = p + 2
-            rst_seq += 1
-            p += 2
-        else:
-            p += 1
-    seg_bounds.append((seg_from, end))
-    if restart_interval:
-        if len(seg_bounds) != -(-total_mcus // restart_interval):
-            raise ValueError("JPEG restart segment count mismatch")
-    elif len(seg_bounds) != 1:
-        raise ValueError("JPEG restart markers without DRI")
-
-    nc = len(comps)
-    dc_stats: dict[int, bytearray] = {}
-    ac_stats: dict[int, bytearray] = {}
-    fixed = bytearray([113])
-    dec = None
-    dc_ctx = [0] * nc
-    preds = [0] * nc
-    coefs = np.zeros(64, dtype=np.int64)
-    mcu_n = 0
-    seg_i = -1
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if mcu_n % (restart_interval or total_mcus or 1) == 0 \
-                    and seg_i + 1 < len(seg_bounds):
-                seg_i += 1
-                s0, s1 = seg_bounds[seg_i]
-                dec = _QmDecoder(b[s0:s1])
-                for st in dc_stats.values():
-                    st[:] = bytes(64)
-                for st in ac_stats.values():
-                    st[:] = bytes(256)
-                dc_ctx = [0] * nc
-                preds = [0] * nc
-            mcu_n += 1
-            for ci, ((_cid, tq), (dt, at)) in enumerate(
-                zip(comps, sel)
-            ):
-                qt = qts.get(tq)
-                if qt is None:
-                    raise ValueError("JPEG missing table")
-                if dt not in dc_stats:
-                    dc_stats[dt] = bytearray(64)
-                if at not in ac_stats:
-                    ac_stats[at] = bytearray(256)
-                low, up = dc_cond.get(dt, (0, 1))
-                kx = ac_cond.get(at, 5)
-                coefs[:] = 0
-                dcv = _arith_dc_decode(
-                    dec, dc_stats[dt], dc_ctx, ci, low, up
-                )
-                if differential:
-                    coefs[0] = dcv  # zero prediction (J.1)
-                else:
-                    preds[ci] += dcv
-                    coefs[0] = preds[ci]
-                _arith_ac_decode(dec, ac_stats[at], fixed, kx, coefs)
-                blk = np.zeros((8, 8), dtype=np.float64)
-                for i in range(64):
-                    blk.reshape(-1)[zz[i]] = coefs[i]
-                blk *= qt
-                planes[ci][my * 8 : my * 8 + 8,
-                           mx * 8 : mx * 8 + 8] = dctm.T @ blk @ dctm
-
-
 def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
     """Hierarchical JPEG (DHP) -> (h, w, 3) uint8. Decodes the frame
     pyramid: non-differential SOF0/SOF1 frames replace the
@@ -10024,7 +9730,6 @@ def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
     reference at the DHP dims through the usual color tail."""
     import numpy as np
 
-    pos = 2
     qts: dict[int, object] = {}
     huffs: dict[tuple, dict] = {}
     dhp = None
@@ -10033,59 +9738,27 @@ def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
     restart_interval = 0
     dc_cond: dict[int, tuple] = {}
     ac_cond: dict[int, int] = {}
-    dctm = _jpg_dct_mat()
-    zz = _JPG_ZIGZAG
-    frame = None  # (h, w, comps, differential) awaiting its SOS
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    frame = None  # (h, w, comps, differential, arith) awaiting its SOS
+
+    def frame_header(payload):
+        prec, fh, fw, comps = _jpg_parse_sof(payload)
+        if prec != 8:
+            require_codec(f"hierarchical JPEG precision={prec}")
+        if any(c[2:] != (1, 1) for c in comps):
+            require_codec("hierarchical JPEG with subsampled components")
+        return fh, fw, comps
+
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xDB:
             _jpg_parse_dqt(payload, qts)
         elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0x0F
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                if len(bits) != 16 or len(vals) != nv:
-                    raise ValueError("JPEG DHT truncated")
-                huffs[(cls, tid)] = _jpg_decode_table(bits, vals)
-                p += 17 + nv
+            _jpg_parse_dht(payload, huffs)
         elif marker == 0xDE:
             if dhp is not None:
                 raise ValueError("JPEG multiple DHP markers")
-            if len(payload) < 6:
-                raise ValueError("JPEG DHP truncated")
-            prec, fy, fx, nc = struct.unpack_from(">BHHB", payload, 0)
-            if prec != 8:
-                require_codec(f"hierarchical JPEG precision={prec}")
-            if nc not in (1, 3):
-                require_codec(f"{nc}-component hierarchical JPEG")
-            if not fy or not fx or fy * fx * nc > (1 << 26):
-                raise ValueError("JPEG dimensions implausible")
-            ids = []
-            for ci in range(nc):
-                cid, samp, _tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                if samp != 0x11:
-                    require_codec(
-                        "hierarchical JPEG with subsampled components"
-                    )
-                ids.append(cid)
-            dhp = (fy, fx, ids)
+            dhp = frame_header(payload)
+            if len(dhp[2]) not in (1, 3):
+                require_codec(f"{len(dhp[2])}-component hierarchical JPEG")
         elif marker == 0xDF:
             if dhp is None:
                 raise ValueError("JPEG EXP before DHP")
@@ -10105,23 +9778,9 @@ def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
                     if marker in (0xC5, 0xCD)
                     else "JPEG frame before DHP"
                 )
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, fh, fw, nc = struct.unpack_from(">BHHB", payload, 0)
-            if prec != 8:
-                require_codec(f"hierarchical JPEG precision={prec}")
-            if nc != len(dhp[2]):
+            fh, fw, comps = frame_header(payload)
+            if [c[0] for c in comps] != [c[0] for c in dhp[2]]:
                 raise ValueError("JPEG frame/DHP component mismatch")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                if cid != dhp[2][ci]:
-                    raise ValueError("JPEG frame/DHP component id mismatch")
-                if samp != 0x11:
-                    require_codec(
-                        "hierarchical JPEG with subsampled components"
-                    )
-                comps.append((cid, tq))
             if fh > dhp[0] or fw > dhp[1]:
                 raise ValueError("JPEG frame larger than the DHP dims")
             frame = (
@@ -10142,95 +9801,22 @@ def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
             # DAC conditioning for the arithmetic frames
             _jpg_parse_dac(payload, dc_cond, ac_cond)
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
+            restart_interval = _jpg_parse_dri(payload)
         elif marker == 0xDA:
             if frame is None:
                 raise ValueError("JPEG scan before a hierarchical frame")
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
             fh, fw, comps, differential, arith = frame
-            ns = payload[0]
-            if ns != len(comps):
-                raise ValueError("JPEG scan/frame component mismatch")
-            sel = []
-            for ci in range(ns):
-                cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
-                if cs != comps[ci][0]:
-                    raise ValueError("JPEG scan names unknown component")
-                sel.append((tt >> 4, tt & 0x0F))
-            data_start = pos + 2 + ln
-            end = _jpg_scan_end(b, data_start)
-            mcux, mcuy = -(-fw // 8), -(-fh // 8)
-            planes = [
-                np.zeros((mcuy * 8, mcux * 8), dtype=np.float64)
-                for _ in comps
-            ]
+            sel = _jpg_parse_sos(payload, comps)[0]
             if arith:
-                _jh_arith_scan(
-                    b, data_start, end, comps, sel, planes,
-                    differential, restart_interval, dc_cond,
-                    ac_cond, qts, dctm, zz, mcux, mcuy,
+                planes = _jpg_arith_scan(
+                    b[data], fh, fw, comps, sel, qts, restart_interval,
+                    dc_cond, ac_cond, differential,
                 )
-            rd = None if arith else _JpgBitReader(b[data_start:end])
-            preds = [0] * len(comps)
-            mcu_n = 0
-            for my in range(0 if arith else mcuy):
-                for mx in range(mcux):
-                    if restart_interval and mcu_n and \
-                            mcu_n % restart_interval == 0:
-                        want = (mcu_n // restart_interval - 1) % 8
-                        got = rd.restart()
-                        if got != want:
-                            raise ValueError(
-                                f"JPEG restart desync: RST{got}, "
-                                f"expected RST{want}"
-                            )
-                        preds = [0] * len(comps)
-                    mcu_n += 1
-                    for ci, ((_cid, tq), (dt, at)) in enumerate(
-                        zip(comps, sel)
-                    ):
-                        dc_t = huffs.get((0, dt))
-                        ac_t = huffs.get((1, at))
-                        qt = qts.get(tq)
-                        if dc_t is None or ac_t is None or qt is None:
-                            raise ValueError("JPEG missing table")
-                        coefs = np.zeros(64, dtype=np.int64)
-                        cat = rd.huff(dc_t)
-                        if cat > 15:
-                            raise ValueError("bad JPEG DC category")
-                        dcv = _jpg_extend(rd.take(cat), cat) if cat else 0
-                        if differential:
-                            # zero prediction in differential frames
-                            coefs[0] = dcv
-                        else:
-                            preds[ci] += dcv
-                            coefs[0] = preds[ci]
-                        k = 1
-                        while k < 64:
-                            rs = rd.huff(ac_t)
-                            if rs == 0x00:
-                                break
-                            if rs == 0xF0:
-                                k += 16
-                                continue
-                            k += rs >> 4
-                            cat = rs & 0x0F
-                            if k > 63:
-                                raise ValueError("JPEG AC run overflow")
-                            coefs[k] = _jpg_extend(rd.take(cat), cat)
-                            k += 1
-                        blk = np.zeros((8, 8), dtype=np.float64)
-                        for i in range(64):
-                            blk.reshape(-1)[zz[i]] = coefs[i]
-                        blk *= qt
-                        planes[ci][my * 8 : my * 8 + 8,
-                                   mx * 8 : mx * 8 + 8] = (
-                            dctm.T @ blk @ dctm
-                        )
-            planes = [p[:fh, :fw] for p in planes]
+            else:
+                planes = _jpg_huff_scan(
+                    b[data], fh, fw, comps, sel, huffs, qts,
+                    restart_interval, differential,
+                )
             if differential:
                 if refs is None:
                     raise ValueError(
@@ -10262,19 +9848,16 @@ def _decode_jpeg_hierarchical(b: bytes, color_space: str = "auto"):
                     )
                 refs = [p + 128.0 for p in planes]
             frame = None
-            pos = end
-            continue
-        pos += 2 + ln
     if dhp is None or refs is None:
         raise ValueError("JPEG missing DHP frame pyramid")
-    fy, fx, _ids = dhp
+    fy, fx, dhp_comps = dhp
     if refs[0].shape != (fy, fx):
         raise ValueError("JPEG hierarchy never reached the DHP dims")
     planes = refs
     if len(planes) == 1:
         g = np.clip(np.floor(planes[0] + 0.5), 0, 255).astype(np.uint8)
         return np.stack([g, g, g], axis=-1)
-    ids = tuple(_ids)
+    ids = tuple(c[0] for c in dhp_comps)
     if color_space == "rgb" or (
         color_space == "auto" and ids == (0x52, 0x47, 0x42)
     ):
@@ -10298,7 +9881,6 @@ def encode_jpeg_hierarchical(
     quality: int = 90,
     levels: int = 2,
     restart_interval: int = 0,
-    diff_quality: int = 100,
     expansion: bool = True,
     arith: bool = False,
 ) -> bytes:
@@ -10309,7 +9891,7 @@ def encode_jpeg_hierarchical(
     with the J.1.1.2 filter (closed loop — encoder and decoder track
     the same reference) and codes the residual as a DIFFERENTIAL
     SOF5 frame (zero DC prediction, no level shift) quantized at
-    ``diff_quality``. With ``expansion=False`` every frame runs at
+    quality 100 (unit steps). With ``expansion=False`` every frame runs at
     the FULL dims (no EXP markers) — the spec's QUALITY-refinement
     hierarchy: the base is a coarse encoding and each differential
     frame corrects its residual (on a block-constant raster the
@@ -10343,7 +9925,7 @@ def encode_jpeg_hierarchical(
                   for x in (y, cb, cr)]
     nc = len(planes)
     ql, qc = _jpg_quant_tables(quality)
-    dl, dc_ = _jpg_quant_tables(diff_quality)
+    dl, dc_ = _jpg_quant_tables(100)
     tqs = [0] if gray else [0, 1, 1]
     # table ids: 0/1 = base luma/chroma, 2/3 = differential
     qtabs = {0: ql, 1: qc, 2: dl, 3: dc_}
@@ -11040,52 +10622,24 @@ def _decode_jpeg_arith(b: bytes, color_space: str = "auto"):
     damage raises ValueError."""
     import numpy as np
 
-    pos = 2
     qts: dict[int, object] = {}
     sof = None
     scan = None
     restart_interval = 0
     dc_cond = {}
     ac_cond = {}
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            raise ValueError("truncated JPEG segment")
+    for marker, payload, data in _jpg_segments(b):
         if marker == 0xDB:
             _jpg_parse_dqt(payload, qts)
         elif marker == 0xC9:
-            if len(payload) < 6:
-                raise ValueError("JPEG SOF truncated")
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+            sof = _jpg_parse_sof(payload)
+            prec, _, _, comps = sof
             if prec not in (8, 12):
                 require_codec(f"arithmetic JPEG precision={prec}")
-            if nc not in (1, 3, 4):
-                require_codec(f"{nc}-component arithmetic JPEG")
-            if prec == 12 and nc == 4:
+            if len(comps) not in (1, 3, 4):
+                require_codec(f"{len(comps)}-component arithmetic JPEG")
+            if prec == 12 and len(comps) == 4:
                 require_codec("4-component 12-bit arithmetic JPEG")
-            if not h or not w or h * w * nc > (1 << 26):
-                raise ValueError("JPEG dimensions implausible")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(
-                        f"JPEG sampling factor out of range {hi}x{vi}"
-                    )
-                comps.append((cid, tq, hi, vi))
             if prec == 12 and (
                 color_space == "rgb"
                 or tuple(c[0] for c in comps) == (0x52, 0x47, 0x42)
@@ -11093,15 +10647,6 @@ def _decode_jpeg_arith(b: bytes, color_space: str = "auto"):
                 # refuse at the HEADER, before the O(pixels) QM
                 # walk (round-13 review)
                 require_codec("12-bit RGB-space arithmetic JPEG")
-            hmax = max(c[2] for c in comps)
-            vmax = max(c[3] for c in comps)
-            for _, _, hi, vi in comps:
-                if hmax % hi or vmax % vi:
-                    require_codec(
-                        f"JPEG fractional sampling {hi}x{vi} "
-                        f"of {hmax}x{vmax}"
-                    )
-            sof = (h, w, comps, prec)
         elif marker == 0xCC:
             # DAC: pairs of (Tc<<4|Tb, Cs) — DC Cs packs U<<4|L,
             # AC Cs is Kx (T.81 B.2.4.3)
@@ -11110,139 +10655,32 @@ def _decode_jpeg_arith(b: bytes, color_space: str = "auto"):
                         0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("JPEG multiple SOF markers")
         elif marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("JPEG DRI truncated")
-            (restart_interval,) = struct.unpack_from(">H", payload, 0)
+            restart_interval = _jpg_parse_dri(payload)
         elif marker == 0xDA:
-            if not payload or len(payload) < 1 + 2 * payload[0] + 3:
-                raise ValueError("JPEG SOS truncated")
-            ns = payload[0]
-            sel = []
-            for ci in range(ns):
-                cs, tt = payload[1 + 2 * ci : 3 + 2 * ci]
-                sel.append((cs, tt >> 4, tt & 0x0F))
-            ss, se, aa = payload[1 + 2 * ns : 4 + 2 * ns]
-            if ss != 0 or se != 63 or aa != 0:
+            if sof is None:
+                break
+            sel, ss, se, ah, al = _jpg_parse_sos(payload, sof[3])
+            if ss != 0 or se != 63 or ah or al:
                 require_codec("progressive arithmetic JPEG scan")
-            scan = (sel, pos + 2 + ln)
+            scan = (sel, b[data])
             break
-        pos += 2 + ln
     if sof is None or scan is None:
         raise ValueError("JPEG missing SOF9/SOS")
-    h, w, comps, prec = sof
-    sel, data_start = scan
-    if len(sel) != len(comps):
-        raise ValueError("JPEG scan/frame component mismatch")
-    nc = len(comps)
-    dctm = _jpg_dct_mat()
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = [
-        np.zeros((mcuy * vi * 8, mcux * hi * 8), dtype=np.float64)
-        for (_, _, hi, vi) in comps
-    ]
-    zz = _JPG_ZIGZAG
-    total_mcus = mcux * mcuy
-    # split the scan into restart segments (data 0xFF is always
-    # stuffed, so 0xFF D0-D7 inside the scan IS a restart marker)
-    end = _jpg_scan_end(b, data_start)
-    seg_bounds = []
-    p = data_start
-    seg_from = data_start
-    rst_seq = 0
-    while p + 1 < end:
-        if b[p] == 0xFF and 0xD0 <= b[p + 1] <= 0xD7:
-            got = b[p + 1] - 0xD0
-            if got != rst_seq % 8:
-                raise ValueError(
-                    f"JPEG restart desync: RST{got}, "
-                    f"expected RST{rst_seq % 8}"
-                )
-            seg_bounds.append((seg_from, p))
-            seg_from = p + 2
-            rst_seq += 1
-            p += 2
-        else:
-            p += 1
-    seg_bounds.append((seg_from, end))
-    if restart_interval:
-        want_segs = -(-total_mcus // restart_interval)
-        if len(seg_bounds) != want_segs:
-            raise ValueError("JPEG restart segment count mismatch")
-    elif len(seg_bounds) != 1:
-        raise ValueError("JPEG restart markers without DRI")
-
-    dc_stats = {}
-    ac_stats = {}
-    fixed = bytearray([113])
-    dec = None
-    dc_ctx = [0] * nc
-    preds = [0] * nc
-    coefs = np.zeros(64, dtype=np.int64)
-    mcu_n = 0
-    seg_i = -1
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if mcu_n % (restart_interval or total_mcus or 1) == 0 and (
-                seg_i + 1 < len(seg_bounds)
-            ):
-                seg_i += 1
-                s0, s1 = seg_bounds[seg_i]
-                dec = _QmDecoder(b[s0:s1])
-                for st in dc_stats.values():
-                    st[:] = bytes(64)
-                for st in ac_stats.values():
-                    st[:] = bytes(256)
-                dc_ctx = [0] * nc
-                preds = [0] * nc
-            mcu_n += 1
-            for ci, ((cid, tq, hi, vi), (cs, dt, at)) in enumerate(
-                zip(comps, sel)
-            ):
-                qt = qts.get(tq)
-                if qt is None:
-                    raise ValueError("JPEG missing table")
-                if dt not in dc_stats:
-                    dc_stats[dt] = bytearray(64)
-                if at not in ac_stats:
-                    ac_stats[at] = bytearray(256)
-                low, up = dc_cond.get(dt, (0, 1))
-                kx = ac_cond.get(at, 5)
-                for v in range(vi):
-                    for hh in range(hi):
-                        coefs[:] = 0
-                        preds[ci] += _arith_dc_decode(
-                            dec, dc_stats[dt], dc_ctx, ci, low, up
-                        )
-                        coefs[0] = preds[ci]
-                        _arith_ac_decode(
-                            dec, ac_stats[at], fixed, kx, coefs
-                        )
-                        blk = np.zeros((8, 8), dtype=np.float64)
-                        for i in range(64):
-                            blk.reshape(-1)[zz[i]] = coefs[i]
-                        blk *= qt
-                        py = (my * vi + v) * 8
-                        px = (mx * hi + hh) * 8
-                        planes[ci][py : py + 8, px : px + 8] = (
-                            dctm.T @ blk @ dctm
-                        )
+    prec, h, w, comps = sof
+    sel, data = scan
     # precision-parameterized output (round 13, the encode_jpeg12
     # pattern): level shift and YCbCr relations center on 2^(P-1),
     # clip at 2^P - 1, uint16 rasters above 8 bits
     lvl = float(1 << (prec - 1))
     full = (1 << prec) - 1
     odt = np.uint8 if prec == 8 else np.uint16
-    up_pl = []
-    for p_, (_, _, hi, vi) in zip(planes, comps):
-        if hi < hmax or vi < vmax:
-            p_ = np.repeat(
-                np.repeat(p_, vmax // vi, axis=0), hmax // hi, axis=1
-            )
-        up_pl.append(p_[:h, :w])
-    planes = [p_ + lvl for p_ in up_pl]
+    planes = [
+        p_ + lvl
+        for p_ in _jpg_arith_scan(
+            data, h, w, comps, sel, qts, restart_interval, dc_cond,
+            ac_cond, False,
+        )
+    ]
     if len(planes) == 1:
         g = np.clip(np.floor(planes[0] + 0.5), 0, full).astype(odt)
         return np.stack([g, g, g], axis=-1)
@@ -11756,28 +11194,6 @@ def encode_jpeg_arith_progressive(
     return bytes(out)
 
 
-def _jpg_has_dhp(b: bytes) -> bool:
-    """True when the stream opens a hierarchical pyramid (a DHP
-    marker before the first scan). Pre-scan markers only, so no
-    entropy-data ambiguity — the walk stops at the first SOS/EOI."""
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    while pos + 3 < len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        marker = b[pos + 1]
-        if marker == 0xDE:
-            return True
-        if marker in (0xDA, 0xD9):
-            return False
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        pos += 2 + ln
-    return False
-
-
 def synthetic_jpeg_hier_table(spark, n: int = 12) -> DataFrame:
     """Deterministic HIERARCHICAL JPEG table (T.81 Annex J, round
     12), media_id +1000, census fmt 'jpeg_hier'. Two sub-families:
@@ -11843,68 +11259,31 @@ def synthetic_jpeg_hier_table(spark, n: int = 12) -> DataFrame:
     return _media_table(spark, "image", rows)
 
 
-def _jpg_first_sof(b: bytes) -> int:
-    """First SOFn marker byte of a JPEG stream (0xC0..0xCF), via the
-    same structural walk as ``jpeg_marker_summary`` — the census
-    dispatch for the lossless (0xC3) class."""
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    while pos + 1 < len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            break
-        marker = b[pos + 1]
-        if marker == 0xD9 or marker == 0xDA:
-            break
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return marker
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        pos += 2 + ln
-    raise ValueError("JPEG missing SOF marker")
-
-
 def jpeg_marker_summary(b: bytes):
-    """Structural marker walk -> (progressive, n_scans, n_restarts).
-    Entropy segments are skipped with the stuffing/RST rules, so data
-    bytes cannot false-positive as markers."""
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos, prog, n_scans, n_rst = 2, False, 0, 0
-    while pos + 1 < len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1  # optional fill bytes before any marker (B.1.1.2)
-        if pos + 1 >= len(b):
-            raise ValueError("truncated JPEG stream")
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if marker in (0xC2, 0xCA):
-            # SOF2 (Huffman) and SOF10 (arithmetic, round 13) are
-            # both the progressive class — the census folds them
-            # into one structural family
-            prog = True
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        if marker == 0xDA:
+    """Structural marker walk -> (progressive, n_scans, n_restarts,
+    first_sof, hierarchical): ``first_sof`` is the first SOFn marker
+    byte (0xC0..0xCF, None without one) and ``hierarchical`` whether
+    a DHP marker comes before the first scan. Entropy segments are
+    skipped with the stuffing/RST rules, so data bytes cannot
+    false-positive as markers."""
+    prog, n_scans, n_rst, first_sof, dhp = False, 0, 0, None, False
+    for marker, _, scan in _jpg_segments(b):
+        # SOF2 (Huffman) and SOF10 (arithmetic, round 13) are both
+        # the progressive class — the census folds them into one
+        # structural family
+        prog = prog or marker in (0xC2, 0xCA)
+        dhp = dhp or (marker == 0xDE and not n_scans)
+        is_sof = 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC)
+        if is_sof and first_sof is None:
+            first_sof = marker
+        if scan is not None:
             n_scans += 1
-            p = pos + 2 + ln
-            end = _jpg_scan_end(b, p)
             n_rst += sum(
                 1
-                for k in range(p, end)
-                if b[k] == 0xFF
-                and k + 1 < end
-                and 0xD0 <= b[k + 1] <= 0xD7
+                for k in range(scan.start, scan.stop - 1)
+                if b[k] == 0xFF and 0xD0 <= b[k + 1] <= 0xD7
             )
-            pos = end
-        else:
-            pos += 2 + ln
-    return prog, n_scans, n_rst
+    return prog, n_scans, n_rst, first_sof, dhp
 
 
 # ---------------------------------------------------------------------------
@@ -15219,14 +14598,19 @@ def codec_census_stats(df: DataFrame) -> DataFrame:
             return None
         p = px.astype(np.int64)
         if fmt == "jpeg":
-            prog, n_scans, n_rst = jpeg_marker_summary(bytes(content))
-            if _jpg_has_dhp(bytes(content)):
+            try:
+                prog, n_scans, n_rst, sof, hier = jpeg_marker_summary(
+                    bytes(content)
+                )
+            except ValueError:
+                return None
+            if hier:
                 # hierarchical pyramid: aux pins frames AND restart
                 # structure (round 12)
                 fmt, aux = "jpeg_hier", n_scans * 1000 + n_rst
             elif prog:
                 fmt, aux = "jpeg_prog", n_scans * 1000 + n_rst
-            elif _jpg_first_sof(bytes(content)) == 0xC3:
+            elif sof == 0xC3:
                 fmt, aux = "jpeg_ll", n_rst  # lossless class
             else:
                 aux = n_rst

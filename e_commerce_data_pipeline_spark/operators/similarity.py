@@ -408,11 +408,15 @@ def cosine_topk_matrix(
     )
 
 
+# tf-idf weights quantize idf to integer millionths (float discipline:
+# tfidf_cosine_pairs' docstring)
+_IDF_SCALE = 1_000_000
+
+
 def _tfidf_weights(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    idf_scale: int,
     block_col: str | None,
     max_token_df: int | None,
 ) -> DataFrame:
@@ -447,7 +451,7 @@ def _tfidf_weights(
             (
                 F.col("tf")
                 * F.round(
-                    F.log(F.col("n_docs") / F.col("df_t")) * idf_scale
+                    F.log(F.col("n_docs") / F.col("df_t")) * _IDF_SCALE
                 ).cast("long")
             ).alias("wq"),
         )
@@ -463,7 +467,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     threshold: float = 0.35,
     max_token_df: int | None = None,
-    idf_scale: int = 1_000_000,
     block_col: str | None = None,
 ) -> DataFrame:
     """Sparse lexical similarity: all doc pairs with tf-idf cosine >=
@@ -492,13 +495,13 @@ def tfidf_cosine_pairs(
     ``cosine_pairs_blocked``.
 
     Float discipline: idf is quantized once per token to integer
-    ``idf_scale``-units; per-doc weights ``tf * idf_q`` are exact
+    ``_IDF_SCALE``-units; per-doc weights ``tf * idf_q`` are exact
     ints, so pair dot products and squared norms are exact integer
     sums. The only float ops are one sqrt+divide per surviving pair,
     on identical integers in any engine -> identical doubles.
     (int64 headroom: tf * idf_q stays < ~1e9 for corpora to ~1e9
     docs; squared-weight sums then stay < ~1e20/doc only for
-    pathological tf — drop ``idf_scale`` to 1e3 past ~1e7-doc
+    pathological tf — drop ``_IDF_SCALE`` to 1e3 past ~1e7-doc
     corpora with long docs.)
 
     Scale shape: the (id, tok, tf) frame shuffles ONCE by token for
@@ -510,7 +513,7 @@ def tfidf_cosine_pairs(
     Returns ``(a_id, b_id, n_shared, sim)`` with sim rounded to 6dp.
     """
     w = _tfidf_weights(
-        docs, id_col, text_col, idf_scale, block_col, max_token_df
+        docs, id_col, text_col, block_col, max_token_df
     ).drop("df_t").cache()
     norms = w.groupBy("id").agg(F.sum(F.col("wq") * F.col("wq")).alias("n2"))
     keys = (["blk"] if block_col else []) + ["tok"]
@@ -562,7 +565,6 @@ def tfidf_cosine_pairs_prefix(
     text_col: str = "text",
     threshold: float = 0.35,
     max_token_df: int | None = None,
-    idf_scale: int = 1_000_000,
     block_col: str | None = None,
 ) -> DataFrame:
     """``tfidf_cosine_pairs`` with the candidate stage bounded by the
@@ -603,7 +605,7 @@ def tfidf_cosine_pairs_prefix(
     eps = 1e-9
     keep = ["blk"] if block_col else []
     w = _tfidf_weights(
-        docs, id_col, text_col, idf_scale, block_col, max_token_df
+        docs, id_col, text_col, block_col, max_token_df
     ).cache()
     norms = w.groupBy("id").agg(F.sum(F.col("wq") * F.col("wq")).alias("n2"))
     # unit weights; a doc whose every token has idf 0 (n2=0) cannot
@@ -941,7 +943,6 @@ def tfidf_cosine_pairs_auto(
     text_col: str = "text",
     threshold: float = 0.35,
     max_token_df: int | None = None,
-    idf_scale: int = 1_000_000,
     block_col: str | None = None,
     prefix: bool = True,
 ) -> DataFrame:
@@ -963,6 +964,5 @@ def tfidf_cosine_pairs_auto(
         text_col=text_col,
         threshold=threshold,
         max_token_df=max_token_df,
-        idf_scale=idf_scale,
         block_col=block_col,
     )

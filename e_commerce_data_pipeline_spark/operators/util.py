@@ -65,7 +65,7 @@ class ScaleProfile:
 
     def lsh_kwargs(self) -> dict:
         """For ``dedup.embedding_near_dup`` (and any hyperplane-LSH
-        blocker): plane count ~ log2(n / target_bucket) with the
+        blocker): plane count ~ log2(n / 128) with the
         RECALL-co-scaled table count — never auto planes at a pinned
         table count (the r15 recall table: that decays the 0.9-band
         0.88 -> 0.69; co-scaling holds 0.973)."""
@@ -117,10 +117,6 @@ def scale_profile(
     *,
     doc_span: int | None = None,
     doc_groups: int = 1,
-    sim: float = 0.9,
-    recall: float = 0.9,
-    target_bucket: int = 128,
-    target_occupancy: float = 60.0,
     stop_token_df: int | None = None,
     er_min_gap: int | None = None,
 ) -> ScaleProfile:
@@ -131,13 +127,13 @@ def scale_profile(
     built from several heavy operators does not have to discover
     five docstrings to survive a 100x corpus:
 
-    - ``n_planes`` ~ log2(n_vecs / target_bucket)
+    - ``n_planes`` ~ log2(n_vecs / 128)
       (``dedup.auto_lsh_planes``; 10x probe: 12.0 -> 3.9 s) with
       ``n_tables`` recall-co-scaled (``dedup.auto_lsh_tables``; holds
       the 0.9-band at 0.973 where planes-only decays it to 0.69),
     - ``n_centroids`` ~ sqrt(n_vecs) (``ivf.auto_nlist``; SemDeDup
       10x ratio 13.08x -> 2.46x),
-    - ``block_width`` ~ target_occupancy * span * groups / n_docs
+    - ``block_width`` ~ 60 * span * groups / n_docs
       (``fuzzy.auto_block_width``; ER 10x ratios 14.0x -> 3.95x and
       53.9x -> 7.55x),
     - tf-idf pairs: ``prefix=True`` (exact All-Pairs filter) by
@@ -171,13 +167,12 @@ def scale_profile(
 
     n_planes = n_tables = n_centroids = block_width = None
     if n_vecs is not None:
-        n_planes = auto_lsh_planes(n_vecs, target_bucket)
-        n_tables = auto_lsh_tables(n_planes, sim, recall)
+        n_planes = auto_lsh_planes(n_vecs)
+        n_tables = auto_lsh_tables(n_planes)
         n_centroids = auto_nlist(n_vecs)
     if n_docs is not None and doc_span is not None:
         block_width = auto_block_width(
-            n_docs, doc_span, doc_groups, target_occupancy,
-            min_gap=er_min_gap,
+            n_docs, doc_span, doc_groups, min_gap=er_min_gap
         )
     return ScaleProfile(
         n_planes=n_planes,

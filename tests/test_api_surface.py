@@ -9,7 +9,9 @@ a list of findings for:
 - a defaulted parameter of a uniquely named package function that no
   call site sets, by keyword or by position. Column-name parameters
   (``*_col``, ``*_cols``, ``src``, ``dst``) are exempt: they name the
-  input frame's schema and select no code path.
+  input frame's schema and select no code path. A ``**name`` argument
+  sets the keys the walk can see it carry (``_dict_keys``); one it
+  cannot resolve counts as setting every parameter.
 
 A value that no caller changes is a constant, not a parameter
 (CLAUDE.md): give a new parameter a call site that sets it.
@@ -133,11 +135,121 @@ def _callee(call: ast.Call) -> str | None:
     return None
 
 
+@functools.cache
+def _enclosing() -> dict[int, ast.AST]:
+    """id(call) -> the innermost function definition around it."""
+    out = {}
+    for tree in _sources().values():
+        # ast.walk is breadth-first: outer functions come before the
+        # functions nested in them, which then overwrite their calls
+        for fn in ast.walk(tree):
+            if type(fn) in (ast.FunctionDef, ast.AsyncFunctionDef):
+                for node in ast.walk(fn):
+                    if type(node) is ast.Call:
+                        out[id(node)] = fn
+    return out
+
+
+def _call_keywords(call: ast.Call, fn, seen: frozenset) -> set[str] | None:
+    """The keywords ``call`` sets, or None when a ``**`` argument is
+    one the walk cannot resolve."""
+    keys = set()
+    for kw in call.keywords:
+        got = {kw.arg} if kw.arg else _dict_keys(kw.value, fn, seen)
+        if got is None:
+            return None
+        keys |= got
+    return keys
+
+
+def _dict_keys(expr: ast.AST, fn, seen: frozenset) -> set[str] | None:
+    """The keys a ``**expr`` argument inside function ``fn`` can carry,
+    or None when the walk cannot tell. Resolved: a dict literal or
+    ``dict(...)`` with literal keys; a call to a uniquely named
+    function whose returns all resolve (the scale-profile
+    ``*_kwargs()`` methods); a name that ``fn`` binds only to those,
+    by assignment, by a ``for`` over a tuple or list of them, or by
+    ``name["key"] = ...``; and ``fn``'s own ``**kwargs``, which
+    carries the keywords the callers of ``fn`` pass to it."""
+    _, calls, defs, aliases, _ = _scan()
+    kind = type(expr)
+    if kind is ast.Dict:
+        if all(type(k) is ast.Constant and type(k.value) is str
+               for k in expr.keys):
+            return {k.value for k in expr.keys}
+        return None
+    if kind is ast.Call:
+        name = _callee(expr)
+        if name == "dict" and not expr.args:
+            return _call_keywords(expr, fn, seen)
+        sites = defs.get(aliases.get(name, name), [])
+        if len(sites) != 1 or name in seen:
+            return None
+        callee = sites[0][1]
+        returns = [
+            n.value for n in ast.walk(callee)
+            if type(n) is ast.Return and n.value is not None
+        ]
+        keys = [_dict_keys(r, callee, seen | {name}) for r in returns]
+        return set().union(*keys) if returns and None not in keys else None
+    if kind is not ast.Name or fn is None:
+        return None
+    var = expr.id
+    if fn.args.kwarg is not None and fn.args.kwarg.arg == var:
+        if len(defs.get(fn.name, [])) != 1 or fn.name in seen:
+            return None
+        keys = set()
+        for call in calls:
+            if aliases.get(_callee(call), _callee(call)) == fn.name:
+                got = _call_keywords(
+                    call, _enclosing().get(id(call)), seen | {fn.name}
+                )
+                if got is None:
+                    return None
+                keys |= got
+        return keys - {a.arg for a in (*fn.args.args, *fn.args.kwonlyargs)}
+    keys, handled = set(), set()
+    for node in ast.walk(fn):
+        values = []
+        if type(node) is ast.Assign:
+            for t in node.targets:
+                if type(t) is ast.Name and t.id == var:
+                    values.append(node.value)
+                    handled.add(id(t))
+                elif (type(t) is ast.Subscript and type(t.value) is ast.Name
+                      and t.value.id == var):
+                    if not (type(t.slice) is ast.Constant
+                            and type(t.slice.value) is str):
+                        return None
+                    keys.add(t.slice.value)
+        elif (type(node) is ast.For and type(node.target) is ast.Name
+              and node.target.id == var):
+            if type(node.iter) not in (ast.Tuple, ast.List):
+                return None
+            values.extend(node.iter.elts)
+            handled.add(id(node.target))
+        elif type(node) is ast.Attribute and _name_of(node.value) == var:
+            return None  # a method call (update, setdefault) can add keys
+        for v in values:
+            got = _dict_keys(v, fn, seen)
+            if got is None:
+                return None
+            keys |= got
+    stores = [
+        n for n in ast.walk(fn)
+        if type(n) is ast.Name and n.id == var and type(n.ctx) is ast.Store
+    ]
+    if not handled or any(id(n) not in handled for n in stores):
+        return None  # a parameter, or bound some other way
+    return keys
+
+
 def unset_parameters() -> list[str]:
     _, calls, defs, aliases, _ = _scan()
     set_kw = defaultdict(set)  # callee name -> keywords some call passes
     n_pos = defaultdict(int)  # callee name -> most positional args passed
     for call in calls:
+        fn = _enclosing().get(id(call))
         name = _callee(call)
         # functools.partial(fn, ...) binds fn's parameters too
         if name == "partial" and call.args:
@@ -151,7 +263,8 @@ def unset_parameters() -> list[str]:
         if any(isinstance(a, ast.Starred) for a in call.args):
             n_pos[name] = 10**6
         n_pos[name] = max(n_pos[name], len(call.args))
-        set_kw[name].update(kw.arg or "**" for kw in call.keywords)
+        keys = _call_keywords(call, fn, frozenset())
+        set_kw[name].update({"**"} if keys is None else keys)
     found = []
     for name, sites in defs.items():
         if len(sites) != 1:

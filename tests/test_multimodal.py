@@ -97,17 +97,63 @@ _PER_ITEM_KERNELS = {
 }
 
 
+def _patch_frame_dims(b: bytes, dim: int) -> bytes:
+    """``b`` with the height and width of its first frame header
+    (SOFn or DHP; all of them precede the first scan) set to ``dim``."""
+    pos = 2
+    while b[pos + 1] not in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xDE):
+        pos += 2 + int.from_bytes(b[pos + 2 : pos + 4], "big")
+    return b[: pos + 5] + dim.to_bytes(2, "big") * 2 + b[pos + 9 :]
+
+
+# one encoder per JPEG frame class the decoders dispatch on
+_JPEG_FRAME_CLASSES = {
+    "sof0": lambda m, px: m.encode_jpeg(px),
+    "sof1": lambda m, px: m.encode_jpeg12(px.astype(np.uint16) << 4),
+    "sof2": lambda m, px: m.encode_jpeg_progressive(px),
+    "sof3": lambda m, px: m.encode_jpeg_lossless(px),
+    "sof9": lambda m, px: m.encode_jpeg_arith(px),
+    "sof10": lambda m, px: m.encode_jpeg_arith_progressive(px),
+    "dhp": lambda m, px: m.encode_jpeg_hierarchical(px),
+}
+
+
+@pytest.mark.parametrize("dim", [0, 0xFFF0])
+@pytest.mark.parametrize("frame", list(_JPEG_FRAME_CLASSES))
+def test_jpeg_implausible_frame_dims_raise_valueerror(frame, dim):
+    """Every JPEG frame class refuses a zero or huge frame dimension
+    with ValueError before it allocates a plane, so the kernels' catch
+    in ``_decode_any`` turns such a file into a null row (a 0xFFF0 x
+    0xFFF0 SOF0 header used to ask numpy for 32 GiB; a zero height
+    decoded to an empty raster)."""
+    from e_commerce_data_pipeline_spark.operators import multimodal as m
+
+    px = m.make_test_pixels(16, 16, seed=4)
+    good = _JPEG_FRAME_CLASSES[frame](m, px)
+    assert m.decode_jpeg(good).shape[:2] == (16, 16)
+    bad = _patch_frame_dims(good, dim)
+    with pytest.raises(ValueError, match="implausible"):
+        m.decode_jpeg(bad)
+    assert m._decode_any(bad) == (None, None)
+
+
 @pytest.mark.parametrize("name", list(_PER_ITEM_KERNELS))
 def test_null_and_garbage_payloads_yield_one_null_row_each(spark, name):
-    """A garbage payload and a null payload (MEDIA_SCHEMA allows null
-    content) each come back as one row keyed by media_id with every
+    """A garbage payload, a null payload (MEDIA_SCHEMA allows null
+    content) and a JPEG whose frame header claims 0xFFF0 x 0xFFF0
+    pixels each come back as one row keyed by media_id with every
     output column null — never as a task failure."""
     from e_commerce_data_pipeline_spark.operators import multimodal
 
+    huge = _patch_frame_dims(
+        multimodal.encode_jpeg(multimodal.make_test_pixels(16, 16, seed=4)),
+        0xFFF0,
+    )
     df = spark.createDataFrame(
         [
             (1, "image", bytearray(b"garbage bytes"), 13, None),
             (2, "image", None, None, None),
+            (3, "image", bytearray(huge), len(huge), None),
         ],
         multimodal.MEDIA_SCHEMA,
     )
@@ -116,9 +162,32 @@ def test_null_and_garbage_payloads_yield_one_null_row_each(spark, name):
     out = call(fn, df)
     keys = {"media_id", "frame_no"}
     rows = out.collect()
-    assert sorted(r["media_id"] for r in rows) == [1, 2]
+    assert sorted(r["media_id"] for r in rows) == [1, 2, 3]
     for r in rows:
         assert all(r[c] is None for c in out.columns if c not in keys), r
+
+
+def test_census_null_row_when_the_marker_walk_fails(spark):
+    """A JPEG whose trailing segment is cut (EOI replaced by a
+    truncated APP0 header) still decodes, but the census's marker
+    walk cannot finish: the census row is null rather than a failed
+    task."""
+    from e_commerce_data_pipeline_spark.operators import multimodal as m
+
+    good = m.encode_jpeg(m.make_test_pixels(16, 16, seed=4))
+    cut = good[:-2] + b"\xff\xe0\x00"
+    assert m._decode_any(cut)[0].shape == (16, 16, 3)
+    with pytest.raises(ValueError):
+        m.jpeg_marker_summary(cut)
+    df = spark.createDataFrame(
+        [(1, "image", bytearray(good), len(good), None),
+         (2, "image", bytearray(cut), len(cut), None)],
+        m.MEDIA_SCHEMA,
+    )
+    rows = {r["media_id"]: r for r in m.codec_census_stats(df).collect()}
+    assert rows[1]["fmt"] == "jpeg" and rows[1]["n_px"] == 256
+    assert all(v is None for k, v in rows[2].asDict().items()
+               if k != "media_id")
 
 
 def test_resize_real_pixels(spark):
@@ -1678,7 +1747,6 @@ def test_jpeg_lossless_roundtrip_and_old_style_tiff():
     import pytest
 
     from e_commerce_data_pipeline_spark.operators.multimodal import (
-        _jpg_first_sof,
         decode_jpeg,
         decode_tiff,
         encode_jpeg_lossless,
@@ -1700,7 +1768,7 @@ def test_jpeg_lossless_roundtrip_and_old_style_tiff():
             a, predictor=1 + trial % 7, point_transform=pt,
             restart_rows=rr, precision=p,
         )
-        assert _jpg_first_sof(b) == 0xC3
+        assert jpeg_marker_summary(b)[3] == 0xC3
         got = decode_jpeg(b)
         want = (a.reshape(h, w, nc).astype(np.int64) >> pt) << pt
         if nc == 1:
@@ -2137,13 +2205,13 @@ def test_jpeg_hierarchical_structure_gates_and_damage():
     flags, multiple DHP, a pyramid that never reaches the DHP dims,
     and the honest gates (non-8-bit, subsampled components,
     differential progressive/lossless, arithmetic hierarchies).
-    Census dispatch: _jpg_has_dhp + frames*1000 aux composition.
+    Census dispatch: the summary's DHP flag + frames*1000 aux
+    composition.
     Plus a full bit-flip sweep over an EXP-less refinement file."""
     import pytest
     import struct as stt
 
     from e_commerce_data_pipeline_spark.operators.multimodal import (
-        _jpg_has_dhp,
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_hierarchical,
@@ -2154,11 +2222,10 @@ def test_jpeg_hierarchical_structure_gates_and_damage():
     img = np.kron(tiles, np.ones((16, 16), np.int64)).astype(np.uint8)
     b = encode_jpeg_hierarchical(img, quality=30, levels=2,
                                  expansion=False)
-    assert _jpg_has_dhp(b) and not _jpg_has_dhp(
+    assert jpeg_marker_summary(b)[4] and not jpeg_marker_summary(
         encode_jpeg(img, quality=90)
-    )
-    prog, n_scans, n_rst = jpeg_marker_summary(b)
-    assert (prog, n_scans, n_rst) == (False, 2, 0)
+    )[4]
+    assert jpeg_marker_summary(b) == (False, 2, 0, 0xC0, True)
 
     def find_marker(buf, mk, nth=0):
         at = -1
@@ -2662,7 +2729,6 @@ def test_jpeg_arith_hierarchical_round13():
     # count and restart census as the Huffman layout
     from e_commerce_data_pipeline_spark.operators.multimodal import (
         jpeg_marker_summary,
-        _jpg_has_dhp,
     )
 
     img = rng.randint(0, 256, (24, 31)).astype(np.uint8)
@@ -2670,8 +2736,8 @@ def test_jpeg_arith_hierarchical_round13():
     ba_ = encode_jpeg_hierarchical(
         img, levels=3, restart_interval=2, arith=True
     )
-    assert _jpg_has_dhp(ba_)
-    assert jpeg_marker_summary(bh_)[1:] == jpeg_marker_summary(ba_)[1:]
+    assert jpeg_marker_summary(ba_)[4]
+    assert jpeg_marker_summary(bh_)[1:3] == jpeg_marker_summary(ba_)[1:3]
     # gates: a progressive-arithmetic frame inside a hierarchy stays
     # out of surface (forge the SOF13 marker to SOF14 = 0xCE)
     bb = bytearray(ba_)
@@ -3549,6 +3615,19 @@ def test_jpeg_gates_and_corrupt_safety(spark):
     # truncated entropy stream -> ValueError
     with pytest.raises(ValueError):
         decode_jpeg(good[: len(good) // 2])
+    # a header cut inside its first marker segment: every entry point
+    # that walks markers gives the same answer
+    from e_commerce_data_pipeline_spark.operators import multimodal as m
+
+    for cut in (b"\xff\xd8\xff\xe0\x00", b"\xff\xd8\xff\xe0", b"\xff\xd8\xff"):
+        for entry in (
+            decode_jpeg, m.jpeg_marker_summary, m._decode_jpeg_lossless,
+            m._decode_jpeg_progressive, m._decode_jpeg_arith_progressive,
+            m._decode_jpeg_hierarchical, m._decode_jpeg_arith,
+            m._jpeg_split_tables, m._jpeg_dissect,
+        ):
+            with pytest.raises(ValueError):
+                entry(cut)
     # corrupt payloads become null rows in the kernel, never failures
     rows = [
         (1, "image", good, None, "mem://a.jpg"),
@@ -3702,7 +3781,7 @@ def test_jpeg_progressive_restart_intervals():
     base = decode_jpeg(encode_jpeg(px, quality=90))
     for ri in (1, 2, 4, 9, 100):
         b = encode_jpeg_progressive(px, quality=90, restart_interval=ri)
-        prog, n_scans, n_rst = jpeg_marker_summary(b)
+        prog, n_scans, n_rst = jpeg_marker_summary(b)[:3]
         assert prog and n_scans == 10
         assert n_rst == n_scans * (-(-9 // ri) - 1), ri
         assert np.array_equal(decode_jpeg(b), base), ri
@@ -4474,8 +4553,8 @@ def test_jpeg_progressive_equals_baseline_decode():
             px, quality=q
         )
         assert np.array_equal(decode_jpeg(bb), decode_jpeg(bp)), (w, h, q)
-        assert jpeg_marker_summary(bp) == (True, 10, 0)
-        assert jpeg_marker_summary(bb) == (False, 1, 0)
+        assert jpeg_marker_summary(bp) == (True, 10, 0, 0xC2, False)
+        assert jpeg_marker_summary(bb) == (False, 1, 0, 0xC0, False)
     # grayscale script has 4 scans
     g = np.asarray(make_test_pixels(31, 13, seed=1))[..., 0]
     bp = encode_jpeg_progressive(g, quality=80)
