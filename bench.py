@@ -14,6 +14,14 @@ The same record is also written pretty-printed to BENCH_FULL.json next
 to this file (the driver's BENCH_r{N}.json keeps only the last 2000
 chars of the stdout line; the file keeps every per-query row).
 
+The record also carries ``codegen_compiles``: the Janino compiles
+(Spark's codegen metrics source) of the warm-up, of the measured pass,
+and per measured row (rows that compiled nothing are left out). With
+the session's codegen cache sized to the whole suite, the measured
+pass compiles only the classes whose source differs at sf0.1 (data-
+derived literals, per-run seeds), so the per-row list names the rows
+that still pay Janino on every run.
+
 The record carries an ambient calibration ``anchor``: two pinned
 fixed-cost probes (a 2B-row codegen loop and the q01 parquet
 scan+agg) timed min-of-3 at session start and end. Cross-session
@@ -100,6 +108,13 @@ def _run_record(full_path: str, sf: float, cpus: int) -> tuple[str, dict]:
 # a pure-JVM codegen loop (no I/O) and a parquet scan+aggregate.
 _ANCHOR_RANGE_N = 2_000_000_000
 _ANCHOR_QUERY = "q01_pricing_summary"
+
+
+def _codegen_compiles(spark) -> int:
+    """Janino compiles in this JVM so far (whole-stage and expression
+    classes; a codegen-cache hit does not count)."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
 
 
 def _timed_min(spark, fn, sf_dir, runs: int = 2, gc: bool = False):
@@ -225,8 +240,13 @@ def main() -> None:
     spark = get_spark("pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
     # JMH-style warm-up: run every query once at the smallest SF so JVM
-    # JIT, whole-stage-codegen compilation, and reader class loading are
-    # excluded from the measured run (the measured data stays cold).
+    # JIT and reader class loading are excluded from the measured run
+    # (the measured data stays cold). Generated classes stay compiled
+    # too, because the session's codegen cache holds the whole suite:
+    # the record's codegen_compiles shows the warm-up compiling nearly
+    # every class and the measured pass only the few whose source
+    # changes with the data.
+    compiles0 = _codegen_compiles(spark)
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name, spec in QUERIES.items():
@@ -236,6 +256,8 @@ def main() -> None:
                 except Exception as e:
                     print(f"# warmup {name} failed: {e}", file=sys.stderr)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warmup_compiles = _codegen_compiles(spark) - compiles0
+    print(f"# warmup codegen compiles: {warmup_compiles}", file=sys.stderr)
 
     # operators cache self-join inputs; drop warm-up cache entries so
     # measured queries don't fight 49 queries' worth of stale storage
@@ -257,6 +279,7 @@ def main() -> None:
     )
 
     timings: dict[str, float] = {}
+    row_compiles: dict[str, int] = {}
     total = 0.0
     n_run = 0
     for name, spec in QUERIES.items():
@@ -272,7 +295,10 @@ def main() -> None:
         # min of two runs: the second run's data is OS-page-cache warm,
         # so min() reports steady-state engine cost, stable across
         # rounds regardless of what ran before the bench
+        c0 = _codegen_compiles(spark)
         best, rows = _timed_min(spark, spec.fn, sf_dir)
+        if (c := _codegen_compiles(spark) - c0):
+            row_compiles[name] = c
         timings[name] = round(best, 3)
         total += best
         print(f"# {name}: {best:.3f}s ({len(rows)} rows)", file=sys.stderr)
@@ -372,6 +398,11 @@ def main() -> None:
         "queries": timings,
         "streaming_drains": drains,
         "retried": retried,
+        "codegen_compiles": {
+            "warmup": warmup_compiles,
+            "measured": sum(row_compiles.values()),
+            "queries": row_compiles,
+        },
         "anchor": {
             "start": anchor_start,
             "end": anchor_end,

@@ -97,12 +97,19 @@ _PER_ITEM_KERNELS = {
 }
 
 
-def _patch_frame_dims(b: bytes, dim: int) -> bytes:
-    """``b`` with the height and width of its first frame header
-    (SOFn or DHP; all of them precede the first scan) set to ``dim``."""
+def _frame_header_pos(b: bytes) -> int:
+    """The offset of the first frame header's marker in ``b`` (SOFn or
+    DHP; all of them precede the first scan)."""
     pos = 2
     while b[pos + 1] not in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xDE):
         pos += 2 + int.from_bytes(b[pos + 2 : pos + 4], "big")
+    return pos
+
+
+def _patch_frame_dims(b: bytes, dim: int) -> bytes:
+    """``b`` with the height and width of its first frame header set
+    to ``dim``."""
+    pos = _frame_header_pos(b)
     return b[: pos + 5] + dim.to_bytes(2, "big") * 2 + b[pos + 9 :]
 
 
@@ -140,20 +147,23 @@ def test_jpeg_implausible_frame_dims_raise_valueerror(frame, dim):
 @pytest.mark.parametrize("name", list(_PER_ITEM_KERNELS))
 def test_null_and_garbage_payloads_yield_one_null_row_each(spark, name):
     """A garbage payload, a null payload (MEDIA_SCHEMA allows null
-    content) and a JPEG whose frame header claims 0xFFF0 x 0xFFF0
-    pixels each come back as one row keyed by media_id with every
-    output column null — never as a task failure."""
+    content), a JPEG whose frame header claims 0xFFF0 x 0xFFF0 pixels
+    and a JPEG whose SOF0 marker is relabelled SOF11 (lossless
+    arithmetic, a ``require_codec`` gate) each come back as one row
+    keyed by media_id with every output column null — never as a task
+    failure."""
     from e_commerce_data_pipeline_spark.operators import multimodal
 
-    huge = _patch_frame_dims(
-        multimodal.encode_jpeg(multimodal.make_test_pixels(16, 16, seed=4)),
-        0xFFF0,
-    )
+    good = multimodal.encode_jpeg(multimodal.make_test_pixels(16, 16, seed=4))
+    huge = _patch_frame_dims(good, 0xFFF0)
+    pos = _frame_header_pos(good)
+    gated = good[: pos + 1] + b"\xcb" + good[pos + 2 :]
     df = spark.createDataFrame(
         [
             (1, "image", bytearray(b"garbage bytes"), 13, None),
             (2, "image", None, None, None),
             (3, "image", bytearray(huge), len(huge), None),
+            (4, "image", bytearray(gated), len(gated), None),
         ],
         multimodal.MEDIA_SCHEMA,
     )
@@ -162,7 +172,7 @@ def test_null_and_garbage_payloads_yield_one_null_row_each(spark, name):
     out = call(fn, df)
     keys = {"media_id", "frame_no"}
     rows = out.collect()
-    assert sorted(r["media_id"] for r in rows) == [1, 2, 3]
+    assert sorted(r["media_id"] for r in rows) == [1, 2, 3, 4]
     for r in rows:
         assert all(r[c] is None for c in out.columns if c not in keys), r
 
