@@ -141,12 +141,12 @@ def exact_quantiles(
                         F.struct(F.lit(p).alias("p"), idx.alias("b")),
                     )
                 )
+            # cells outside every open interval are NULL; they are
+            # dropped after the explode (array_compact would be an
+            # interpreted lambda per row)
             hist = (
-                vals.select(
-                    F.explode(
-                        F.array_compact(F.array(*cells))
-                    ).alias("c")
-                )
+                vals.select(F.explode(F.array(*cells)).alias("c"))
+                .filter(F.col("c").isNotNull())
                 .groupBy("c.p", "c.b")
                 .agg(F.count(F.lit(1)).alias("cnt"))
                 .collect()

@@ -138,13 +138,27 @@ def parse_topic_stream(raw: DataFrame, topic: str) -> DataFrame:
     and kept (DLQ filter downstream), not silently skipped.
     """
     schema = TOPIC_SCHEMA_MAP[topic]
-    parsed = raw.filter(F.col("topic") == topic).withColumn(
-        "parsed", F.from_json("value", schema)
+    # The parse sits behind a Generate on purpose. Catalyst pushes any
+    # filter through a deterministic Project without weighing its
+    # cost, so a downstream ``~_corrupt`` filter over a plain
+    # ``from_json`` column would be evaluated below the Project as its
+    # own parses, and the Project would then parse every row again. A
+    # predicate on a generator's output cannot move below the
+    # Generate, so each payload is parsed exactly once.
+    parsed = raw.filter(F.col("topic") == topic).select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.from_json("value", schema).alias("parsed"), F.col("value")
+                )
+            )
+        )
     )
     # PERMISSIVE from_json yields an all-null struct (not NULL) on
     # malformed JSON; a missing event_id also violates the schema's
-    # required envelope, so both route to the corrupt/DLQ flag.
-    corrupt = F.col("parsed").isNull() | F.col("parsed.event_id").isNull()
+    # required envelope, so both route to the corrupt/DLQ flag (a NULL
+    # struct has a NULL event_id too).
+    corrupt = F.col("parsed.event_id").isNull()
     return parsed.select(
         F.col("parsed.*"),
         corrupt.alias("_corrupt"),

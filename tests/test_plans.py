@@ -442,3 +442,53 @@ def test_q194_canon_chain_below_explode(spark, sf_dir):
         if "Generate" in line:
             assert "regexp_extract" not in line, line
             assert "array_sort" not in line, line
+
+
+def test_bronze_ingest_parses_once_and_validates_in_codegen(spark):
+    """The ingest path parses each payload once: the ``~_corrupt``
+    filter must not be pushed below the parse (where each pushed
+    predicate is its own ``from_json``), and the click checks compact
+    their codes without a lambda, so the Filter and the validation
+    Project run in one whole-stage codegen stage."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from e_commerce_data_pipeline_spark.operators.validation import validate_clicks
+    from e_commerce_data_pipeline_spark.streaming.stream_processor import (
+        parse_topic_stream,
+    )
+
+    click = {
+        "event_id": "e1",
+        "event_type": "user_click",
+        "timestamp": "2024-01-01 00:00:00",
+        "session_id": "s1",
+        "click_type": "page_view",
+        "page_url": " ",
+        "device_type": "mobile",
+    }
+    raw = spark.createDataFrame(
+        [
+            ("ecommerce.user_clicks", json.dumps(click)),
+            ("ecommerce.user_clicks", "{broken"),
+            ("ecommerce.orders", json.dumps(click)),
+        ],
+        "topic string, value string",
+    )
+    parsed = parse_topic_stream(raw, "ecommerce.user_clicks")
+    out = validate_clicks(
+        parsed.filter(~F.col("_corrupt")).drop("_corrupt", "_raw_value")
+    )
+    plan = _executed_plan(out)
+    assert [tuple(r["violations"]) for r in out.collect()] == [
+        ("invalid_url_format", "empty_page_url")
+    ]
+    assert plan.count("from_json(") == 1, plan
+    assert "lambdafunction" not in plan, plan
+    lines = plan.splitlines()
+    validation = [l for l in lines if "array_except" in l]
+    corrupt_filter = [l for l in lines if "Filter isnotnull(parsed" in l]
+    assert validation and corrupt_filter, plan
+    for line in validation + corrupt_filter:
+        assert "*(" in line, line

@@ -83,9 +83,16 @@ def test_file_stream_to_bronze_sink(spark, tmp_path):
 
 
 def test_corrupt_rows_flagged_not_dropped(spark, tmp_path):
+    import datetime
+
     src = tmp_path / "in2"
     src.mkdir()
-    (src / "b.txt").write_text(_click(1, "2024-01-01 00:00:00") + "\n{broken")
+    valid = _click(1, "2024-01-01 00:00:00")
+    null_id = json.dumps(
+        {**json.loads(_click(2, "2024-01-01 00:00:00")), "event_id": None}
+    )
+    bad = ["{broken", "", "{}", null_id]
+    (src / "b.txt").write_text("\n".join([valid, *bad]))
     raw = read_event_stream(spark, source="file", file_path=str(src))
     parsed = parse_topic_stream(raw, "ecommerce.user_clicks")
     q = (
@@ -96,9 +103,16 @@ def test_corrupt_rows_flagged_not_dropped(spark, tmp_path):
     )
     q.awaitTermination(60)
     rows = spark.sql("SELECT * FROM parsed_probe").collect()
-    assert len(rows) == 2
+    assert len(rows) == 1 + len(bad)
     corrupt = [r for r in rows if r["_corrupt"]]
-    assert len(corrupt) == 1 and corrupt[0]["_raw_value"] == "{broken"
+    assert sorted(r["_raw_value"] for r in corrupt) == sorted(bad)
+    (good,) = [r for r in rows if not r["_corrupt"]]
+    assert good["_raw_value"] == valid
+    fields = json.loads(valid)
+    assert good["timestamp"] == datetime.datetime(2024, 1, 1)
+    assert {k: good[k] for k in fields if k != "timestamp"} == {
+        k: v for k, v in fields.items() if k != "timestamp"
+    }
 
 
 def test_streaming_session_window(spark, tmp_path):

@@ -37,6 +37,12 @@ def _violations(df):
     }
 
 
+def _ordered_violations(df):
+    """event_id -> the violation codes as the list the row carries (in
+    check order, no NULL slots)."""
+    return {r["event_id"]: r["violations"] for r in df.collect()}
+
+
 def test_click_validation(spark):
     df = _clicks(
         spark,
@@ -46,15 +52,20 @@ def test_click_validation(spark):
             ("bad_url", "s1", "search", "ftp://x.com", "tablet"),
             ("missing", None, "page_view", "https://x.com", "mobile"),
             ("bad_device", "s2", "page_view", "https://x.com", "toaster"),
+            ("blank_url", "s3", "page_view", " ", "mobile"),
         ],
     )
-    v = _violations(validate_clicks(df))
+    validated = validate_clicks(df)
+    v = _violations(validated)
     assert v["ok"] == (set(), 1.0, True)
     assert v["bad_click"][0] == {"invalid_click_type"}
     assert v["bad_click"][1] == 0.8  # penalty 0.2
     assert v["bad_url"][0] == {"invalid_url_format"}
     assert "missing_required_field" in v["missing"][0]
     assert v["bad_device"][0] == {"invalid_device_type"}
+    ordered = _ordered_violations(validated)
+    assert ordered["blank_url"] == ["invalid_url_format", "empty_page_url"]
+    assert ordered["ok"] == []
 
 
 ORDER_SCHEMA = StructType(
@@ -110,13 +121,22 @@ def test_order_empty_items_and_ranges(spark):
             ("bad_item", "o2", "shipped", 9.0, [(0, 9.0, 0.0)]),
             ("too_big", "o3", "shipped", 200000.0, [(1, 200000.0, 0.0)]),
             ("bad_status", "o4", "lost", 9.0, [(1, 9.0, 0.0)]),
+            ("lost_and_big", "o5", "lost", 200000.0, [(1, 200000.0, 0.0)]),
+            ("clean", "o6", "shipped", 9.0, [(1, 9.0, 0.0)]),
         ],
     )
-    v = _violations(validate_orders(df))
+    validated = validate_orders(df)
+    v = _violations(validated)
     assert "empty_items" in v["empty"][0]
     assert "invalid_item_values" in v["bad_item"][0]
     assert "total_amount_out_of_range" in v["too_big"][0]
     assert v["bad_status"][0] == {"invalid_order_status"}
+    ordered = _ordered_violations(validated)
+    assert ordered["lost_and_big"] == [
+        "invalid_order_status",
+        "total_amount_out_of_range",
+    ]
+    assert ordered["clean"] == []
 
 
 def test_score_clamps_at_zero(spark):
@@ -146,19 +166,25 @@ CDC_SCHEMA = StructType(
 @pytest.mark.parametrize(
     "event_id,op,before,after,expected",
     [
-        ("i_ok", "INSERT", None, ("p1", 5), set()),
-        ("i_bad", "INSERT", None, None, {"insert_missing_after"}),
-        ("d_ok", "DELETE", ("p1", 5), None, set()),
-        ("d_bad", "DELETE", None, None, {"delete_missing_before"}),
-        ("u_ok", "UPDATE", ("p1", 5), ("p1", 3), set()),
-        ("neg", "UPDATE", ("p1", -1), ("p1", 3), {"negative_stock"}),
-        ("bad_op", "UPSERT", None, ("p1", 1), {"invalid_operation"}),
+        ("i_ok", "INSERT", None, ("p1", 5), []),
+        ("i_bad", "INSERT", None, None, ["insert_missing_after"]),
+        ("d_ok", "DELETE", ("p1", 5), None, []),
+        ("d_bad", "DELETE", None, None, ["delete_missing_before"]),
+        ("u_ok", "UPDATE", ("p1", 5), ("p1", 3), []),
+        ("neg", "UPDATE", ("p1", -1), ("p1", 3), ["negative_stock"]),
+        ("bad_op", "UPSERT", None, ("p1", 1), ["invalid_operation"]),
+        (
+            "i_neg_bad",
+            "INSERT",
+            ("p1", -1),
+            None,
+            ["insert_missing_after", "negative_stock"],
+        ),
     ],
 )
 def test_cdc_consistency(spark, event_id, op, before, after, expected):
     df = spark.createDataFrame([(event_id, op, before, after)], schema=CDC_SCHEMA)
-    v = _violations(validate_cdc(df))
-    assert v[event_id][0] == expected
+    assert _ordered_violations(validate_cdc(df))[event_id] == expected
 
 
 def test_snapshot_diff_all_statuses(spark):
