@@ -2799,13 +2799,13 @@ def _tiff_ojpeg_per_strip(
             ]),
         )
         if lossless:
-            sos = bytes([spp])
-            for c in range(spp):
-                sos += bytes([c + 1, dcids[c] << 4])
-            sos += bytes([sel_pred, 0, sel_pt])
+            sos = _jpg_sos_payload(
+                [(c + 1, dcids[c], 0) for c in range(spp)],
+                sel_pred, 0, 0, sel_pt,
+            )
         else:
-            sos = _jpg_sos_seq_payload(
-                [(c + 1, dcids[c], acids[c]) for c in range(spp)]
+            sos = _jpg_sos_payload(
+                [(c + 1, dcids[c], acids[c]) for c in range(spp)], 0, 63, 0, 0
             )
         stream += _jpg_seg(0xDA, sos)
         stream += bytes(b[off : off + cnt])
@@ -4641,17 +4641,11 @@ def encode_tiff_jpeg(
                            adobe_transform=adobe_transform)
 
     if planar and photo == 6:
-        # forward CCIR-601 (encode_jpeg's exact constants), then
-        # top-left chroma sampling at the subsampled plane dims
+        # encode_jpeg's forward CCIR-601 transform, then top-left
+        # chroma sampling at the subsampled plane dims
         sh_s, sv_s = subsampling or (2, 2)
-        rgbf = a.astype(np.float64)
-        r_, g_, b_ = rgbf[..., 0], rgbf[..., 1], rgbf[..., 2]
-        yp = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cbp = 128.0 - 0.168735892 * r_ - 0.331264108 * g_ + 0.5 * b_
-        crp = 128.0 + 0.5 * r_ - 0.418687589 * g_ - 0.081312411 * b_
         yp, cbp, crp = [
-            np.clip(np.floor(x + 0.5), 0, 255).astype(np.uint8)
-            for x in (yp, cbp, crp)
+            p.astype(np.uint8) for p in _jpg_color_planes(a, 8, "ycbcr")[0]
         ]
         comps = [yp, cbp[::sv_s, ::sh_s], crp[::sv_s, ::sh_s]]
         vsteps = [1, sv_s, sv_s]
@@ -7544,26 +7538,41 @@ class _JpgBitWriter:
             self.nbits -= 8
         self.acc &= (1 << self.nbits) - 1
 
-    def flush(self) -> None:
+    def flush(self) -> bytes:
         if self.nbits:
             pad = 8 - self.nbits
             self.put((1 << pad) - 1, pad)  # 1-fill per spec
+        return bytes(self.out)
+
+
+class _JpgCensus(dict):
+    """Stands in for a Huffman code table: counts each symbol looked
+    up instead of coding it, so an optimal-table census (T.81 K.2)
+    runs the scan's own coder and cannot disagree with it."""
+
+    def __getitem__(self, sym):
+        self[sym] = self.get(sym, 0) + 1
+        return (0, 0)
 
 
 def _jpg_category(v: int) -> int:
     return 0 if v == 0 else int(abs(v)).bit_length()
 
 
+def _jpg_put_dc(wr, dc_codes, diff: int) -> None:
+    """One DC difference (F.1.2.1): its category's code, then the
+    category's low bits (negative values biased by 2^cat - 1)."""
+    cat = _jpg_category(diff)
+    wr.put(*dc_codes[cat])
+    if cat:
+        wr.put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+
+
 def _jpg_encode_block(wr, coefs, dc_codes, ac_codes, pred):
     """Huffman-encode one zigzagged coefficient block; returns new DC
     predictor."""
     dc = int(coefs[0])
-    diff = dc - pred
-    cat = _jpg_category(diff)
-    code, ln = dc_codes[cat]
-    wr.put(code, ln)
-    if cat:
-        wr.put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+    _jpg_put_dc(wr, dc_codes, dc - pred)
     run = 0
     last = 63
     while last > 0 and coefs[last] == 0:
@@ -7647,15 +7656,17 @@ def _jpg_sof_payload(precision: int, h: int, w: int, comps) -> bytes:
     return sof
 
 
-def _jpg_sos_seq_payload(comps) -> bytes:
-    """Sequential-DCT SOS payload (B.2.3): component count, one (id,
-    DC|AC table nibbles) pair per component, then the fixed full-band
-    spectral selection 0..63 with Ah=Al=0 that every sequential scan
-    here shares. ``comps`` is a sequence of (cid, td, ta)."""
+def _jpg_sos_payload(comps, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS payload (B.2.3): component count, one (id, DC|AC table
+    nibbles) pair per component, then spectral selection ``ss``..``se``
+    and the successive-approximation nibbles Ah|Al — 0, 63, 0, 0 in a
+    sequential DCT scan; a lossless scan carries its predictor in Ss
+    and its point transform in Al. ``comps`` is a sequence of (cid,
+    td, ta)."""
     sos = bytes([len(comps)])
     for cid, td, ta in comps:
         sos += bytes([cid, (td << 4) | ta])
-    return sos + bytes([0, 63, 0])
+    return sos + bytes([ss, se, (ah << 4) | al])
 
 
 _JPG_SUBSAMP = {
@@ -7665,6 +7676,200 @@ _JPG_SUBSAMP = {
     "440": (1, 2),
     "411": (4, 1),
 }
+# encoder component layout -> channel counts it takes (None: (h, w) gray)
+_JPG_SPACES = {"ycbcr": (None, 3), "rgb_space": (3, 4), "ycck": (4,)}
+# libjpeg's R/G/B and C/M/Y/K component ids for untransformed layouts
+_JPG_LETTER_IDS = {3: (0x52, 0x47, 0x42), 4: (0x43, 0x4D, 0x59, 0x4B)}
+
+
+def _jpg_color_planes(arr, precision: int, space: str):
+    """The one encoder input rule and forward color transform: samples
+    in [0, 2^P - 1] -> (float64 component planes, quant-table id per
+    component). ``space`` 'ycbcr' takes (h, w) gray or (h, w, 3) RGB
+    through the CCIR-601 matrix centred on 2^(P-1), rounded half up;
+    'rgb_space' keeps 3 (R/G/B) or 4 (C/M/Y/K) channels untransformed,
+    all on the luma table; 'ycck' takes CMYK as inverted CMY through
+    the same matrix plus K untouched (the Adobe transform-2 layout).
+    Raises ValueError on a sample out of range or a channel count the
+    layout does not take."""
+    import numpy as np
+
+    a = np.asarray(arr)
+    full = (1 << precision) - 1
+    nch = a.shape[2] if a.ndim == 3 else None if a.ndim == 2 else 0
+    if nch not in _JPG_SPACES[space]:
+        raise ValueError(f"{space} JPEG cannot encode samples of shape {a.shape}")
+    if a.size and not (a.min() >= 0 and a.max() <= full):
+        raise ValueError(f"{precision}-bit JPEG samples must lie in [0, {full}]")
+    a = a.astype(np.uint8 if precision == 8 else np.uint16).astype(np.float64)
+    if nch is None:
+        return [a], [0]
+    if space == "rgb_space":
+        return [a[..., c] for c in range(nch)], [0] * nch
+    rgb = 255.0 - a[..., :3] if space == "ycck" else a
+    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+    lvl = float(1 << (precision - 1))
+    planes = [
+        np.clip(np.floor(x + 0.5), 0, full)
+        for x in (
+            0.299 * r + 0.587 * g + 0.114 * b,
+            lvl - 0.168735892 * r - 0.331264108 * g + 0.5 * b,
+            lvl + 0.5 * r - 0.418687589 * g - 0.081312411 * b,
+        )
+    ]
+    if space == "ycck":
+        return planes + [a[..., 3]], [0, 1, 1, 0]
+    return planes, [0, 1, 1]
+
+
+def _jpg_box_mean(plane, fv: int, fh: int):
+    """Round-half-up mean over fv x fh boxes of ``plane``, its edges
+    replicated to whole boxes -> int64 plane of the ceil dims: the
+    chroma downsample and the hierarchical pyramid's reduction."""
+    import numpy as np
+
+    h, w = plane.shape
+    eh, ew = -(-h // fv) * fv, -(-w // fh) * fh
+    s = _jpg_pad(plane, eh, ew).astype(np.int64).reshape(
+        eh // fv, fv, ew // fh, fh
+    ).sum(axis=(1, 3))
+    return (s + fh * fv // 2) // (fh * fv)
+
+
+def _jpg_fdct_grid(plane, qt):
+    """Forward DCT and quantization (float64 DCT-II, round half away
+    from zero) of every 8x8 block of a padded, level-shifted plane ->
+    (rows, cols, 64) int64 coefficient grid in zigzag order."""
+    import numpy as np
+
+    dctm = _jpg_dct_mat()
+    zz = np.array(_JPG_ZIGZAG)
+    c = np.zeros((plane.shape[0] // 8, plane.shape[1] // 8, 64), np.int64)
+    for by, bx in np.ndindex(*c.shape[:2]):
+        f = dctm @ plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] @ dctm.T
+        qf = np.floor(np.abs(f) / qt + 0.5).astype(np.int64) * np.where(
+            f < 0, -1, 1
+        )
+        c[by, bx] = qf.reshape(-1)[zz]
+    return c
+
+
+def _jpg_quantized_coefs(arr, ql, qc, subsampling: str, precision: int,
+                         space: str):
+    """The one DCT-encoder front end: image -> (coefs, samp, tqs, h, w)
+    with, per component, a (mcuy*vi, mcux*hi, 64) int64 zigzag grid
+    over its MCU-padded plane, its (hi, vi) sampling factors and its
+    quant-table id (0 -> ``ql``, 1 -> ``qc``). Input rule and color
+    transform per ``_jpg_color_planes``; subsampled YCbCr chroma is the
+    box mean of the rounded full-res plane (luma carries the factors);
+    every plane is edge-replicated to the MCU grid and level-shifted
+    by 2^(P-1). Sequential, progressive and arithmetic streams of one
+    image at one quality therefore code the SAME coefficients."""
+    import numpy as np
+
+    if subsampling not in _JPG_SUBSAMP:
+        raise ValueError(f"unsupported subsampling {subsampling!r}")
+    if space != "ycbcr" and subsampling != "444":
+        raise ValueError(f"{space} needs 4:4:4 sampling")
+    planes, tqs = _jpg_color_planes(arr, precision, space)
+    h, w = planes[0].shape
+    samp = [(1, 1)] * len(planes)
+    if space == "ycbcr" and len(planes) == 3:
+        fh, fv = _JPG_SUBSAMP[subsampling]
+        samp = [(fh, fv), (1, 1), (1, 1)]
+        planes = planes[:1] + [
+            _jpg_box_mean(p, fv, fh).astype(np.float64) for p in planes[1:]
+        ]
+    mcux, mcuy = -(-w // (8 * samp[0][0])), -(-h // (8 * samp[0][1]))
+    lvl = float(1 << (precision - 1))
+    coefs = [
+        _jpg_fdct_grid(
+            _jpg_pad(p, mcuy * vi * 8, mcux * hi * 8) - lvl, qc if t else ql
+        )
+        for p, (hi, vi), t in zip(planes, samp, tqs)
+    ]
+    return coefs, samp, tqs, h, w
+
+
+def _jpg_mcu_blocks(coefs, samp, ri: int) -> list:
+    """The one MCU walk: interleaved block order over the grids
+    ``coefs`` (T.81 A.2.3: per MCU, each component's hi x vi blocks
+    in raster order), split into restart segments of ``ri`` MCUs (one
+    segment when ri is 0) -> list of segments, each a list of
+    (component, block row, block column). A non-interleaved scan is
+    the [(1, 1)] case over its component's own block raster."""
+    hi0, vi0 = samp[0]
+    mcus = [
+        [
+            (ci, my * vi + v, mx * hi + hh)
+            for ci, (hi, vi) in enumerate(samp)
+            for v in range(vi)
+            for hh in range(hi)
+        ]
+        for my in range(coefs[0].shape[0] // vi0)
+        for mx in range(coefs[0].shape[1] // hi0)
+    ]
+    n = ri or len(mcus)
+    return [
+        [blk for mcu in mcus[i : i + n] for blk in mcu]
+        for i in range(0, len(mcus), n)
+    ]
+
+
+def _jpg_scan_entropy(segs, coder, code) -> bytes:
+    """Entropy-coded data of one scan: ``code(c, seg)`` codes each
+    restart segment of the walk on a fresh ``coder()``
+    (``_JpgBitWriter`` or ``_QmEncoder``), whose flush ends the
+    segment (1-fill to a byte, or the Annex D flush); RSTm markers, m
+    cycling 0-7, join the segments (T.81 B.2.1, E.1.4)."""
+    out = bytearray()
+    for si, seg in enumerate(segs):
+        if si:
+            out += bytes([0xFF, 0xD0 + (si - 1) % 8])
+        c = coder()
+        code(c, seg)
+        out += c.flush()
+    return bytes(out)
+
+
+def _jpg_huff_seq_entropy(coefs, segs, tabs, differential: bool) -> bytes:
+    """Sequential Huffman scan (F.1.2) over the MCU walk ``segs``;
+    ``tabs[ci]`` = (dc_codes, ac_codes). DC predictors start at 0 in
+    each restart segment and stay 0 in a hierarchical differential
+    frame (J.1)."""
+
+    def code(wr, seg):
+        preds = [0] * len(coefs)
+        for ci, by, bx in seg:
+            dc = _jpg_encode_block(wr, coefs[ci][by, bx], *tabs[ci], preds[ci])
+            if not differential:
+                preds[ci] = dc
+
+    return _jpg_scan_entropy(segs, _JpgBitWriter, code)
+
+
+def _jpg_dri_seg(ri: int) -> bytes:
+    """DRI segment (B.2.4.4); empty when restart intervals are off."""
+    return _jpg_seg(0xDD, struct.pack(">H", ri)) if ri else b""
+
+
+def _jpg_dac_seg(tqs, dc_cond, ac_kx: int, emit_dac: bool) -> bytes:
+    """The one DAC conditioning check and segment (B.2.4.3): DC (L, U)
+    = ``dc_cond`` and AC Kx for every table in ``tqs``. Empty when not
+    ``emit_dac``, which only the decoder's defaults (L=0, U=1, Kx=5)
+    allow."""
+    low, up = dc_cond
+    if not (0 <= low <= up <= 15):
+        raise ValueError("DC conditioning needs 0 <= L <= U <= 15")
+    if not 1 <= ac_kx <= 63:
+        raise ValueError("AC conditioning needs 1 <= Kx <= 63")
+    if not emit_dac:
+        if (low, up) != (0, 1) or ac_kx != 5:
+            raise ValueError("omitting DAC requires the default conditioning")
+        return b""
+    return _jpg_seg(0xCC, b"".join(
+        bytes([t, (up << 4) | low, 0x10 | t, ac_kx]) for t in sorted(set(tqs))
+    ))
 
 
 def encode_jpeg12(arr, quality: int = 90,
@@ -7679,125 +7884,35 @@ def encode_jpeg12(arr, quality: int = 90,
     from the image's own symbol census — 12-bit DC categories reach
     15, past the fixed Annex K tables' range. Optional restart
     intervals as in ``encode_jpeg``."""
-    import numpy as np
-
-    a = np.asarray(arr)
-    gray = a.ndim == 2
-    assert int(a.max(initial=0)) < 4096
-    h, w = a.shape[:2]
     ql, qc = _jpg_quant_tables(quality)
-    if gray:
-        planes = [a.astype(np.float64)]
-        qts = [ql]
-    else:
-        assert a.shape[2] == 3
-        rgb = a.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 2048.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b
-        cr = 2048.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b
-        planes = [
-            np.clip(np.floor(x + 0.5), 0, 4095) for x in (y, cb, cr)
-        ]
-        qts = [ql, qc, qc]
-    nc = len(planes)
-    dctm = _jpg_dct_mat()
-    mcux, mcuy = -(-w // 8), -(-h // 8)
-    zz = np.array(_JPG_ZIGZAG)
-    # MCU-interleaved block stream (4:4:4: one block per component)
-    comp_blocks = []
-    for pl, qt in zip(planes, qts):
-        padded = _jpg_pad(pl, mcuy * 8, mcux * 8) - 2048.0
-        cb_list = []
-        for my in range(mcuy):
-            for mx in range(mcux):
-                blk = padded[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-                f = dctm @ blk @ dctm.T
-                qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                    np.int64
-                ) * np.where(f < 0, -1, 1)
-                cb_list.append(qf.reshape(-1)[zz])
-        comp_blocks.append(cb_list)
-    n_mcu = mcux * mcuy
-
-    def walk(on_block, on_restart):
-        preds = [0] * nc
-        for n_blk in range(n_mcu):
-            if restart_interval and n_blk and \
-                    n_blk % restart_interval == 0:
-                on_restart(n_blk // restart_interval)
-                preds = [0] * nc
-            for ci in range(nc):
-                preds[ci] = on_block(
-                    ci, comp_blocks[ci][n_blk], preds[ci]
-                )
-
-    # symbol census -> optimal DC/AC tables (T.81 K.2), shared by
-    # luma and chroma (one table pair keeps the stream simple; the
-    # census covers all components)
-    dc_freq: dict[int, int] = {}
-    ac_freq: dict[int, int] = {}
-
-    def count(ci, coefs, pred):
-        dc = int(coefs[0])
-        cat = _jpg_category(dc - pred)
-        dc_freq[cat] = dc_freq.get(cat, 0) + 1
-        run = 0
-        last = 63
-        while last > 0 and coefs[last] == 0:
-            last -= 1
-        for k in range(1, last + 1):
-            v = int(coefs[k])
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                ac_freq[0xF0] = ac_freq.get(0xF0, 0) + 1
-                run -= 16
-            rs = (run << 4) | _jpg_category(v)
-            ac_freq[rs] = ac_freq.get(rs, 0) + 1
-            run = 0
-        if last < 63:
-            ac_freq[0x00] = ac_freq.get(0x00, 0) + 1
-        return dc
-
-    walk(count, lambda _i: None)
-    dc_bits, dc_vals = _jpg_optimal_table(dc_freq)
-    ac_bits, ac_vals = _jpg_optimal_table(ac_freq)
-    dc_codes = _jpg_canonical_codes(dc_bits, dc_vals)
-    ac_codes = _jpg_canonical_codes(ac_bits, ac_vals)
-    out = bytearray(b"\xff\xd8")
-    out += _jpg_dqt_seg(0, ql)
-    if not gray:
-        out += _jpg_dqt_seg(1, qc)
-    for cls, bits, vals in ((0, dc_bits, dc_vals),
-                            (1, ac_bits, ac_vals)):
-        out += _jpg_dht_seg(cls, 0, bits, vals)
-    if restart_interval:
-        out += _jpg_seg(0xDD, struct.pack(">H", restart_interval))
-    out += _jpg_seg(0xC1, _jpg_sof_payload(
-        12, h, w,
-        [(ci + 1, 1, 1, 0 if ci == 0 else 1) for ci in range(nc)],
-    ))
-    out += _jpg_seg(0xDA, _jpg_sos_seq_payload(
-        [(ci + 1, 0, 0) for ci in range(nc)]
-    ))
-    wr = _JpgBitWriter()
-
-    def emit_rst(seg_i):
-        wr.flush()
-        wr.out += bytes([0xFF, 0xD0 + ((seg_i - 1) % 8)])
-
-    walk(
-        lambda ci, coefs, pred: _jpg_encode_block(
-            wr, coefs, dc_codes, ac_codes, pred
-        ),
-        emit_rst,
+    coefs, samp, tqs, h, w = _jpg_quantized_coefs(
+        arr, ql, qc, "444", 12, "ycbcr"
     )
-    wr.flush()
-    out.extend(wr.out)
-    out += b"\xff\xd9"
-    return bytes(out)
+    nc = len(coefs)
+    segs = _jpg_mcu_blocks(coefs, samp, restart_interval)
+    # symbol census -> optimal DC/AC tables (T.81 K.2), one pair
+    # shared by luma and chroma (the census covers all components)
+    census = (_JpgCensus(), _JpgCensus())
+    _jpg_huff_seq_entropy(coefs, segs, [census] * nc, False)
+    (dc_bits, dc_vals), (ac_bits, ac_vals) = map(_jpg_optimal_table, census)
+    tab = (_jpg_canonical_codes(dc_bits, dc_vals),
+           _jpg_canonical_codes(ac_bits, ac_vals))
+    return (
+        b"\xff\xd8"
+        + _jpg_dqt_seg(0, ql)
+        + (_jpg_dqt_seg(1, qc) if nc > 1 else b"")
+        + _jpg_dht_seg(0, 0, dc_bits, dc_vals)
+        + _jpg_dht_seg(1, 0, ac_bits, ac_vals)
+        + _jpg_dri_seg(restart_interval)
+        + _jpg_seg(0xC1, _jpg_sof_payload(12, h, w, [
+            (ci + 1, 1, 1, t) for ci, t in enumerate(tqs)
+        ]))
+        + _jpg_seg(0xDA, _jpg_sos_payload(
+            [(ci + 1, 0, 0) for ci in range(nc)], 0, 63, 0, 0
+        ))
+        + _jpg_huff_seq_entropy(coefs, segs, [tab] * nc, False)
+        + b"\xff\xd9"
+    )
 
 
 def _jpg_ll_category(d: int) -> int:
@@ -7900,13 +8015,9 @@ def encode_jpeg_lossless(
     out += _jpg_seg(0xC3, _jpg_sof_payload(
         p, h, w, [(c + 1, 1, 1, 0) for c in range(nc)]
     ))
-    # lossless SOS tail: Ss carries the predictor id, Al the point
-    # transform (not the sequential 0..63 band)
-    sos = bytes([nc])
-    for c in range(nc):
-        sos += bytes([c + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += _jpg_seg(0xDA, sos)
+    out += _jpg_seg(0xDA, _jpg_sos_payload(
+        [(c + 1, 0, 0) for c in range(nc)], predictor, 0, 0, pt
+    ))
     wr = _JpgBitWriter()
 
     def emit(c, d):
@@ -8051,186 +8162,71 @@ def encode_jpeg(
     YCbCr matrix + K untouched — the Photoshop scanned-CMYK
     layout). Deterministic: float64 DCT +
     round-half-away quantization, no RNG, no library variance."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    if subsampling not in _JPG_SUBSAMP:
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if rgb_space and (gray or subsampling != "444"):
-        raise ValueError("rgb_space needs (h, w, 3|4) input and 4:4:4")
-    if rgb_space and a.shape[2] not in (3, 4):
-        raise ValueError("rgb_space needs 3 (RGB) or 4 (CMYK) channels")
-    ycck = False
-    if adobe_transform is not None:
-        if adobe_transform == 0:
-            if not rgb_space:
-                raise ValueError("Adobe transform 0 means untransformed")
-        elif adobe_transform == 2:
-            if gray or rgb_space or a.shape[2] != 4 or \
-                    subsampling != "444":
-                raise ValueError("YCCK needs 4-channel 4:4:4 input")
-            ycck = True
-        else:
-            raise ValueError(f"Adobe transform {adobe_transform} unsupported")
-    fh, fv = _JPG_SUBSAMP[subsampling]
-    sub = (fh, fv) != (1, 1) and not gray
-    if gray:
-        planes = [a.astype(np.float64)]
-        samp = [(1, 1)]
-    elif rgb_space:
-        planes = [
-            a[..., ci].astype(np.float64) for ci in range(a.shape[2])
-        ]
-        samp = [(1, 1)] * len(planes)
-    elif ycck:
-        cm = a.astype(np.float64)
-        rp, gp, bp = 255.0 - cm[..., 0], 255.0 - cm[..., 1], \
-            255.0 - cm[..., 2]
-        yy = 0.299 * rp + 0.587 * gp + 0.114 * bp
-        cb_ = 128.0 - 0.168735892 * rp - 0.331264108 * gp + 0.5 * bp
-        cr_ = 128.0 + 0.5 * rp - 0.418687589 * gp - 0.081312411 * bp
-        planes = [
-            np.clip(np.floor(x + 0.5), 0, 255)
-            for x in (yy, cb_, cr_)
-        ] + [cm[..., 3]]
-        samp = [(1, 1)] * 4
-    else:
-        rgb = a.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b
-        rnd = [np.clip(np.floor(x + 0.5), 0, 255) for x in (y, cb, cr)]
-        if sub:
-            ds = []
-            for c in rnd[1:]:
-                ci = c.astype(np.int64)
-                eh, ew = -(-h // fv) * fv, -(-w // fh) * fh
-                p = np.zeros((eh, ew), dtype=np.int64)
-                p[:h, :w] = ci
-                if w < ew:
-                    p[:h, w:] = ci[:, -1:]
-                if h < eh:
-                    p[h:, :] = p[h - 1 : h, :]
-                s = p.reshape(eh // fv, fv, ew // fh, fh).sum(axis=(1, 3))
-                ds.append(((s + fh * fv // 2) // (fh * fv)).astype(np.float64))
-            planes = [rnd[0], ds[0], ds[1]]
-            samp = [(fh, fv), (1, 1), (1, 1)]
-        else:
-            planes = rnd
-            samp = [(1, 1)] * 3
+    if adobe_transform not in (None, 0, 2):
+        raise ValueError(f"Adobe transform {adobe_transform} unsupported")
+    if adobe_transform == 0 and not rgb_space:
+        raise ValueError("Adobe transform 0 means untransformed")
+    if adobe_transform == 2 and rgb_space:
+        raise ValueError("YCCK needs 4-channel 4:4:4 input")
+    space = (
+        "ycck" if adobe_transform == 2
+        else "rgb_space" if rgb_space else "ycbcr"
+    )
     ql, qc = _jpg_quant_tables(quality)
     if extended:
         # lift every AC entry past the baseline 255 ceiling so the
         # 16-bit DQT parse is actually exercised; DC stays small so
         # the block-constant exactness argument is unchanged
-        ql, qc = ql.copy(), qc.copy()
-        ql += 512
-        qc += 512
+        ql, qc = ql + 512, qc + 512
         ql[0, 0] -= 512
         qc[0, 0] -= 512
-    if gray:
-        tqs = [0]
-    elif rgb_space:
-        tqs = [0] * len(planes)
-    elif ycck:
-        tqs = [0, 1, 1, 0]
-    else:
-        tqs = [0, 1, 1]
-    qts = [ql if t == 0 else qc for t in tqs]
-    dctm = _jpg_dct_mat()
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    dc_l = _jpg_canonical_codes(*_JPG_HUFF[(0, 0)])
-    ac_l = _jpg_canonical_codes(*_JPG_HUFF[(1, 0)])
-    dc_c = _jpg_canonical_codes(*_JPG_HUFF[(0, 1)])
-    ac_c = _jpg_canonical_codes(*_JPG_HUFF[(1, 1)])
-    tabs = [(dc_l, ac_l) if t == 0 else (dc_c, ac_c) for t in tqs]
-    padded = [
-        _jpg_pad(p, mcuy * vi * 8, mcux * hi * 8) - 128.0
-        for p, (hi, vi) in zip(planes, samp)
-    ]
-    wr = _JpgBitWriter()
-    preds = [0] * len(planes)
-    zz = np.array(_JPG_ZIGZAG)
-    mcu_n = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
-                # between restart intervals: byte-align (1-fill), emit
-                # RSTm (m cycles 0-7), reset every DC predictor
-                wr.flush()
-                wr.out += bytes(
-                    [0xFF, 0xD0 + ((mcu_n // restart_interval - 1) % 8)]
-                )
-                for i in range(len(preds)):
-                    preds[i] = 0
-            mcu_n += 1
-            for ci, (p, qt, (hi, vi)) in enumerate(zip(padded, qts, samp)):
-                for v in range(vi):
-                    for hh in range(hi):
-                        py, px = (my * vi + v) * 8, (mx * hi + hh) * 8
-                        blk = p[py : py + 8, px : px + 8]
-                        f = dctm @ blk @ dctm.T
-                        qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                            np.int64
-                        ) * np.where(f < 0, -1, 1)
-                        preds[ci] = _jpg_encode_block(
-                            wr,
-                            qf.reshape(-1)[zz],
-                            tabs[ci][0],
-                            tabs[ci][1],
-                            preds[ci],
-                        )
-    wr.flush()
-
-    seg = _jpg_seg
+    coefs, samp, tqs, h, w = _jpg_quantized_coefs(
+        arr, ql, qc, subsampling, 8, space
+    )
+    nc = len(coefs)
+    codes = {
+        t: (_jpg_canonical_codes(*_JPG_HUFF[(0, t)]),
+            _jpg_canonical_codes(*_JPG_HUFF[(1, t)]))
+        for t in set(tqs)
+    }
+    entropy = _jpg_huff_seq_entropy(
+        coefs, _jpg_mcu_blocks(coefs, samp, restart_interval),
+        [codes[t] for t in tqs], False,
+    )
     # extended sequential carries Pq=1 16-bit quant entries
     dqt = _jpg_dqt_seg(0, ql, wide=extended)
-    if any(t == 1 for t in tqs):
+    if 1 in tqs:
         dqt += _jpg_dqt_seg(1, qc, wide=extended)
-    nc = len(planes)
     if rgb_space and adobe_transform is None:
-        comp_ids = (
-            (0x52, 0x47, 0x42) if nc == 3 else (0x43, 0x4D, 0x59, 0x4B)
-        )
+        comp_ids = _JPG_LETTER_IDS[nc]
     else:
-        comp_ids = tuple(range(1, nc + 1))
+        comp_ids = range(1, nc + 1)
     app14 = b""
     if adobe_transform is not None:
-        app14 = seg(
+        app14 = _jpg_seg(
             0xEE,
             b"Adobe" + struct.pack(">HHHB", 0x64, 0, 0, adobe_transform),
         )
     sof = _jpg_sof_payload(8, h, w, [
-        (comp_ids[ci], samp[ci][0], samp[ci][1], tqs[ci])
-        for ci in range(nc)
+        (cid, hi, vi, t) for cid, (hi, vi), t in zip(comp_ids, samp, tqs)
     ])
-    dht = b""
-    for (cls, tid), (bits, vals) in _JPG_HUFF.items():
-        if tid == 1 and not any(t == 1 for t in tqs):
-            continue
-        dht += _jpg_dht_seg(cls, tid, bits, vals)
-    sos = _jpg_sos_seq_payload(
-        [(comp_ids[ci], tqs[ci], tqs[ci]) for ci in range(nc)]
+    dht = b"".join(
+        _jpg_dht_seg(cls, tid, bits, vals)
+        for (cls, tid), (bits, vals) in _JPG_HUFF.items()
+        if tid in tqs
     )
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
+    sos = _jpg_sos_payload(
+        [(cid, t, t) for cid, t in zip(comp_ids, tqs)], 0, 63, 0, 0
     )
     return (
         b"\xff\xd8"
         + app14
         + dqt
-        + seg(0xC1 if extended else 0xC0, sof)
+        + _jpg_seg(0xC1 if extended else 0xC0, sof)
         + dht
-        + dri
-        + seg(0xDA, sos)
-        + bytes(wr.out)
+        + _jpg_dri_seg(restart_interval)
+        + _jpg_seg(0xDA, sos)
+        + entropy
         + b"\xff\xd9"
     )
 
@@ -8988,62 +8984,6 @@ def _jpg_optimal_table(freq_map):
     return bits[1:17], [s for _, s in order]
 
 
-def _jpg_quantized_coefs(arr, quality: int, precision: int = 8):
-    """Shared quantization front end for the progressive encoder
-    (4:4:4 or grayscale): returns per-component (bh, bw, 64) int64
-    zigzag-order coefficient arrays plus the quant tables.
-    Precision-parameterized (round-13 review: one front end, not
-    two): level shift and YCbCr relations center on 2^(P-1), clip
-    at 2^P-1 — at 12 bits this IS the ``encode_jpeg12`` front end
-    reshaped into the progressive grids, so a 12-bit progressive
-    stream is a lossless re-coding of the sequential-12
-    coefficients."""
-    import numpy as np
-
-    a = np.asarray(arr)
-    gray = a.ndim == 2
-    lvl = float(1 << (precision - 1))
-    full = (1 << precision) - 1
-    assert int(a.max(initial=0)) <= full
-    h, w = a.shape[:2]
-    if gray:
-        planes = [a.astype(np.float64)]
-    else:
-        rgb = a.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = lvl - 0.168735892 * r - 0.331264108 * g + 0.5 * b
-        cr = lvl + 0.5 * r - 0.418687589 * g - 0.081312411 * b
-        planes = [
-            np.clip(np.floor(x + 0.5), 0, full) for x in (y, cb, cr)
-        ]
-    ql, qc = _jpg_quant_tables(quality)
-    qts = [ql] + ([] if gray else [qc, qc])
-    dctm = _jpg_dct_mat()
-    bw, bh = -(-w // 8), -(-h // 8)
-    zz = np.array(_JPG_ZIGZAG)
-    coefs = []
-    for p, qt in zip(planes, qts):
-        pad = _jpg_pad(p, bh * 8, bw * 8) - lvl
-        c = np.zeros((bh, bw, 64), dtype=np.int64)
-        for by in range(bh):
-            for bx in range(bw):
-                blk = pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                f = dctm @ blk @ dctm.T
-                qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                    np.int64
-                ) * np.where(f < 0, -1, 1)
-                c[by, bx] = qf.reshape(-1)[zz]
-        coefs.append(c)
-    return coefs, qts, gray, h, w
-
-
-def _jpg_quantized_coefs12(arr, quality: int):
-    """12-bit spelling of the shared front end (kept as the named
-    entry point the 12-bit encoders call)."""
-    return _jpg_quantized_coefs(arr, quality, precision=12)
-
-
 # scan script: (kind, comp, Ss, Se, Ah, Al); DC scans interleave all
 # components, AC scans are single-component per the SOF2 rules
 _JPG_PROG_SCRIPT_GRAY = [
@@ -9161,62 +9101,28 @@ def _jpg_drive_ac_refine(block_iter, Ss, Se, Al, emit_sym, emit_bits):
     flush_eob()
 
 
-def _jpg_quantized_coefs_sub(arr, quality: int, subsampling: str):
-    """Subsampled quantization front end for the progressive
-    encoder: mirrors ``encode_jpeg``'s chroma pipeline EXACTLY
-    (rounded planes, round-half-up box-mean downsample, edge-
-    replicated padding) so progressive re-coding of the same image
-    at the same quality stays a lossless re-coding of the SAME
-    coefficients. Returns (coefs grids sized (mcuy*vi, mcux*hi, 64),
-    samp, geom, h, w) with geom = (nbw, nbh) non-interleaved block
-    counts per component."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    h, w = a.shape[:2]
-    fh, fv = _JPG_SUBSAMP[subsampling]
-    rgb = a.astype(np.float64)
-    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b
-    rnd = [np.clip(np.floor(x + 0.5), 0, 255) for x in (y, cb, cr)]
-    ds = []
-    for c in rnd[1:]:
-        ci = c.astype(np.int64)
-        eh, ew = -(-h // fv) * fv, -(-w // fh) * fh
-        pp = np.zeros((eh, ew), dtype=np.int64)
-        pp[:h, :w] = ci
-        if w < ew:
-            pp[:h, w:] = ci[:, -1:]
-        if h < eh:
-            pp[h:, :] = pp[h - 1 : h, :]
-        sm = pp.reshape(eh // fv, fv, ew // fh, fh).sum(axis=(1, 3))
-        ds.append(((sm + fh * fv // 2) // (fh * fv)).astype(np.float64))
-    planes = [rnd[0], ds[0], ds[1]]
-    samp = [(fh, fv), (1, 1), (1, 1)]
-    ql, qc = _jpg_quant_tables(quality)
-    qts = [ql, qc, qc]
-    dctm = _jpg_dct_mat()
-    mcux, mcuy = -(-w // (8 * fh)), -(-h // (8 * fv))
-    zz = np.array(_JPG_ZIGZAG)
-    coefs, geom = [], []
-    for pl, qt, (hi, vi) in zip(planes, qts, samp):
-        gw, gh = mcux * hi, mcuy * vi
-        pad = _jpg_pad(pl, gh * 8, gw * 8) - 128.0
-        c = np.zeros((gh, gw, 64), dtype=np.int64)
-        for by in range(gh):
-            for bx in range(gw):
-                blk = pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                f = dctm @ blk @ dctm.T
-                qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                    np.int64
-                ) * np.where(f < 0, -1, 1)
-                c[by, bx] = qf.reshape(-1)[zz]
-        coefs.append(c)
-        ch_, cw_ = pl.shape
-        geom.append((-(-cw_ // 8), -(-ch_ // 8)))
-    return coefs, samp, geom, h, w
+def _jpg_prog_scans(coefs, samp, h: int, w: int, ri: int) -> list:
+    """The progressive scan script for a frame from the front end,
+    each scan as (kind, comp, Ss, Se, Ah, Al, restart segments of its
+    block walk): DC scans interleave every component MCU by MCU; an
+    AC scan walks one component's own ceil-dims block raster, one
+    block per restart unit (A.2.2-A.2.3, G.1.1)."""
+    hmax, vmax = samp[0]
+    script = (
+        _JPG_PROG_SCRIPT_GRAY if len(coefs) == 1 else _JPG_PROG_SCRIPT_COLOR
+    )
+    scans = []
+    for kind, comp, Ss, Se, Ah, Al in script:
+        if comp is None:
+            segs = _jpg_mcu_blocks(coefs, samp, ri)
+        else:
+            hi, vi = samp[comp]
+            nbw, nbh = -(-w * hi // (8 * hmax)), -(-h * vi // (8 * vmax))
+            segs = _jpg_mcu_blocks(
+                [coefs[comp][:nbh, :nbw]], [(1, 1)], ri
+            )
+        scans.append((kind, comp, Ss, Se, Ah, Al, segs))
+    return scans
 
 
 def encode_jpeg_progressive(
@@ -9248,131 +9154,64 @@ def encode_jpeg_progressive(
         raise ValueError("progressive precision must be 8/12")
     if precision == 12 and subsampling != "444":
         raise ValueError("12-bit progressive is 4:4:4 only")
-    if subsampling != "444":
-        coefs, samp, nbgeom, h, w = _jpg_quantized_coefs_sub(
-            arr, quality, subsampling
-        )
-        gray = False
-        nc = 3
-    else:
-        fe = (
-            _jpg_quantized_coefs12 if precision == 12
-            else _jpg_quantized_coefs
-        )
-        coefs, _qts, gray, h, w = fe(arr, quality)
-        nc = 1 if gray else 3
-        samp = [(1, 1)] * nc
-        nbgeom = [
-            (coefs[0].shape[1], coefs[0].shape[0]) for _ in range(nc)
-        ]
-    mcuy_n = coefs[0].shape[0] // samp[0][1]
-    mcux_n = coefs[0].shape[1] // samp[0][0]
-
-    def mcu_blocks():
-        for my in range(mcuy_n):
-            for mx in range(mcux_n):
-                yield [
-                    (ci, my * samp[ci][1] + v_, mx * samp[ci][0] + h_)
-                    for ci in range(nc)
-                    for v_ in range(samp[ci][1])
-                    for h_ in range(samp[ci][0])
-                ]
-
-    seg = _jpg_seg
     ql, qc = _jpg_quant_tables(quality)
-    dqt = _jpg_dqt_seg(0, ql)
-    if not gray:
-        dqt += _jpg_dqt_seg(1, qc)
-    sof = _jpg_sof_payload(precision, h, w, [
-        (ci + 1, samp[ci][0], samp[ci][1], 0 if ci == 0 else 1)
-        for ci in range(nc)
-    ])
-    dht = b""
-    if precision == 8:
-        for tid in range(1 if gray else 2):
-            bits, vals = _JPG_HUFF[(0, tid)]
-            dht += _jpg_dht_seg(0, tid, bits, vals)
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
+    coefs, samp, tqs, h, w = _jpg_quantized_coefs(
+        arr, ql, qc, subsampling, precision, "ycbcr"
     )
-    out = bytearray(b"\xff\xd8" + dqt + seg(0xC2, sof) + dht + dri)
-    if precision == 8:
-        dc_codes = [
-            _jpg_canonical_codes(*_JPG_HUFF[(0, 0 if ci == 0 else 1)])
-            for ci in range(nc)
-        ]
-        dc_sel = [0 if ci == 0 else 1 for ci in range(nc)]
-    else:
-        # 12-bit DC diffs reach category 15, past the fixed Annex K
-        # tables: census the DC-first scan's own symbols (Al from
-        # the script's dc_first row, restart resets included) and
-        # ship ONE optimal table for all components in the scan DHT
-        al0 = next(a for k, _c, _s, _e, _ah, a in (
-            _JPG_PROG_SCRIPT_GRAY if gray else _JPG_PROG_SCRIPT_COLOR
-        ) if k == "dc_first")
-        freq: dict[int, int] = {}
-        preds0 = [0] * nc
-        mcu_n0 = 0
-        for blklist in mcu_blocks():
-            if restart_interval and mcu_n0 and \
-                    mcu_n0 % restart_interval == 0:
-                preds0 = [0] * nc
-            mcu_n0 += 1
-            for ci, gy, gx in blklist:
-                v0 = int(coefs[ci][gy, gx, 0]) >> al0
-                cat0 = _jpg_category(v0 - preds0[ci])
-                preds0[ci] = v0
-                freq[cat0] = freq.get(cat0, 0) + 1
-        dcb, dcv = _jpg_optimal_table(freq)
-        dc12 = _jpg_canonical_codes(dcb, dcv)
-        dc12_dht = _jpg_dht_seg(0, 0, dcb, dcv)
-        dc_codes = [dc12] * nc
-        dc_sel = [0] * nc
-    script = _JPG_PROG_SCRIPT_GRAY if gray else _JPG_PROG_SCRIPT_COLOR
-    ri = restart_interval
-    for kind, comp, Ss, Se, Ah, Al in script:
-        wr = _JpgBitWriter()
-        scan_dht = b""
+    nc = len(coefs)
 
-        def emit_rst(seg_i):
-            # between restart segments: flush the partial byte
-            # (1-fill), emit RSTm with m cycling 0-7 from the scan's
-            # own counter
-            wr.flush()
-            wr.out += bytes([0xFF, 0xD0 + ((seg_i - 1) % 8)])
-
-        if kind == "dc_first":
+    def dc_first(dc_codes, Al):
+        def code(wr, seg):
             preds = [0] * nc
-            mcu_n = 0
-            for blklist in mcu_blocks():
-                if ri and mcu_n and mcu_n % ri == 0:
-                    emit_rst(mcu_n // ri)
-                    preds = [0] * nc
-                mcu_n += 1
-                for ci, gy, gx in blklist:
-                    v = int(coefs[ci][gy, gx, 0]) >> Al
-                    diff = v - preds[ci]
-                    preds[ci] = v
-                    cat = _jpg_category(diff)
-                    code, ln = dc_codes[ci][cat]
-                    wr.put(code, ln)
-                    if cat:
-                        wr.put(
-                            diff
-                            if diff >= 0
-                            else diff + (1 << cat) - 1,
-                            cat,
-                        )
+            for ci, by, bx in seg:
+                v = int(coefs[ci][by, bx, 0]) >> Al
+                _jpg_put_dc(wr, dc_codes[ci], v - preds[ci])
+                preds[ci] = v
+        return code
+
+    def optimal(segs, code_with):
+        # K.2 table from a census run of the scan's own coder
+        census = _JpgCensus()
+        _jpg_scan_entropy(segs, _JpgBitWriter, code_with(census))
+        return _jpg_optimal_table(census)
+
+    if precision == 8:
+        dc_codes = [_jpg_canonical_codes(*_JPG_HUFF[(0, t)]) for t in tqs]
+        dc_sel = tqs
+        frame_dht = b"".join(
+            _jpg_dht_seg(0, t, *_JPG_HUFF[(0, t)]) for t in sorted(set(tqs))
+        )
+    else:
+        dc_sel = [0] * nc
+        frame_dht = b""
+    out = bytearray(
+        b"\xff\xd8"
+        + _jpg_dqt_seg(0, ql)
+        + (_jpg_dqt_seg(1, qc) if nc > 1 else b"")
+        + _jpg_seg(0xC2, _jpg_sof_payload(precision, h, w, [
+            (ci + 1, hi, vi, t)
+            for ci, ((hi, vi), t) in enumerate(zip(samp, tqs))
+        ]))
+        + frame_dht
+        + _jpg_dri_seg(restart_interval)
+    )
+    for kind, comp, Ss, Se, Ah, Al, segs in _jpg_prog_scans(
+        coefs, samp, h, w, restart_interval
+    ):
+        scan_dht = b""
+        if kind == "dc_first":
+            if precision == 12:
+                # 12-bit DC diffs reach category 15, past the fixed
+                # Annex K tables: ONE optimal table for all components
+                # from this scan's own symbols, shipped in its DHT
+                bits, vals = optimal(segs, lambda t: dc_first([t] * nc, Al))
+                scan_dht = _jpg_dht_seg(0, 0, bits, vals)
+                dc_codes = [_jpg_canonical_codes(bits, vals)] * nc
+            code = dc_first(dc_codes, Al)
         elif kind == "dc_refine":
-            mcu_n = 0
-            for blklist in mcu_blocks():
-                if ri and mcu_n and mcu_n % ri == 0:
-                    emit_rst(mcu_n // ri)
-                mcu_n += 1
-                for ci, gy, gx in blklist:
-                    wr.put((int(coefs[ci][gy, gx, 0]) >> Al) & 1, 1)
+            def code(wr, seg):
+                for ci, by, bx in seg:
+                    wr.put((int(coefs[ci][by, bx, 0]) >> Al) & 1, 1)
         else:
             drive = (
                 _jpg_drive_ac_first
@@ -9380,59 +9219,27 @@ def encode_jpeg_progressive(
                 else _jpg_drive_ac_refine
             )
 
-            def blocks():
-                c = coefs[comp]
-                nbw_c, nbh_c = nbgeom[comp]
-                for by in range(nbh_c):
-                    for bx in range(nbw_c):
-                        yield c[by, bx]
-
             # a restart segment is an independent entropy unit: the
             # drive function flushes its EOB run and buffered
             # correction bits at the end of each call, which is
             # exactly the per-segment reset T.81 requires. One
             # optimal table still covers the whole scan (tables
             # cannot change mid-scan).
-            if ri:
-                segs, buf = [], []
-                for blk in blocks():
-                    buf.append(blk)
-                    if len(buf) == ri:
-                        segs.append(buf)
-                        buf = []
-                if buf:
-                    segs.append(buf)
-            else:
-                segs = [list(blocks())]
-            freqs: dict[int, int] = {}
-            for sgl in segs:
-                drive(
-                    iter(sgl), Ss, Se, Al,
-                    lambda s: freqs.__setitem__(s, freqs.get(s, 0) + 1),
-                    lambda v, n: None,
+            def ac_code(ac_codes):
+                return lambda wr, seg: drive(
+                    (coefs[comp][by, bx] for _, by, bx in seg), Ss, Se, Al,
+                    lambda s: wr.put(*ac_codes[s]), wr.put,
                 )
-            bits, vals = _jpg_optimal_table(freqs)
+
+            bits, vals = optimal(segs, ac_code)
             scan_dht = _jpg_dht_seg(1, 0, bits, vals)
-            ac_codes = _jpg_canonical_codes(bits, vals)
-            for si, sgl in enumerate(segs):
-                if si:
-                    emit_rst(si)
-                drive(
-                    iter(sgl), Ss, Se, Al,
-                    lambda s: wr.put(*ac_codes[s]),
-                    lambda v, n: wr.put(v, n),
-                )
-        wr.flush()
-        if kind == "dc_first" and precision == 12:
-            scan_dht = dc12_dht
-        if kind in ("dc_first", "dc_refine"):
-            sos = bytes([nc])
-            for ci in range(nc):
-                sos += bytes([ci + 1, dc_sel[ci] << 4])
-        else:
-            sos = bytes([1, comp + 1, 0x00])
-        sos += bytes([Ss, Se, (Ah << 4) | Al])
-        out += scan_dht + seg(0xDA, sos) + bytes(wr.out)
+            code = ac_code(_jpg_canonical_codes(bits, vals))
+        sel = (
+            [(ci + 1, t, 0) for ci, t in enumerate(dc_sel)]
+            if comp is None else [(comp + 1, 0, 0)]
+        )
+        out += scan_dht + _jpg_seg(0xDA, _jpg_sos_payload(sel, Ss, Se, Ah, Al))
+        out += _jpg_scan_entropy(segs, _JpgBitWriter, code)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -9918,32 +9725,20 @@ def encode_jpeg_hierarchical(
     allows."""
     import numpy as np
 
-    a = np.asarray(arr, dtype=np.uint8)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
     if not 1 <= levels <= 6:
         raise ValueError("hierarchical levels must be in 1..6")
-    if gray:
-        planes = [a.astype(np.float64)]
-    else:
-        rgb = a.astype(np.float64)
-        r, g, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b_
-        cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b_
-        cr = 128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b_
-        planes = [np.clip(np.floor(x + 0.5), 0, 255)
-                  for x in (y, cb, cr)]
+    planes, tqs = _jpg_color_planes(arr, 8, "ycbcr")
+    h, w = planes[0].shape
     nc = len(planes)
     ql, qc = _jpg_quant_tables(quality)
     dl, dc_ = _jpg_quant_tables(100)
-    tqs = [0] if gray else [0, 1, 1]
     # table ids: 0/1 = base luma/chroma, 2/3 = differential
     qtabs = {0: ql, 1: qc, 2: dl, 3: dc_}
-    dctm = _jpg_dct_mat()
-    dc_codes = {t: _jpg_canonical_codes(*_JPG_HUFF[(0, t)])
-                for t in (0, 1)}
-    ac_codes = {t: _jpg_canonical_codes(*_JPG_HUFF[(1, t)])
-                for t in (0, 1)}
+    tabs = [
+        (_jpg_canonical_codes(*_JPG_HUFF[(0, t)]),
+         _jpg_canonical_codes(*_JPG_HUFF[(1, t)]))
+        for t in tqs
+    ]
 
     # pyramid dims, finest last
     dims = [(h, w)]
@@ -9954,126 +9749,47 @@ def encode_jpeg_hierarchical(
         else:
             dims.insert(0, (h, w))
 
-    def downsample(p, ph, pw):
-        # box mean (round half up) over 2^k x 2^k cells to (ph, pw)
-        src = p.astype(np.int64)
-        sh, sw = src.shape
-        fy, fx = -(-sh // ph), -(-sw // pw)
-        pad = np.zeros((ph * fy, pw * fx), np.int64)
-        pad[:sh, :sw] = src
-        if sw < pw * fx:
-            pad[:sh, sw:] = src[:, -1:]
-        if sh < ph * fy:
-            pad[sh:] = pad[sh - 1 : sh]
-        s = pad.reshape(ph, fy, pw, fx).sum(axis=(1, 3))
-        return (s + fy * fx // 2) // (fy * fx)
-
     seg = _jpg_seg
     def encode_frame(srcs, qids, differential):
         # srcs: per-component int64 sample (or difference) planes
         fh, fw = srcs[0].shape
         mcux, mcuy = -(-fw // 8), -(-fh // 8)
-        wr = _JpgBitWriter()
-        enc = _QmEncoder() if arith else None
-        dc_stats = {t: bytearray(64) for t in (0, 1)[: 1 if gray else 2]}
-        ac_stats = {t: bytearray(256) for t in (0, 1)[: 1 if gray else 2]}
-        fixed = bytearray([113])
-        dc_ctx = [0] * nc
-        preds = [0] * nc
-        zz = np.array(_JPG_ZIGZAG)
-        recon = [np.zeros((mcuy * 8, mcux * 8)) for _ in srcs]
-        mcu_n = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and mcu_n and \
-                        mcu_n % restart_interval == 0:
-                    if arith:
-                        wr.out += enc.flush()
-                        enc = _QmEncoder()
-                        for st_ in dc_stats.values():
-                            st_[:] = bytes(64)
-                        for st_ in ac_stats.values():
-                            st_[:] = bytes(256)
-                        dc_ctx = [0] * nc
-                    else:
-                        wr.flush()
-                    wr.out += bytes(
-                        [0xFF,
-                         0xD0 + ((mcu_n // restart_interval - 1) % 8)]
-                    )
-                    preds = [0] * nc
-                mcu_n += 1
-                for ci, src in enumerate(srcs):
-                    qt = qtabs[qids[ci]]
-                    py, px = my * 8, mx * 8
-                    blk = np.zeros((8, 8), np.float64)
-                    tile = src[py : py + 8, px : px + 8]
-                    blk[: tile.shape[0], : tile.shape[1]] = tile
-                    if tile.shape[0] < 8:
-                        blk[tile.shape[0] :, : tile.shape[1]] = \
-                            tile[-1:, :]
-                    if tile.shape[1] < 8:
-                        blk[:, tile.shape[1] :] = blk[:, tile.shape[1]
-                                                      - 1 : tile.shape[1]]
-                    f = dctm @ blk @ dctm.T
-                    qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                        np.int64
-                    ) * np.where(f < 0, -1, 1)
-                    # Annex K table reach: AC categories stop at 10
-                    # (|v| <= 1023), DC at 11 — worst-case
-                    # alternating DIFFERENCE blocks at unit quant
-                    # steps could exceed them, so clamp (encoder's
-                    # legal choice of coefficients; pathological
-                    # blocks lose a little accuracy, never crash)
-                    dc0 = min(max(int(qf[0, 0]), -2047), 2047)
-                    qf = np.clip(qf, -1023, 1023)
-                    qf[0, 0] = dc0
-                    t = tqs[ci]
-                    if arith:
-                        zc = qf.reshape(-1)[zz]
-                        dcv = int(zc[0])
-                        # differential frames code the VALUE (zero
-                        # prediction); SOF9 frames the usual diff
-                        diff = dcv if differential else \
-                            dcv - preds[ci]
-                        preds[ci] = dcv
-                        _arith_dc_encode(
-                            enc, dc_stats[t], dc_ctx, ci, diff, 0, 1
-                        )
-                        _arith_ac_encode(
-                            enc, ac_stats[t], fixed, 5, zc
-                        )
-                    elif differential:
-                        # zero DC prediction: encode DC directly
-                        _jpg_encode_block(
-                            wr, qf.reshape(-1)[zz],
-                            dc_codes[t], ac_codes[t], 0
-                        )
-                    else:
-                        preds[ci] = _jpg_encode_block(
-                            wr, qf.reshape(-1)[zz],
-                            dc_codes[t], ac_codes[t], preds[ci]
-                        )
-                    recon[ci][py : py + 8, px : px + 8] = (
-                        dctm.T @ (qf.astype(np.float64) * qt) @ dctm
-                    )
+        coefs = []
+        for src, q in zip(srcs, qids):
+            c = _jpg_fdct_grid(_jpg_pad(src, mcuy * 8, mcux * 8), qtabs[q])
+            # Annex K table reach: AC categories stop at 10 (|v| <=
+            # 1023), DC at 11 — worst-case alternating DIFFERENCE
+            # blocks at unit quant steps could exceed them, so clamp
+            # (encoder's legal choice of coefficients; pathological
+            # blocks lose a little accuracy, never crash)
+            dc0 = np.clip(c[..., 0], -2047, 2047)
+            c = np.clip(c, -1023, 1023)
+            c[..., 0] = dc0
+            coefs.append(c)
+        segs = _jpg_mcu_blocks(coefs, [(1, 1)] * nc, restart_interval)
         if arith:
-            wr.out += enc.flush()
+            entropy = _arith_seq_entropy(
+                coefs, segs, tqs, (0, 1), 5, differential
+            )
+            sof_marker = 0xCD if differential else 0xC9
         else:
-            wr.flush()
+            entropy = _jpg_huff_seq_entropy(coefs, segs, tabs, differential)
+            sof_marker = 0xC5 if differential else 0xC0
+        recon = []
+        for c, q in zip(coefs, qids):
+            r = np.zeros((mcuy * 8, mcux * 8))
+            for by, bx in np.ndindex(mcuy, mcux):
+                r[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    _jpg_idct_block(c[by, bx], qtabs[q])
+                )
+            recon.append(r[:fh, :fw])
         sof = _jpg_sof_payload(8, fh, fw, [
             (ci + 1, 1, 1, qids[ci]) for ci in range(nc)
         ])
-        sos = _jpg_sos_seq_payload(
-            [(ci + 1, tqs[ci], tqs[ci]) for ci in range(nc)]
+        sos = _jpg_sos_payload(
+            [(ci + 1, t, t) for ci, t in enumerate(tqs)], 0, 63, 0, 0
         )
-        if arith:
-            sof_marker = 0xCD if differential else 0xC9
-        else:
-            sof_marker = 0xC5 if differential else 0xC0
-        body = seg(sof_marker, sof) + \
-            seg(0xDA, sos) + bytes(wr.out)
-        return body, [r[:fh, :fw] for r in recon]
+        return seg(sof_marker, sof) + seg(0xDA, sos) + entropy, recon
 
     out = bytearray(b"\xff\xd8")
     out += _jpg_dqt_seg(0, ql)
@@ -10084,26 +9800,20 @@ def encode_jpeg_hierarchical(
         out += _jpg_dqt_seg(3, dc_)
     if arith:
         # explicit default DAC for both entropy tables/classes
-        dac_body = b""
-        for t in range(1 if gray else 2):
-            dac_body += bytes([t, (1 << 4) | 0])
-            dac_body += bytes([0x10 | t, 5])
-        out += seg(0xCC, dac_body)
+        out += _jpg_dac_seg(tqs, (0, 1), 5, True)
     else:
         for (cls, tid), (bits, vals) in _JPG_HUFF.items():
-            if tid == 1 and nc == 1:
-                continue
-            out += _jpg_dht_seg(cls, tid, bits, vals)
+            if tid in tqs:
+                out += _jpg_dht_seg(cls, tid, bits, vals)
     out += seg(0xDE, _jpg_sof_payload(8, h, w, [
         (ci + 1, 1, 1, tqs[ci]) for ci in range(nc)
     ]))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
+    out += _jpg_dri_seg(restart_interval)
 
     refs = None
     for li, (lh, lw) in enumerate(dims):
         level_planes = [
-            downsample(p, lh, lw) if (lh, lw) != (h, w)
+            _jpg_box_mean(p, -(-h // lh), -(-w // lw)) if (lh, lw) != (h, w)
             else p.astype(np.int64)
             for p in planes
         ]
@@ -10728,107 +10438,66 @@ def _decode_jpeg_arith(b: bytes, color_space: str = "auto"):
     ).astype(odt)
 
 
-def _arith_seq_entropy(
-    padded, qts, tqs, samp, mcux, mcuy, restart_interval, low, up, ac_kx
-):
-    """Shared SOF9 sequential QM-coder MCU scan (Annex D coder, Annex
-    F models) for the 8-bit and 12-bit arithmetic encoders — the
-    12-bit caller passes ``samp=[(1, 1)] * nc`` (4:4:4 only) and the
-    loop degenerates to one block per component per MCU. Restart
-    intervals flush the coder and emit RSTm with statistics and DC
-    contexts reset per segment, exactly as both callers did before
-    the round-14 fold."""
-    import numpy as np
+def _arith_seq_entropy(coefs, segs, tqs, dc_cond, ac_kx: int,
+                       differential: bool) -> bytes:
+    """Sequential QM-coded scan (Annex D coder, Annex F models) over
+    the MCU walk ``segs``: each restart segment starts a fresh coder
+    with zeroed statistics, DC contexts and predictors. Hierarchical
+    differential frames (SOF13) code each block's DC value itself
+    (zero prediction, J.1)."""
+    low, up = dc_cond
 
-    dctm = _jpg_dct_mat()
-    zz = np.array(_JPG_ZIGZAG)
-    nc = len(padded)
-    used_tabs = sorted(set(tqs))
-    entropy = bytearray()
-    enc = None
-    dc_stats = {t: bytearray(64) for t in used_tabs}
-    ac_stats = {t: bytearray(256) for t in used_tabs}
-    fixed = bytearray([113])
-    dc_ctx = [0] * nc
-    preds = [0] * nc
-    mcu_n = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_n and \
-                    mcu_n % restart_interval == 0:
-                entropy += enc.flush()
-                entropy += bytes(
-                    [0xFF,
-                     0xD0 + ((mcu_n // restart_interval - 1) % 8)]
-                )
-                enc = None
-            if enc is None:
-                enc = _QmEncoder()
-                for st in dc_stats.values():
-                    st[:] = bytes(64)
-                for st in ac_stats.values():
-                    st[:] = bytes(256)
-                dc_ctx = [0] * nc
-                preds = [0] * nc
-            mcu_n += 1
-            for ci, (p, qt, (hi, vi)) in enumerate(
-                zip(padded, qts, samp)
-            ):
-                t = tqs[ci]
-                for v in range(vi):
-                    for hh in range(hi):
-                        py, px = (my * vi + v) * 8, (mx * hi + hh) * 8
-                        blk = p[py : py + 8, px : px + 8]
-                        f = dctm @ blk @ dctm.T
-                        qf = np.floor(np.abs(f) / qt + 0.5).astype(
-                            np.int64
-                        ) * np.where(f < 0, -1, 1)
-                        zcoefs = qf.reshape(-1)[zz]
-                        diff = int(zcoefs[0]) - preds[ci]
-                        preds[ci] = int(zcoefs[0])
-                        _arith_dc_encode(
-                            enc, dc_stats[t], dc_ctx, ci, diff, low, up
-                        )
-                        _arith_ac_encode(
-                            enc, ac_stats[t], fixed, ac_kx, zcoefs
-                        )
-    entropy += enc.flush()
-    return bytes(entropy)
+    def code(enc, seg):
+        dc_stats = {t: bytearray(64) for t in tqs}
+        ac_stats = {t: bytearray(256) for t in tqs}
+        fixed = bytearray([113])
+        dc_ctx = [0] * len(coefs)
+        preds = [0] * len(coefs)
+        for ci, by, bx in seg:
+            zc = coefs[ci][by, bx]
+            dcv = int(zc[0])
+            diff = dcv if differential else dcv - preds[ci]
+            preds[ci] = dcv
+            t = tqs[ci]
+            _arith_dc_encode(enc, dc_stats[t], dc_ctx, ci, diff, low, up)
+            _arith_ac_encode(enc, ac_stats[t], fixed, ac_kx, zc)
+
+    return _jpg_scan_entropy(segs, _QmEncoder, code)
 
 
-def _arith_seq_frame(
-    precision, h, w, comp_ids, samp, tqs, ql, qc,
-    emit_dac, low, up, ac_kx, restart_interval, entropy,
-):
-    """Shared SOF9 marker stream (DQT/SOF/DAC/DRI/SOS + entropy) for
-    the 8-bit and 12-bit arithmetic sequential encoders — they
-    differed only in the SOF precision byte and component ids."""
-    seg = _jpg_seg
-    nc = len(tqs)
-    used_tabs = sorted(set(tqs))
+def _arith_seq_encode(arr, quality: int, subsampling: str, precision: int,
+                      space: str, restart_interval: int, dc_cond,
+                      ac_kx: int, emit_dac: bool) -> bytes:
+    """Shared SOF9 encoder of the 8-bit and 12-bit arithmetic
+    sequential encoders: the front end, the QM-coded MCU walk and the
+    DQT/SOF/DAC/DRI/SOS marker stream; untransformed ``rgb_space``
+    components carry the libjpeg letter ids."""
+    ql, qc = _jpg_quant_tables(quality)
+    coefs, samp, tqs, h, w = _jpg_quantized_coefs(
+        arr, ql, qc, subsampling, precision, space
+    )
+    dac = _jpg_dac_seg(tqs, dc_cond, ac_kx, emit_dac)
+    entropy = _arith_seq_entropy(
+        coefs, _jpg_mcu_blocks(coefs, samp, restart_interval), tqs,
+        dc_cond, ac_kx, False,
+    )
+    nc = len(coefs)
+    comp_ids = (
+        _JPG_LETTER_IDS[nc] if space == "rgb_space" else range(1, nc + 1)
+    )
     dqt = _jpg_dqt_seg(0, ql)
-    if any(t == 1 for t in tqs):
+    if 1 in tqs:
         dqt += _jpg_dqt_seg(1, qc)
     sof = _jpg_sof_payload(precision, h, w, [
-        (comp_ids[ci], samp[ci][0], samp[ci][1], tqs[ci])
-        for ci in range(nc)
+        (cid, hi, vi, t) for cid, (hi, vi), t in zip(comp_ids, samp, tqs)
     ])
-    dac = b""
-    if emit_dac:
-        body = b""
-        for t in used_tabs:
-            body += bytes([t, (up << 4) | low])
-            body += bytes([0x10 | t, ac_kx])
-        dac = seg(0xCC, body)
-    dri = b""
-    if restart_interval:
-        dri = seg(0xDD, struct.pack(">H", restart_interval))
-    sos = _jpg_sos_seq_payload(
-        [(comp_ids[ci], tqs[ci], tqs[ci]) for ci in range(nc)]
+    sos = _jpg_sos_payload(
+        [(cid, t, t) for cid, t in zip(comp_ids, tqs)], 0, 63, 0, 0
     )
     return (
-        b"\xff\xd8" + dqt + seg(0xC9, sof) + dac + dri
-        + seg(0xDA, sos) + entropy + b"\xff\xd9"
+        b"\xff\xd8" + dqt + _jpg_seg(0xC9, sof) + dac
+        + _jpg_dri_seg(restart_interval)
+        + _jpg_seg(0xDA, sos) + entropy + b"\xff\xd9"
     )
 
 
@@ -10855,90 +10524,9 @@ def encode_jpeg_arith(
     the libjpeg component-ID convention — the Adobe scanned-CMYK
     class rides SOF9 this way (round 12); 4:4:4 only, luma tables
     for every component."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    if subsampling not in _JPG_SUBSAMP:
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    low, up = dc_cond
-    if not (0 <= low <= up <= 15):
-        raise ValueError("DC conditioning needs 0 <= L <= U <= 15")
-    if not 1 <= ac_kx <= 63:
-        raise ValueError("AC conditioning needs 1 <= Kx <= 63")
-    if not emit_dac and ((low, up) != (0, 1) or ac_kx != 5):
-        raise ValueError("omitting DAC requires the default conditioning")
-    if rgb_space and (gray or subsampling != "444"):
-        raise ValueError("rgb_space needs (h, w, 3|4) input and 4:4:4")
-    if rgb_space and a.shape[2] not in (3, 4):
-        raise ValueError("rgb_space needs 3 (RGB) or 4 (CMYK) channels")
-    fh, fv = _JPG_SUBSAMP[subsampling]
-    sub = (fh, fv) != (1, 1) and not gray
-    if gray:
-        planes = [a.astype(np.float64)]
-        samp = [(1, 1)]
-    elif rgb_space:
-        planes = [
-            a[..., ci].astype(np.float64) for ci in range(a.shape[2])
-        ]
-        samp = [(1, 1)] * len(planes)
-    else:
-        rgb = a.astype(np.float64)
-        r, g, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b_
-        cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b_
-        cr = 128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b_
-        rnd = [np.clip(np.floor(x + 0.5), 0, 255) for x in (y, cb, cr)]
-        if sub:
-            ds = []
-            for c in rnd[1:]:
-                ci = c.astype(np.int64)
-                eh, ew = -(-h // fv) * fv, -(-w // fh) * fh
-                p = np.zeros((eh, ew), dtype=np.int64)
-                p[:h, :w] = ci
-                if w < ew:
-                    p[:h, w:] = ci[:, -1:]
-                if h < eh:
-                    p[h:, :] = p[h - 1 : h, :]
-                s = p.reshape(eh // fv, fv, ew // fh, fh).sum(axis=(1, 3))
-                ds.append(
-                    ((s + fh * fv // 2) // (fh * fv)).astype(np.float64)
-                )
-            planes = [rnd[0], ds[0], ds[1]]
-            samp = [(fh, fv), (1, 1), (1, 1)]
-        else:
-            planes = rnd
-            samp = [(1, 1)] * 3
-    ql, qc = _jpg_quant_tables(quality)
-    if gray:
-        tqs = [0]
-    elif rgb_space:
-        tqs = [0] * len(planes)
-    else:
-        tqs = [0, 1, 1]
-    qts = [ql if t == 0 else qc for t in tqs]
-    nc = len(planes)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    padded = [
-        _jpg_pad(p, mcuy * vi * 8, mcux * hi * 8) - 128.0
-        for p, (hi, vi) in zip(planes, samp)
-    ]
-    entropy = _arith_seq_entropy(
-        padded, qts, tqs, samp, mcux, mcuy,
-        restart_interval, low, up, ac_kx,
-    )
-    if rgb_space:
-        comp_ids = (
-            (0x52, 0x47, 0x42) if nc == 3 else (0x43, 0x4D, 0x59, 0x4B)
-        )
-    else:
-        comp_ids = tuple(range(1, nc + 1))
-    return _arith_seq_frame(
-        8, h, w, comp_ids, samp, tqs, ql, qc,
-        emit_dac, low, up, ac_kx, restart_interval, entropy,
+    return _arith_seq_encode(
+        arr, quality, subsampling, 8, "rgb_space" if rgb_space else "ycbcr",
+        restart_interval, dc_cond, ac_kx, emit_dac,
     )
 
 
@@ -10963,49 +10551,9 @@ def encode_jpeg_arith12(
     chain + 14-bin mantissa area fits the 64-byte statistics
     block). Conditioning/DAC/restart semantics as in
     ``encode_jpeg_arith``; 4:4:4 only."""
-    import numpy as np
-
-    a = np.asarray(arr)
-    gray = a.ndim == 2
-    assert int(a.max(initial=0)) < 4096
-    h, w = a.shape[:2]
-    low, up = dc_cond
-    if not (0 <= low <= up <= 15):
-        raise ValueError("DC conditioning needs 0 <= L <= U <= 15")
-    if not 1 <= ac_kx <= 63:
-        raise ValueError("AC conditioning needs 1 <= Kx <= 63")
-    if not emit_dac and ((low, up) != (0, 1) or ac_kx != 5):
-        raise ValueError("omitting DAC requires the default conditioning")
-    ql, qc = _jpg_quant_tables(quality)
-    if gray:
-        planes = [a.astype(np.float64)]
-        qts = [ql]
-        tqs = [0]
-    else:
-        assert a.shape[2] == 3
-        rgb = a.astype(np.float64)
-        r, g, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b_
-        cb = 2048.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b_
-        cr = 2048.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b_
-        planes = [
-            np.clip(np.floor(x + 0.5), 0, 4095) for x in (y, cb, cr)
-        ]
-        qts = [ql, qc, qc]
-        tqs = [0, 1, 1]
-    nc = len(planes)
-    samp = [(1, 1)] * nc
-    mcux, mcuy = -(-w // 8), -(-h // 8)
-    padded = [
-        _jpg_pad(p, mcuy * 8, mcux * 8) - 2048.0 for p in planes
-    ]
-    entropy = _arith_seq_entropy(
-        padded, qts, tqs, samp, mcux, mcuy,
-        restart_interval, low, up, ac_kx,
-    )
-    return _arith_seq_frame(
-        12, h, w, tuple(range(1, nc + 1)), samp, tqs, ql, qc,
-        emit_dac, low, up, ac_kx, restart_interval, entropy,
+    return _arith_seq_encode(
+        arr, quality, "444", 12, "ycbcr", restart_interval, dc_cond, ac_kx,
+        emit_dac,
     )
 
 
@@ -11042,164 +10590,72 @@ def encode_jpeg_arith_progressive(
     end — uint16 samples < 4096, level shift 2048, 4:4:4 only; the
     G.2 models are precision-agnostic, so only the front end and
     the SOF precision byte change."""
-    import numpy as np
-
-    low, up = dc_cond
     if precision not in (8, 12):
         raise ValueError("arithmetic progressive precision must be 8/12")
-    if not (0 <= low <= up <= 15):
-        raise ValueError("DC conditioning needs 0 <= L <= U <= 15")
-    if not 1 <= ac_kx <= 63:
-        raise ValueError("AC conditioning needs 1 <= Kx <= 63")
-    if not emit_dac and ((low, up) != (0, 1) or ac_kx != 5):
-        raise ValueError("omitting DAC requires the default conditioning")
     if precision == 12 and subsampling != "444":
         raise ValueError("12-bit arithmetic progressive is 4:4:4 only")
-    if subsampling != "444":
-        coefs, samp, nbgeom, h, w = _jpg_quantized_coefs_sub(
-            arr, quality, subsampling
-        )
-        gray = False
-        nc = 3
-    else:
-        fe = (
-            _jpg_quantized_coefs12 if precision == 12
-            else _jpg_quantized_coefs
-        )
-        coefs, _qts, gray, h, w = fe(arr, quality)
-        nc = 1 if gray else 3
-        samp = [(1, 1)] * nc
-        nbgeom = [
-            (coefs[0].shape[1], coefs[0].shape[0]) for _ in range(nc)
-        ]
-    tqs = [0] if gray else [0, 1, 1]
-    mcuy_n = coefs[0].shape[0] // samp[0][1]
-    mcux_n = coefs[0].shape[1] // samp[0][0]
-
-    def mcu_blocks():
-        for my in range(mcuy_n):
-            for mx in range(mcux_n):
-                yield [
-                    (ci, my * samp[ci][1] + v_, mx * samp[ci][0] + h_)
-                    for ci in range(nc)
-                    for v_ in range(samp[ci][1])
-                    for h_ in range(samp[ci][0])
-                ]
-
-    seg = _jpg_seg
     ql, qc = _jpg_quant_tables(quality)
-    dqt = _jpg_dqt_seg(0, ql)
-    if not gray:
-        dqt += _jpg_dqt_seg(1, qc)
-    sof = _jpg_sof_payload(precision, h, w, [
-        (ci + 1, samp[ci][0], samp[ci][1], tqs[ci])
-        for ci in range(nc)
-    ])
-    dac = b""
-    if emit_dac:
-        body = b""
-        for t in sorted(set(tqs)):
-            body += bytes([t, (up << 4) | low])
-            body += bytes([0x10 | t, ac_kx])
-        dac = seg(0xCC, body)
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
+    coefs, samp, tqs, h, w = _jpg_quantized_coefs(
+        arr, ql, qc, subsampling, precision, "ycbcr"
     )
+    dac = _jpg_dac_seg(tqs, dc_cond, ac_kx, emit_dac)
+    low, up = dc_cond
+    nc = len(coefs)
     out = bytearray(
-        b"\xff\xd8" + dqt + seg(0xCA, sof) + dac + dri
+        b"\xff\xd8"
+        + _jpg_dqt_seg(0, ql)
+        + (_jpg_dqt_seg(1, qc) if nc > 1 else b"")
+        + _jpg_seg(0xCA, _jpg_sof_payload(precision, h, w, [
+            (ci + 1, hi, vi, t)
+            for ci, ((hi, vi), t) in enumerate(zip(samp, tqs))
+        ]))
+        + dac
+        + _jpg_dri_seg(restart_interval)
     )
-    used_tabs = sorted(set(tqs))
-    dc_stats = {t: bytearray(64) for t in used_tabs}
-    ac_stats = {t: bytearray(256) for t in used_tabs}
+    # the equiprobable bin (AC signs, DC refinement bits) never adapts
     fixed = bytearray([113])
-    script = _JPG_PROG_SCRIPT_GRAY if gray else _JPG_PROG_SCRIPT_COLOR
-    ri = restart_interval
-    for kind, comp, Ss, Se, Ah, Al in script:
-        entropy = bytearray()
-        enc = _QmEncoder()
-        # per-scan statistics reset (G.2 / the software realization:
-        # DC stats only for DC-first scans, AC stats for AC scans;
-        # DC-refine touches only the non-adaptive bin)
+    for kind, comp, Ss, Se, Ah, Al, segs in _jpg_prog_scans(
+        coefs, samp, h, w, restart_interval
+    ):
+        # statistics zero per scan and per restart segment (G.2 / the
+        # software realization: each scan touches only its own kind)
         if kind == "dc_first":
-            for st_ in dc_stats.values():
-                st_[:] = bytes(64)
-        elif kind in ("ac_first", "ac_refine"):
-            for st_ in ac_stats.values():
-                st_[:] = bytes(256)
-        seg_i = 0
-
-        def rst():
-            nonlocal enc, seg_i
-            entropy.extend(enc.flush())
-            entropy.extend(bytes([0xFF, 0xD0 + (seg_i % 8)]))
-            seg_i += 1
-            enc = _QmEncoder()
-            if kind == "dc_first":
-                for st_ in dc_stats.values():
-                    st_[:] = bytes(64)
-            elif kind in ("ac_first", "ac_refine"):
-                for st_ in ac_stats.values():
-                    st_[:] = bytes(256)
-
-        if kind == "dc_first":
-            preds = [0] * nc
-            dc_ctx = [0] * nc
-            mcu_n = 0
-            for blklist in mcu_blocks():
-                if ri and mcu_n and mcu_n % ri == 0:
-                    rst()
-                    preds = [0] * nc
-                    dc_ctx = [0] * nc
-                mcu_n += 1
-                for ci, gy, gx in blklist:
-                    v = int(coefs[ci][gy, gx, 0]) >> Al
-                    diff = v - preds[ci]
-                    preds[ci] = v
+            def code(enc, seg):
+                dc_stats = {t: bytearray(64) for t in tqs}
+                dc_ctx = [0] * nc
+                preds = [0] * nc
+                for ci, by, bx in seg:
+                    v = int(coefs[ci][by, bx, 0]) >> Al
                     _arith_dc_encode(
                         enc, dc_stats[tqs[ci]], dc_ctx, ci,
-                        diff, low, up,
+                        v - preds[ci], low, up,
                     )
+                    preds[ci] = v
         elif kind == "dc_refine":
-            mcu_n = 0
-            for blklist in mcu_blocks():
-                if ri and mcu_n and mcu_n % ri == 0:
-                    rst()
-                mcu_n += 1
-                for ci, gy, gx in blklist:
-                    enc.encode(
-                        fixed, 0,
-                        (int(coefs[ci][gy, gx, 0]) >> Al) & 1,
+            def code(enc, seg):
+                for ci, by, bx in seg:
+                    enc.encode(fixed, 0, (int(coefs[ci][by, bx, 0]) >> Al) & 1)
+        elif kind == "ac_first":
+            def code(enc, seg):
+                st = bytearray(256)
+                for _, by, bx in seg:
+                    _arith_ac_encode(
+                        enc, st, fixed, ac_kx, coefs[comp][by, bx],
+                        ss=Ss, se=Se, al=Al,
                     )
         else:
-            t = tqs[comp]
-            nbw_c, nbh_c = nbgeom[comp]
-            blk_n = 0
-            for by in range(nbh_c):
-                for bx in range(nbw_c):
-                    if ri and blk_n and blk_n % ri == 0:
-                        rst()
-                    blk_n += 1
-                    blk = coefs[comp][by, bx]
-                    if kind == "ac_first":
-                        _arith_ac_encode(
-                            enc, ac_stats[t], fixed, ac_kx, blk,
-                            ss=Ss, se=Se, al=Al,
-                        )
-                    else:
-                        _arith_ac_refine_encode(
-                            enc, ac_stats[t], fixed, blk, Ss, Se, Al
-                        )
-        entropy.extend(enc.flush())
-        if kind in ("dc_first", "dc_refine"):
-            sos = bytes([nc])
-            for ci in range(nc):
-                sos += bytes([ci + 1, tqs[ci] << 4])
-        else:
-            sos = bytes([1, comp + 1, tqs[comp]])
-        sos += bytes([Ss, Se, (Ah << 4) | Al])
-        out += seg(0xDA, sos) + bytes(entropy)
+            def code(enc, seg):
+                st = bytearray(256)
+                for _, by, bx in seg:
+                    _arith_ac_refine_encode(
+                        enc, st, fixed, coefs[comp][by, bx], Ss, Se, Al
+                    )
+        sel = (
+            [(ci + 1, t, 0) for ci, t in enumerate(tqs)]
+            if comp is None else [(comp + 1, 0, tqs[comp])]
+        )
+        out += _jpg_seg(0xDA, _jpg_sos_payload(sel, Ss, Se, Ah, Al))
+        out += _jpg_scan_entropy(segs, _QmEncoder, code)
     out += b"\xff\xd9"
     return bytes(out)
 

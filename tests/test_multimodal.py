@@ -1740,6 +1740,39 @@ def test_jpeg12_extended_sequential_gray():
         decode_jpeg(bytes(b))
 
 
+def test_jpeg_encoders_reject_bad_samples_with_value_error():
+    """Every DCT encoder reads its input through one front end that
+    raises ValueError (never an ``assert``, which ``python -O`` strips)
+    for a sample outside [0, 2^P - 1] or a channel count its layout
+    does not take; the 8-bit encoders no longer wrap out-of-range
+    samples through a uint8 cast."""
+    from e_commerce_data_pipeline_spark.operators import multimodal as m
+
+    g12 = np.full((8, 8), 4095, np.uint16)
+    with pytest.raises(ValueError, match="12-bit"):
+        m.encode_jpeg12(g12 + 1)
+    over = np.full((8, 8), 256, np.int64)
+    under = np.full((8, 8, 3), -1, np.int64)
+    for enc in (m.encode_jpeg, m.encode_jpeg_progressive,
+                m.encode_jpeg_arith, m.encode_jpeg_arith_progressive,
+                m.encode_jpeg_hierarchical):
+        for bad in (over, under):
+            with pytest.raises(ValueError, match="8-bit"):
+                enc(bad)
+        with pytest.raises(ValueError, match="shape"):
+            enc(np.zeros((8, 8, 2), np.uint8))
+    for enc in (m.encode_jpeg12, m.encode_jpeg_arith12):
+        with pytest.raises(ValueError, match="shape"):
+            enc(np.zeros((8, 8, 4), np.uint16))
+    with pytest.raises(ValueError, match="shape"):
+        m.encode_jpeg(np.zeros((8, 8, 4), np.uint8))
+    with pytest.raises(ValueError, match="shape"):
+        m.encode_jpeg(np.zeros((8, 8, 3), np.uint8), adobe_transform=2)
+    # the limits themselves encode
+    m.encode_jpeg12(g12)
+    m.encode_jpeg(np.full((8, 8), 255, np.int64))
+
+
 def test_jpeg_lossless_roundtrip_and_old_style_tiff():
     """Lossless JPEG (T.81 process 14, SOF3 — gate retired round
     10): bit-exact round-trips across all seven predictors,
@@ -2801,7 +2834,7 @@ def test_jpeg_arith12_round13():
             assert got.dtype == np.uint16
             assert np.array_equal(got, ref), (src.shape, kw)
     # encoder validation + the remaining precision gates
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         encode_jpeg_arith12((g12.astype(np.int64) + 4096).astype(
             np.uint16))
     b = bytearray(encode_jpeg_arith12(g12, quality=90))
@@ -4613,7 +4646,9 @@ def test_jpeg_progressive_zrl_in_refine_scan():
     blk = dctm.T @ (nat * ql) @ dctm + 128.0
     img = np.clip(np.round(blk), 0, 255).astype(np.uint8)
     # the pattern must survive re-quantization or the test is vacuous
-    got = _jpg_quantized_coefs(img, 90)[0][0][0, 0]
+    got = _jpg_quantized_coefs(
+        img, *_jpg_quant_tables(90), "444", 8, "ycbcr"
+    )[0][0][0, 0]
     nz = [k for k, v in enumerate(got) if v and k > 1]
     assert got[1] != 0 and abs(got[1]) >= 8
     assert nz and nz[0] >= 18 and abs(int(got[nz[0]])) == 1, nz
