@@ -101,15 +101,18 @@ CDC_OPS = ("INSERT", "UPDATE", "DELETE")
 
 def _apply(df: DataFrame, checks: list[tuple[Column, str]], penalty_cents: int) -> DataFrame:
     codes = [F.when(cond, F.lit(code)) for cond, code in checks]
-    n_viol = violation_count(checks)
     # array_except keeps the first array's order and drops the NULL
     # slots (the codes are distinct, so its dedup changes nothing);
     # array_compact is a filter(x -> isnotnull(x)) lambda, which runs
     # interpreted and takes the whole projection out of codegen.
     no_code = F.array(F.lit(None).cast("string"))
+    # Each check is evaluated once, in ``violations``: a check with a
+    # NULL condition is neither a code nor a count, so size() is the
+    # number of failed checks, and the score derives from that count.
+    n_viol = F.col("n_violations")
     return (
         df.withColumn("violations", F.array_except(F.array(*codes), no_code))
-        .withColumn("n_violations", n_viol.cast("int"))
+        .withColumn("n_violations", F.size("violations"))
         .withColumn(
             "quality_score",
             F.greatest(F.lit(0), F.lit(100) - F.lit(penalty_cents) * n_viol)

@@ -492,3 +492,69 @@ def test_bronze_ingest_parses_once_and_validates_in_codegen(spark):
     assert validation and corrupt_filter, plan
     for line in validation + corrupt_filter:
         assert "*(" in line, line
+
+
+def test_ingest_validators_evaluate_each_check_once(spark):
+    """Every validator evaluates each check once, in ``violations``;
+    ``n_violations``, ``quality_score`` and ``is_valid`` derive from
+    it. The orders checks keep their two interpreted lambdas once
+    each (``exists``, and ``aggregate`` with its finish lambda: 3
+    ``lambdafunction``); the click and CDC checks carry none, and
+    their parse filter and validation run in one codegen stage."""
+    import json
+    import re
+
+    from pyspark.sql import functions as F
+
+    from e_commerce_data_pipeline_spark.operators.validation import (
+        validate_cdc,
+        validate_clicks,
+        validate_orders,
+    )
+    from e_commerce_data_pipeline_spark.streaming.stream_processor import (
+        parse_topic_stream,
+    )
+
+    base = {"event_type": "e", "timestamp": "2024-01-01 00:00:00",
+            "session_id": "s1"}
+    cases = [
+        ("ecommerce.user_clicks", validate_clicks, 0,
+         dict(base, event_id="k1", click_type="page_view", page_url=" ",
+              device_type="mobile"),
+         ("invalid_url_format", "empty_page_url"), 0.6),
+        ("ecommerce.orders", validate_orders, 3,
+         dict(base, event_id="o1", order_id="x", order_status="shipped",
+              total_amount=25.0,
+              items=[{"product_id": "p", "quantity": 2,
+                      "unit_price": 10.0, "discount_pct": 0.0}]),
+         ("total_mismatch",), 0.75),
+        ("ecommerce.inventory_changes", validate_cdc, 0,
+         dict(base, event_id="c1", operation="INSERT"),
+         ("insert_missing_after",), 0.7),
+    ]
+    for topic, validate, lambdas, event, codes, score in cases:
+        raw = spark.createDataFrame(
+            [(topic, json.dumps(event)), (topic, "{broken")],
+            "topic string, value string",
+        )
+        parsed = parse_topic_stream(raw, topic)
+        out = validate(
+            parsed.filter(~F.col("_corrupt")).drop("_corrupt", "_raw_value")
+        )
+        plan = _executed_plan(out)
+        rows = out.collect()
+        assert [
+            (tuple(r["violations"]), r["n_violations"], r["quality_score"],
+             r["is_valid"])
+            for r in rows
+        ] == [(codes, len(codes), score, False)], topic
+        assert plan.count("lambdafunction") == lambdas, (topic, plan)
+        if not lambdas:
+            lines = [
+                l for l in plan.splitlines()
+                if "array_except" in l or "size(violations" in l
+                or "Filter isnotnull(parsed" in l
+            ]
+            stages = {re.search(r"\*\((\d+)\)", l) for l in lines}
+            assert None not in stages and len(lines) >= 2, (topic, plan)
+            assert len({m.group(1) for m in stages}) == 1, (topic, plan)
