@@ -2781,8 +2781,7 @@ def _tiff_ojpeg_per_strip(
     if not lossless:
         for tid, blob in enumerate(acblobs):
             head += _jpg_seg(0xC4, bytes([0x10 | tid]) + blob)
-    if ri:
-        head += _jpg_seg(0xDD, struct.pack(">H", ri))
+    head += _jpg_dri_seg(ri)
 
     parts = []
     for si, (off, cnt) in enumerate(zip(offsets, counts)):
@@ -7792,7 +7791,7 @@ def _jpg_quantized_coefs(arr, ql, qc, subsampling: str, precision: int,
 
 
 def _jpg_mcu_blocks(coefs, samp, ri: int) -> list:
-    """The one MCU walk: interleaved block order over the grids
+    """The encoders' one MCU walk: interleaved block order over the grids
     ``coefs`` (T.81 A.2.3: per MCU, each component's hi x vi blocks
     in raster order), split into restart segments of ``ri`` MCUs (one
     segment when ri is 0) -> list of segments, each a list of
@@ -8010,8 +8009,7 @@ def encode_jpeg_lossless(
     codes = _jpg_canonical_codes(bits, vals)
     out = bytearray(b"\xff\xd8")
     out += _jpg_dht_seg(0, 0, bits, vals)
-    if restart_rows:
-        out += _jpg_seg(0xDD, struct.pack(">H", restart_rows * w))
+    out += _jpg_dri_seg(restart_rows * w)
     out += _jpg_seg(0xC3, _jpg_sof_payload(
         p, h, w, [(c + 1, 1, 1, 0) for c in range(nc)]
     ))
